@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEnv.applyCommon(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SparkEnv.cpus
+    val spark = SparkEnv.session(cpus)
     // deterministic order + a tiny first action to absorb session spin-up
     spark.range(1000).count()
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -36,7 +31,7 @@ object Bench {
       import graft.operators.FrontierJob
       import graft.sources.{Gen, SeenStore}
       val n = 1000000L
-      val cfg = FrontierJob.Config(epoch = 0, saltBuckets = 64)
+      val cfg = FrontierJob.Config(epoch = 0)
       def job() = FrontierJob.runEpoch(Gen.seeds(spark, n, 64), Gen.robots(spark),
         SeenStore.emptySeen(spark), Map.empty, 64, cfg)
       job().write.format("noop").mode("overwrite").save() // warm

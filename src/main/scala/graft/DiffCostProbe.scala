@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.DiffJob
 import graft.sources.Snapshots
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only evidence for the E2 scale fix (VERDICT round-1 item 3): builds
@@ -16,11 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object DiffCostProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkEnv.applyCommon(SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEnv.session(16)
     val root = java.nio.file.Files.createTempDirectory("graft-diffcost").toString
     val epochs = sys.env.getOrElse("SPARK_GRAFT_EPOCHS", "12").toInt
     val ids = sys.env.getOrElse("SPARK_GRAFT_IDS", "300000").toLong

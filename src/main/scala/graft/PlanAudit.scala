@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{DiffJob, FrontierJob, Relational, SimilarityOps, TextOps}
 import graft.sources.{Gen, SeenStore}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-only: dumps `explain("formatted")` for the flagship plans into
@@ -13,11 +12,7 @@ import java.nio.file.{Files, Paths}
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkEnv.applyCommon(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEnv.session(8)
 
     def fmt(df: org.apache.spark.sql.DataFrame): String = {
       val qe = df.queryExecution

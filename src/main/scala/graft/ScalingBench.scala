@@ -90,7 +90,7 @@ object ScalingBench {
         }
       })
     val inputParts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "64").toInt
-    val cfg = FrontierJob.Config(epoch = 0, saltBuckets = 64)
+    val cfg = FrontierJob.Config(epoch = 0)
     // Input mode: "gen" (default, the recorded protocol) codegens the seed
     // rows in the scan stage; "parquet" materializes them once (untimed) and
     // reads a table instead — measured on this sandbox the parquet variant

@@ -25,10 +25,6 @@ object SparkEntry {
   private def crawlCfg(budget: Int): FrontierJob.Config =
     FrontierJob.Config(epoch = 0, globalBudget = budget)
 
-  /** bench-probe access to the g02 base schedule (TimeG02) */
-  private[graft] def entryScheduleForBench(spark: SparkSession): DataFrame =
-    crawlSchedule(spark, 4000)
-
   private def crawlSchedule(spark: SparkSession, n: Int): DataFrame = {
     import spark.implicits._
     FrontierJob.runEpoch(

@@ -1,6 +1,13 @@
 package graft
 
-/** Shared session knobs for the driver-contract mains. */
+import org.apache.spark.sql.SparkSession
+
+/** The one owner of session config. Every main and the test base build
+  * their session with [[session]] (ScalingBench's pinned protocol shapes
+  * and ExtensionsCheck's bare builder extend [[applyCommon]] or bypass it
+  * on purpose), and every scoped conf change inside the engine or a spec
+  * goes through [[withConf]], which restores the caller's values on exit.
+  */
 object SparkEnv {
   /** tmpfs-backed spark.local.dir when available. Measured in this sandbox:
     * shuffle files on the root disk serialize multi-core local mode (E1 at
@@ -32,7 +39,39 @@ object SparkEnv {
     case None => java.nio.file.Files.createTempDirectory(prefix).toString
   }
 
-  def applyCommon(b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder = {
+  /** Local-mode cores of the mains: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The shipped session: `local[cores]`, one shuffle partition per core,
+    * [[applyCommon]], WARN logging. Returns the active session if one
+    * already exists in this JVM.
+    */
+  def session(cores: Int = cpus): SparkSession = {
+    val spark = applyCommon(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Runs `body` with each `key -> value` set on `spark`'s runtime conf,
+    * then restores every key to its previous value, or unsets it if it had
+    * none, also when `body` throws. Anything lazy that `body` returns runs
+    * under the restored conf, so materialize results inside the scope.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  def applyCommon(b: SparkSession.Builder): SparkSession.Builder = {
     localDir.foreach(d => b.config("spark.local.dir", d))
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -370,14 +370,12 @@ object CrawlPipeline {
     // are fully ordered; fetch pids are hash-derived at a pinned width).
     // Conf restored after the loop; partitions never raised above the
     // session setting, so a production-sized frontier keeps full width.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sessionAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
     val epochRows = seedsPerEpoch.toLong * (1L + math.max(0, outlinkFanout))
-    val loopParts = math.max(1L,
-      math.min(sessionParts.toLong, epochRows / 65536L + 1L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try (start to untilEpoch).map { epoch =>
+    val loopParts = math.max(1L, math.min(sessionParts, epochRows / 65536L + 1L))
+    graft.SparkEnv.withConf(spark,
+      "spark.sql.shuffle.partitions" -> loopParts.toString,
+      "spark.sql.adaptive.enabled" -> "false")((start to untilEpoch).map { epoch =>
       val cfg = cfg0.copy(epoch = epoch, epochT0Ms = cfg0.epochT0Ms + epoch * 3600000L)
       // c29 wired end-to-end: sitemap discoveries enter at epoch 0 as
       // ordinary seeds (sitemap priority == seed priority) and take the
@@ -807,9 +805,6 @@ object CrawlPipeline {
       if (retainEvery > 0 && (epoch + 1) % retainEvery == 0)
         RetentionOps.retainHistory(spark, root, epoch, retainWindow, retainStride)
       EpochSummary(epoch, nScheduled, nScheduled, nRevised)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      spark.conf.set("spark.sql.adaptive.enabled", sessionAqe)
-    }
+    })
   }
 }

@@ -32,7 +32,6 @@ object FrontierJob {
       defaultDelayMs: Long = 200L,
       defaultHostBudget: Int = 50,
       maxHostBudget: Int = 128, // upper bound across all hosts (top-K agg size)
-      saltBuckets: Int = 16,
       phashTau: Int = 10,
       robotsBroadcastMaxBytes: Long = 64L << 20)
 
@@ -293,9 +292,8 @@ object FrontierJob {
     * ~100-per-epoch budgets, orders of magnitude below the frontier size —
     * and a hot host's reduce-side merge cost is bounded by mapPartitions*k,
     * NOT by how many frontier rows hit that host: skew-immune by
-    * construction (this subsumes explicit hot-host salting; the salted
-    * two-phase window formulation is kept as scheduleWindowed and
-    * golden-tested equal).
+    * construction (this subsumes explicit hot-host salting; CrawlGoldenSpec
+    * pins it equal to the salted two-phase window formulation).
     *
     * Priority-queue order: (priority desc, url_hash asc) — url_hash is a
     * pure-column tiebreak and top-K selection is arrival-order-insensitive,
@@ -366,33 +364,6 @@ object FrontierJob {
         (col("n_scheduled") <= col("budget")).as("budget_ok"),
         (col("n_slots") === col("n_scheduled")).as("slots_ok"))
       .orderBy("host")
-  }
-
-  /** The two-phase WINDOW formulation of the same schedule (kept as the
-    * documented alternative; golden-tested equal to `schedule`). Prefer
-    * `schedule` — the bounded-heap aggregator moves orders of magnitude
-    * less shuffle data; this version ranks in place after a full shuffle,
-    * which some pipelines may still want when they need every rank, not
-    * just the budget cut.
-    */
-  def scheduleWindowed(allowed: DataFrame, cfg: Config): DataFrame = {
-    val salted = allowed
-      .withColumn("salt", pmod(col("url_hash"), lit(cfg.saltBuckets)).cast("int"))
-    val w1 = Window.partitionBy("host", "salt")
-      .orderBy(col("priority").desc, col("url_hash").asc)
-    val phase1 = salted
-      .withColumn("rn1", row_number().over(w1))
-      .where(col("rn1") <= col("host_budget"))
-      .drop("rn1", "salt")
-    val w2 = Window.partitionBy("host")
-      .orderBy(col("priority").desc, col("url_hash").asc)
-    phase1
-      .withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= col("host_budget"))
-      .withColumn("slot", (col("rn") - 1).cast("int"))
-      .withColumn("scheduled_at_ms", lit(cfg.epochT0Ms) + (col("rn") - 1) * col("crawl_delay_ms"))
-      .drop("rn", "host_budget", "crawl_delay_ms")
-      .withColumn("epoch", lit(cfg.epoch))
   }
 
   /** Optional per-REGISTRABLE-DOMAIN cap on top of the per-host schedule:

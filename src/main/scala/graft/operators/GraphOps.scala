@@ -110,6 +110,30 @@ object GraphOps {
     if (probe.length > limit) None else Some(probe.toSeq)
   }
 
+  /** Runs a distributed graph loop over `graphSize` nodes/edges with its
+    * shuffles sized to the GRAPH, not the session default, and AQE off.
+    *
+    * The host graph is orders of magnitude smaller than the corpus that
+    * produced it, and each loop runs `iters` x ~4 exchanges: at small graph
+    * sizes near-empty tasks (scheduling) dominate the wall, at 10^8-edge
+    * graphs the session default may be far too coarse. The width is never
+    * raised above the session setting. AQE re-plans and materializes every
+    * exchange of every round as its own job; the loops' shuffles are
+    * already sized here and each round is checkpointed eagerly, so
+    * adaptivity buys nothing and multiplied the loop's job count ~8x
+    * (measured g01: 104 jobs for 10 rounds). Values are partitioning-
+    * invariant (per-iteration rounding; specs sweep shuffle-partition
+    * counts), so both are purely cost knobs. `body` must return
+    * materialized results: the conf is restored when it exits.
+    */
+  private def withGraphConf[T](spark: SparkSession, graphSize: Long)(body: => T): T = {
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val parts = math.max(1L, math.min(sessionParts, graphSize / 250000L + 1L))
+    graft.SparkEnv.withConf(spark,
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.adaptive.enabled" -> "false")(body)
+  }
+
   def pageRankFrom(spark: SparkSession, edges: DataFrame,
                    init: Option[DataFrame],
                    iters: Int, damping: Double): DataFrame = {
@@ -133,28 +157,7 @@ object GraphOps {
     // then carries (src, dst, deg) and needs no second lookup
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     val edgesDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Size the iteration's shuffles to the GRAPH, not the session default:
-    // the host graph is orders of magnitude smaller than the corpus that
-    // produced it, and the loop runs `iters` x ~4 exchanges — at small
-    // graph sizes near-empty tasks (scheduling) dominate the wall, at
-    // 10^8-edge graphs the session default may be far too coarse. Values
-    // are partitioning-invariant (per-iteration rounding; spec sweeps
-    // shuffle-partition counts), so this is purely a cost knob. Conf is
-    // restored after the loop; never raised above the session setting.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = math.max(1L, math.min(sessionParts.toLong,
-      math.max(n, nEdges) / 250000L + 1L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE re-plans and materializes every exchange of every round as its
-    // own job; the loop's shuffles are already sized to the graph (parts
-    // above) and each round is checkpointed eagerly, so adaptivity buys
-    // nothing here and multiplied the loop's job count ~8x (measured g01:
-    // 104 jobs for 10 rounds). Scoped + restored with the partition conf;
-    // results are partitioning-invariant (per-iteration rounding).
-    val sessionAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withGraphConf(spark, math.max(n, nEdges)) {
       var ranks = init match {
         case None => nodes.withColumn("rank", round(lit(1.0) / n, 10))
         case Some(prev) =>
@@ -185,9 +188,6 @@ object GraphOps {
       val out = ranks.select(col("node"), round(col("rank"), 6).as("pagerank"))
       e.unpersist(); nodes.unpersist(); edgesDeg.unpersist()
       out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      spark.conf.set("spark.sql.adaptive.enabled", sessionAqe)
     }
   }
 
@@ -325,21 +325,7 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count()
     val nEdges = e.count()
-    // same graph-sized shuffle sizing as pageRankFrom — the host graph is
-    // orders of magnitude smaller than the corpus that produced it
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = math.max(1L, math.min(sessionParts.toLong,
-      math.max(n, nEdges) / 250000L + 1L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE re-plans and materializes every exchange of every round as its
-    // own job; the loop's shuffles are already sized to the graph (parts
-    // above) and each round is checkpointed eagerly, so adaptivity buys
-    // nothing here and multiplied the loop's job count ~8x (measured g01:
-    // 104 jobs for 10 rounds). Scoped + restored with the partition conf;
-    // results are partitioning-invariant (per-iteration rounding).
-    val sessionAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withGraphConf(spark, math.max(n, nEdges)) {
       var hub = nodes.withColumn("hub", lit(1.0))
       var auth: DataFrame = null
       var i = 0
@@ -354,17 +340,17 @@ object GraphOps {
           "hub").localCheckpoint()
         i += 1
       }
+      // checkpointed before `nodes` is unpersisted and the conf restored:
+      // a lazy join would re-derive the node set from the caller's edges
       val out = nodes
         .join(hub, Seq("node"), "left")
         .join(auth, Seq("node"), "left")
         .select(col("node"),
           round(coalesce(col("hub"), lit(0.0)), 6).as("hub"),
           round(coalesce(col("auth"), lit(0.0)), 6).as("authority"))
+        .localCheckpoint()
       e.unpersist(); nodes.unpersist()
       out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      spark.conf.set("spark.sql.adaptive.enabled", sessionAqe)
     }
   }
 
@@ -438,19 +424,7 @@ object GraphOps {
     val teleT = nodes.select(col("node"),
       when(trustedCol(col("node")), lit(1.0 / tCount)).otherwise(lit(0.0)).as("t"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = math.max(1L, math.min(sessionParts.toLong,
-      math.max(n, nEdges) / 250000L + 1L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE re-plans and materializes every exchange of every round as its
-    // own job; the loop's shuffles are already sized to the graph (parts
-    // above) and each round is checkpointed eagerly, so adaptivity buys
-    // nothing here and multiplied the loop's job count ~8x (measured g01:
-    // 104 jobs for 10 rounds). Scoped + restored with the partition conf;
-    // results are partitioning-invariant (per-iteration rounding).
-    val sessionAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withGraphConf(spark, math.max(n, nEdges)) {
       var ranks = teleT.select(col("node"), round(col("t"), 10).as("rank"))
       var i = 0
       while (i < iters) {
@@ -474,9 +448,6 @@ object GraphOps {
       val out = ranks.select(col("node"), round(col("rank"), 6).as("trustrank"))
       e.unpersist(); nodes.unpersist(); edgesDeg.unpersist(); teleT.unpersist()
       out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      spark.conf.set("spark.sql.adaptive.enabled", sessionAqe)
     }
   }
 

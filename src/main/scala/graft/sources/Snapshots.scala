@@ -59,7 +59,7 @@ object Snapshots {
     * fixed cost every scan pays; the pipeline demos call this reader
     * dozens of times per run).
     */
-  private val RootSchema = org.apache.spark.sql.types.StructType.fromDDL(
+  private[graft] val RootSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "image_id STRING, bytes BINARY, w INT, h INT, fmt STRING, " +
       "caption STRING, phash BIGINT, partition_id INT, status STRING, " +
       "elapsed_ms BIGINT, epoch INT")
@@ -67,15 +67,11 @@ object Snapshots {
   private def readRoot(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(RootSchema).parquet(s"$root/snapshots")
 
-  private def parsedOnly(df: DataFrame): DataFrame = {
-    // null status = row from a pre-status epoch = it was parsed (failure
-    // rows did not exist in that format)
-    val filtered =
-      if (df.columns.contains("status"))
-        df.where(coalesce(col("status"), lit("parsed")) === "parsed")
-      else df
-    filtered.select(SnapshotCols.map(col): _*)
-  }
+  // null status = row from a pre-status epoch = it was parsed (failure
+  // rows did not exist in that format)
+  private def parsedOnly(df: DataFrame): DataFrame =
+    df.where(coalesce(col("status"), lit("parsed")) === "parsed")
+      .select(SnapshotCols.map(col): _*)
 
   /** Write one epoch's snapshot data + per-partition lineage WITHOUT
     * committing. The caller finishes all of the epoch's sibling state

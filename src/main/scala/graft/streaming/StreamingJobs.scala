@@ -192,23 +192,15 @@ object StreamingJobs {
     * (measured: warm politeness demo 1.6 s at 4 vs ~4 s at 8 in a hot
     * session); a production stream sizes this to its key cardinality.
     */
-  private def withFewStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    val prevAqe = spark.conf.get(aqeKey)
-    spark.conf.set(key, "4")
-    // The streaming queries themselves never use AQE (unsupported —
-    // Spark disables it with a warning); but the foreachBatch BODIES are
-    // batch queries, and AQE materialized each of their exchanges as its
-    // own job at micro-batch sizes the 4-partition setting above already
-    // handles (the graph/pipeline loop discipline).
-    spark.conf.set(aqeKey, "false")
-    try body finally {
-      spark.conf.set(key, prev)
-      spark.conf.set(aqeKey, prevAqe)
-    }
-  }
+  // The streaming queries themselves never use AQE (unsupported — Spark
+  // disables it with a warning); but the foreachBatch BODIES are batch
+  // queries, and AQE materialized each of their exchanges as its own job
+  // at micro-batch sizes the 4-partition setting already handles (the
+  // graph/pipeline loop discipline).
+  private def withFewStatePartitions[T](spark: SparkSession)(body: => T): T =
+    graft.SparkEnv.withConf(spark,
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Streaming state/offset checkpoints on the fast local dir (tmpfs when
     * available): the default java.io.tmpdir sits on the slow root disk and

@@ -71,13 +71,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("emb03: embeddings never ride a shuffle before candidate restriction") {
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // static plan + no size-based broadcasts: every join that WOULD shuffle
     // at scale shows its exchange here (tiny inputs would otherwise hide it)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SparkEnv.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = graft.operators.SimilarityOps.nearDupCosine(spark, "/root/testdata/sf0.001")
       val shuffles = df.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
@@ -102,9 +99,6 @@ class PlanSpec extends AnyFunSuite {
           assert(restricted.nonEmpty,
             s"embedding-carrying exchange is not candidate-restricted:\n$s")
         }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 
@@ -142,9 +136,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("robots join falls back to shuffle (SMJ) above the broadcast size gate") {
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // tiny test table would auto-broadcast
-    try {
+    // tiny test table would auto-broadcast
+    SparkEnv.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val frontier = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 300))
       val big = FrontierJob.Config(robotsBroadcastMaxBytes = 0L) // force the large-cache path
       val forced = FrontierJob.applyRobots(frontier, Gen.robots(spark), big)
@@ -158,7 +151,7 @@ class PlanSpec extends AnyFunSuite {
         Gen.seeds(spark, 300), Gen.robots(spark),
         SeenStore.emptySeen(spark), Map.empty, 16, cfg).collect().toVector
       assert(sched(cfgB) == sched(cfgS), "shuffled robots join changed the schedule")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
   }
 
   test("robots join broadcasts; politeness agg is partial+final (map-side combine)") {

@@ -2,26 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt forks one test JVM). */
+/** One shared local session for all suites (sbt forks one test JVM), built
+  * with the same config the mains ship.
+  */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "6g")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkEnv.session(8)
 
-  def withShufflePartitions[T](n: Int)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def withShufflePartitions[T](n: Int)(f: => T): T =
+    SparkEnv.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(f)
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -30,6 +30,34 @@ class CrawlGoldenSpec extends AnyFunSuite {
   private lazy val oracle =
     CrawlOracle.runEpoch(Gen.seedsLocal(N), robotsMap, Set.empty, cfg)
 
+  /** Reference for `FrontierJob.schedule`: the same schedule as a salted
+    * two-phase WINDOW ranking after a full shuffle (phase 1 cuts each
+    * (host, salt) slice to the host budget, phase 2 ranks the survivors
+    * per host).
+    */
+  private def scheduleWindowed(allowed: org.apache.spark.sql.DataFrame,
+                               cfg: FrontierJob.Config): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val saltBuckets = 16
+    val salted = allowed
+      .withColumn("salt", pmod(col("url_hash"), lit(saltBuckets)).cast("int"))
+    val w1 = Window.partitionBy("host", "salt")
+      .orderBy(col("priority").desc, col("url_hash").asc)
+    val phase1 = salted
+      .withColumn("rn1", row_number().over(w1))
+      .where(col("rn1") <= col("host_budget"))
+      .drop("rn1", "salt")
+    val w2 = Window.partitionBy("host")
+      .orderBy(col("priority").desc, col("url_hash").asc)
+    phase1
+      .withColumn("rn", row_number().over(w2))
+      .where(col("rn") <= col("host_budget"))
+      .withColumn("slot", (col("rn") - 1).cast("int"))
+      .withColumn("scheduled_at_ms", lit(cfg.epochT0Ms) + (col("rn") - 1) * col("crawl_delay_ms"))
+      .drop("rn", "host_budget", "crawl_delay_ms")
+      .withColumn("epoch", lit(cfg.epoch))
+  }
+
   test("crawl schedule == oracle sequence (order-exact)") {
     val got = runSpark(8, 8)
     assert(got.size == oracle.scheduled.size,
@@ -49,7 +77,7 @@ class CrawlGoldenSpec extends AnyFunSuite {
     def norm(df: org.apache.spark.sql.DataFrame) =
       FrontierJob.applyGlobalBudget(df, cfg).collect().toVector
     assert(norm(FrontierJob.schedule(allowed, cfg)) ==
-      norm(FrontierJob.scheduleWindowed(allowed, cfg)))
+      norm(scheduleWindowed(allowed, cfg)))
   }
 
   test("politeness invariants: per-host budget + delay gaps") {

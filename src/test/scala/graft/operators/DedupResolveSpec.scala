@@ -42,9 +42,9 @@ class DedupResolveSpec extends AnyFunSuite {
     val pairs = Seq[(Long, Long)](
       (1, 2), (2, 3), (3, 4), (10, 11), (11, 10),
       (30, 31), (32, 31), (5, 1))
-    spark.conf.set("spark.graft.smallGraphLimit", "0")
-    try assert(ccSpark(pairs) == unionFind(pairs))
-    finally spark.conf.unset("spark.graft.smallGraphLimit")
+    graft.SparkEnv.withConf(spark, "spark.graft.smallGraphLimit" -> "0") {
+      assert(ccSpark(pairs) == unionFind(pairs))
+    }
   }
 
   test("components equal union-find on chains, stars, cycles, singleton pairs") {

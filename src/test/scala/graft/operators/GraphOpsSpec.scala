@@ -38,8 +38,7 @@ class GraphOpsSpec extends AnyFunSuite {
     val edges = Seq(
       "a" -> "b", "a" -> "c", "c" -> "a", "c" -> "b", "c" -> "e",
       "d" -> "c", "d" -> "e", "f" -> "c", "b0" -> "a", "a" -> "b0")
-    spark.conf.set("spark.graft.smallGraphLimit", "0")
-    try {
+    graft.SparkEnv.withConf(spark, "spark.graft.smallGraphLimit" -> "0") {
       val viaCluster = run(edges)
       val viaHits = GraphOps.hits(spark, edges.toDF("src", "dst"), 4)
         .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
@@ -49,7 +48,23 @@ class GraphOpsSpec extends AnyFunSuite {
       assert(viaCluster == mirror(edges, 10, 0.85))
       assert(viaHits == LocalHits.compute(edges, 4))
       assert(viaTrust == LocalTrustRank.compute(edges, _.endsWith("0"), 6, 0.85))
-    } finally spark.conf.unset("spark.graft.smallGraphLimit")
+    }
+  }
+
+  test("distributed HITS returns a materialized table, not a plan over the input edges") {
+    // the node-set join used to stay lazy after `nodes` was unpersisted and
+    // the loop conf restored, so collecting re-read the caller's edges
+    val edges = Seq("a" -> "b", "a" -> "c", "c" -> "a", "d" -> "c", "b" -> "d")
+    val dir = graft.SparkTestBase.tempDir("graft-hits")
+    edges.toDF("src", "dst").write.mode("overwrite").parquet(s"$dir/edges")
+    val out = graft.SparkEnv.withConf(spark, "spark.graft.smallGraphLimit" -> "0") {
+      GraphOps.hits(spark, spark.read.parquet(s"$dir/edges"), 4)
+    }
+    val files = new java.io.File(s"$dir/edges")
+    files.listFiles().foreach(_.delete())
+    files.delete()
+    val got = out.collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(got == LocalHits.compute(edges, 4))
   }
 
   test("pageRank equals the mirror on a ring (uniform fixpoint)") {
