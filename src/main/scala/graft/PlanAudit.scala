@@ -26,8 +26,7 @@ object PlanAudit {
     {
       import spark.implicits._
       val seen = Seq(graft.model.SeenEntry(42L, "news0.example.com", 0)).toDS()
-      val blooms = SeenStore.buildBlooms(seen, 16, 128)
-        .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+      val blooms = SeenStore.sidecarMap(SeenStore.buildBlooms(seen, 16, 128))
       val sched = FrontierJob.runEpoch(
         Gen.seeds(spark, 2000), Gen.robots(spark), seen, blooms, 16,
         FrontierJob.Config(globalBudget = 500))

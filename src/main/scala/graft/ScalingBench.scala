@@ -142,7 +142,7 @@ object ScalingBench {
           SeenStore.buildCuckoos(seenDs, numBuckets, math.max(1024L, n / 4 / numBuckets))
         else
           SeenStore.buildBlooms(seenDs, numBuckets, math.max(1024L, n / 4 / numBuckets))
-        builder.collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+        SeenStore.sidecarMap(builder)
       }
     def job() =
       if (sidecar == "cuckoo")

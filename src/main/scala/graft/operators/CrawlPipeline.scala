@@ -14,11 +14,10 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
   */
 object CrawlPipeline {
 
-  final case class EpochSummary(
-      epoch: Int,
-      n_scheduled: Long,
-      n_new_seen: Long,
-      n_revised: Long)
+  final case class EpochSummary(epoch: Int, n_scheduled: Long)
+
+  /** Host buckets of the crawl's seen sidecar (bloom or cuckoo). */
+  val SeenBuckets = 16
 
   /** Deterministic "fetch": the sandbox has no network (SURVEY.md §2.1 S5),
     * so content is a pure function of (url_hash, epoch). Revision script:
@@ -43,18 +42,6 @@ object CrawlPipeline {
       e += 1
     }
     v
-  }
-
-  def fetch(scheduled: Dataset[Scheduled], epoch: Int): Dataset[Snapshot] = {
-    import scheduled.sparkSession.implicits._
-    scheduled.mapPartitions(_.map { s =>
-      val fmt = if ((s.url_hash & 1L) == 0L) "png" else "jpeg"
-      Gen.snapshotRow(
-        imageId = s.url_canon,
-        variant = contentVariant(s.url_hash, epoch),
-        captionVer = captionVariant(s.url_hash, epoch),
-        fmt = fmt, epoch = epoch)
-    })
   }
 
   /** Deterministic failure classes for the synthetic fetch (the network
@@ -204,24 +191,17 @@ object CrawlPipeline {
       .orderBy("epoch", "status")
   }
 
-  /** Synthetic outlink discovery (SURVEY.md §2.7 U1): each fetched page
-    * links to a deterministic handful of other article URLs on its host.
-    * With `crossHost` the LAST link of each fanout set instead targets a
-    * deterministically chosen other host — the link pattern that gives
-    * the crawl a real host graph (and g02 rank-ordered crawling something
-    * to rank). Off by default: the base goldens stay byte-identical.
-    */
   /** c44 demo: tight-budget epochs with priority aging on (boost 2.0 —
     * above the whole fresh-priority range, so one carryover round outranks
     * every new discovery); one row per scheduled URL with its
     * first-scheduled epoch and whether it arrived via an aged carryover.
     * AgingSpec contrasts this against an aging-off control, where URLs
     * below the outlink priority floor starve behind fresh discoveries.
-    */
-  /** c44 demo — 2 epochs (0..1) suffice for every row class: carryover is
-    * written at epoch 0, boosted re-entries schedule at epoch 1, and the
-    * 2.0 boost pushes any aged row past the was_aged threshold immediately
-    * (so rows realize aged + un-aged + both first_epoch values); the
+    *
+    * 2 epochs (0..1) suffice for every row class: carryover is written at
+    * epoch 0, boosted re-entries schedule at epoch 1, and the 2.0 boost
+    * pushes any aged row past the was_aged threshold immediately (so rows
+    * realize aged + un-aged + both first_epoch values); the
     * starvation-bound semantics are pinned by AgingSpec on its own longer
     * run, so the bench demo pays the ~40-action-per-epoch pipeline fixed
     * cost (see BENCH/PLANS.md) the minimum number of times.
@@ -233,9 +213,7 @@ object CrawlPipeline {
       cfg0 = FrontierJob.Config(epoch = 0, globalBudget = budget),
       aging = true, agingBoost = 2.0)
     val sched = (0 to epochs).map(e =>
-      spark.read.parquet(s"$root/scheduled/epoch=$e")
-        .select(col("url_hash"), col("host"), col("priority"))
-        .withColumn("epoch", lit(e)))
+      Snapshots.readScheduled(spark, root, e).select("url_hash", "host", "priority", "epoch"))
       .reduce(_ unionByName _)
     sched.groupBy("url_hash", "host")
       .agg(min("epoch").as("first_epoch"), max("priority").as("max_priority"))
@@ -261,6 +239,13 @@ object CrawlPipeline {
       .orderBy("image_id")
   }
 
+  /** Synthetic outlink discovery (SURVEY.md §2.7 U1): each fetched page
+    * links to a deterministic handful of other article URLs on its host.
+    * With `crossHost` the LAST link of each fanout set instead targets a
+    * deterministically chosen other host — the link pattern that gives
+    * the crawl a real host graph (and g02 rank-ordered crawling something
+    * to rank). Off by default: the base goldens stay byte-identical.
+    */
   def outlinks(scheduled: Dataset[Scheduled], fanout: Int,
                crossHost: Boolean = false): Dataset[Seed] = {
     import scheduled.sparkSession.implicits._
@@ -316,7 +301,8 @@ object CrawlPipeline {
 
   /** Run epochs [latestCommitted+1, untilEpoch] over a seed generator;
     * resume-safe: re-invoking after a crash (or on a fresh session) picks
-    * up from the manifest (E3).
+    * up from the manifest (E3). Each epoch runs the stages of [[Crawl]] in
+    * write order; the manifest commit is the last write.
     *
     * `sidecar` selects the seen-filter kind (north_rule "bloom/cuckoo"):
     * "bloom" (default) or "cuckoo" — the sidecar only pre-routes rows
@@ -330,7 +316,6 @@ object CrawlPipeline {
       untilEpoch: Int,
       seedsPerEpoch: Int,
       cfg0: FrontierJob.Config,
-      numBuckets: Int = 16,
       outlinkFanout: Int = 2,
       fetchPartitions: Int = 32,
       sidecar: String = "bloom",
@@ -358,34 +343,81 @@ object CrawlPipeline {
     require(sidecar == "bloom" || sidecar == "cuckoo", s"unknown sidecar kind: $sidecar")
     require(recrawlPolicy == "staleness" || recrawlPolicy == "changerate",
       s"unknown recrawl policy: $recrawlPolicy")
-    import spark.implicits._
-    val start = Snapshots.latestCommittedEpoch(root) + 1
-    // Size the epoch loop's shuffles to the FRONTIER, not the session
-    // default, and drop AQE inside it (the GraphOps loop discipline): an
-    // epoch's tables are bounded by seeds+outlinks+recrawl (~seedsPerEpoch
-    // x (1+fanout) rows), every epoch action is evaluated eagerly in this
-    // scope, and AQE's per-exchange stage materialization multiplied each
-    // demo's job count ~3x for nothing it could improve at these sizes.
-    // Values are partitioning-invariant (politeness windows and budgets
-    // are fully ordered; fetch pids are hash-derived at a pinned width).
-    // Conf restored after the loop; partitions never raised above the
-    // session setting, so a production-sized frontier keeps full width.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val epochRows = seedsPerEpoch.toLong * (1L + math.max(0, outlinkFanout))
-    val loopParts = math.max(1L, math.min(sessionParts, epochRows / 65536L + 1L))
+    val c = new Crawl(spark, root, seedsPerEpoch, outlinkFanout, fetchPartitions, sidecar,
+      sidecarPerBucket, compactSeenEvery, retainEvery, retainWindow, retainStride, backoff,
+      backoffThresholdBp, byteBudgetPerHost, recrawl, recrawlPolicy, revalidate, rankOrdered,
+      sitemaps, adaptivePacing, aging, agingBoost, robotsFlipEpoch, robotsAvailability,
+      payloadValidation, retryFailures, retryMax)
     graft.SparkEnv.withConf(spark,
-      "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false")((start to untilEpoch).map { epoch =>
-      val cfg = cfg0.copy(epoch = epoch, epochT0Ms = cfg0.epochT0Ms + epoch * 3600000L)
+      "spark.sql.shuffle.partitions" -> c.loopPartitions,
+      "spark.sql.adaptive.enabled" -> "false")(
+      (Snapshots.latestCommittedEpoch(root) + 1 to untilEpoch).map { epoch =>
+        val cfg = cfg0.copy(epoch = epoch, epochT0Ms = cfg0.epochT0Ms + epoch * 3600000L)
+        val seen = SeenStore.load(spark, root)
+        val sidecars = SeenStore.loadSidecar(spark, root, sidecar, epoch - 1)
+        val (deduped, dedupeCounts) = c.dedupe(c.seeds(epoch), seen, sidecars)
+        val toRobots = c.revisitFrontier(epoch, deduped)
+        val robots = c.robots(epoch)
+        val allowed = c.allowed(cfg, toRobots, robots)
+        val scheduled = c.writeSchedule(cfg, toRobots, robots, allowed)
+        deduped.unpersist()
+        val nScheduled = scheduled.count()
+        val summary = c.fetchAndSnapshot(epoch, scheduled, nScheduled, dedupeCounts)
+        c.seenAndSidecar(epoch, scheduled, seen, sidecars)
+        c.diffAndLatest(cfg)
+        scheduled.unpersist()
+        c.commit(epoch, summary)
+        EpochSummary(epoch, nScheduled)
+      })
+  }
+
+  /** One crawl's settings (the arguments of [[run]]) and its epoch stages.
+    * Each stage owns its feature guard; every feature is off by default,
+    * so the base goldens stay byte-identical. Every write goes to a
+    * per-epoch `root/<family>/epoch=N` dir in overwrite mode, so a crash
+    * before the manifest commit leaves an uncommitted epoch that resume
+    * re-runs idempotently (pinned per writer by PipelineResumeSpec's
+    * crash-point matrix).
+    */
+  private final class Crawl(
+      spark: SparkSession, root: String, seedsPerEpoch: Int, outlinkFanout: Int,
+      fetchPartitions: Int, sidecar: String, sidecarPerBucket: Long, compactSeenEvery: Int,
+      retainEvery: Int, retainWindow: Long, retainStride: Int, backoff: Boolean,
+      backoffThresholdBp: Int, byteBudgetPerHost: Long, recrawl: Boolean,
+      recrawlPolicy: String, revalidate: Boolean, rankOrdered: Boolean, sitemaps: Boolean,
+      adaptivePacing: Boolean, aging: Boolean, agingBoost: Double, robotsFlipEpoch: Int,
+      robotsAvailability: Boolean, payloadValidation: Boolean, retryFailures: Boolean,
+      retryMax: Int) {
+    import spark.implicits._
+
+    /** Size the epoch loop's shuffles to the FRONTIER, not the session
+      * default; [[run]] also drops AQE inside the loop (the GraphOps loop
+      * discipline): an epoch's tables are bounded by seeds+outlinks+recrawl
+      * (~seedsPerEpoch x (1+fanout) rows), every epoch action is evaluated
+      * eagerly in this scope, and AQE's per-exchange stage materialization
+      * multiplied each demo's job count ~3x for nothing it could improve at
+      * these sizes. Values are partitioning-invariant (politeness windows
+      * and budgets are fully ordered; fetch pids are hash-derived at a
+      * pinned width). Partitions are never raised above the session
+      * setting, so a production-sized frontier keeps full width.
+      */
+    def loopPartitions: String = {
+      val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+      val epochRows = seedsPerEpoch.toLong * (1L + math.max(0, outlinkFanout))
+      math.max(1L, math.min(sessionParts, epochRows / 65536L + 1L)).toString
+    }
+
+    /** Seeds: Gen seeds, sitemap discoveries, the aged carryover and the
+      * previous schedule's outlinks.
+      */
+    def seeds(epoch: Int): Dataset[Seed] = {
       // c29 wired end-to-end: sitemap discoveries enter at epoch 0 as
       // ordinary seeds (sitemap priority == seed priority) and take the
       // same canonicalize -> dedupe -> robots -> politeness path; later
       // epochs need no re-read because the synthetic catalog is static
       // (a real crawl re-reads on the sitemap's own change cadence).
-      // Off by default: the base goldens stay byte-identical.
       val sitemapSeeds =
-        if (sitemaps && epoch == 0)
-          SitemapOps.asSeeds(SitemapOps.sitemapEntries(spark))
+        if (sitemaps && epoch == 0) SitemapOps.asSeeds(SitemapOps.sitemapEntries(spark))
         else spark.emptyDataset[Seed]
       // c44 wired end-to-end: URLs that were eligible last epoch but lost
       // the budget race re-enter with their priority AGED upward, so a
@@ -394,93 +426,55 @@ object CrawlPipeline {
       // epochs it outranks every fresh seed (priorities are bounded).
       // Carryover duplicates of still-live seeds are harmless: the
       // canonicalize dedupe keeps max(priority), so the BOOSTED copy wins.
-      // Off by default: the base goldens stay byte-identical.
+      val carried = if (aging) Snapshots.epochDirs(root, "carryover", Seq(epoch - 1)) else Nil
       val agedCarryover =
-        if (!aging || epoch == 0) spark.emptyDataset[Seed]
-        else {
-          val p = s"$root/carryover/epoch=${epoch - 1}"
-          if (!new java.io.File(p).exists()) spark.emptyDataset[Seed]
-          else spark.read.parquet(p).as[Seed]
-        }
-      val seeds = Gen.seeds(spark, seedsPerEpoch.toLong)
+        if (carried.isEmpty) spark.emptyDataset[Seed]
+        else spark.read.parquet(carried: _*).as[Seed]
+      Gen.seeds(spark, seedsPerEpoch.toLong)
         .unionByName(sitemapSeeds)
         .unionByName(agedCarryover)
-        .unionByName(
-          if (epoch == 0) spark.emptyDataset[Seed]
-          else {
-            val prev = spark.read.parquet(s"$root/scheduled/epoch=${epoch - 1}")
-              .select("url_canon", "url_hash", "host", "path", "priority",
-                "slot", "scheduled_at_ms")
-              .withColumn("epoch", lit(epoch - 1)).as[Scheduled]
-            val outs = outlinks(prev, outlinkFanout, crossHost = rankOrdered)
-            if (!rankOrdered) outs
-            else {
-              // g02 rank-ordered crawling: host authority computed from the
-              // edges the crawl has ALREADY observed (all committed
-              // schedules' cross-host outlinks, recovered by formula — no
-              // persisted edge table), boosting each outlink by its
-              // destination host's PageRank. New URLs on well-linked hosts
-              // outrank link-farm spray when budgets contend.
-              val past = (0 until epoch)
-                .map(e => spark.read.parquet(s"$root/scheduled/epoch=$e")
-                  .select("url_canon", "url_hash", "host", "path", "priority",
-                    "slot", "scheduled_at_ms")
-                  .withColumn("epoch", lit(e)).as[Scheduled])
-                .reduce(_ unionByName _)
-              val edges = hostEdgesFromScheduled(past, outlinkFanout)
-              if (edges.isEmpty) outs
-              else rankBoosted(outs, GraphOps.pageRank(spark, edges, iters = 5,
-                damping = 0.85))
-            }
-          })
-      val seen = SeenStore.load(spark, root)
-      val sidecars =
-        if (sidecar == "cuckoo") SeenStore.loadCuckoos(spark, root, epoch - 1)
-        else SeenStore.loadBlooms(spark, root, epoch - 1)
-      // c30/c32 wired end-to-end: epoch N schedules under delays learned
-      // from epochs < N's observed fetch latencies (persisted mergeable
-      // histograms — committed state, so resume re-learns identically);
-      // robots' Crawl-delay stays the floor. Off by default: the base
-      // goldens stay byte-identical.
-      val robots = {
-        // c59 wired: at robotsFlipEpoch the cache refreshes to the mutated
-        // generation (policies open AND tighten); off by default so the
-        // base goldens stay byte-identical
-        val base =
-          if (robotsFlipEpoch >= 0 && epoch >= robotsFlipEpoch)
-            RobotsDiffOps.mutatedRobots(spark)
-          else Gen.robots(spark)
-        val base2 =
-          if (!adaptivePacing || epoch == 0) base
-          else PacingOps.withAdaptiveDelays(base,
-            PacingOps.adaptiveDelaysFrom(spark, root, epoch - 1))
-        // c62 wired: this epoch's robots-fetch outcome overrides the rules
-        // per RFC 9309 — 4xx hosts open fully, freshly-5xx hosts park,
-        // chronically-5xx hosts serve the cached copy. Pure column over
-        // the host catalog; everything downstream (applyRobots, schedule)
-        // is availability-blind. Off by default: base goldens stay
-        // byte-identical.
-        if (!robotsAvailability) base2
+        .unionByName(outlinkSeeds(epoch))
+    }
+
+    private def outlinkSeeds(epoch: Int): Dataset[Seed] =
+      if (epoch == 0) spark.emptyDataset[Seed]
+      else {
+        val outs = outlinks(Snapshots.readScheduled(spark, root, epoch - 1), outlinkFanout,
+          crossHost = rankOrdered)
+        if (!rankOrdered) outs
         else {
-          import spark.implicits._
-          base2.toDF().withColumn("rules",
-            RobotsAvailabilityOps.effectiveRulesCol(col("rules"),
-              RobotsAvailabilityOps.policyCol(col("host"), epoch, staleEpochs = 1)))
-            .as[graft.model.RobotsEntry]
+          // g02 rank-ordered crawling: host authority computed from the
+          // edges the crawl has ALREADY observed (all committed schedules'
+          // cross-host outlinks, recovered by formula — no persisted edge
+          // table), boosting each outlink by its destination host's
+          // PageRank. New URLs on well-linked hosts outrank link-farm spray
+          // when budgets contend.
+          val past = (0 until epoch).map(Snapshots.readScheduled(spark, root, _))
+            .reduce(_ unionByName _)
+          val edges = hostEdgesFromScheduled(past, outlinkFanout)
+          if (edges.isEmpty) outs
+          else rankBoosted(outs, GraphOps.pageRank(spark, edges, iters = 5, damping = 0.85))
         }
       }
-      // E1 staged explicitly (vs runEpoch) so the dedupe boundary is
-      // observable for the lineage manifest: n_deduped = raw candidates
-      // minus dedupe survivors, per fetch partition. Both sides are
-      // count-only aggregations over short-lived cached url-level rows
-      // (never bytes); the counts themselves are <= fetchPartitions rows.
+
+    /** E1 canonicalize + dedupe, staged explicitly (vs runEpoch) so the
+      * dedupe boundary is observable for the lineage manifest: n_deduped =
+      * raw candidates minus dedupe survivors, per fetch partition. Both
+      * sides are count-only aggregations over short-lived cached url-level
+      * rows (never bytes); the counts themselves are <= fetchPartitions
+      * rows. Returns the survivors, persisted (the caller unpersists them
+      * once the schedule is written), and the counts; the frontier's cache
+      * serves only the ledger, whose one action fills the survivors' cache.
+      */
+    def dedupe(seeds: Dataset[Seed], seen: Dataset[SeenEntry],
+               sidecars: Map[Int, Array[Byte]]): (DataFrame, Map[Int, Long]) = {
       val pidCol = fetchPartitionId(col("url_hash"), fetchPartitions)
       val frontier = FrontierJob.canonicalizeFrontierCounted(seeds).persist()
       val deduped = (
         if (sidecar == "cuckoo")
-          FrontierJob.dedupeAgainstSeenCuckoo(frontier.drop("n_raw"), seen, sidecars, numBuckets)
+          FrontierJob.dedupeAgainstSeenCuckoo(frontier.drop("n_raw"), seen, sidecars, SeenBuckets)
         else
-          FrontierJob.dedupeAgainstSeen(frontier.drop("n_raw"), seen, sidecars, numBuckets)
+          FrontierJob.dedupeAgainstSeen(frontier.drop("n_raw"), seen, sidecars, SeenBuckets)
         ).persist()
       // one action for both sides of the dedupe ledger (raw candidates and
       // survivors per fetch partition) — the former two collects were two
@@ -491,75 +485,50 @@ object CrawlPipeline {
           deduped.groupBy(pidCol.as("partition_id")).agg(count(lit(1)).as("n")),
           Seq("partition_id"), "full_outer")
         .as[(Int, Option[Long], Option[Long])].collect()
-      val rawCounts = rawAndSurv
-        .collect { case (pid, Some(raw), _) => pid -> raw }.toMap
-      val survCounts = rawAndSurv
-        .collect { case (pid, _, Some(n)) => pid -> n }.toMap
-      val dedupeCounts = rawCounts.map { case (pid, raw) =>
-        pid -> (raw - survCounts.getOrElse(pid, 0L))
-      }.filter(_._2 > 0L)
-      // recrawl mode (c25 wired end-to-end): articles DUE under the
-      // backoff policy re-enter the frontier AROUND the seen-set dedupe
-      // (re-fetching them is the point) but still pass robots + politeness
-      // like any discovery — recrawls compete for the same host budgets.
-      // image_id == url_canon (a canonicalization fixed point), so the
-      // re-seeded rows re-hash identically. Committed revisions only:
-      // resume recomputes the same due set. Articles whose last fetch
-      // FAILED never reached the revisions table and are not retried here
-      // (failure retry is a different policy from content revisit).
-      val recrawlFrontier =
-        if (!recrawl || epoch == 0) None
-        else {
-          val dirs = (0 until epoch).map(e => s"$root/revisions/epoch=$e")
-            .filter(p => new java.io.File(p).exists())
-          if (dirs.isEmpty) None
-          else {
-            // policy switch (c25 staleness backoff vs c45 change-rate
-            // estimator) — both emit the same (image_id, due, priority)
-            // contract, so everything downstream is policy-blind
-            val revs = spark.read.parquet(dirs: _*)
-            val sched =
-              if (recrawlPolicy == "changerate")
-                DiffJob.recrawlScheduleChangeRate(revs, atEpoch = epoch)
-              else DiffJob.recrawlSchedule(revs, atEpoch = epoch)
-            // c51 wired end-to-end: due pages whose validator (ETag analog
-            // — the content/caption variant pair of the last fetch) still
-            // matches the server's are 304s — dropped here, BEFORE robots/
-            // politeness, so their budget goes to pages that changed. The
-            // validator changes exactly when content does, so no revision
-            // is ever lost (RevalidationSpec). Off by default: the base
-            // recrawl goldens stay byte-identical.
-            val due0 = sched.where(col("due"))
-            val due =
-              if (!revalidate) due0
-              else RevalidationOps.withRevalidation(due0, epoch)
-                .where(!col("not_modified"))
-            Some(FrontierJob.canonicalizeFrontier(
-              due.select(col("image_id").as("url"), col("priority"))
-                .as[Seed]))
-          }
-        }
-      // c83 wired end-to-end: URLs whose LAST attempt failed transiently
-      // (fetch_failed / c67 invalid_payload) re-enter the frontier with a
-      // bounded attempt budget — like recrawl they bypass the seen dedupe
-      // (they ARE seen; refetching is the point) but pass robots +
-      // politeness like any discovery. parse_failed is permanent (the
-      // parser is deterministic — c83 scaladoc). Committed state only, so
-      // resume recomputes the same due set. Off by default: base goldens
-      // stay byte-identical.
-      val retryFrontier =
-        if (!retryFailures || epoch == 0) None
-        else {
-          val canon = FrontierJob.canonicalizeFrontier(
-            RetryOps.dueForRetry(spark, root, epoch - 1, retryMax)
-              .select(col("url"), col("priority")).as[Seed])
-          // a URL due under BOTH recrawl (content revisit) and retry (a
-          // scheduled recrawl that then failed) schedules once: the retry
-          // copy yields
-          Some(recrawlFrontier.fold(canon)(rc =>
-            canon.join(rc.select("url_hash"), Seq("url_hash"), "left_anti")))
-        }
-      val toRobots0 = Seq(recrawlFrontier, retryFrontier).flatten
+      val survCounts = rawAndSurv.collect { case (pid, _, Some(n)) => pid -> n }.toMap
+      val dedupeCounts = rawAndSurv
+        .collect { case (pid, Some(raw), _) => pid -> (raw - survCounts.getOrElse(pid, 0L)) }
+        .toMap.filter(_._2 > 0L)
+      frontier.unpersist()
+      (deduped, dedupeCounts)
+    }
+
+    /** The epoch's robots cache: the c59 generation flip, c30/c32 adaptive
+      * delays and the c62 robots-fetch availability override.
+      */
+    def robots(epoch: Int): Dataset[RobotsEntry] = {
+      // c59 wired: at robotsFlipEpoch the cache refreshes to the mutated
+      // generation (policies open AND tighten)
+      val cache =
+        if (robotsFlipEpoch >= 0 && epoch >= robotsFlipEpoch) RobotsDiffOps.mutatedRobots(spark)
+        else Gen.robots(spark)
+      // c30/c32 wired end-to-end: epoch N schedules under delays learned
+      // from epochs < N's observed fetch latencies (persisted mergeable
+      // histograms — committed state, so resume re-learns identically);
+      // robots' Crawl-delay stays the floor
+      val paced =
+        if (!adaptivePacing || epoch == 0) cache
+        else PacingOps.withAdaptiveDelays(cache,
+          PacingOps.adaptiveDelaysFrom(spark, root, epoch - 1))
+      // c62 wired: this epoch's robots-fetch outcome overrides the rules
+      // per RFC 9309 — 4xx hosts open fully, freshly-5xx hosts park,
+      // chronically-5xx hosts serve the cached copy. Pure column over
+      // the host catalog; everything downstream (applyRobots, schedule)
+      // is availability-blind.
+      if (!robotsAvailability) paced
+      else paced.toDF().withColumn("rules",
+          RobotsAvailabilityOps.effectiveRulesCol(col("rules"),
+            RobotsAvailabilityOps.policyCol(col("host"), epoch, staleEpochs = 1)))
+        .as[RobotsEntry]
+    }
+
+    /** The dedupe survivors plus the rows that re-enter the frontier
+      * AROUND the seen dedupe (recrawls, retries) and, exactly at the
+      * flip epoch, the c59 robots re-enqueue.
+      */
+    def revisitFrontier(epoch: Int, deduped: DataFrame): DataFrame = {
+      val recrawled = recrawlFrontier(epoch)
+      val toRobots = Seq(recrawled, retryFrontier(epoch, recrawled)).flatten
         .foldLeft(deduped)(_ unionByName _)
       // c59 wired end-to-end: exactly at the flip epoch, URLs held back
       // under the OLD policy in earlier epochs re-enter the frontier if
@@ -567,24 +536,106 @@ object CrawlPipeline {
       // the old generation). Re-enqueues are anti-joined against this
       // epoch's natural frontier so a re-seeded URL is not doubled; they
       // were never scheduled, so they cannot be in the seen store.
-      val toRobots =
-        if (robotsFlipEpoch < 0 || epoch != robotsFlipEpoch) toRobots0
-        else {
-          val dirs = (0 until epoch).map(e => s"$root/robots_held/epoch=$e")
-            .filter(p => new java.io.File(p).exists())
-          if (dirs.isEmpty) toRobots0
-          else {
-            val re = RobotsDiffOps.newlyAllowed(
-                spark.read.parquet(dirs: _*),
-                Gen.robots(spark).toDF(),
-                RobotsDiffOps.mutatedRobots(spark).toDF())
-              .join(toRobots0.select("url_hash"), Seq("url_hash"), "left_anti")
-            toRobots0.unionByName(re)
-          }
-        }
-      // persist this epoch's robots-rejected rows (sibling-state: written
-      // before the manifest commit, overwrite-idempotent) so a future flip
-      // can re-gate them; only when the feature is on
+      val held =
+        if (epoch == robotsFlipEpoch) Snapshots.epochDirs(root, "robots_held", 0 until epoch)
+        else Nil
+      if (held.isEmpty) toRobots
+      else toRobots.unionByName(RobotsDiffOps.newlyAllowed(
+          spark.read.parquet(held: _*),
+          Gen.robots(spark).toDF(),
+          RobotsDiffOps.mutatedRobots(spark).toDF())
+        .join(toRobots.select("url_hash"), Seq("url_hash"), "left_anti"))
+    }
+
+    /** Recrawl mode (c25 wired end-to-end): articles DUE under the backoff
+      * policy re-enter the frontier AROUND the seen-set dedupe (re-fetching
+      * them is the point) but still pass robots + politeness like any
+      * discovery — recrawls compete for the same host budgets. image_id ==
+      * url_canon (a canonicalization fixed point), so the re-seeded rows
+      * re-hash identically. Committed revisions only: resume recomputes
+      * the same due set. Articles whose last fetch FAILED never reached the
+      * revisions table and are not retried here (failure retry is a
+      * different policy from content revisit).
+      */
+    private def recrawlFrontier(epoch: Int): Option[DataFrame] = {
+      val dirs = if (recrawl) Snapshots.epochDirs(root, "revisions", 0 until epoch) else Nil
+      if (dirs.isEmpty) None
+      else {
+        // policy switch (c25 staleness backoff vs c45 change-rate
+        // estimator) — both emit the same (image_id, due, priority)
+        // contract, so everything downstream is policy-blind
+        val revs = spark.read.parquet(dirs: _*)
+        val sched =
+          if (recrawlPolicy == "changerate")
+            DiffJob.recrawlScheduleChangeRate(revs, atEpoch = epoch)
+          else DiffJob.recrawlSchedule(revs, atEpoch = epoch)
+        // c51 wired end-to-end: due pages whose validator (ETag analog —
+        // the content/caption variant pair of the last fetch) still
+        // matches the server's are 304s — dropped here, BEFORE robots/
+        // politeness, so their budget goes to pages that changed. The
+        // validator changes exactly when content does, so no revision is
+        // ever lost (RevalidationSpec).
+        val due0 = sched.where(col("due"))
+        val due =
+          if (!revalidate) due0
+          else RevalidationOps.withRevalidation(due0, epoch).where(!col("not_modified"))
+        Some(FrontierJob.canonicalizeFrontier(
+          due.select(col("image_id").as("url"), col("priority")).as[Seed]))
+      }
+    }
+
+    /** c83 wired end-to-end: URLs whose LAST attempt failed transiently
+      * (fetch_failed / c67 invalid_payload) re-enter the frontier with a
+      * bounded attempt budget — like recrawl they bypass the seen dedupe
+      * (they ARE seen; refetching is the point) but pass robots +
+      * politeness like any discovery. parse_failed is permanent (the
+      * parser is deterministic — c83 scaladoc). Committed state only, so
+      * resume recomputes the same due set.
+      */
+    private def retryFrontier(epoch: Int, recrawled: Option[DataFrame]): Option[DataFrame] =
+      if (!retryFailures || epoch == 0) None
+      else {
+        val canon = FrontierJob.canonicalizeFrontier(
+          RetryOps.dueForRetry(spark, root, epoch - 1, retryMax)
+            .select(col("url"), col("priority")).as[Seed])
+        // a URL due under BOTH recrawl (content revisit) and retry (a
+        // scheduled recrawl that then failed) schedules once: the retry
+        // copy yields
+        Some(recrawled.fold(canon)(rc =>
+          canon.join(rc.select("url_hash"), Seq("url_hash"), "left_anti")))
+      }
+
+    /** Robots, then backoff, then byte budget. */
+    def allowed(cfg: FrontierJob.Config, toRobots: DataFrame,
+                robots: Dataset[RobotsEntry]): DataFrame = {
+      val epoch = cfg.epoch
+      val robotsAllowed = FrontierJob.applyRobots(toRobots, robots, cfg)
+      // c50 wired end-to-end: budgets of hosts that failed above threshold
+      // last epoch shrink by the committed AIMD multiplier (floor 1 — a
+      // sick host is slowed, never starved; clean epochs regrow it). The
+      // multiplier only shrinks budgets, so the politeness top-K bound
+      // (maxHostBudget) needs no re-sizing.
+      val backedOff =
+        if (!backoff || epoch == 0) robotsAllowed
+        else BackoffOps.loadState(spark, root, epoch - 1)
+          .fold(robotsAllowed)(BackoffOps.applyBackoff(robotsAllowed, _))
+      // c54 wired end-to-end: per-host request budgets shrink to fit a
+      // byte allowance using mean page sizes learned from committed
+      // epochs (shrink-only, like backoff — the top-K bound stands; hosts
+      // with no history keep their budget so first contact can measure).
+      if (byteBudgetPerHost <= 0L || epoch == 0) backedOff
+      else BandwidthOps.applyByteBudget(backedOff,
+        BandwidthOps.hostByteStats(spark, root, epoch - 1), byteBudgetPerHost)
+    }
+
+    /** Writes robots_held, scheduled and carryover; returns the schedule,
+      * persisted (the caller unpersists it after the diff).
+      */
+    def writeSchedule(cfg: FrontierJob.Config, toRobots: DataFrame,
+                      robots: Dataset[RobotsEntry], allowed: DataFrame): Dataset[Scheduled] = {
+      val epoch = cfg.epoch
+      // this epoch's robots-rejected rows, kept so a future flip can
+      // re-gate them; only when the feature is on
       if (robotsFlipEpoch >= 0) {
         toRobots
           .join(broadcast(robots.toDF().select(col("host"), col("rules"))), Seq("host"))
@@ -592,62 +643,36 @@ object CrawlPipeline {
           .select("url_canon", "url_hash", "host", "path", "priority")
           .write.mode("overwrite").parquet(s"$root/robots_held/epoch=$epoch")
       }
-      val allowed0 = FrontierJob.applyRobots(toRobots, robots, cfg)
-      // c50 wired end-to-end: budgets of hosts that failed above threshold
-      // last epoch shrink by the committed AIMD multiplier (floor 1 — a
-      // sick host is slowed, never starved; clean epochs regrow it). The
-      // multiplier only shrinks budgets, so the politeness top-K bound
-      // (maxHostBudget) needs no re-sizing. Off by default: base goldens
-      // stay byte-identical.
-      val allowed1 =
-        if (!backoff || epoch == 0) allowed0
-        else BackoffOps.loadState(spark, root, epoch - 1)
-          .fold(allowed0)(BackoffOps.applyBackoff(allowed0, _))
-      // c54 wired end-to-end: per-host request budgets shrink to fit a
-      // byte allowance using mean page sizes learned from committed
-      // epochs (shrink-only, like backoff — the top-K bound stands; hosts
-      // with no history keep their budget so first contact can measure).
-      // Off by default: the base goldens stay byte-identical.
-      val allowed =
-        if (byteBudgetPerHost <= 0L || epoch == 0) allowed1
-        else BandwidthOps.applyByteBudget(allowed1,
-          BandwidthOps.hostByteStats(spark, root, epoch - 1), byteBudgetPerHost)
       val scheduled = FrontierJob
         .applyGlobalBudget(FrontierJob.schedule(allowed, cfg), cfg)
         .persist()
       scheduled.write.mode("overwrite").parquet(s"$root/scheduled/epoch=$epoch")
-      // c44: persist the budget-losers with aged priority BEFORE the
-      // manifest commit (sibling-state discipline: a crash re-runs the
-      // epoch and overwrites idempotently). The carryover is at most the
-      // eligible-minus-budget fraction of the epoch — frontier-sized worst
-      // case, epoch-budget-sized typically — and carries (url, priority)
-      // only.
+      // c44: the budget-losers with aged priority. The carryover is at
+      // most the eligible-minus-budget fraction of the epoch —
+      // frontier-sized worst case, epoch-budget-sized typically — and
+      // carries (url, priority) only.
       if (aging) {
         allowed.join(scheduled.toDF().select("url_hash"), Seq("url_hash"), "left_anti")
           .select(col("url_canon").as("url"),
             (col("priority") + lit(agingBoost)).as("priority"))
           .write.mode("overwrite").parquet(s"$root/carryover/epoch=$epoch")
       }
-      frontier.unpersist()
-      deduped.unpersist()
-      // counted here (off the persisted df — same single action as before,
-      // moved ahead of the fetch) so the snapshot write can size its output
-      // files from the epoch's actual row count (guide §6)
-      val nScheduled = scheduled.count()
+      scheduled
+    }
+
+    /** Fetch wave + snapshot data write (NOT yet committed: committing
+      * before seen/blooms would let a crash produce a committed epoch whose
+      * URLs re-schedule), then the backoff and pacing state read off the
+      * at-rest fetch log.
+      */
+    def fetchAndSnapshot(epoch: Int, scheduled: Dataset[Scheduled], nScheduled: Long,
+                         dedupeCounts: Map[Int, Long]): Snapshots.PartitionLineageSummary = {
       // target ~32k snapshot rows per output file; when the epoch is big
       // enough that the wave's own partitioning already meets the target,
       // pass 0 (no rebalance) so a full-scale epoch never pays an extra
       // payload exchange just to re-bin files it would emit anyway
-      val snapshotWriteParts = {
-        val target = math.max(1L,
-          math.min(fetchPartitions.toLong, nScheduled / 32768L + 1L)).toInt
-        if (target >= fetchPartitions) 0 else target
-      }
-      // fetch + snapshot data write (NOT yet committed — the manifest goes
-      // last, after every piece of this epoch's state is at rest, so a
-      // crash at ANY point here leaves an uncommitted epoch that resume
-      // re-runs idempotently; committing before seen/blooms would instead
-      // let a crash produce a committed epoch whose URLs re-schedule)
+      val target = math.max(1L,
+        math.min(fetchPartitions.toLong, nScheduled / 32768L + 1L)).toInt
       val fetched0 = fetchInstrumented(scheduled, epoch, fetchPartitions)
       // c67: the payload admission gate sits between the fetch wave and
       // the at-rest write — damaged payloads land in the fetch log as
@@ -655,18 +680,14 @@ object CrawlPipeline {
       val fetched =
         if (!payloadValidation) fetched0 else validateFetched(fetched0, epoch)
       val summary = Snapshots.writeEpochFetched(fetched, root, epoch, dedupeCounts,
-        writePartitions = snapshotWriteParts)
-      // c50: persist this epoch's AIMD backoff state from the at-rest fetch
-      // log BEFORE the manifest commit (sibling-state discipline — resume
-      // recomputes it idempotently from the same committed rows)
+        writePartitions = if (target >= fetchPartitions) 0 else target)
+      // c50: this epoch's AIMD backoff state, from the at-rest fetch log
       if (backoff)
         BackoffOps.writeState(spark, root, epoch,
           Snapshots.readRaw(spark, root, epoch).select("image_id", "status"),
           backoffThresholdBp)
-      // adaptive pacing: persist this epoch's latency histogram partial
-      // BEFORE the manifest commit (sibling-state discipline — a crash
-      // re-runs the epoch and overwrites it idempotently); the kernel is
-      // url_hash-seeded so the observations are resume-stable
+      // adaptive pacing: this epoch's latency histogram partial; the
+      // kernel is url_hash-seeded so the observations are resume-stable
       if (adaptivePacing) {
         val lat = scheduled
           .select(col("host"), col("url_hash")).as[(String, Long)]
@@ -675,7 +696,12 @@ object CrawlPipeline {
           }.toDF("host", "latency_ms")
         PacingOps.writeLatencyEpoch(lat, root, epoch)
       }
-      // seen merge + cumulative bloom sidecar for the NEXT epoch
+      summary
+    }
+
+    /** Seen merge + the cumulative sidecar for the NEXT epoch. */
+    def seenAndSidecar(epoch: Int, scheduled: Dataset[Scheduled], seen: Dataset[SeenEntry],
+                       sidecars: Map[Int, Array[Byte]]): Unit = {
       val newSeen0 = scheduled
         .select(col("url_hash"), col("host"), lit(epoch).as("first_epoch"))
       // recrawled/retried URLs are already in the seen store — re-appending
@@ -692,86 +718,22 @@ object CrawlPipeline {
       val perBucket =
         if (sidecarPerBucket > 0L) sidecarPerBucket
         else math.max(1024L, seedsPerEpoch.toLong)
-      if (sidecar == "cuckoo") {
-        import graft.functions.Cuckoo64
-        // Per-epoch tables MUST share the loaded cumulative sidecar's table
-        // shape: fingerprint re-seating is only defined between equal
-        // bucket counts (a stored index is hash & mask — positions in a
-        // differently-masked table are not derivable), so after a
-        // saturation rebuild has grown the persisted tables, new epochs
-        // build at the grown shape, not the seed capacity. Building at
-        // perBucket here would throw "cuckoo shape mismatch" on the first
-        // post-rebuild merge.
-        val loadedShape =
-          if (sidecars.isEmpty) 0
-          else sidecars.valuesIterator.map(Cuckoo64.tableBucketsOf).max
-        val epochCuckoos =
-          SeenStore.buildCuckoos(newSeen, numBuckets, perBucket, loadedShape)
-            .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-        var merged = SeenStore.mergeCuckooMaps(sidecars, epochCuckoos)
-        // The merge accumulates every epoch's URLs into a fixed-capacity
-        // table; once a bucket saturates its overflow flag makes every
-        // probe answer "maybe" — correct (rows route to the exact
-        // anti-join) but the sidecar benefit silently vanishes. Make
-        // saturation observable AND self-healing: rebuild from the full
-        // seen set at a larger shape, sized on the OBSERVED max per-bucket
-        // occupancy — buckets are host-keyed over a Zipf-skewed host set,
-        // so the saturated bucket can sit far above total/numBuckets and
-        // an average-sized rebuild may re-saturate immediately (repeating
-        // the O(total-seen) rebuild every epoch for nothing).
-        def overflowedIn(m: Map[Int, Array[Byte]]): Seq[Int] =
-          m.filter { case (_, bytes) =>
-            Cuckoo64.isOverflowed(Cuckoo64.deserialize(bytes))
-          }.keys.toSeq.sorted
-        var overflowed = overflowedIn(merged)
-        if (overflowed.nonEmpty) {
-          // committed epochs + THIS epoch's (not-yet-committed) entries —
-          // a rebuild that missed newSeen would give those URLs a false
-          // "definitely fresh" next epoch, skipping the exact anti-join
-          val allSeen = SeenStore.load(spark, root).union(newSeen)
-          val perBucketCounts = allSeen
-            .groupBy(SeenStore.bucketOf(col("host"), numBuckets).as("hb"))
-            .agg(count(lit(1)).as("n")).as[(Int, Long)].collect()
-          val total = perBucketCounts.map(_._2).sum
-          val maxPer = perBucketCounts.map(_._2).max
-          val curShape = math.max(loadedShape, Cuckoo64.numBucketsFor(perBucket))
-          // 25% headroom over the fullest bucket, and at least double the
-          // current shape (geometric growth bounds total rebuild work over
-          // the crawl's lifetime to O(final-seen-set))
-          var shape = math.max(
-            Cuckoo64.numBucketsFor(maxPer + maxPer / 4), 2 * curShape)
-          var attempt = 0
-          while (overflowed.nonEmpty && attempt < 3) {
-            System.err.println(s"[graft] cuckoo sidecar saturated in buckets " +
-              s"${overflowed.mkString(",")} at epoch $epoch — rebuilding from " +
-              s"$total seen URLs (max $maxPer/bucket) at $shape table buckets")
-            merged = SeenStore.buildCuckoos(allSeen, numBuckets, perBucket, shape)
-              .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-            overflowed = overflowedIn(merged)
-            if (overflowed.nonEmpty) { shape *= 2; attempt += 1 }
-          }
-          if (overflowed.nonEmpty)
-            System.err.println(s"[graft] cuckoo sidecar healing FAILED at epoch " +
-              s"$epoch: buckets ${overflowed.mkString(",")} still saturated — " +
-              s"their rows route to the exact anti-join (correct, unaided)")
-        }
-        merged.toSeq.toDF("host_bucket", "cuckoo")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/cuckoo/epoch=$epoch")
-      } else {
-        val epochBlooms = SeenStore.buildBlooms(newSeen, numBuckets, perBucket)
-          .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-        SeenStore.mergeBloomMaps(sidecars, epochBlooms).toSeq.toDF("host_bucket", "bloom")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/bloom/epoch=$epoch")
-      }
-      // E2 diff for this epoch against the maintained latest-version table
-      // (flat per-epoch cost — the full-history window form would grow
-      // O(total snapshots) per epoch; equality golden-tested in
-      // DiffAndPipelineSpec)
-      val revs = DiffJob.revisionsFromLatest(
-        Snapshots.read(spark, root, epoch),
-        Snapshots.readLatest(spark, root, epoch - 1),
-        epoch, cfg.phashTau)
-      revs.write.mode("overwrite").parquet(s"$root/revisions/epoch=$epoch")
+      SeenStore.advanceSidecar(spark, root, sidecar, epoch, sidecars, newSeen, SeenBuckets,
+        perBucket)
+    }
+
+    /** E2 diff for this epoch against the maintained latest-version table
+      * (flat per-epoch cost — the full-history window form would grow
+      * O(total snapshots) per epoch; equality golden-tested in
+      * DiffAndPipelineSpec), then the latest table itself.
+      */
+    def diffAndLatest(cfg: FrontierJob.Config): Unit = {
+      val epoch = cfg.epoch
+      DiffJob.revisionsFromLatest(
+          Snapshots.read(spark, root, epoch),
+          Snapshots.readLatest(spark, root, epoch - 1),
+          epoch, cfg.phashTau)
+        .write.mode("overwrite").parquet(s"$root/revisions/epoch=$epoch")
       // c59 wired (the tightening direction): at the flip epoch, rows
       // fetched under the OLD policy whose path the NEW generation
       // disallows purge from the maintained latest table — news-diff's
@@ -781,7 +743,7 @@ object CrawlPipeline {
       // committed latest(e-1) + the two static generations). Later epochs
       // need no re-purge: readLatest chains from the purged table, and the
       // new policy gates any refetch.
-      if (robotsFlipEpoch >= 0 && epoch == robotsFlipEpoch) {
+      if (epoch == robotsFlipEpoch) {
         RobotsDiffOps.purgeList(
             Snapshots.readLatest(spark, root, epoch - 1),
             Gen.robots(spark).toDF(),
@@ -790,21 +752,20 @@ object CrawlPipeline {
         Snapshots.writeLatest(spark, root, epoch,
           Some(spark.read.parquet(s"$root/robots_purged/epoch=$epoch")))
       } else Snapshots.writeLatest(spark, root, epoch)
-      val nRevised = spark.read.parquet(s"$root/revisions/epoch=$epoch")
-        .where(col("change").startsWith("revised")).count()
-      scheduled.unpersist()
-      // the atomic commit point: everything above is now at rest
+    }
+
+    /** The atomic commit point (everything above is at rest), then the
+      * periodic seen-store compaction and version-chain retention (c48).
+      * Both run AFTER the commit: their input is then fully committed, and
+      * a crash mid-write leaves no _SUCCESS, so the next load falls back to
+      * the previous compact + a longer tail.
+      */
+    def commit(epoch: Int, summary: Snapshots.PartitionLineageSummary): Unit = {
       Snapshots.commitManifest(root, epoch, summary.n_rows, summary.n_partitions)
-      // periodic seen-store compaction AFTER the commit (its input is then
-      // fully committed; a crash mid-compaction leaves no _SUCCESS and the
-      // next load falls back to the previous compact + a longer tail)
       if (compactSeenEvery > 0 && (epoch + 1) % compactSeenEvery == 0)
         SeenStore.compact(spark, root, epoch)
-      // periodic version-chain retention (c48) under the same post-commit
-      // discipline; off by default so the base goldens stay byte-identical
       if (retainEvery > 0 && (epoch + 1) % retainEvery == 0)
         RetentionOps.retainHistory(spark, root, epoch, retainWindow, retainStride)
-      EpochSummary(epoch, nScheduled, nScheduled, nRevised)
-    })
+    }
   }
 }

@@ -88,14 +88,6 @@ object FrontierJob {
         col("n_raw"))
   }
 
-  /** Bloom-assisted exact dedupe against the persistent URL-seen set.
-    *
-    * Split-union plan: rows whose host-bucket bloom says "definitely new"
-    * bypass the shuffle entirely; only bloom-"maybe" rows (true seen + FPP
-    * share of new) pay the anti-join. At 10^10-URL scale with mostly-new
-    * discoveries this removes the dominant shuffle; correctness never
-    * depends on the bloom (FPs resolved by the exact anti-join).
-    */
   /** The seen side of the exact anti-join, size-gated exactly like the
     * robots join (J2b): below the bound Spark may broadcast it (fine for a
     * young crawl); above it the SHUFFLE_MERGE hint forbids broadcast — at
@@ -122,6 +114,16 @@ object FrontierJob {
     */
   val SeenBroadcastMaxBytes: Long = 2L << 20
 
+  /** Bloom-assisted exact dedupe against the persistent URL-seen set.
+    *
+    * Split-union plan: rows whose host-bucket bloom says "definitely new"
+    * bypass the shuffle entirely; only bloom-"maybe" rows (true seen + FPP
+    * share of new) pay the anti-join. At 10^10-URL scale with mostly-new
+    * discoveries this removes the dominant shuffle; correctness never
+    * depends on the bloom (FPs resolved by the exact anti-join).
+    * `seenBroadcastMaxBytes = 0` forces the shuffled anti-join (PlanSpec
+    * pins that plan).
+    */
   def dedupeAgainstSeen(
       frontier: DataFrame,
       seen: Dataset[SeenEntry],
@@ -152,10 +154,9 @@ object FrontierJob {
       frontier: DataFrame,
       seen: Dataset[SeenEntry],
       cuckoos: Map[Int, Array[Byte]],
-      numBuckets: Int,
-      seenBroadcastMaxBytes: Long = SeenBroadcastMaxBytes): DataFrame = {
+      numBuckets: Int): DataFrame = {
     if (cuckoos.isEmpty)
-      return frontier.join(seenJoinSide(seen, seenBroadcastMaxBytes),
+      return frontier.join(seenJoinSide(seen, SeenBroadcastMaxBytes),
         Seq("url_hash"), "left_anti")
     val spark = frontier.sparkSession
     GraftFunctions.ensureRegistered(spark)
@@ -163,7 +164,7 @@ object FrontierJob {
     val bc = spark.sparkContext.broadcast(parsed)
     dedupeWithSidecarProbe(frontier, seen, numBuckets,
       (b, h) => GraftFunctions.cuckooMaybeSeen(spark, bc, b, h),
-      seenBroadcastMaxBytes)
+      SeenBroadcastMaxBytes)
   }
 
   /** Shared split-union dedupe plan over any sidecar probe.
@@ -193,8 +194,8 @@ object FrontierJob {
       frontier: DataFrame,
       seen: Dataset[SeenEntry],
       numBuckets: Int,
-      probe: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
-      seenBroadcastMaxBytes: Long = SeenBroadcastMaxBytes): DataFrame = {
+      probe: (Column, Column) => Column,
+      seenBroadcastMaxBytes: Long): DataFrame = {
     val withBucket = frontier.withColumn(
       "host_bucket", pmod(xxhash64(col("host")), lit(numBuckets)).cast("int"))
     val flagged = withBucket.withColumn(

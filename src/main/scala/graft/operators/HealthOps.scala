@@ -36,9 +36,7 @@ object HealthOps {
         .as("n_fetch_failed"),
       sum(when(col("status") === "parse_failed", 1L).otherwise(0L))
         .as("n_parse_failed"))
-    val revDirs = (0 to uptoEpoch)
-      .map(e => s"$root/revisions/epoch=$e")
-      .filter(p => new java.io.File(p).exists())
+    val revDirs = Snapshots.epochDirs(root, "revisions", 0 to uptoEpoch)
     val revs =
       if (revDirs.isEmpty)
         fetch.select(col("host")).limit(0).withColumn("n_revised", lit(0L))
@@ -141,9 +139,7 @@ object HealthOps {
       .reduce(_ unionByName _)
       .groupBy("host")
       .agg(sum(round(col("priority") * 1e6).cast("long")).as("spent_q"))
-    val revDirs = (0 to uptoEpoch)
-      .map(e => s"$root/revisions/epoch=$e")
-      .filter(p => new java.io.File(p).exists())
+    val revDirs = Snapshots.epochDirs(root, "revisions", 0 to uptoEpoch)
     val got =
       if (revDirs.isEmpty) spent.select(col("host")).limit(0)
         .withColumn("n_revised", lit(0L))

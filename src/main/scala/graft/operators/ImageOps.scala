@@ -1223,7 +1223,7 @@ object ImageOps {
   private def scoresUpTo(spark: org.apache.spark.sql.SparkSession,
                          root: String, upToEpoch: Int,
                          maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = SimIndex.latestCompact(root, "image_scores_compact",
+    val c = graft.sources.Snapshots.latestCompleteEpoch(root, "image_scores_compact",
       math.min(upToEpoch, maxCompactEpoch))
     val tail = (c + 1 to upToEpoch)
       .filter(e => new java.io.File(s"$root/image_scores/epoch=$e").exists())
@@ -1234,7 +1234,7 @@ object ImageOps {
 
   /** Fold the score dirs up to `upToEpoch` into
     * `image_scores_compact/epoch=upToEpoch` (idempotent; crash-safe via
-    * the _SUCCESS-gated latestCompact read). */
+    * the _SUCCESS-gated latestCompleteEpoch read). */
   def compactImageScores(spark: org.apache.spark.sql.SparkSession,
                          root: String, upToEpoch: Int): Unit =
     scoresUpTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1)

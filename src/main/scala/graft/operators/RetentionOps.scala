@@ -135,16 +135,8 @@ object RetentionOps {
   /** Newest committed retained-keys epoch <= maxEpoch, or -1. Gated on the
     * _SUCCESS marker (crash-truncated writes are invisible).
     */
-  def latestRetainedEpoch(root: String, maxEpoch: Int): Int = {
-    val dir = new java.io.File(s"$root/retained_keys")
-    if (!dir.isDirectory) return -1
-    dir.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("epoch=").toInt)
-      .filter(_ <= maxEpoch)
-      .sorted.lastOption.getOrElse(-1)
-  }
+  def latestRetainedEpoch(root: String, maxEpoch: Int): Int =
+    graft.sources.Snapshots.latestCompleteEpoch(root, "retained_keys", maxEpoch)
 
   /** The thinned archive view as of `epoch`: epochs the newest retained-keys
     * table has judged are semi-joined down to their survivors; epochs after

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -53,20 +54,6 @@ object SimIndex {
   def readShingleIndex(spark: SparkSession, root: String, upToEpoch: Int): DataFrame =
     spark.read.parquet(s"$root/shingle_index").where(col("epoch") <= upToEpoch)
 
-  /** Latest completed (_SUCCESS-gated) compact epoch under `root/<table>`,
-    * or -1 — the SeenStore.latestCompactEpoch discipline applied to the
-    * index family.
-    */
-  private[operators] def latestCompact(root: String, table: String, maxEpoch: Int): Int = {
-    val dir = new java.io.File(s"$root/$table")
-    val done = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-      .map(_.getName.stripPrefix("epoch=").toInt)
-      .filter(e => e <= maxEpoch &&
-        new java.io.File(s"$root/$table/epoch=$e/_SUCCESS").exists())
-    if (done.isEmpty) -1 else done.max
-  }
-
   /** Corpus-so-far per-shingle document frequency as of `upToEpoch`:
     * latest df compact + the per-epoch partials after it, summed. Without
     * a compact this degrades to summing every epoch's partials (the
@@ -75,10 +62,9 @@ object SimIndex {
     */
   private[operators] def dfUpTo(spark: SparkSession, root: String, upToEpoch: Int,
                      maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = latestCompact(root, "shingle_df_compact",
+    val c = Snapshots.latestCompleteEpoch(root, "shingle_df_compact",
       math.min(upToEpoch, maxCompactEpoch))
-    val tail = (c + 1 to upToEpoch).map(e => s"$root/shingle_df/epoch=$e")
-      .filter(p => new java.io.File(p).exists())
+    val tail = Snapshots.epochDirs(root, "shingle_df", c + 1 to upToEpoch)
     val parts = (if (c >= 0) Seq(s"$root/shingle_df_compact/epoch=$c") else Nil) ++ tail
     spark.read.parquet(parts: _*)
       .groupBy("sh").agg(sum("df").as("df"))
@@ -89,10 +75,9 @@ object SimIndex {
     */
   private[operators] def sizesUpTo(spark: SparkSession, root: String, upToEpoch: Int,
                         maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = latestCompact(root, "shingle_sizes_compact",
+    val c = Snapshots.latestCompleteEpoch(root, "shingle_sizes_compact",
       math.min(upToEpoch, maxCompactEpoch))
-    val tail = (c + 1 to upToEpoch).map(e => s"$root/shingle_sizes/epoch=$e")
-      .filter(p => new java.io.File(p).exists())
+    val tail = Snapshots.epochDirs(root, "shingle_sizes", c + 1 to upToEpoch)
     val parts = (if (c >= 0) Seq(s"$root/shingle_sizes_compact/epoch=$c") else Nil) ++ tail
     spark.read.parquet(parts: _*).select("doc_id", "sz")
   }
@@ -311,7 +296,7 @@ object SimIndex {
   private[operators] def phashBlocksUpTo(
       spark: SparkSession, root: String, upToEpoch: Int,
       maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = latestCompact(root, "phash_blocks_compact",
+    val c = Snapshots.latestCompleteEpoch(root, "phash_blocks_compact",
       math.min(upToEpoch, maxCompactEpoch))
     val tail = (c + 1 to upToEpoch)
       .filter(e => new java.io.File(s"$root/phash_blocks/epoch=$e").exists())
@@ -404,7 +389,7 @@ object SimIndex {
   private[operators] def phashPairBlocksUpTo(
       spark: SparkSession, root: String, upToEpoch: Int,
       maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = latestCompact(root, "phash_pair_blocks_compact",
+    val c = Snapshots.latestCompleteEpoch(root, "phash_pair_blocks_compact",
       math.min(upToEpoch, maxCompactEpoch))
     val tail = (c + 1 to upToEpoch)
       .filter(e => new java.io.File(s"$root/phash_pair_blocks/epoch=$e").exists())

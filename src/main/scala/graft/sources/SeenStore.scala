@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.functions.{BloomAgg, Bloom64}
+import graft.functions.{BloomAgg, Bloom64, Cuckoo64, CuckooAgg}
 import graft.model.SeenEntry
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -12,6 +12,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *   url_seen/epoch=N/   — parquet of SeenEntry, appended per epoch
   *   bloom/epoch=N/      — parquet (host_bucket:int, bloom:binary), the
   *                         CUMULATIVE sidecar as of epoch N
+  *   cuckoo/epoch=N/     — parquet (host_bucket:int, cuckoo:binary), the
+  *                         same for the cuckoo sidecar kind
   *
   * Buckets are host-keyed (pmod(xxhash64(host), numBuckets)) so one bucket's
   * bloom covers a stable slice of hosts; at 10^10 URLs each of 256 buckets
@@ -20,8 +22,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * small numBuckets/expectedItems; the math is identical.
   */
 object SeenStore {
-  val DefaultBuckets = 64
-
   def bucketOf(hostCol: org.apache.spark.sql.Column, numBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(hostCol), lit(numBuckets)).cast("int")
 
@@ -53,9 +53,7 @@ object SeenStore {
       maxCompactEpoch: Int = Int.MaxValue): Dataset[SeenEntry] = {
     import spark.implicits._
     val c = latestCompactEpoch(root, math.min(upToEpoch, maxCompactEpoch))
-    val tail = (c + 1 to upToEpoch)
-      .map(e => s"$root/url_seen/epoch=$e")
-      .filter(p => new java.io.File(p).exists())
+    val tail = Snapshots.epochDirs(root, "url_seen", c + 1 to upToEpoch)
     val parts = (if (c >= 0) Seq(s"$root/url_seen_compact/epoch=$c") else Nil) ++ tail
     if (parts.isEmpty) emptySeen(spark)
     else spark.read.parquet(parts: _*)
@@ -67,16 +65,8 @@ object SeenStore {
     * invisible and load falls back to the previous compact + longer tail
     * (correctness never depends on compaction finishing).
     */
-  def latestCompactEpoch(root: String, maxEpoch: Int): Int = {
-    val dir = new java.io.File(s"$root/url_seen_compact")
-    val names = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-    val done = names
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-      .map(_.getName.stripPrefix("epoch=").toInt)
-      .filter(e => e <= maxEpoch &&
-        new java.io.File(s"$root/url_seen_compact/epoch=$e/_SUCCESS").exists())
-    if (done.isEmpty) -1 else done.max
-  }
+  def latestCompactEpoch(root: String, maxEpoch: Int): Int =
+    Snapshots.latestCompleteEpoch(root, "url_seen_compact", maxEpoch)
 
   /** Fold the seen set as of `upToEpoch` (previous compact + tail epochs)
     * into `url_seen_compact/epoch=upToEpoch` — the writeLatest discipline
@@ -156,27 +146,44 @@ object SeenStore {
       numBuckets: Int,
       expectedPerBucket: Long,
       tableBuckets: Int = 0): DataFrame = {
-    val cuckooUdaf = udaf(new graft.functions.CuckooAgg(expectedPerBucket, tableBuckets))
+    val cuckooUdaf = udaf(new CuckooAgg(expectedPerBucket, tableBuckets))
     seen
       .withColumn("host_bucket", bucketOf(col("host"), numBuckets))
       .groupBy("host_bucket")
       .agg(cuckooUdaf(col("url_hash")).as("cuckoo"))
   }
 
-  def writeBlooms(blooms: DataFrame, root: String, epoch: Int): Unit =
-    blooms.write.mode("overwrite").parquet(s"$root/bloom/epoch=$epoch")
+  /** The cumulative bloom sidecar as of `epoch` (`root/bloom/epoch=N`). */
+  def loadBlooms(spark: SparkSession, root: String, epoch: Int): Map[Int, Array[Byte]] =
+    loadSidecar(spark, root, "bloom", epoch)
 
-  /** Load the bucket->serialized-bloom map for broadcast. The sidecar is
-    * tiny relative to the frontier (numBuckets rows) — collect is the
-    * intended pattern here, not a driver-side loop over data.
+  /** The cumulative cuckoo sidecar as of `epoch` (`root/cuckoo/epoch=N`). */
+  def loadCuckoos(spark: SparkSession, root: String, epoch: Int): Map[Int, Array[Byte]] =
+    loadSidecar(spark, root, "cuckoo", epoch)
+
+  /** Load the bucket->serialized-filter map of `kind` ("bloom" or
+    * "cuckoo") as of `epoch` for broadcast, or an empty map when there is
+    * none yet. The sidecar is tiny relative to the frontier (numBuckets
+    * rows) — collect is the intended pattern here, not a driver-side loop
+    * over data.
     */
-  def loadBlooms(spark: SparkSession, root: String, epoch: Int): Map[Int, Array[Byte]] = {
-    val path = s"$root/bloom/epoch=$epoch"
-    if (!new java.io.File(path).exists()) Map.empty
-    else spark.read.parquet(path)
-      .collect()
-      .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1))
-      .toMap
+  def loadSidecar(spark: SparkSession, root: String, kind: String,
+                  epoch: Int): Map[Int, Array[Byte]] =
+    Snapshots.epochDirs(root, kind, Seq(epoch)).headOption
+      .fold(Map.empty[Int, Array[Byte]])(p => sidecarMap(spark.read.parquet(p)))
+
+  /** A `(host_bucket, bytes)` sidecar table, collected to the driver. */
+  def sidecarMap(df: DataFrame): Map[Int, Array[Byte]] =
+    df.collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+
+  /** Persist a sidecar map as `root/<kind>/epoch=N` — one file of
+    * numBuckets rows, the filter column named after the kind.
+    */
+  private def writeSidecar(spark: SparkSession, sidecar: Map[Int, Array[Byte]], root: String,
+                           kind: String, epoch: Int): Unit = {
+    import spark.implicits._
+    sidecar.toSeq.toDF("host_bucket", kind)
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/$kind/epoch=$epoch")
   }
 
   /** Merge an epoch's blooms into the prior cumulative sidecar (word-wise
@@ -189,7 +196,7 @@ object SeenStore {
     * capacity overflow degrades safely (see Cuckoo64.mergeSerialized).
     */
   def mergeCuckooMaps(a: Map[Int, Array[Byte]], b: Map[Int, Array[Byte]]): Map[Int, Array[Byte]] =
-    mergeSidecarMaps(a, b, graft.functions.Cuckoo64.mergeSerialized)
+    mergeSidecarMaps(a, b, Cuckoo64.mergeSerialized)
 
   private def mergeSidecarMaps(
       a: Map[Int, Array[Byte]],
@@ -204,16 +211,79 @@ object SeenStore {
       }
     }.toMap
 
-  /** Cumulative cuckoo sidecar for broadcast — same layout discipline as
-    * loadBlooms, under `root/cuckoo/epoch=N`.
+  /** Advance the cumulative sidecar of `kind` from `prev` (epoch-1's) to
+    * `epoch`: build this epoch's filters over `newSeen`, collect and merge
+    * them into `prev`, persist `root/<kind>/epoch=N`.
     */
-  def loadCuckoos(spark: SparkSession, root: String, epoch: Int): Map[Int, Array[Byte]] = {
-    val path = s"$root/cuckoo/epoch=$epoch"
-    if (!new java.io.File(path).exists()) Map.empty
-    else spark.read.parquet(path)
-      .collect()
-      .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1))
-      .toMap
+  def advanceSidecar(spark: SparkSession, root: String, kind: String, epoch: Int,
+                     prev: Map[Int, Array[Byte]], newSeen: Dataset[SeenEntry],
+                     numBuckets: Int, perBucket: Long): Unit = {
+    val merged =
+      if (kind == "cuckoo") advanceCuckoos(spark, root, epoch, prev, newSeen, numBuckets, perBucket)
+      else mergeBloomMaps(prev, sidecarMap(buildBlooms(newSeen, numBuckets, perBucket)))
+    writeSidecar(spark, merged, root, kind, epoch)
+  }
+
+  private def advanceCuckoos(spark: SparkSession, root: String, epoch: Int,
+                             prev: Map[Int, Array[Byte]], newSeen: Dataset[SeenEntry],
+                             numBuckets: Int, perBucket: Long): Map[Int, Array[Byte]] = {
+    import spark.implicits._
+    // Per-epoch tables MUST share the loaded cumulative sidecar's table
+    // shape: fingerprint re-seating is only defined between equal bucket
+    // counts (a stored index is hash & mask — positions in a
+    // differently-masked table are not derivable), so after a saturation
+    // rebuild has grown the persisted tables, new epochs build at the
+    // grown shape, not the seed capacity. Building at perBucket here would
+    // throw "cuckoo shape mismatch" on the first post-rebuild merge.
+    val loadedShape =
+      if (prev.isEmpty) 0 else prev.valuesIterator.map(Cuckoo64.tableBucketsOf).max
+    var merged = mergeCuckooMaps(prev,
+      sidecarMap(buildCuckoos(newSeen, numBuckets, perBucket, loadedShape)))
+    // The merge accumulates every epoch's URLs into a fixed-capacity
+    // table; once a bucket saturates its overflow flag makes every probe
+    // answer "maybe" — correct (rows route to the exact anti-join) but the
+    // sidecar benefit silently vanishes. Make saturation observable AND
+    // self-healing: rebuild from the full seen set at a larger shape, sized
+    // on the OBSERVED max per-bucket occupancy — buckets are host-keyed
+    // over a Zipf-skewed host set, so the saturated bucket can sit far
+    // above total/numBuckets and an average-sized rebuild may re-saturate
+    // immediately (repeating the O(total-seen) rebuild every epoch for
+    // nothing).
+    def overflowedIn(m: Map[Int, Array[Byte]]): Seq[Int] =
+      m.filter { case (_, bytes) =>
+        Cuckoo64.isOverflowed(Cuckoo64.deserialize(bytes))
+      }.keys.toSeq.sorted
+    var overflowed = overflowedIn(merged)
+    if (overflowed.nonEmpty) {
+      // committed epochs + THIS epoch's (not-yet-committed) entries — a
+      // rebuild that missed newSeen would give those URLs a false
+      // "definitely fresh" next epoch, skipping the exact anti-join
+      val allSeen = load(spark, root).union(newSeen)
+      val perBucketCounts = allSeen
+        .groupBy(bucketOf(col("host"), numBuckets).as("hb"))
+        .agg(count(lit(1)).as("n")).as[(Int, Long)].collect()
+      val total = perBucketCounts.map(_._2).sum
+      val maxPer = perBucketCounts.map(_._2).max
+      val curShape = math.max(loadedShape, Cuckoo64.numBucketsFor(perBucket))
+      // 25% headroom over the fullest bucket, and at least double the
+      // current shape (geometric growth bounds total rebuild work over the
+      // crawl's lifetime to O(final-seen-set))
+      var shape = math.max(Cuckoo64.numBucketsFor(maxPer + maxPer / 4), 2 * curShape)
+      var attempt = 0
+      while (overflowed.nonEmpty && attempt < 3) {
+        System.err.println(s"[graft] cuckoo sidecar saturated in buckets " +
+          s"${overflowed.mkString(",")} at epoch $epoch — rebuilding from " +
+          s"$total seen URLs (max $maxPer/bucket) at $shape table buckets")
+        merged = sidecarMap(buildCuckoos(allSeen, numBuckets, perBucket, shape))
+        overflowed = overflowedIn(merged)
+        if (overflowed.nonEmpty) { shape *= 2; attempt += 1 }
+      }
+      if (overflowed.nonEmpty)
+        System.err.println(s"[graft] cuckoo sidecar healing FAILED at epoch " +
+          s"$epoch: buckets ${overflowed.mkString(",")} still saturated — " +
+          s"their rows route to the exact anti-join (correct, unaided)")
+    }
+    merged
   }
 
   /** Purge ONE host's URLs from the seen machinery — the deletable-sidecar
@@ -268,25 +338,23 @@ object SeenStore {
       val bucket = spark.range(1)
         .select(bucketOf(lit(host), numBuckets)).head().getInt(0)
       cuckoos.get(bucket).foreach { bytes =>
-        val table = graft.functions.Cuckoo64.deserialize(bytes)
+        val table = Cuckoo64.deserialize(bytes)
         val updated =
-          if (graft.functions.Cuckoo64.isOverflowed(table)) {
+          if (Cuckoo64.isOverflowed(table)) {
             // saturated => deletion unsound; rebuild THIS bucket from the
             // remaining (post-purge) seen rows at the existing shape
-            val fresh = graft.functions.Cuckoo64.alloc(
-              graft.functions.Cuckoo64.tableBucketsOf(bytes))
+            val fresh = Cuckoo64.alloc(Cuckoo64.tableBucketsOf(bytes))
             spark.read.parquet(s"$root/url_seen_compact/epoch=$committed")
               .where(bucketOf(col("host"), numBuckets) === bucket)
               .select("url_hash").as[Long].collect()
-              .foreach(h => graft.functions.Cuckoo64.insert(fresh, h))
+              .foreach(h => Cuckoo64.insert(fresh, h))
             fresh
           } else {
-            hashes.foreach(h => graft.functions.Cuckoo64.delete(table, h))
+            hashes.foreach(h => Cuckoo64.delete(table, h))
             table
           }
-        val merged = cuckoos.updated(bucket, graft.functions.Cuckoo64.serialize(updated))
-        merged.toSeq.toDF("host_bucket", "cuckoo")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/cuckoo/epoch=$committed")
+        writeSidecar(spark, cuckoos.updated(bucket, Cuckoo64.serialize(updated)), root,
+          "cuckoo", committed)
       }
     }
     hashes.length.toLong

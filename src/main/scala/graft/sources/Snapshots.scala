@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.model.{Fetched, PartitionLineage, Snapshot}
+import graft.model.{Fetched, PartitionLineage, Scheduled, Snapshot}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -73,13 +73,6 @@ object Snapshots {
     df.where(coalesce(col("status"), lit("parsed")) === "parsed")
       .select(SnapshotCols.map(col): _*)
 
-  /** Write one epoch's snapshot data + per-partition lineage WITHOUT
-    * committing. The caller finishes all of the epoch's sibling state
-    * (url_seen, bloom sidecars, latest-version table) and only then calls
-    * [[commitManifest]] — the manifest is the single atomic commit point, so
-    * a crash anywhere before it leaves an uncommitted epoch that resume
-    * re-runs idempotently (every write here is per-epoch overwrite).
-    */
   /** Uninstrumented form (no fetch wave): every row is "parsed", the
     * partition is the write task, wall/dedupe counters are zero.
     */
@@ -103,7 +96,11 @@ object Snapshots {
     * (partition_id -> candidates dropped before scheduling, attributed by
     * the same hash(url_hash) routing as the wave) merges in driver-side —
     * it is at most one entry per fetch partition, never data-sized.
-    * Per-epoch overwrite => idempotent under epoch re-runs.
+    * The caller finishes all of the epoch's sibling state (url_seen, bloom
+    * sidecars, latest-version table) and only then calls
+    * [[commitManifest]] — the manifest is the single atomic commit point, so
+    * a crash anywhere before it leaves an uncommitted epoch that resume
+    * re-runs idempotently (every write here is per-epoch overwrite).
     */
   def writeEpochFetched(
       fetched: Dataset[Fetched],
@@ -162,13 +159,6 @@ object Snapshots {
       .coalesce(1) // <= one row per fetch partition — never parallelism-sized
       .write.mode("overwrite").parquet(s"$root/lineage/epoch=$epoch")
     PartitionLineageSummary(epoch, lineage.map(_.n_parsed).sum, lineage.length)
-  }
-
-  /** Legacy single-call form: write + immediately commit (no sibling state). */
-  def commit(snaps: Dataset[Snapshot], root: String, epoch: Int): PartitionLineageSummary = {
-    val s = writeEpoch(snaps, root, epoch)
-    commitManifest(root, epoch, s.n_rows, s.n_partitions)
-    s
   }
 
   final case class PartitionLineageSummary(epoch: Int, n_rows: Long, n_partitions: Int)
@@ -283,6 +273,34 @@ object Snapshots {
       finally tmps.close()
     }
     removed
+  }
+
+  /** The `root/<family>/epoch=e` dirs that exist, for e in `epochs`, in
+    * order — committed or not: callers pass only epochs they may read.
+    */
+  def epochDirs(root: String, family: String, epochs: Seq[Int]): Seq[String] =
+    epochs.map(e => s"$root/$family/epoch=$e").filter(p => new java.io.File(p).exists())
+
+  /** Highest e <= maxEpoch whose `root/<family>/epoch=e` write COMPLETED
+    * (the parquet _SUCCESS marker is there), or -1: a write interrupted
+    * mid-way is invisible to readers gated on this.
+    */
+  def latestCompleteEpoch(root: String, family: String, maxEpoch: Int): Int =
+    Option(new java.io.File(s"$root/$family").listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("epoch=") &&
+        new java.io.File(f, "_SUCCESS").exists())
+      .map(_.getName.stripPrefix("epoch=").toInt)
+      .filter(_ <= maxEpoch)
+      .maxOption.getOrElse(-1)
+
+  /** A committed epoch's schedule (`root/scheduled/epoch=N`) with its
+    * epoch column restored.
+    */
+  def readScheduled(spark: SparkSession, root: String, epoch: Int): Dataset[Scheduled] = {
+    import spark.implicits._
+    spark.read.parquet(s"$root/scheduled/epoch=$epoch")
+      .select("url_canon", "url_hash", "host", "path", "priority", "slot", "scheduled_at_ms")
+      .withColumn("epoch", lit(epoch)).as[Scheduled]
   }
 
   /** Highest committed epoch, or -1 (E3 resume entry point). */

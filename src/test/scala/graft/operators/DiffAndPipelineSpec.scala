@@ -418,26 +418,86 @@ class PipelineResumeSpec extends AnyFunSuite {
       "partial compact without _SUCCESS was not ignored")
   }
 
+  /** Order-free digest of every `<family>/epoch=e` dir and every manifest
+    * under `root`: row count + summed row hash per dir, the manifest's
+    * bytes. The wall-clock columns (`elapsed_ms`, `wall_ms`) are left out.
+    */
+  private def rootDigest(root: String): Map[String, String] = {
+    val dirs = for {
+      fam <- new java.io.File(root).listFiles().toSeq
+      if fam.isDirectory && fam.getName != "_manifests"
+      dir <- fam.listFiles().toSeq
+      if dir.isDirectory && dir.getName.startsWith("epoch=")
+    } yield {
+      val df = spark.read.parquet(dir.getPath).drop("elapsed_ms", "wall_ms")
+      val r = df.agg(count(lit(1)),
+        sum(xxhash64(df.columns.sorted.map(col).toIndexedSeq: _*).cast("decimal(38,0)")))
+        .head()
+      s"${fam.getName}/${dir.getName}" -> s"${r.getLong(0)}:${r.get(1)}"
+    }
+    val manifests = new java.io.File(s"$root/_manifests").listFiles().toSeq
+      .filter(_.getName.endsWith(".json"))
+      .map(f => s"_manifests/${f.getName}" -> java.nio.file.Files.readString(f.toPath))
+    (dirs ++ manifests).toMap
+  }
+
+  private def copyTree(from: String, to: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get(from)
+    val all = java.nio.file.Files.walk(src)
+    try all.iterator().asScala.foreach { p =>
+      val q = java.nio.file.Paths.get(to).resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.copy(p, q)
+    } finally all.close()
+  }
+
+  private def rmTree(path: String): Unit = {
+    val f = new java.io.File(path)
+    Option(f.listFiles()).foreach(_.foreach(c => rmTree(c.getPath)))
+    f.delete()
+  }
+
   test("crash mid-epoch (all state written, manifest missing) resumes to identical state") {
-    val rootA = tempDir("graft-crash-straight")
-    val rootB = tempDir("graft-crash-resume")
-    CrawlPipeline.run(spark, rootA, untilEpoch = 2, seedsPerEpoch = 600, cfg)
-    CrawlPipeline.run(spark, rootB, untilEpoch = 2, seedsPerEpoch = 600, cfg)
-    // simulate the worst crash point: epoch 2 fully written (snapshots,
-    // url_seen, blooms, latest, revisions) but the manifest rename never
-    // happened — resume MUST re-run epoch 2 and converge, in particular it
-    // must not dedupe against the crashed epoch's own url_seen entries
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$rootB/_manifests/epoch-2.json"))
-    assert(graft.sources.Snapshots.latestCommittedEpoch(rootB) == 1)
-    CrawlPipeline.run(spark, rootB, untilEpoch = 2, seedsPerEpoch = 600, cfg)
-    def state(root: String) = (
-      spark.read.parquet(s"$root/url_seen").select("url_hash", "first_epoch")
-        .as[(Long, Int)].collect().toSet,
-      spark.read.parquet(s"$root/scheduled/epoch=2").select("url_hash", "slot")
-        .as[(Long, Int)].collect().sortBy(x => (x._2, x._1)).toVector,
-      spark.read.parquet(s"$root/revisions/epoch=2")
-        .orderBy("image_id").collect().toVector)
-    assert(state(rootA) == state(rootB), "crash-resume diverged from straight run")
+    // A crash-point matrix over epoch 2's pre-commit writers, in write
+    // order. Crash point i: writer i died mid-write (its epoch=2 dir has no
+    // _SUCCESS), no later writer ran, the manifest was never renamed in.
+    // The last point is the worst case: every writer done, manifest
+    // missing — resume MUST re-run epoch 2 and converge, in particular it
+    // must not dedupe against the crashed epoch's own url_seen entries.
+    def matrix(name: String, writers: Seq[String], crawl: String => Unit): Unit = {
+      val straight = tempDir(s"graft-crash-$name")
+      crawl(straight)
+      val epoch2 = new java.io.File(straight).listFiles().toSeq
+        .filter(f => new java.io.File(f, "epoch=2").isDirectory).map(_.getName).toSet
+      assert(writers.toSet == epoch2, s"$name: writer list != epoch-2 families")
+      val want = rootDigest(straight)
+      for (i <- 0 to writers.length) {
+        val root = tempDir(s"graft-crash-$name-$i")
+        copyTree(straight, root)
+        java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/_manifests/epoch-2.json"))
+        if (i < writers.length)
+          java.nio.file.Files.delete(
+            java.nio.file.Paths.get(s"$root/${writers(i)}/epoch=2/_SUCCESS"))
+        writers.drop(i + 1).foreach(w => rmTree(s"$root/$w/epoch=2"))
+        assert(Snapshots.latestCommittedEpoch(root) == 1)
+        crawl(root)
+        val at = if (i < writers.length) writers(i) else "manifest"
+        val got = rootDigest(root)
+        val diff = (want.keySet ++ got.keySet).filter(k => want.get(k) != got.get(k))
+        assert(diff.isEmpty, s"$name: crash at $at resumed to a different state: " +
+          diff.toSeq.sorted.mkString(", "))
+      }
+    }
+    matrix("default",
+      Seq("scheduled", "snapshots", "lineage", "url_seen", "bloom", "revisions", "latest"),
+      root => CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = 600, cfg))
+    matrix("features",
+      Seq("robots_held", "scheduled", "carryover", "snapshots", "lineage", "backoff",
+        "latency_hist", "url_seen", "bloom", "revisions", "robots_purged", "latest"),
+      root => CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = 600, cfg,
+        aging = true, backoff = true, adaptivePacing = true, recrawl = true,
+        retryFailures = true, robotsFlipEpoch = 2))
   }
 }
 

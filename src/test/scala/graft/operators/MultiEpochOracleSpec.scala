@@ -33,7 +33,7 @@ class MultiEpochOracleSpec extends AnyFunSuite {
   test("3-epoch pipeline == 3-epoch oracle (schedules + final seen set)") {
     val root = tempDir("graft-multiepoch")
     CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = n, cfg,
-      numBuckets = 16, outlinkFanout = fanout)
+      outlinkFanout = fanout)
 
     var seen = Set.empty[Long]
     var prevSched: Vector[Scheduled] = Vector.empty

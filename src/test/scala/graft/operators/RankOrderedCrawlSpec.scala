@@ -43,7 +43,7 @@ class RankOrderedCrawlSpec extends AnyFunSuite {
   test("3-epoch rank-ordered pipeline == local mirror (schedules + seen)") {
     val root = tempDir("graft-rankcrawl")
     CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = n, cfg,
-      numBuckets = 16, outlinkFanout = fanout, rankOrdered = true)
+      outlinkFanout = fanout, rankOrdered = true)
 
     var seen = Set.empty[Long]
     var prevSched: Vector[Scheduled] = Vector.empty
