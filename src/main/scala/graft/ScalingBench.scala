@@ -111,10 +111,10 @@ object ScalingBench {
     // Sidecar mode (SPARK_GRAFT_SIDECAR=none|bloom|cuckoo): "none" is the
     // epoch-0 shape (empty seen set, exact anti-join short-circuits on an
     // empty build side). "bloom"/"cuckoo" measure the epoch>=1 shape the
-    // split-union was built for: a quarter of the URL space is already
-    // seen (persisted to parquet untimed, like a real epoch reading the
-    // committed seen table) and a populated sidecar routes rows between
-    // the bypass branch and the exact anti-join.
+    // sidecar probe serves: a quarter of the URL space is already seen
+    // (persisted to parquet untimed, like a real epoch reading the
+    // committed seen table) and the populated sidecar is probed inside the
+    // exact anti-join.
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_SIDECAR", "none")
     val numBuckets = 64
     val seenDs: org.apache.spark.sql.Dataset[graft.model.SeenEntry] =
@@ -328,7 +328,7 @@ object ScalingBench {
          |URLs, 64 input partitions, Zipf-skewed hosts, sidecar=$sidecar —
          |"none" is the epoch-0 empty-seen shape; "bloom"/"cuckoo" pre-seed
          |a quarter of the URL space into a parquet seen table + populated
-         |sidecar so the split-union dedupe path is exercised), full E1 job
+         |sidecar so the sidecar-probed dedupe is exercised), full E1 job
          |(canonicalize -> xxhash64 -> batch dedupe -> robots gate ->
          |bounded-heap politeness top-K -> deterministic global order),
          |`noop` sink. One fresh child JVM per level, `taskset`-pinned to

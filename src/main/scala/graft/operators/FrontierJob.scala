@@ -14,7 +14,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
   *
   * Shuffle inventory (kept explicit on purpose — SURVEY.md §4):
   *   1. batch-dedupe groupBy(url_hash)        — hash agg, partial+final
-  *   2. anti-join vs url_seen on url_hash     — only bloom-"maybe" rows
+  *   2. anti-join vs url_seen on url_hash     — seen side only: the
+  *                                              frontier side is already
+  *                                              partitioned by (1)
   *   3. politeness top-K agg groupBy(host)    — bounded-heap partials:
   *                                              <= mapParts*hosts*k rows
   * robots join is broadcast (no shuffle); global budget is
@@ -47,6 +49,14 @@ object FrontierJob {
     * min(url_canon) is a deterministic representative (equal for all rows
     * of a group absent a 64-bit collision).
     *
+    * canon_url runs once per row: the null/blank filter sits after the
+    * aggregation, on the representative. Placed before it, Catalyst
+    * pushes the filter below the alias and the scan stage evaluates the
+    * (mostly allocating) canonicalizer three times per row. The filter
+    * there differs from a pre-filter only when a real URL's hash equals
+    * xxhash64(null) or xxhash64("") — the same 64-bit collision class as
+    * the min(url_canon) note above.
+    *
     * Agg node choice (measured, round 4): min(string) forces SortAggregate
     * (string agg buffers are not HashAggregate-mutable). Two
     * hash-friendly alternatives were measured at 4M rows / local[8],
@@ -69,11 +79,11 @@ object FrontierJob {
     GraftFunctions.ensureRegistered(spark)
     seeds
       .select(GraftFunctions.canonUrl(col("url")).as("url_canon"), col("priority"))
-      .where(col("url_canon").isNotNull && length(col("url_canon")) > 0)
       .select(xxhash64(col("url_canon")).as("url_hash"), col("url_canon"), col("priority"))
       .groupBy("url_hash")
       .agg(max("priority").as("priority"), min("url_canon").as("url_canon"),
         count(lit(1)).as("n_raw"))
+      .where(col("url_canon").isNotNull && length(col("url_canon")) > 0)
       .select(
         col("url_canon"),
         col("url_hash"),
@@ -114,13 +124,10 @@ object FrontierJob {
     */
   val SeenBroadcastMaxBytes: Long = 2L << 20
 
-  /** Bloom-assisted exact dedupe against the persistent URL-seen set.
-    *
-    * Split-union plan: rows whose host-bucket bloom says "definitely new"
-    * bypass the shuffle entirely; only bloom-"maybe" rows (true seen + FPP
-    * share of new) pay the anti-join. At 10^10-URL scale with mostly-new
-    * discoveries this removes the dominant shuffle; correctness never
-    * depends on the bloom (FPs resolved by the exact anti-join).
+  /** Exact dedupe against the persistent URL-seen set, probing the
+    * host-bucket bloom sidecar inside the anti-join (see
+    * [[dedupeWithSidecarProbe]]); no sidecar yet (epoch 0 / cold resume)
+    * means the plain anti-join. Correctness never depends on the bloom.
     * `seenBroadcastMaxBytes = 0` forces the shuffled anti-join (PlanSpec
     * pins that plan).
     */
@@ -130,7 +137,7 @@ object FrontierJob {
       blooms: Map[Int, Array[Byte]],
       numBuckets: Int,
       seenBroadcastMaxBytes: Long = SeenBroadcastMaxBytes): DataFrame = {
-    if (blooms.isEmpty) // no sidecar yet (epoch 0 / cold resume): exact path
+    if (blooms.isEmpty)
       return frontier.join(seenJoinSide(seen, seenBroadcastMaxBytes),
         Seq("url_hash"), "left_anti")
     val spark = frontier.sparkSession
@@ -146,8 +153,8 @@ object FrontierJob {
   }
 
   /** Cuckoo-sidecar dedupe — the deletable branch of the north_rule's
-    * "bloom/cuckoo URL-seen filter", sharing the exact split-union plan
-    * and codegen-probe discipline with the bloom path (the filters differ
+    * "bloom/cuckoo URL-seen filter", sharing the one-pass plan and
+    * codegen-probe discipline with the bloom path (the filters differ
     * only in the membership kernel behind the probe expression).
     */
   def dedupeAgainstSeenCuckoo(
@@ -167,28 +174,23 @@ object FrontierJob {
       SeenBroadcastMaxBytes)
   }
 
-  /** Shared split-union dedupe plan over any sidecar probe.
-    * NULL-safety: a null bucket/hash makes the flag null, which must route
-    * the row through the EXACT anti-join (coalesce -> true), never
-    * silently drop it — the oracle always keeps such rows.
+  /** Shared one-pass dedupe over any sidecar probe: ONE left-anti join on
+    * `url_hash = seen_hash AND maybe_seen`. A bloom or cuckoo filter has
+    * no false negatives, so a seen URL always carries maybe_seen = true
+    * and the survivors are exactly the plain anti-join's. A null
+    * bucket/hash makes the probe null; coalesce -> true leaves such a row
+    * to the exact match, never drops it unmatched (the oracle keeps it).
     *
-    * Double-compute note (measured, round 4): the two union branches both
-    * consume the canonicalize+dedupe-agg subtree, and the INITIAL physical
-    * plan prints two full copies of the scan+canonicalize+partial-agg
-    * pipeline — which reads as a doubled frontier scan. At runtime it is
-    * not: AQE's stage cache serves the second branch's exchange from the
-    * first (final adaptive plan: ONE MapPartitions seed scan + a
-    * ReusedExchange), so the expensive narrow work and its shuffle write
-    * happen once; only the post-shuffle final agg + filter re-run per
-    * branch (bounded by the deduped batch, already partitioned). Pinned in
-    * PlanSpec ("E1 sidecar split-union shares the frontier subtree") for
-    * both bloom and cuckoo paths. When auditing this plan, inspect the
-    * SAME QueryExecution that ran (e.g. after collect()) — a plan printed
-    * without executing it shows the initial copy-heavy form
-    * (isFinalPlan=false) and misreads as a double-compute. An explicit
-    * persist() of the flagged frame would trade the reused exchange for a
-    * cache materialization and was measured slower on the analogous t05
-    * multi-consumer index (BENCH/BASELINE.md).
+    * The frontier arrives hash-partitioned and sorted on url_hash by the
+    * batch-dedupe aggregate, so the shuffled (size-gated) form adds only
+    * the seen side's exchange and sort (PlanSpec pins both forms). For
+    * the same reason, splitting the frontier on the flag into a bypass
+    * branch and an anti-joined branch would save no shuffle, but would
+    * re-run the dedupe aggregate per branch, and AQE coalesces a union's
+    * shuffle reads into fewer tasks. As a join condition the probe is
+    * evaluated only for rows whose url_hash the seen side holds, so here
+    * the sidecar changes neither the result nor which rows the join
+    * looks up; whether E1 needs it at all is ROADMAP direction 3.
     */
   private def dedupeWithSidecarProbe(
       frontier: DataFrame,
@@ -196,15 +198,12 @@ object FrontierJob {
       numBuckets: Int,
       probe: (Column, Column) => Column,
       seenBroadcastMaxBytes: Long): DataFrame = {
-    val withBucket = frontier.withColumn(
-      "host_bucket", pmod(xxhash64(col("host")), lit(numBuckets)).cast("int"))
-    val flagged = withBucket.withColumn(
-      "maybe_seen",
-      coalesce(probe(col("host_bucket"), col("url_hash")), lit(true)))
-    val fresh = flagged.where(!col("maybe_seen"))
-    val maybe = flagged.where(col("maybe_seen"))
-      .join(seenJoinSide(seen, seenBroadcastMaxBytes), Seq("url_hash"), "left_anti")
-    fresh.unionByName(maybe).drop("maybe_seen", "host_bucket")
+    val maybeSeen = coalesce(
+      probe(pmod(xxhash64(col("host")), lit(numBuckets)).cast("int"), col("url_hash")),
+      lit(true))
+    val seenSide = seenJoinSide(seen, seenBroadcastMaxBytes)
+      .withColumnRenamed("url_hash", "seen_hash")
+    frontier.join(seenSide, col("url_hash") === col("seen_hash") && maybeSeen, "left_anti")
   }
 
   /** robots.txt gate: join of the per-host rules cache, longest-prefix

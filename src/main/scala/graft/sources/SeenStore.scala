@@ -3,7 +3,7 @@ package graft.sources
 import graft.functions.{BloomAgg, Bloom64, Cuckoo64, CuckooAgg}
 import graft.model.SeenEntry
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 /** Persistent URL-seen set + partitioned bloom sidecars (SURVEY.md §2.1 S4,
   * §7.3.5; north_rule "partitioned bloom/cuckoo URL-seen filter").
@@ -56,9 +56,13 @@ object SeenStore {
     val tail = Snapshots.epochDirs(root, "url_seen", c + 1 to upToEpoch)
     val parts = (if (c >= 0) Seq(s"$root/url_seen_compact/epoch=$c") else Nil) ++ tail
     if (parts.isEmpty) emptySeen(spark)
-    else spark.read.parquet(parts: _*)
-      .select("url_hash", "host", "first_epoch").as[SeenEntry]
+    else spark.read.schema(SeenSchema).parquet(parts: _*).as[SeenEntry]
   }
+
+  /** Static read schema of the url_seen dirs, as Snapshots.RootSchema:
+    * an inferred one costs a footer-reading Spark job on every load.
+    */
+  private val SeenSchema = Encoders.product[SeenEntry].schema
 
   /** Latest compacted epoch <= maxEpoch whose write COMPLETED — gated on
     * the parquet _SUCCESS marker, so a compaction interrupted mid-write is

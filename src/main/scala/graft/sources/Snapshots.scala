@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.model.{Fetched, PartitionLineage, Scheduled, Snapshot}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Epoch-snapshot store + manifest-based checkpointing (SURVEY.md §2.1
@@ -190,9 +190,10 @@ object Snapshots {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
           "image_id STRING, epoch INT, phash BIGINT, caption STRING"))
-    else spark.read.parquet(path)
-      .withColumn("epoch", col("snap_epoch")).drop("snap_epoch")
-      .select(LatestCols.map(col): _*)
+    // static read schema (as RootSchema): no schema-inference job per call
+    else spark.read.schema("image_id STRING, snap_epoch INT, phash BIGINT, caption STRING")
+      .parquet(path)
+      .withColumnRenamed("snap_epoch", "epoch")
   }
 
   /** latest(e) = current(e) ∪ (latest(e-1) ∖ ids present in current(e)).
@@ -294,14 +295,16 @@ object Snapshots {
       .maxOption.getOrElse(-1)
 
   /** A committed epoch's schedule (`root/scheduled/epoch=N`) with its
-    * epoch column restored.
+    * epoch column restored. The read schema is static, as [[RootSchema]]:
+    * an inferred one costs a footer-reading Spark job per call.
     */
   def readScheduled(spark: SparkSession, root: String, epoch: Int): Dataset[Scheduled] = {
     import spark.implicits._
-    spark.read.parquet(s"$root/scheduled/epoch=$epoch")
-      .select("url_canon", "url_hash", "host", "path", "priority", "slot", "scheduled_at_ms")
+    spark.read.schema(ScheduledSchema).parquet(s"$root/scheduled/epoch=$epoch")
       .withColumn("epoch", lit(epoch)).as[Scheduled]
   }
+
+  private val ScheduledSchema = Encoders.product[Scheduled].schema
 
   /** Highest committed epoch, or -1 (E3 resume entry point). */
   def latestCommittedEpoch(root: String): Int = {

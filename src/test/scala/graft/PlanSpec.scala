@@ -167,19 +167,24 @@ class PlanSpec extends AnyFunSuite {
     assert(aggIdx.size >= 2, s"expected partial+final ObjectHashAggregate pair:\n$p")
   }
 
-  test("E1 sidecar split-union shares the frontier subtree (bloom AND cuckoo)") {
-    // The split-union dedupe consumes the canonicalize+agg subtree from two
-    // branches (bloom-"fresh" bypass and bloom-"maybe" anti-join). On the
-    // *initial* (non-executed) plan this prints as two full copies of the
-    // scan+canonicalize+partial-agg pipeline — which looks like a
-    // double-compute — but at RUNTIME AQE's stage cache serves the second
-    // branch from the first branch's shuffle: the final adaptive plan must
-    // show exactly ONE MapPartitions (seed scan) and a ReusedExchange.
-    // Pin that for both sidecar kinds so a refactor that breaks subtree
-    // identity (and thus genuinely doubles the biggest scan of every epoch)
-    // fails here, not at 100 TB. NOTE: inspect the plan of the SAME
-    // QueryExecution that ran (collect()); a plan printed before execution
-    // is the initial one (isFinalPlan=false) and shows no reuse.
+  /** Final-plan section of an executed AQE plan (AdaptiveSparkPlan.toString
+    * appends the pre-execution initial plan after this marker).
+    */
+  private def finalSection(df: org.apache.spark.sql.DataFrame): String =
+    finalPlan(df).split("== Initial Plan ==")(0)
+
+  private def countLines(p: String, needle: String): Int = p.linesIterator.count(_.contains(needle))
+
+  test("E1 sidecar dedupe is one pass over the frontier subtree (bloom AND cuckoo)") {
+    // The sidecar probe rides the exact anti-join's condition: the
+    // canonicalize+dedupe subtree is consumed once, so the final adaptive
+    // plan shows ONE MapPartitions (seed scan), no Union and no
+    // ReusedExchange (a second consumer of the dedupe exchange), and ONE
+    // final dedupe aggregate — a split into branches would re-run that
+    // aggregate per branch and let AQE coalesce the union's reads into
+    // fewer tasks. NOTE: inspect the plan of the SAME QueryExecution that
+    // ran (collect()); a plan printed before execution is the initial one
+    // (isFinalPlan=false).
     val seen = Seq(graft.model.SeenEntry(42L, "news0.example.com", 0)).toDS()
     val numBuckets = 16
     val blooms = SeenStore.buildBlooms(seen, numBuckets, 128)
@@ -190,9 +195,7 @@ class PlanSpec extends AnyFunSuite {
     // seeds pinned to an explicit multi-partition split: r06's adaptive
     // source partitioning gives 2000 rows ONE partition, and a
     // single-partition child satisfies the dedupe's distribution with no
-    // Exchange at all — nothing to reuse, which is fine for cost but
-    // vacuous for this pin. The invariant under test (subtree identity =>
-    // one scan + ReusedExchange) needs the exchange to exist.
+    // Exchange at all, which would make the exchange pins below vacuous.
     for ((kind, sched) <- Seq(
         "bloom" -> FrontierJob.runEpoch(
           Gen.seeds(spark, 2000, 8), Gen.robots(spark), seen, blooms, numBuckets, cfg),
@@ -202,34 +205,63 @@ class PlanSpec extends AnyFunSuite {
               FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 2000, 8)),
               seen, cuckoos, numBuckets),
             Gen.robots(spark), cfg), cfg), cfg))) {
-      val p = finalPlan(sched.toDF())
-      val finalSection = p.split("== Initial Plan ==")(0)
-      assert(finalSection.contains("ReusedExchange"),
-        s"$kind: frontier dedupe exchange not reused in final plan:\n$finalSection")
-      val nMapParts = finalSection.linesIterator.count(_.contains("MapPartitions"))
-      assert(nMapParts == 1,
-        s"$kind: seed scan executed $nMapParts times (want 1):\n$finalSection")
+      val p = finalSection(sched.toDF())
+      assert(p.contains(s"${kind}_maybe_seen"), s"$kind: sidecar probe missing:\n$p")
+      assert(countLines(p, "MapPartitions") == 1,
+        s"$kind: seed scan executed ${countLines(p, "MapPartitions")} times (want 1):\n$p")
+      assert(countLines(p, "Union") == 0, s"$kind: dedupe split into a Union:\n$p")
+      assert(countLines(p, "ReusedExchange") == 0,
+        s"$kind: dedupe exchange consumed twice (ReusedExchange):\n$p")
+      val finalAggs = p.linesIterator.count(l =>
+        l.contains("SortAggregate") && l.contains("min(url_canon") && !l.contains("partial_"))
+      assert(finalAggs == 1, s"$kind: $finalAggs final dedupe aggregates (want 1):\n$p")
     }
   }
 
   test("seen anti-join is size-gated: forced-shuffle path is SMJ and golden-equal") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.functions.{col, lit}
     // below the gate Spark may broadcast the seen side; forcing the gate
     // to 0 must yield a SortMergeJoin (the only honest plan at 10^10
     // seen URLs — a broadcast would mean a driver-serial HashedRelation
     // build per epoch) with identical results
-    val seen = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 500))
+    val dir = java.nio.file.Files.createTempDirectory("graft-planspec-seen").toString
+    FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 500))
       .select(col("url_hash"), col("host"), lit(0).as("first_epoch"))
-      .as[graft.model.SeenEntry]
+      .write.mode("overwrite").parquet(dir)
+    val seen = spark.read.parquet(dir).as[graft.model.SeenEntry]
     val blooms = SeenStore.buildBlooms(seen, 16, 128)
       .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+    object stages extends AdaptiveSparkPlanHelper
     for (sidecarMap <- Seq(Map.empty[Int, Array[Byte]], blooms)) {
-      val frontier = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 2000))
+      // multi-partition seeds, so the batch dedupe has its own Exchange
+      val frontier = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 2000, 8))
       val default = FrontierJob.dedupeAgainstSeen(frontier, seen, sidecarMap, 16)
       val forced = FrontierJob.dedupeAgainstSeen(frontier, seen, sidecarMap, 16, 0L)
-      val p = finalPlan(forced)
+      val p = finalSection(forced)
       assert(p.contains("SortMergeJoin") && p.contains("LeftAnti"),
         s"forced-gate seen join is not a shuffled SMJ anti-join:\n$p")
+      // the dedupe aggregate's output is already hash-partitioned and
+      // sorted on url_hash: the join shuffles and sorts the seen side only
+      assert(countLines(p, "Exchange hashpartitioning") == 2,
+        s"want only the dedupe and seen Exchanges:\n$p")
+      val smj = stages.collect(forced.queryExecution.executedPlan) {
+        case j: SortMergeJoinExec => j
+      }
+      assert(smj.size == 1, s"want one SortMergeJoin:\n$p")
+      def aboveDedupe(n: SparkPlan): Seq[SparkPlan] = n match {
+        case _: SortAggregateExec => Nil
+        case _ => n +: n.children.flatMap(aboveDedupe)
+      }
+      val added = aboveDedupe(smj.head.left).filter {
+        case _: SortExec | _: ShuffleExchangeExec | _: ShuffleQueryStageExec => true
+        case _ => false
+      }
+      assert(added.isEmpty, s"forced-gate dedupe added a frontier-side Sort/Exchange:\n$p")
       val a = default.select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
       val b = forced.select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
       assert(a == b, "gated seen join changed the dedupe result")
