@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.functions.GraftFunctions
+import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** c50 — failure-aware host backoff (AIMD): the server-health axis of
@@ -83,25 +85,21 @@ object BackoffOps {
       epoch: Int,
       fetchLog: DataFrame,
       thresholdBp: Int): Unit = {
-    val prev = loadState(spark, root, epoch - 1)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("host",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("mult_bp",
-            org.apache.spark.sql.types.IntegerType)))))
+    val prev = loadState(spark, root, epoch - 1).getOrElse(StateFamily.empty(spark))
     updateState(prev, epochRates(spark, fetchLog), thresholdBp)
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/backoff/epoch=$epoch")
+      .write.mode("overwrite").parquet(StateFamily.dir(root, epoch))
   }
 
+  /** The per-epoch AIMD state: one multiplier per host. */
+  val StateFamily: Snapshots.Family =
+    Snapshots.Family("backoff", StructType.fromDDL("host STRING, mult_bp INT"))
+
   /** Committed state at `epoch`, or None (gated on _SUCCESS). */
-  def loadState(spark: SparkSession, root: String, epoch: Int): Option[DataFrame] = {
-    val p = s"$root/backoff/epoch=$epoch"
-    if (new java.io.File(s"$p/_SUCCESS").exists()) Some(spark.read.parquet(p))
+  def loadState(spark: SparkSession, root: String, epoch: Int): Option[DataFrame] =
+    if (new java.io.File(s"${StateFamily.dir(root, epoch)}/_SUCCESS").exists())
+      Some(StateFamily.readEpochs(spark, root, Seq(epoch)))
     else None
-  }
 
   /** Shrink post-robots host budgets by the committed multipliers (floor 1
     * request — a backed-off host is slowed, never starved forever; its

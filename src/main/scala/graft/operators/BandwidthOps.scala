@@ -62,7 +62,7 @@ object BandwidthOps {
       cfg0 = FrontierJob.Config(epoch = 0, globalBudget = 4000),
       byteBudgetPerHost = bytesPerHost)
     val stats = hostByteStats(spark, root, epochs - 1)
-    val sched = spark.read.parquet(s"$root/scheduled/epoch=$epochs")
+    val sched = Snapshots.readScheduled(spark, root, epochs)
       .groupBy("host").agg(count(lit(1)).cast("long").as("n_scheduled"))
     stats.join(sched, Seq("host"), "full_outer")
       .na.fill(0L, Seq("n_scheduled"))

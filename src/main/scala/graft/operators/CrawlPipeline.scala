@@ -4,7 +4,8 @@ import graft.functions.{GraftFunctions, ImageKit}
 import graft.model._
 import graft.sources.{Gen, SeenStore, Snapshots}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 
 /** The multi-epoch crawl driver: E1 frontier -> synthetic fetch -> snapshot
   * commit -> seen-store merge -> E2 diff, resumable from the last committed
@@ -18,6 +19,18 @@ object CrawlPipeline {
 
   /** Host buckets of the crawl's seen sidecar (bloom or cuckoo). */
   val SeenBuckets = 16
+
+  /** The c44 aged carryover: (url, priority) Seed rows. */
+  val CarryoverFamily: Snapshots.Family =
+    Snapshots.Family("carryover", Encoders.product[Seed].schema)
+
+  /** The c59 robots-rejected rows, kept so a later flip can re-gate them. */
+  val RobotsHeldFamily: Snapshots.Family = Snapshots.Family("robots_held", StructType.fromDDL(
+    "url_canon STRING, url_hash BIGINT, host STRING, path STRING, priority DOUBLE"))
+
+  /** The c59 purge list of the flip epoch. */
+  val RobotsPurgedFamily: Snapshots.Family = Snapshots.Family("robots_purged",
+    StructType.fromDDL("image_id STRING, host STRING, path STRING"))
 
   /** Deterministic "fetch": the sandbox has no network (SURVEY.md §2.1 S5),
     * so content is a pure function of (url_hash, epoch). Revision script:
@@ -426,10 +439,9 @@ object CrawlPipeline {
       // epochs it outranks every fresh seed (priorities are bounded).
       // Carryover duplicates of still-live seeds are harmless: the
       // canonicalize dedupe keeps max(priority), so the BOOSTED copy wins.
-      val carried = if (aging) Snapshots.epochDirs(root, "carryover", Seq(epoch - 1)) else Nil
       val agedCarryover =
-        if (carried.isEmpty) spark.emptyDataset[Seed]
-        else spark.read.parquet(carried: _*).as[Seed]
+        if (aging) CarryoverFamily.readEpochs(spark, root, Seq(epoch - 1)).as[Seed]
+        else spark.emptyDataset[Seed]
       Gen.seeds(spark, seedsPerEpoch.toLong)
         .unionByName(sitemapSeeds)
         .unionByName(agedCarryover)
@@ -536,12 +548,9 @@ object CrawlPipeline {
       // the old generation). Re-enqueues are anti-joined against this
       // epoch's natural frontier so a re-seeded URL is not doubled; they
       // were never scheduled, so they cannot be in the seen store.
-      val held =
-        if (epoch == robotsFlipEpoch) Snapshots.epochDirs(root, "robots_held", 0 until epoch)
-        else Nil
-      if (held.isEmpty) toRobots
+      if (epoch != robotsFlipEpoch || epoch == 0) toRobots
       else toRobots.unionByName(RobotsDiffOps.newlyAllowed(
-          spark.read.parquet(held: _*),
+          RobotsHeldFamily.readEpochs(spark, root, 0 until epoch),
           Gen.robots(spark).toDF(),
           RobotsDiffOps.mutatedRobots(spark).toDF())
         .join(toRobots.select("url_hash"), Seq("url_hash"), "left_anti"))
@@ -558,13 +567,12 @@ object CrawlPipeline {
       * different policy from content revisit).
       */
     private def recrawlFrontier(epoch: Int): Option[DataFrame] = {
-      val dirs = if (recrawl) Snapshots.epochDirs(root, "revisions", 0 until epoch) else Nil
-      if (dirs.isEmpty) None
+      if (!recrawl || epoch == 0) None
       else {
         // policy switch (c25 staleness backoff vs c45 change-rate
         // estimator) — both emit the same (image_id, due, priority)
         // contract, so everything downstream is policy-blind
-        val revs = spark.read.parquet(dirs: _*)
+        val revs = Snapshots.RevisionFamily.readEpochs(spark, root, 0 until epoch)
         val sched =
           if (recrawlPolicy == "changerate")
             DiffJob.recrawlScheduleChangeRate(revs, atEpoch = epoch)
@@ -641,12 +649,12 @@ object CrawlPipeline {
           .join(broadcast(robots.toDF().select(col("host"), col("rules"))), Seq("host"))
           .where(!FrontierJob.robotsAllowedCol(col("rules"), col("path")))
           .select("url_canon", "url_hash", "host", "path", "priority")
-          .write.mode("overwrite").parquet(s"$root/robots_held/epoch=$epoch")
+          .write.mode("overwrite").parquet(RobotsHeldFamily.dir(root, epoch))
       }
       val scheduled = FrontierJob
         .applyGlobalBudget(FrontierJob.schedule(allowed, cfg), cfg)
         .persist()
-      scheduled.write.mode("overwrite").parquet(s"$root/scheduled/epoch=$epoch")
+      scheduled.write.mode("overwrite").parquet(Snapshots.ScheduledFamily.dir(root, epoch))
       // c44: the budget-losers with aged priority. The carryover is at
       // most the eligible-minus-budget fraction of the epoch —
       // frontier-sized worst case, epoch-budget-sized typically — and
@@ -655,7 +663,7 @@ object CrawlPipeline {
         allowed.join(scheduled.toDF().select("url_hash"), Seq("url_hash"), "left_anti")
           .select(col("url_canon").as("url"),
             (col("priority") + lit(agingBoost)).as("priority"))
-          .write.mode("overwrite").parquet(s"$root/carryover/epoch=$epoch")
+          .write.mode("overwrite").parquet(CarryoverFamily.dir(root, epoch))
       }
       scheduled
     }
@@ -733,7 +741,7 @@ object CrawlPipeline {
           Snapshots.read(spark, root, epoch),
           Snapshots.readLatest(spark, root, epoch - 1),
           epoch, cfg.phashTau)
-        .write.mode("overwrite").parquet(s"$root/revisions/epoch=$epoch")
+        .write.mode("overwrite").parquet(Snapshots.RevisionFamily.dir(root, epoch))
       // c59 wired (the tightening direction): at the flip epoch, rows
       // fetched under the OLD policy whose path the NEW generation
       // disallows purge from the maintained latest table — news-diff's
@@ -748,9 +756,9 @@ object CrawlPipeline {
             Snapshots.readLatest(spark, root, epoch - 1),
             Gen.robots(spark).toDF(),
             RobotsDiffOps.mutatedRobots(spark).toDF())
-          .write.mode("overwrite").parquet(s"$root/robots_purged/epoch=$epoch")
+          .write.mode("overwrite").parquet(RobotsPurgedFamily.dir(root, epoch))
         Snapshots.writeLatest(spark, root, epoch,
-          Some(spark.read.parquet(s"$root/robots_purged/epoch=$epoch")))
+          Some(RobotsPurgedFamily.readEpochs(spark, root, Seq(epoch))))
       } else Snapshots.writeLatest(spark, root, epoch)
     }
 

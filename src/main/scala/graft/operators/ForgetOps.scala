@@ -123,10 +123,10 @@ object ForgetOps {
     val tomb = docTombstones(spark, root)
     val idx = SimIndex.readShingleIndex(spark, root, epoch)
       .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-    val dfAdj = SimIndex.dfUpTo(spark, root, epoch)
+    val dfAdj = SimIndex.summedDf(SimIndex.ShingleDfFamily.upTo(spark, root, epoch))
       .join(broadcast(tombstoneDf(spark, root)), Seq("sh"), "left")
       .select(col("sh"), (col("df") - coalesce(col("tdf"), lit(0L))).as("df"))
-    val sizes = SimIndex.sizesUpTo(spark, root, epoch)
+    val sizes = SimIndex.ShingleSizesFamily.upTo(spark, root, epoch)
       .join(broadcast(tomb), Seq("doc_id"), "left_anti")
     SimIndex.nearDupsFrom(idx, dfAdj, sizes, epoch, maxDf)
   }
@@ -186,7 +186,7 @@ object ForgetOps {
                                        epoch: Int,
                                        maxHamming: Int = 3): DataFrame =
     SimIndex.nearDupPhashFrom(
-      SimIndex.phashBlocksUpTo(spark, root, epoch)
+      SimIndex.PhashBlocksFamily.upTo(spark, root, epoch)
         .join(broadcast(imgTombstones(spark, root)), Seq("image_id"), "left_anti"),
       epoch, maxHamming)
 

@@ -23,6 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object HealthOps {
 
+  /** Revised fetches per host in the revisions of epochs 0..uptoEpoch. */
+  private def revisedPerHost(spark: SparkSession, root: String, uptoEpoch: Int): DataFrame =
+    Snapshots.RevisionFamily.readEpochs(spark, root, 0 to uptoEpoch)
+      .where(col("change").startsWith("revised"))
+      .withColumn("host", GraftFunctions.hostOf(col("image_id")))
+      .groupBy("host").agg(count(lit(1)).as("n_revised"))
+
   def hostHealth(spark: SparkSession, root: String, uptoEpoch: Int): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
     val logs = (0 to uptoEpoch).map(e =>
@@ -36,15 +43,7 @@ object HealthOps {
         .as("n_fetch_failed"),
       sum(when(col("status") === "parse_failed", 1L).otherwise(0L))
         .as("n_parse_failed"))
-    val revDirs = Snapshots.epochDirs(root, "revisions", 0 to uptoEpoch)
-    val revs =
-      if (revDirs.isEmpty)
-        fetch.select(col("host")).limit(0).withColumn("n_revised", lit(0L))
-      else
-        spark.read.parquet(revDirs: _*)
-          .where(col("change").startsWith("revised"))
-          .withColumn("host", GraftFunctions.hostOf(col("image_id")))
-          .groupBy("host").agg(count(lit(1)).as("n_revised"))
+    val revs = revisedPerHost(spark, root, uptoEpoch)
     fetch.join(revs, Seq("host"), "left")
       .select(col("host"), col("n_fetched"), col("n_parsed"),
         col("n_fetch_failed"), col("n_parse_failed"),
@@ -133,21 +132,10 @@ object HealthOps {
   def priorityCalibration(spark: SparkSession, root: String,
                           uptoEpoch: Int): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
-    val spent = (0 to uptoEpoch).map(e =>
-        spark.read.parquet(s"$root/scheduled/epoch=$e")
-          .select(col("host"), col("priority")))
-      .reduce(_ unionByName _)
+    val spent = Snapshots.ScheduledFamily.readEpochs(spark, root, 0 to uptoEpoch)
       .groupBy("host")
       .agg(sum(round(col("priority") * 1e6).cast("long")).as("spent_q"))
-    val revDirs = Snapshots.epochDirs(root, "revisions", 0 to uptoEpoch)
-    val got =
-      if (revDirs.isEmpty) spent.select(col("host")).limit(0)
-        .withColumn("n_revised", lit(0L))
-      else spark.read.parquet(revDirs: _*)
-        .where(col("change").startsWith("revised"))
-        .withColumn("host", GraftFunctions.hostOf(col("image_id")))
-        .groupBy("host").agg(count(lit(1)).as("n_revised"))
-    val per = spent.join(got, Seq("host"), "left")
+    val per = spent.join(revisedPerHost(spark, root, uptoEpoch), Seq("host"), "left")
       .select(col("host"), col("spent_q"),
         coalesce(col("n_revised"), lit(0L)).as("n_revised"))
     Relational.spearman(per.withColumn("g", lit("all")),

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.functions.ImageKit
+import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Multimodal (image) column operators over the primary snapshot table
@@ -1214,31 +1216,16 @@ object ImageOps {
   def writeImageScores(images: DataFrame, root: String, epoch: Int): Unit =
     images.select(xxhash64(col("image_id")).as("img_hash"),
         col("image_id"), copyScore.as("copy_score"))
-      .write.mode("overwrite").parquet(s"$root/image_scores/epoch=$epoch")
+      .write.mode("overwrite").parquet(ScoresFamily.dir(root, epoch))
 
-  /** Score rows as of `upToEpoch`: latest completed compact + the tail of
-    * per-epoch dirs after it (the SimIndex.phashBlocksUpTo discipline —
-    * without compaction a long-running catalog pays an O(epochs) listing
-    * per election). */
-  private def scoresUpTo(spark: org.apache.spark.sql.SparkSession,
-                         root: String, upToEpoch: Int,
-                         maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = graft.sources.Snapshots.latestCompleteEpoch(root, "image_scores_compact",
-      math.min(upToEpoch, maxCompactEpoch))
-    val tail = (c + 1 to upToEpoch)
-      .filter(e => new java.io.File(s"$root/image_scores/epoch=$e").exists())
-      .map(e => spark.read.parquet(s"$root/image_scores/epoch=$e"))
-    ((if (c >= 0) Seq(spark.read.parquet(s"$root/image_scores_compact/epoch=$c"))
-      else Nil) ++ tail).reduce(_.unionByName(_))
-  }
+  /** The score rows; without compaction a long-running catalog lists
+    * O(epochs) dirs per election. */
+  val ScoresFamily: Snapshots.Family = Snapshots.Family("image_scores",
+    StructType.fromDDL("img_hash BIGINT, image_id STRING, copy_score BIGINT"))
 
-  /** Fold the score dirs up to `upToEpoch` into
-    * `image_scores_compact/epoch=upToEpoch` (idempotent; crash-safe via
-    * the _SUCCESS-gated latestCompleteEpoch read). */
   def compactImageScores(spark: org.apache.spark.sql.SparkSession,
                          root: String, upToEpoch: Int): Unit =
-    scoresUpTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1)
-      .write.mode("overwrite").parquet(s"$root/image_scores_compact/epoch=$upToEpoch")
+    ScoresFamily.compact(spark, root, upToEpoch)
 
   /** Admit one epoch's images into the catalog state: index + scores +
     * incremental CC labels. Idempotent per epoch (every write overwrites
@@ -1260,7 +1247,7 @@ object ImageOps {
   def bestCopyCatalog(spark: org.apache.spark.sql.SparkSession,
                       root: String, epoch: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scores = scoresUpTo(spark, root, epoch)
+    val scores = ScoresFamily.upTo(spark, root, epoch)
     val labels = DedupResolve.readLabels(spark, s"$root/bestcopy_cc", epoch)
       .select(col("id").as("img_hash"), col("comp"))
     val paired = scores.join(labels, "img_hash")
@@ -1283,7 +1270,7 @@ object ImageOps {
                      root: String, epoch: Int): DataFrame = {
     val cur = bestCopyCatalog(spark, root, epoch)
       .select("image_id", "img_hash")
-    val newScores = spark.read.parquet(s"$root/image_scores/epoch=$epoch")
+    val newScores = ScoresFamily.readEpochs(spark, root, Seq(epoch))
       .select("image_id", "img_hash")
     val admitted = newScores.join(cur, Seq("img_hash"), "left_semi")
       .withColumn("action", lit("admitted"))

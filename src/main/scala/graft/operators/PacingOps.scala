@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.model.RobotsEntry
+import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Adaptive per-host politeness from OBSERVED fetch latency (c30) — the
@@ -93,13 +95,18 @@ object PacingOps {
     */
   def writeLatencyEpoch(latencies: DataFrame, root: String, epoch: Int): Unit =
     latencies.groupBy("host", "latency_ms").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$root/latency_hist/epoch=$epoch")
+      .write.mode("overwrite").parquet(LatencyFamily.dir(root, epoch))
 
-  /** Adaptive delays from the summed persisted histograms. The p95 is
-    * read off the cumulative histogram with percentile_disc's own
-    * definition — smallest value whose cume_dist (cumulative/total, in
-    * doubles) reaches the percentage — so the store path equals the
-    * one-shot batch report bit-for-bit.
+  val LatencyFamily: Snapshots.Family = Snapshots.Family("latency_hist",
+    StructType.fromDDL("host STRING, latency_ms BIGINT, n BIGINT"))
+
+  /** Adaptive delays from the summed persisted histograms of epochs
+    * 0..uptoEpoch (an epoch that wrote none, e.g. run before pacing was
+    * turned on, adds nothing). The p95 is read off the cumulative
+    * histogram with percentile_disc's own definition — smallest value
+    * whose cume_dist (cumulative/total, in doubles) reaches the
+    * percentage — so the store path equals the one-shot batch report
+    * bit-for-bit.
     */
   def adaptiveDelaysFrom(spark: SparkSession, root: String, uptoEpoch: Int,
                          factor: Long = 10L, minDelayMs: Long = 200L,
@@ -107,8 +114,7 @@ object PacingOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("host").orderBy("latency_ms")
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy("host")
-    spark.read.parquet(
-        (0 to uptoEpoch).map(e => s"$root/latency_hist/epoch=$e"): _*)
+    LatencyFamily.readEpochs(spark, root, 0 to uptoEpoch)
       .groupBy("host", "latency_ms").agg(sum(col("n")).as("n"))
       .withColumn("cum", sum(col("n")).over(w))
       .withColumn("total", sum(col("n")).over(wAll))

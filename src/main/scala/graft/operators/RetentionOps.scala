@@ -174,7 +174,7 @@ object RetentionOps {
     val junk = Paths.get(s"$root/scheduled/epoch=9")
     Files.createDirectories(junk)
     Files.writeString(junk.resolve("part-junk.parquet"), "x")
-    val half = Paths.get(s"$root/url_seen_compact/epoch=1")
+    val half = Paths.get(graft.sources.SeenStore.SeenFamily.compactDir(root, 1))
     Files.createDirectories(half)
     Files.writeString(half.resolve("part-00000.parquet"), "x")
     Files.writeString(Paths.get(s"$root/_manifests/.epoch-9.json.tmp"), "{}")

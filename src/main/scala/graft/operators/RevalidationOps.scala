@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -60,12 +61,11 @@ object RevalidationOps {
       cfg0 = FrontierJob.Config(epoch = 0, globalBudget = budget),
       recrawl = true, revalidate = true)
     val rows = (0 to epochs).map { e =>
-      val revs = spark.read.parquet(s"$root/revisions/epoch=$e")
+      val revs = Snapshots.RevisionFamily.readEpochs(spark, root, Seq(e))
       val skipped =
         if (e == 0) 0L
         else {
-          val prior = spark.read.parquet(
-            (0 until e).map(p => s"$root/revisions/epoch=$p"): _*)
+          val prior = Snapshots.RevisionFamily.readEpochs(spark, root, 0 until e)
           withRevalidation(
             DiffJob.recrawlSchedule(prior, atEpoch = e).where(col("due")), e)
             .where(col("not_modified")).count()

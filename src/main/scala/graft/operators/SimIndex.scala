@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persisted, epoch-partitioned similarity indexes (round-3 verdict
@@ -46,53 +47,38 @@ object SimIndex {
     // sums across epochs
     val written = docs.sparkSession.read.parquet(s"$root/shingle_index/epoch=$epoch")
     written.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      .write.mode("overwrite").parquet(s"$root/shingle_sizes/epoch=$epoch")
+      .write.mode("overwrite").parquet(ShingleSizesFamily.dir(root, epoch))
     written.groupBy("sh").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$root/shingle_df/epoch=$epoch")
+      .write.mode("overwrite").parquet(ShingleDfFamily.dir(root, epoch))
   }
 
   def readShingleIndex(spark: SparkSession, root: String, upToEpoch: Int): DataFrame =
     spark.read.parquet(s"$root/shingle_index").where(col("epoch") <= upToEpoch)
 
-  /** Corpus-so-far per-shingle document frequency as of `upToEpoch`:
-    * latest df compact + the per-epoch partials after it, summed. Without
-    * a compact this degrades to summing every epoch's partials (the
-    * original shape); with periodic [[compactShingleStats]] a 10^4-epoch
-    * index sums O(cadence) partials per probe instead of 10^4.
-    */
-  private[operators] def dfUpTo(spark: SparkSession, root: String, upToEpoch: Int,
-                     maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = Snapshots.latestCompleteEpoch(root, "shingle_df_compact",
-      math.min(upToEpoch, maxCompactEpoch))
-    val tail = Snapshots.epochDirs(root, "shingle_df", c + 1 to upToEpoch)
-    val parts = (if (c >= 0) Seq(s"$root/shingle_df_compact/epoch=$c") else Nil) ++ tail
-    spark.read.parquet(parts: _*)
-      .groupBy("sh").agg(sum("df").as("df"))
-  }
+  /** Per-doc shingle counts (docs write sizes in exactly one epoch). */
+  val ShingleSizesFamily: Snapshots.Family =
+    Snapshots.Family("shingle_sizes", StructType.fromDDL("doc_id BIGINT, sz BIGINT"))
 
-  /** Per-doc shingle counts as of `upToEpoch` (docs write sizes in exactly
-    * one epoch, so this is a plain union): latest compact + tail dirs.
+  /** Per-epoch shingle document frequencies; the corpus-so-far df is their
+    * sum, and the compact stores the sums.
     */
-  private[operators] def sizesUpTo(spark: SparkSession, root: String, upToEpoch: Int,
-                        maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = Snapshots.latestCompleteEpoch(root, "shingle_sizes_compact",
-      math.min(upToEpoch, maxCompactEpoch))
-    val tail = Snapshots.epochDirs(root, "shingle_sizes", c + 1 to upToEpoch)
-    val parts = (if (c >= 0) Seq(s"$root/shingle_sizes_compact/epoch=$c") else Nil) ++ tail
-    spark.read.parquet(parts: _*).select("doc_id", "sz")
-  }
+  val ShingleDfFamily: Snapshots.Family =
+    Snapshots.Family("shingle_df", StructType.fromDDL("sh BIGINT, df BIGINT"))
 
-  /** Fold the df partials and sizes dirs up to `upToEpoch` into compact
-    * roots (the SeenStore.compact discipline applied to the index's
-    * derived aggregates; the shingle_index rows themselves ARE the corpus
-    * index and stay epoch-partitioned). Idempotent on re-run (the read
-    * excludes its own target); crash-safe (_SUCCESS-gated read).
+  /** Corpus-so-far per-shingle document frequency: the df rows (compact
+    * and per-epoch partials) summed per shingle.
+    */
+  private[operators] def summedDf(dfRows: DataFrame): DataFrame =
+    dfRows.groupBy("sh").agg(sum("df").as("df"))
+
+  /** Fold the df partials and sizes dirs up to `upToEpoch` into compacts
+    * (the index's derived aggregates; the shingle_index rows themselves
+    * ARE the corpus index and stay epoch-partitioned), so a 10^4-epoch
+    * index reads O(cadence) partials per probe instead of 10^4.
     */
   def compactShingleStats(spark: SparkSession, root: String, upToEpoch: Int): Unit = {
-    dfUpTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1)
-      .write.mode("overwrite").parquet(s"$root/shingle_df_compact/epoch=$upToEpoch")
-    sizesUpTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1)
-      .write.mode("overwrite").parquet(s"$root/shingle_sizes_compact/epoch=$upToEpoch")
+    ShingleDfFamily.compact(spark, root, upToEpoch, summedDf)
+    ShingleSizesFamily.compact(spark, root, upToEpoch)
   }
 
   /** Cross-epoch near-dup detection — the news-diff "is this article a copy
@@ -117,8 +103,8 @@ object SimIndex {
       epoch: Int,
       maxDf: Int = 64): DataFrame =
     nearDupsFrom(readShingleIndex(spark, root, epoch),
-      dfUpTo(spark, root, epoch), sizesUpTo(spark, root, epoch),
-      epoch, maxDf)
+      summedDf(ShingleDfFamily.upTo(spark, root, epoch)),
+      ShingleSizesFamily.upTo(spark, root, epoch), epoch, maxDf)
 
   /** Pairing core shared by the plain probe and ForgetOps' merge-on-read
     * variant: the caller supplies the (possibly tombstone-filtered) index
@@ -281,42 +267,19 @@ object SimIndex {
     */
   def writePhashIndex(images: DataFrame, root: String, epoch: Int): Unit =
     ImageOps.phashBlocks(images.select("image_id", "phash"))
-      .write.mode("overwrite").parquet(s"$root/phash_blocks/epoch=$epoch")
+      .write.mode("overwrite").parquet(PhashBlocksFamily.dir(root, epoch))
 
-  /** Block rows as of `upToEpoch`: latest completed compact + the tail of
-    * per-epoch dirs after it (the SeenStore.loadUpTo discipline). A
-    * streaming copy-detector writes one mini-epoch per micro-batch, so
-    * without compaction a long-running stream's every probe pays an
-    * O(batches-so-far) directory listing; with periodic
-    * [[compactPhashIndex]] it pays O(cadence). Tail dirs are read
-    * individually (no partition discovery over the root — that listing is
-    * the cost being avoided) with their epoch re-attached; the compact
-    * carries epoch as a data column.
+  /** The block rows; probes need each row's epoch, so the family re-attaches
+    * it. A streaming copy-detector writes one mini-epoch per micro-batch,
+    * so without compaction a long-running stream's every probe lists
+    * O(batches-so-far) dirs; with periodic [[compactPhashIndex]], O(cadence).
     */
-  private[operators] def phashBlocksUpTo(
-      spark: SparkSession, root: String, upToEpoch: Int,
-      maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = Snapshots.latestCompleteEpoch(root, "phash_blocks_compact",
-      math.min(upToEpoch, maxCompactEpoch))
-    val tail = (c + 1 to upToEpoch)
-      .filter(e => new java.io.File(s"$root/phash_blocks/epoch=$e").exists())
-      .map(e => spark.read.parquet(s"$root/phash_blocks/epoch=$e")
-        .withColumn("epoch", lit(e)))
-    val parts =
-      (if (c >= 0) Seq(spark.read.parquet(s"$root/phash_blocks_compact/epoch=$c"))
-       else Nil) ++ tail
-    parts.reduce(_.unionByName(_))
-  }
+  val PhashBlocksFamily: Snapshots.Family = Snapshots.Family("phash_blocks",
+    StructType.fromDDL("image_id STRING, phash BIGINT, img_hash BIGINT, blk INT, key BIGINT"),
+    epochInCompact = true)
 
-  /** Fold the block dirs up to `upToEpoch` into
-    * `phash_blocks_compact/epoch=upToEpoch`. Idempotent on re-run (the
-    * read excludes its own target); crash-safe (_SUCCESS-gated read falls
-    * back to the previous compact + longer tail). The per-epoch dirs stay
-    * on disk as the replayable source of truth; only the read narrows.
-    */
   def compactPhashIndex(spark: SparkSession, root: String, upToEpoch: Int): Unit =
-    phashBlocksUpTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1)
-      .write.mode("overwrite").parquet(s"$root/phash_blocks_compact/epoch=$upToEpoch")
+    PhashBlocksFamily.compact(spark, root, upToEpoch)
 
   /** Cross-epoch image near-dup through the persisted block index: epoch
     * `epoch`'s images (their blocks already written) pair against the
@@ -336,7 +299,7 @@ object SimIndex {
       root: String,
       epoch: Int,
       maxHamming: Int = 3): DataFrame =
-    nearDupPhashFrom(phashBlocksUpTo(spark, root, epoch), epoch, maxHamming)
+    nearDupPhashFrom(PhashBlocksFamily.upTo(spark, root, epoch), epoch, maxHamming)
 
   /** Pairing core shared by the plain probe and ForgetOps' merge-on-read
     * variant; the caller supplies the (possibly tombstone-filtered) block
@@ -384,27 +347,14 @@ object SimIndex {
     */
   def writePhashPairIndex(images: DataFrame, root: String, epoch: Int): Unit =
     ImageOps.phashBlockPairs(images.select("image_id", "phash"))
-      .write.mode("overwrite").parquet(s"$root/phash_pair_blocks/epoch=$epoch")
+      .write.mode("overwrite").parquet(PhashPairBlocksFamily.dir(root, epoch))
 
-  private[operators] def phashPairBlocksUpTo(
-      spark: SparkSession, root: String, upToEpoch: Int,
-      maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
-    val c = Snapshots.latestCompleteEpoch(root, "phash_pair_blocks_compact",
-      math.min(upToEpoch, maxCompactEpoch))
-    val tail = (c + 1 to upToEpoch)
-      .filter(e => new java.io.File(s"$root/phash_pair_blocks/epoch=$e").exists())
-      .map(e => spark.read.parquet(s"$root/phash_pair_blocks/epoch=$e")
-        .withColumn("epoch", lit(e)))
-    val parts =
-      (if (c >= 0) Seq(spark.read.parquet(s"$root/phash_pair_blocks_compact/epoch=$c"))
-       else Nil) ++ tail
-    parts.reduce(_.unionByName(_))
-  }
+  val PhashPairBlocksFamily: Snapshots.Family = Snapshots.Family("phash_pair_blocks",
+    StructType.fromDDL("image_id STRING, phash BIGINT, img_hash BIGINT, tag INT, key BIGINT"),
+    epochInCompact = true)
 
   def compactPhashPairIndex(spark: SparkSession, root: String, upToEpoch: Int): Unit =
-    phashPairBlocksUpTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1)
-      .write.mode("overwrite")
-      .parquet(s"$root/phash_pair_blocks_compact/epoch=$upToEpoch")
+    PhashPairBlocksFamily.compact(spark, root, upToEpoch)
 
   /** Cross-epoch SCALE-VARIANT matches through the persisted combination
     * index: epoch `epoch`'s images pair against the corpus-so-far with
@@ -417,7 +367,7 @@ object SimIndex {
       root: String,
       epoch: Int,
       maxHamming: Int = 6): DataFrame =
-    nearDupPhashFrom(phashPairBlocksUpTo(spark, root, epoch), epoch,
+    nearDupPhashFrom(PhashPairBlocksFamily.upTo(spark, root, epoch), epoch,
       maxHamming, blkCol = "tag")
 
   /** c65 — eval-set image DECONTAMINATION through the persisted phash
@@ -439,7 +389,7 @@ object SimIndex {
       upToEpoch: Int,
       evalImages: DataFrame,
       maxHamming: Int = 3): DataFrame = {
-    val corpus = phashBlocksUpTo(spark, root, upToEpoch)
+    val corpus = PhashBlocksFamily.upTo(spark, root, upToEpoch)
       .select(col("image_id"), col("phash"), col("blk"), col("key"))
     val evalB = broadcast(ImageOps.phashBlocks(evalImages)
       .select(col("image_id").as("eval_id"), col("phash").as("eval_phash"),

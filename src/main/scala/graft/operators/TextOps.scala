@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.functions.{GraftFunctions, TextKit}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -28,16 +30,22 @@ object TextOps {
     * kernels only — the quality filters keep their plan-pinned
     * zero-exchange scans — and gated on the planned scan actually being
     * narrower than the session width, so a production multi-split corpus
-    * adds no exchange. The inputs at every call site are scan/union/
-    * projection shapes (no exchanges), so the planning probe runs no
-    * jobs; the round-robin split is deterministic (sortBeforeRepartition
-    * is on) and every consumer is an aggregation/join or ends in a
-    * presentation sort, so results are split-invariant.
+    * adds no exchange. An input whose plan already holds an exchange is
+    * already spread and passes unchanged: counting its partitions through
+    * `toRdd` would run its shuffle stages just for the probe. Over
+    * scan/union/projection shapes the probe runs no job. The round-robin
+    * split is deterministic (sortBeforeRepartition is on) and every
+    * consumer is an aggregation/join or ends in a presentation sort, so
+    * results are split-invariant.
     */
-  private def spreadNarrow(df: DataFrame): DataFrame = {
+  private[operators] def spreadNarrow(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val n = df.queryExecution.toRdd.getNumPartitions
-    if (2 * n <= sc.defaultParallelism) df.repartition(sc.defaultParallelism)
+    val shuffled = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan.exists(_.isInstanceOf[Exchange])
+      case p => p.exists(_.isInstanceOf[Exchange])
+    }
+    if (!shuffled && 2 * df.queryExecution.toRdd.getNumPartitions <= sc.defaultParallelism)
+      df.repartition(sc.defaultParallelism)
     else df
   }
 

@@ -30,39 +30,21 @@ object SeenStore {
     spark.emptyDataset[SeenEntry]
   }
 
+  /** `url_seen/epoch=N`: the SeenEntry rows first seen at epoch N. */
+  val SeenFamily: Snapshots.Family = Snapshots.Family("url_seen", Encoders.product[SeenEntry].schema)
+
   /** Loads ONLY entries of committed epochs: a crash after the epoch-N
     * url_seen write but before the manifest leaves an uncommitted epoch=N
     * dir on disk; re-running that epoch must NOT dedupe against its own
     * half-written seen entries (it would schedule nothing and silently
     * diverge from a straight run). The manifest is the single source of
-    * truth for what exists.
-    *
-    * Read shape (round-4 verdict "missing #3"): latest completed compact
-    * root + the tail of per-epoch dirs after it — so a 10^4-epoch crawl
-    * lists O(compaction cadence) directories per dedupe, not 10^4 (each a
-    * small-file scan). Without any compact this degrades to the original
-    * union of every epoch dir.
+    * truth for what exists. The read is the latest completed compact plus
+    * the epoch dirs after it ([[Snapshots.Family.upTo]]).
     */
-  def load(spark: SparkSession, root: String): Dataset[SeenEntry] =
-    loadUpTo(spark, root, Snapshots.latestCommittedEpoch(root))
-
-  private def loadUpTo(
-      spark: SparkSession,
-      root: String,
-      upToEpoch: Int,
-      maxCompactEpoch: Int = Int.MaxValue): Dataset[SeenEntry] = {
+  def load(spark: SparkSession, root: String): Dataset[SeenEntry] = {
     import spark.implicits._
-    val c = latestCompactEpoch(root, math.min(upToEpoch, maxCompactEpoch))
-    val tail = Snapshots.epochDirs(root, "url_seen", c + 1 to upToEpoch)
-    val parts = (if (c >= 0) Seq(s"$root/url_seen_compact/epoch=$c") else Nil) ++ tail
-    if (parts.isEmpty) emptySeen(spark)
-    else spark.read.schema(SeenSchema).parquet(parts: _*).as[SeenEntry]
+    SeenFamily.upTo(spark, root, Snapshots.latestCommittedEpoch(root)).as[SeenEntry]
   }
-
-  /** Static read schema of the url_seen dirs, as Snapshots.RootSchema:
-    * an inferred one costs a footer-reading Spark job on every load.
-    */
-  private val SeenSchema = Encoders.product[SeenEntry].schema
 
   /** Latest compacted epoch <= maxEpoch whose write COMPLETED — gated on
     * the parquet _SUCCESS marker, so a compaction interrupted mid-write is
@@ -70,26 +52,21 @@ object SeenStore {
     * (correctness never depends on compaction finishing).
     */
   def latestCompactEpoch(root: String, maxEpoch: Int): Int =
-    Snapshots.latestCompleteEpoch(root, "url_seen_compact", maxEpoch)
+    SeenFamily.latestCompact(root, maxEpoch)
 
-  /** Fold the seen set as of `upToEpoch` (previous compact + tail epochs)
-    * into `url_seen_compact/epoch=upToEpoch` — the writeLatest discipline
-    * applied to the seen store. Idempotent: a re-run reads the PREVIOUS
-    * compact (maxCompactEpoch excludes its own target, which matters when
-    * resume re-runs a compaction whose output half-exists) and overwrites.
-    * Older compacts and the per-epoch dirs stay on disk (the epoch dirs
-    * remain the replayable source of truth); only the READ path narrows.
+  /** Fold the seen set as of `upToEpoch` into its compact
+    * ([[Snapshots.Family.compact]]: idempotent, and the per-epoch dirs
+    * stay the replayable source of truth).
     */
   def compact(spark: SparkSession, root: String, upToEpoch: Int): Unit =
-    loadUpTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1)
-      .write.mode("overwrite").parquet(s"$root/url_seen_compact/epoch=$upToEpoch")
+    SeenFamily.compact(spark, root, upToEpoch)
 
   /** Per-epoch overwrite (each epoch's entries land in their own epoch=N
     * dir exactly once) — idempotent when a crashed, uncommitted epoch is
     * re-run; append mode would duplicate its rows.
     */
   def append(newSeen: Dataset[SeenEntry], root: String, epoch: Int): Unit =
-    newSeen.write.mode("overwrite").parquet(s"$root/url_seen/epoch=$epoch")
+    newSeen.write.mode("overwrite").parquet(SeenFamily.dir(root, epoch))
 
   /** S9 — the seen set as a BUCKETED table (bucketBy url_hash, sorted
     * within buckets). The cumulative seen set is the BIG side of every
@@ -334,7 +311,7 @@ object SeenStore {
     val kept = load(spark, root).where(col("host") =!= host)
       .select("url_hash", "host", "first_epoch").as[SeenEntry]
       .localCheckpoint(true)
-    kept.write.mode("overwrite").parquet(s"$root/url_seen_compact/epoch=$committed")
+    kept.write.mode("overwrite").parquet(SeenFamily.compactDir(root, committed))
     // 2. sidecar: in-place cuckoo deletes (bloom sidecars are left as-is —
     //    their stale bits are safe, just imprecise)
     val cuckoos = loadCuckoos(spark, root, committed)
@@ -348,7 +325,7 @@ object SeenStore {
             // saturated => deletion unsound; rebuild THIS bucket from the
             // remaining (post-purge) seen rows at the existing shape
             val fresh = Cuckoo64.alloc(Cuckoo64.tableBucketsOf(bytes))
-            spark.read.parquet(s"$root/url_seen_compact/epoch=$committed")
+            SeenFamily.upTo(spark, root, committed)
               .where(bucketOf(col("host"), numBuckets) === bucket)
               .select("url_hash").as[Long].collect()
               .foreach(h => Cuckoo64.insert(fresh, h))

@@ -1,8 +1,9 @@
 package graft.sources
 
-import graft.model.{Fetched, PartitionLineage, Scheduled, Snapshot}
+import graft.model.{Fetched, PartitionLineage, Revision, Scheduled, Snapshot}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Epoch-snapshot store + manifest-based checkpointing (SURVEY.md §2.1
@@ -42,6 +43,10 @@ object Snapshots {
   def readRaw(spark: SparkSession, root: String, epoch: Int): DataFrame =
     readRoot(spark, root).where(col("epoch") === epoch)
 
+  /** `snapshots/epoch=N`: the Fetched rows minus `epoch`, which is the dir. */
+  val SnapshotFamily: Family = Family("snapshots",
+    StructType(Encoders.product[Fetched].schema.filterNot(_.name == "epoch")))
+
   /** A root may straddle the fetch-log format change (older epochs
     * written without the status column). Plain parquet reads pick ONE
     * footer's schema for the whole root — if it has status, old-epoch
@@ -59,10 +64,7 @@ object Snapshots {
     * fixed cost every scan pays; the pipeline demos call this reader
     * dozens of times per run).
     */
-  private[graft] val RootSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "image_id STRING, bytes BINARY, w INT, h INT, fmt STRING, " +
-      "caption STRING, phash BIGINT, partition_id INT, status STRING, " +
-      "elapsed_ms BIGINT, epoch INT")
+  private[graft] val RootSchema = SnapshotFamily.schema.add("epoch", IntegerType)
 
   private def readRoot(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(RootSchema).parquet(s"$root/snapshots")
@@ -124,9 +126,8 @@ object Snapshots {
       else fetched
     // the epoch=N directory IS the partition value — keeping the data
     // column too would collide with partition inference on root scans
-    sized.drop("epoch").write.mode("overwrite")
-      .parquet(s"$root/snapshots/epoch=$epoch")
-    val written = spark.read.parquet(s"$root/snapshots/epoch=$epoch")
+    sized.drop("epoch").write.mode("overwrite").parquet(SnapshotFamily.dir(root, epoch))
+    val written = SnapshotFamily.readEpochs(spark, root, Seq(epoch))
     val parsed = col("status") === "parsed"
     val agg = written
       .groupBy(col("partition_id"))
@@ -183,18 +184,14 @@ object Snapshots {
     * re-windowing the entire snapshot history (which grows O(total
     * snapshots) per epoch: a scale-killer once epochs accumulate).
     */
-  def readLatest(spark: SparkSession, root: String, epoch: Int): DataFrame = {
-    val path = s"$root/latest/epoch=$epoch"
-    if (epoch < 0 || !new java.io.File(path).exists())
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "image_id STRING, epoch INT, phash BIGINT, caption STRING"))
-    // static read schema (as RootSchema): no schema-inference job per call
-    else spark.read.schema("image_id STRING, snap_epoch INT, phash BIGINT, caption STRING")
-      .parquet(path)
-      .withColumnRenamed("snap_epoch", "epoch")
-  }
+  def readLatest(spark: SparkSession, root: String, epoch: Int): DataFrame =
+    LatestFamily.readEpochs(spark, root, Seq(epoch)).withColumnRenamed("snap_epoch", "epoch")
+
+  /** `latest/epoch=N` stores the row's own epoch as `snap_epoch`: the
+    * epoch=N directory means "as of N", not the version's epoch.
+    */
+  val LatestFamily: Family = Family("latest",
+    StructType.fromDDL("image_id STRING, snap_epoch INT, phash BIGINT, caption STRING"))
 
   /** latest(e) = current(e) ∪ (latest(e-1) ∖ ids present in current(e)).
     * Per-epoch overwrite of `latest/epoch=e` — idempotent under re-runs;
@@ -213,10 +210,8 @@ object Snapshots {
     val merged = prev
       .join(cur.select("image_id"), Seq("image_id"), "left_anti")
       .unionByName(cur)
-    // store the row's own epoch under a non-partition name: the epoch=N
-    // directory means "as of N", not the version's epoch
     merged.withColumnRenamed("epoch", "snap_epoch")
-      .write.mode("overwrite").parquet(s"$root/latest/epoch=$epoch")
+      .write.mode("overwrite").parquet(LatestFamily.dir(root, epoch))
   }
 
   /** S3c — crawl-root VACUUM (the remove-orphan-files/expire maintenance
@@ -294,17 +289,85 @@ object Snapshots {
       .filter(_ <= maxEpoch)
       .maxOption.getOrElse(-1)
 
-  /** A committed epoch's schedule (`root/scheduled/epoch=N`) with its
-    * epoch column restored. The read schema is static, as [[RootSchema]]:
-    * an inferred one costs a footer-reading Spark job per call.
-    */
+  /** A committed epoch's schedule (`root/scheduled/epoch=N`). */
   def readScheduled(spark: SparkSession, root: String, epoch: Int): Dataset[Scheduled] = {
     import spark.implicits._
-    spark.read.schema(ScheduledSchema).parquet(s"$root/scheduled/epoch=$epoch")
-      .withColumn("epoch", lit(epoch)).as[Scheduled]
+    ScheduledFamily.readEpochs(spark, root, Seq(epoch)).as[Scheduled]
   }
 
-  private val ScheduledSchema = Encoders.product[Scheduled].schema
+  /** The crawl's per-epoch schedule and revision diff, written as their
+    * encoders' rows (epoch included).
+    */
+  val ScheduledFamily: Family = Family("scheduled", Encoders.product[Scheduled].schema)
+  val RevisionFamily: Family = Family("revisions", Encoders.product[Revision].schema)
+
+  /** An epoch-partitioned table family: one parquet dir per epoch,
+    * `root/<name>/epoch=N`, each written once in overwrite mode, and
+    * optional compacts `root/<name>_compact/epoch=N` that fold every epoch
+    * up to N. Every read uses the static `schema` of the per-epoch files
+    * (the writer's encoder, or a DDL next to the writer), as [[RootSchema]]
+    * does: an inferred schema costs a footer-reading Spark job per read.
+    *
+    * A family with `epochInCompact` needs each row's epoch, which its
+    * per-epoch files do not store: reads re-attach it from the dir name,
+    * and its compacts store it as a column.
+    */
+  final case class Family(name: String, schema: StructType, epochInCompact: Boolean = false) {
+    /** The columns every read of the family returns. */
+    val readSchema: StructType = if (epochInCompact) schema.add("epoch", IntegerType) else schema
+
+    def dir(root: String, epoch: Int): String = s"$root/$name/epoch=$epoch"
+
+    def compactDir(root: String, epoch: Int): String = s"$root/${name}_compact/epoch=$epoch"
+
+    /** The highest compact epoch <= maxEpoch whose write completed, or -1. */
+    def latestCompact(root: String, maxEpoch: Int): Int =
+      latestCompleteEpoch(root, s"${name}_compact", maxEpoch)
+
+    def empty(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.List.of[Row](), readSchema)
+
+    /** The existing dirs among `epochs`, committed or not (callers pass
+      * only epochs they may read), or an empty frame.
+      */
+    def readEpochs(spark: SparkSession, root: String, epochs: Seq[Int]): DataFrame = {
+      val present = epochs.filter(e => new java.io.File(dir(root, e)).exists())
+      if (!epochInCompact) scan(spark, present.map(dir(root, _)))
+      else present
+        .map(e => spark.read.schema(schema).parquet(dir(root, e)).withColumn("epoch", lit(e)))
+        .reduceOption(_ unionByName _).getOrElse(empty(spark))
+    }
+
+    /** The family as of `upToEpoch`: the latest compact at or below
+      * min(upToEpoch, maxCompactEpoch) whose write COMPLETED (its _SUCCESS
+      * marker is there, so a compaction interrupted mid-write is invisible),
+      * plus the per-epoch dirs after it. A 10^4-epoch family thus lists
+      * O(compaction cadence) dirs per read, not 10^4; with no compact this
+      * is every epoch dir.
+      */
+    def upTo(spark: SparkSession, root: String, upToEpoch: Int,
+             maxCompactEpoch: Int = Int.MaxValue): DataFrame = {
+      val c = latestCompact(root, math.min(upToEpoch, maxCompactEpoch))
+      val compact = if (c >= 0) Seq(compactDir(root, c)) else Nil
+      if (!epochInCompact) scan(spark, compact ++ epochDirs(root, name, c + 1 to upToEpoch))
+      else (compact.map(p => scan(spark, Seq(p))) :+ readEpochs(spark, root, c + 1 to upToEpoch))
+        .reduce(_ unionByName _)
+    }
+
+    /** Fold the family up to `upToEpoch` (through `fold`, which keeps the
+      * schema) into `<name>_compact/epoch=upToEpoch`. Idempotent: a re-run
+      * reads the PREVIOUS compact (maxCompactEpoch excludes its own target,
+      * whose output may half-exist) and overwrites. The per-epoch dirs stay
+      * on disk as the replayable source of truth; only the read narrows.
+      */
+    def compact(spark: SparkSession, root: String, upToEpoch: Int,
+                fold: DataFrame => DataFrame = identity): Unit =
+      fold(upTo(spark, root, upToEpoch, maxCompactEpoch = upToEpoch - 1))
+        .write.mode("overwrite").parquet(compactDir(root, upToEpoch))
+
+    private def scan(spark: SparkSession, paths: Seq[String]): DataFrame =
+      if (paths.isEmpty) empty(spark) else spark.read.schema(readSchema).parquet(paths: _*)
+  }
 
   /** Highest committed epoch, or -1 (E3 resume entry point). */
   def latestCommittedEpoch(root: String): Int = {

@@ -102,6 +102,17 @@ class DedupResolveSpec extends AnyFunSuite {
     assert(kept == all -- drops, "filtered corpus != corpus minus non-survivors")
   }
 
+  test("spreadNarrow passes an input that already shuffles through without running a job") {
+    import org.apache.spark.sql.functions.{col, concat, lit, max}
+    // one partition: narrower than the session, so the first spread repartitions
+    val corpus = spark.range(0, 200, 1, 1)
+      .select(col("id").as("doc_id"), concat(lit("alpha beta gamma "), col("id")).as("text"))
+    val aggregated = corpus.groupBy("doc_id").agg(max("text").as("text"))
+    assert(graft.SparkTestBase.jobsStarted(TextOps.spreadNarrow(aggregated)) == 0)
+    val spread = TextOps.spreadNarrow(corpus)
+    assert(graft.SparkTestBase.jobsStarted(TextOps.spreadNarrow(spread)) == 0)
+  }
+
   test("t11 multimodal resolve == union-find on caption+image edges; both modalities merge") {
     val dir = "/root/testdata/sf0.001"
     val pairs = MultimodalDedup.pairsCorpus(spark, dir)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkTestBase.spark
 import graft.operators.{FrontierJob, PacingOps}
-import graft.sources.Gen
+import graft.sources.{Gen, Snapshots}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -122,6 +122,22 @@ class PacingSpec extends AnyFunSuite {
     assert(slowL.nonEmpty && fastL.nonEmpty, "host classes not both observed")
     assert(slowL.values.min > fastL.values.max,
       "slow-host tail not learned above fast hosts")
+  }
+
+  test("a resume that turns adaptivePacing on learns no delay from epochs without histograms") {
+    def crawl(root: String, until: Int, pacing: Boolean): Unit =
+      CrawlPipeline.run(spark, root, untilEpoch = until, seedsPerEpoch = 300,
+        cfg0 = FrontierJob.Config(), adaptivePacing = pacing)
+    val resumed = graft.SparkTestBase.tempDir("graft-pacing-resume")
+    crawl(resumed, 1, pacing = false)
+    crawl(resumed, 2, pacing = true)
+    val plain = graft.SparkTestBase.tempDir("graft-pacing-plain")
+    crawl(plain, 2, pacing = false)
+    assert(new java.io.File(PacingOps.LatencyFamily.dir(resumed, 2)).exists(),
+      "the resumed epoch did not pace")
+    def sched(root: String) = Snapshots.readScheduled(spark, root, 2).collect().toSet
+    assert(sched(resumed) == sched(plain),
+      "epoch-2 schedule learned a delay from epochs that wrote no histogram")
   }
 
   test("action: learned delays raise per-host schedule gaps; robots floor kept") {

@@ -132,6 +132,7 @@ class SimIndexSpec extends AnyFunSuite {
     var sawCross = false
     for ((df, e) <- Seq(e0, e1).zipWithIndex) {
       SimIndex.writePhashIndex(df, root, e)
+      SimIndex.writePhashPairIndex(df, root, e)
       val inc = collectP(SimIndex.crossEpochNearDupPhash(spark, root, e))
       val corpusSoFar = (0 to e).map(Seq(e0, e1)).reduce(_ unionByName _)
       val eIds = df.select("image_id").collect().map(_.getString(0)).toSet
@@ -145,18 +146,24 @@ class SimIndexSpec extends AnyFunSuite {
     // compaction narrows the read path, never the result: fold epochs 0-1
     // into a compact, probe epoch 2 through compact+tail, compare to the
     // never-compacted probe (same root state — compact read is _SUCCESS
-    // gated and the per-epoch dirs remain the source of truth)
-    val before2 = {
-      val e2 = spark.createDataset((100 until 130).map(img)).toDF("image_id", "phash")
-        .unionByName(e0.limit(5)
-          .select(concat(col("image_id"), lit("?v=2")).as("image_id"), col("phash")))
-      SimIndex.writePhashIndex(e2, root, 2)
-      collectP(SimIndex.crossEpochNearDupPhash(spark, root, 2))
-    }
+    // gated and the per-epoch dirs remain the source of truth). Both block
+    // families store the epoch in their compacts, which the probes' new-
+    // vs-old orientation reads.
+    val e2 = spark.createDataset((100 until 130).map(img)).toDF("image_id", "phash")
+      .unionByName(e0.limit(5)
+        .select(concat(col("image_id"), lit("?v=2")).as("image_id"), col("phash")))
+    SimIndex.writePhashIndex(e2, root, 2)
+    SimIndex.writePhashPairIndex(e2, root, 2)
+    val before2 = collectP(SimIndex.crossEpochNearDupPhash(spark, root, 2))
+    val scaleBefore2 = collectP(SimIndex.crossEpochScaleMatches(spark, root, 2))
     SimIndex.compactPhashIndex(spark, root, 1)
+    SimIndex.compactPhashPairIndex(spark, root, 1)
     val after = collectP(SimIndex.crossEpochNearDupPhash(spark, root, 2))
     assert(after == before2 && after.nonEmpty,
       s"compacted probe diverged (compact=${after.size}, tail=${before2.size})")
+    val scaleAfter = collectP(SimIndex.crossEpochScaleMatches(spark, root, 2))
+    assert(scaleAfter == scaleBefore2 && scaleAfter.nonEmpty,
+      s"compacted pair-index probe diverged (compact=${scaleAfter.size}, tail=${scaleBefore2.size})")
   }
 
   test("c65 eval-set decontamination == brute mirror; every planted eval twin flagged, broadcast pinned") {
