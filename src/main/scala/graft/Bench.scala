@@ -33,7 +33,7 @@ object Bench {
       val n = 1000000L
       val cfg = FrontierJob.Config(epoch = 0)
       def job() = FrontierJob.runEpoch(Gen.seeds(spark, n, 64), Gen.robots(spark),
-        SeenStore.emptySeen(spark), Map.empty, 64, cfg)
+        SeenStore.emptySeen(spark), cfg)
       job().write.format("noop").mode("overwrite").save() // warm
       val numer = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, n, 64)).count() +
         job().count()

@@ -21,19 +21,21 @@ object PlanAudit {
 
     val sections = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
 
-    // E1 crawl schedule — the flagship: canonicalize -> bloom-split dedupe
-    // -> robots broadcast -> salted politeness -> deterministic order
+    // E1 crawl schedule — the flagship: canonicalize -> batch dedupe ->
+    // exact seen anti-join -> robots broadcast -> bounded-heap politeness
+    // top-K -> deterministic order
     {
       import spark.implicits._
       val seen = Seq(graft.model.SeenEntry(42L, "news0.example.com", 0)).toDS()
-      val blooms = SeenStore.sidecarMap(SeenStore.buildBlooms(seen, 16, 128))
       val sched = FrontierJob.runEpoch(
-        Gen.seeds(spark, 2000), Gen.robots(spark), seen, blooms, 16,
+        Gen.seeds(spark, 2000), Gen.robots(spark), seen,
         FrontierJob.Config(globalBudget = 500))
       sections += (("E1 crawl-epoch schedule (FrontierJob.runEpoch)",
-        "bloom probe inside WholeStageCodegen; BroadcastHashJoin for robots; " +
-          "partial+final ObjectHashAggregate for the bounded-heap politeness top-K; " +
-          "one SMJ anti-join only for bloom-'maybe' rows", fmt(sched.toDF())))
+        "canonicalize + xxhash64 in one codegen stage into the batch-dedupe aggregate; " +
+          "one exact left-anti join on url_hash against the seen set (broadcast below " +
+          "FrontierJob.SeenBroadcastMaxBytes, shuffled SMJ above it); BroadcastHashJoin for " +
+          "robots; partial+final ObjectHashAggregate for the bounded-heap politeness top-K",
+        fmt(sched.toDF())))
     }
 
     // E2 revision diff (latest-table form) — bytes-free scans

@@ -108,15 +108,7 @@ object ScalingBench {
         spark.read.parquet(seedPath).as[graft.model.Seed]
       case _ => Gen.seeds(spark, n, inputParts)
     }
-    // Sidecar mode (SPARK_GRAFT_SIDECAR=none|bloom|cuckoo): "none" is the
-    // epoch-0 shape (empty seen set, exact anti-join short-circuits on an
-    // empty build side). "bloom"/"cuckoo" measure the epoch>=1 shape the
-    // sidecar probe serves: a quarter of the URL space is already seen
-    // (persisted to parquet untimed, like a real epoch reading the
-    // committed seen table) and the populated sidecar is probed inside the
-    // exact anti-join.
-    val sidecar = sys.env.getOrElse("SPARK_GRAFT_SIDECAR", "none")
-    val numBuckets = 64
+    val sidecar = seenMode
     val seenDs: org.apache.spark.sql.Dataset[graft.model.SeenEntry] =
       if (sidecar == "none") SeenStore.emptySeen(spark)
       else {
@@ -128,30 +120,14 @@ object ScalingBench {
         // reuse is gated on the _SUCCESS marker, not bare dir existence: a
         // run killed mid-write leaves a partial parquet directory that a
         // bare exists() check would silently read, skewing every
-        // subsequent sidecar bench against a wrong seen set
+        // subsequent seen-set bench against a wrong seen set
         if (!new java.io.File(s"$seenPath/_SUCCESS").exists())
           FrontierJob.canonicalizeFrontier(Gen.seeds(spark, seenN, inputParts))
             .select(col("url_hash"), col("host"), lit(0).as("first_epoch"))
             .write.mode("overwrite").parquet(seenPath)
         spark.read.parquet(seenPath).as[graft.model.SeenEntry]
       }
-    val sidecarMap: Map[Int, Array[Byte]] =
-      if (sidecar == "none") Map.empty
-      else {
-        val builder = if (sidecar == "cuckoo")
-          SeenStore.buildCuckoos(seenDs, numBuckets, math.max(1024L, n / 4 / numBuckets))
-        else
-          SeenStore.buildBlooms(seenDs, numBuckets, math.max(1024L, n / 4 / numBuckets))
-        SeenStore.sidecarMap(builder)
-      }
-    def job() =
-      if (sidecar == "cuckoo")
-        FrontierJob.applyGlobalBudget(FrontierJob.schedule(FrontierJob.applyRobots(
-          FrontierJob.dedupeAgainstSeenCuckoo(
-            FrontierJob.canonicalizeFrontier(seedTable()), seenDs, sidecarMap, numBuckets),
-          Gen.robots(spark), cfg), cfg), cfg)
-      else FrontierJob.runEpoch(
-        seedTable(), Gen.robots(spark), seenDs, sidecarMap, numBuckets, cfg)
+    def job() = FrontierJob.runEpoch(seedTable(), Gen.robots(spark), seenDs, cfg)
     job().write.format("noop").mode("overwrite").save() // warm JIT + codegen
     val deduped = FrontierJob.canonicalizeFrontier(seedTable()).count()
     val scheduled = job().count()
@@ -167,6 +143,19 @@ object ScalingBench {
         s"deserMs=${metrics.get(2)} shufWriteMs=${metrics.get(3)} shufFetchWaitMs=${metrics.get(4)}")
     spark.stop()
     f"""{"cores":$cores,"deduped":$deduped,"scheduled":$scheduled,"wall":$wall%.2f,"walls":[${walls.map(w => f"$w%.2f").mkString(",")}],"thr":$thr%.1f,"sidecar":"$sidecar"}"""
+  }
+
+  /** The seen-set shape, `SPARK_GRAFT_SIDECAR`: "none" (default) is the
+    * epoch-0 shape, an empty seen set; "bloom" is the epoch >= 1 shape, a
+    * quarter of the URL space already seen (persisted to parquet untimed,
+    * like a real epoch reading the committed seen table). The name and
+    * values predate the removal of the crawl's seen sidecar and are kept
+    * so BENCH/SIDECAR_SCALING.md rows stay comparable; no filter is built.
+    */
+  private def seenMode: String = {
+    val m = sys.env.getOrElse("SPARK_GRAFT_SIDECAR", "none")
+    require(m == "none" || m == "bloom", s"SPARK_GRAFT_SIDECAR must be none or bloom, not $m")
+    m
   }
 
   /** Directory/jar holding graft classes (for executor classpaths). */
@@ -279,6 +268,7 @@ object ScalingBench {
       return
     }
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "16000000").toLong
+    val sidecar = seenMode
     // mode "local": levels are thread counts in one JVM (local[N]);
     // mode "cluster": levels are EXECUTOR counts (local-cluster — separate
     // executor JVMs x SPARK_GRAFT_EXEC_CORES cores each)
@@ -307,7 +297,6 @@ object ScalingBench {
     val pairJson = pairs.map { case (lo, hi, e) =>
       s"""{"n_cores":$lo,"four_n_cores":$hi,"efficiency":${f"$e%.3f"}}"""
     }.mkString("[", ",", "]")
-    val sidecar = sys.env.getOrElse("SPARK_GRAFT_SIDECAR", "none")
     val json =
       s"""{"metric":"frontier_scaling","n_urls":$n,"sidecar":"$sidecar","deduped":$deduped,"scheduled":$scheduled,""" +
         s""""levels":$levelJson,"pairs":$pairJson}"""
@@ -326,9 +315,9 @@ object ScalingBench {
          |
          |Protocol: identical synthetic frontier (Gen.seeds, seed=42, n=$n
          |URLs, 64 input partitions, Zipf-skewed hosts, sidecar=$sidecar —
-         |"none" is the epoch-0 empty-seen shape; "bloom"/"cuckoo" pre-seed
-         |a quarter of the URL space into a parquet seen table + populated
-         |sidecar so the sidecar-probed dedupe is exercised), full E1 job
+         |"none" is the epoch-0 empty-seen shape; "bloom" pre-seeds a
+         |quarter of the URL space into a parquet seen table, so the exact
+         |seen anti-join does real work; no filter is built), full E1 job
          |(canonicalize -> xxhash64 -> batch dedupe -> robots gate ->
          |bounded-heap politeness top-K -> deterministic global order),
          |`noop` sink. One fresh child JVM per level, `taskset`-pinned to

@@ -29,7 +29,7 @@ object SparkEntry {
     import spark.implicits._
     FrontierJob.runEpoch(
       Gen.seeds(spark, n), Gen.robots(spark),
-      graft.sources.SeenStore.emptySeen(spark), Map.empty, 16,
+      graft.sources.SeenStore.emptySeen(spark),
       crawlCfg(budget = math.max(200, n / 3)))
       .toDF()
       .orderBy(col("scheduled_at_ms").asc, col("priority").desc, col("url_hash").asc)
@@ -232,7 +232,7 @@ object SparkEntry {
     // t56: per-doc token entropy screen — quantized c·log2 c terms,
     // integer-compared low-entropy flag — oracled
     "t56_token_entropy" -> ((s, d) => TextOps.tokenEntropy(s, d)),
-    // c99: bloom-sidecar FPR capacity plan — standard-model curve over
+    // c99: bloom FPR capacity plan — standard-model curve over
     // the seen-set forecast, ppm-rounded breach flag — oracled
     "c99_bloom_capacity" -> ((s, d) =>
       operators.HealthOps.bloomCapacityPlan(s, d)),
@@ -862,7 +862,7 @@ object SparkEntry {
         .orderBy("host_bucket")
     }),
     "c11_cuckoo" -> ((s, _) => {
-      // deletable seen-filter sidecar (north_rule "bloom/cuckoo"): occupancy
+      // deletable seen filter (north_rule "bloom/cuckoo"): occupancy
       // is deterministic (capacity margin => every insert succeeds
       // regardless of partition arrival order); membership/deletion
       // semantics are gated by CuckooSpec properties

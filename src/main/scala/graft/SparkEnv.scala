@@ -59,6 +59,12 @@ object SparkEnv {
     * then restores every key to its previous value, or unsets it if it had
     * none, also when `body` throws. Anything lazy that `body` returns runs
     * under the restored conf, so materialize results inside the scope.
+    *
+    * The change is made on `spark` itself, not on a child session, so it
+    * is visible to every query on that session for the scope. The loops
+    * that use it (the crawl, graph and streaming loops) are therefore
+    * single-tenant: a query run concurrently on the same session sees the
+    * scoped conf.
     */
   def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Aggregator
 /** Hand-rolled 64-bit-key bloom filter (SURVEY.md §2.4 A4, north_rule
   * "partitioned bloom/cuckoo URL-seen filter").
   *
-  * Layout: `Array[Long]` of bit words; the serialized sidecar form is
+  * Layout: `Array[Long]` of bit words; the serialized form is
   * `[numHash:int][numWords:int][words...]` big-endian. Probe i of item x
   * uses the double-hashing scheme g_i(x) = h1(x) + i*h2(x) (Kirsch &
   * Mitzenmacher 2006, public result) with splitmix64-derived h1/h2 — pure,
@@ -15,8 +15,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * Scale design (SURVEY.md §7.3.5): a monolithic bloom for 10^10 URLs at 1%
   * FPP is ~12 GB — unusable as a broadcast. The engine therefore builds
   * PARTITIONED blooms: one filter per host-bucket (pmod(xxhash64(host), B)),
-  * each sized for its expected key share, stored as a sidecar table
-  * (host_bucket, bloom:binary) and broadcast per-bucket only where probed.
+  * each sized for its expected key share, as a (host_bucket, bloom:binary)
+  * table (SeenStore.buildBlooms).
   */
 object Bloom64 {
 
@@ -55,8 +55,8 @@ object Bloom64 {
   }
 
   /** Probe entry point for the codegen'd BloomMightContain expression: the
-    * broadcast holds the bucket -> (numHash, words) sidecar map; a bucket
-    * with no bloom (no seen URLs hash there yet) is "definitely new".
+    * broadcast holds the bucket -> (numHash, words) map; a bucket with no
+    * bloom (no key hashed there) is "definitely new".
     */
   def mightContainRef(
       bc: org.apache.spark.broadcast.Broadcast[_],
@@ -85,16 +85,6 @@ object Bloom64 {
     var i = 0
     while (i < n) { words(i) = bb.getLong; i += 1 }
     (numHash, words)
-  }
-
-  def mergeSerialized(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    if (a == null || a.isEmpty) return b
-    if (b == null || b.isEmpty) return a
-    val (ka, wa) = deserialize(a); val (kb, wb) = deserialize(b)
-    require(ka == kb && wa.length == wb.length, "bloom shape mismatch")
-    var i = 0
-    while (i < wa.length) { wa(i) |= wb(i); i += 1 }
-    serialize(wa, ka)
   }
 }
 

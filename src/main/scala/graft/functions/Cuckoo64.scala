@@ -23,8 +23,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * bucket — far below the 1% the engine configures blooms for — while
   * keeping the table at ~2.1 bytes/key at 95% load, comparable to a 1% bloom
   * (~1.2 bytes/key) but with O(1) deletion, which a bloom cannot do at all.
-  * Scale shape is identical to the bloom sidecars: one filter per
-  * host-bucket, broadcast per-bucket only where probed (SURVEY.md §7.3.5).
+  * Built one filter per host-bucket, like the blooms (SeenStore.buildCuckoos).
   */
 object Cuckoo64 {
 
@@ -187,35 +186,7 @@ object Cuckoo64 {
     table(table.length - 1) = 1L
   }
 
-  /** Probe entry point for the codegen'd CuckooMightContain expression:
-    * the broadcast holds the host-bucket -> slot-table sidecar map; a
-    * bucket with no filter (no seen URLs hash there yet) is "definitely
-    * new" — identical contract to Bloom64.mightContainRef.
-    */
-  def mightContainRef(
-      bc: org.apache.spark.broadcast.Broadcast[_],
-      bucket: Int,
-      hash: Long): Boolean = {
-    val m = bc.value.asInstanceOf[Map[Int, Array[Long]]]
-    m.get(bucket) match {
-      case Some(table) => contains(table, hash)
-      case None        => false
-    }
-  }
-
-  /** Serialized-form merge for cross-epoch sidecar accumulation (the
-    * cuckoo analog of Bloom64.mergeSerialized). A cumulative table that
-    * outgrows its fixed capacity saturates via the overflow flag — safe
-    * degradation: everything routes to the exact anti-join, never a false
-    * negative.
-    */
-  def mergeSerialized(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    if (a == null || a.isEmpty) return b
-    if (b == null || b.isEmpty) return a
-    serialize(mergeInto(deserialize(a), deserialize(b)))
-  }
-
-  /** Sidecar form: [numBuckets:int][words...] (last word = overflow flag). */
+  /** Serialized form: [numBuckets:int][words...] (last word = overflow flag). */
   def serialize(table: Array[Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(4 + table.length * 8)
     bb.putInt(table.length - 1)
@@ -232,18 +203,6 @@ object Cuckoo64 {
     while (i < table.length) { table(i) = bb.getLong; i += 1 }
     table
   }
-
-  /** Bucket count of a serialized sidecar (the header int) — lets a caller
-    * build new tables at the shape of an already-persisted cumulative
-    * sidecar. Fingerprint re-seating (merge) is only defined between equal
-    * bucket counts: a stored bucket index is `hash & (buckets-1)`, so a
-    * fingerprint's legal positions in a differently-masked table are NOT
-    * derivable from its position here — cross-shape migration would break
-    * the `contains` contract. Shape agreement is therefore a merge
-    * precondition, enforced by mergeInto's require.
-    */
-  def tableBucketsOf(bytes: Array[Byte]): Int =
-    java.nio.ByteBuffer.wrap(bytes).getInt
 }
 
 /** Typed Aggregator building one cuckoo filter per group — the deletable
@@ -253,13 +212,9 @@ object Cuckoo64 {
   * aggregation applies and the shuffle carries one fixed-size table per
   * (partition, bucket).
   */
-class CuckooAgg(expectedItems: Long, tableBuckets: Int = 0)
+class CuckooAgg(expectedItems: Long)
     extends Aggregator[Long, Array[Long], Array[Byte]] {
-  // tableBuckets > 0 pins the exact table shape (power of two) — required
-  // when the output will merge into an existing sidecar of that shape (see
-  // Cuckoo64.tableBucketsOf); otherwise size for expectedItems at ~95% load.
-  private val numBuckets =
-    if (tableBuckets > 0) tableBuckets else Cuckoo64.numBucketsFor(expectedItems)
+  private val numBuckets = Cuckoo64.numBucketsFor(expectedItems)
 
   override def zero: Array[Long] = Cuckoo64.alloc(numBuckets)
   override def reduce(buf: Array[Long], item: Long): Array[Long] = {

@@ -113,12 +113,11 @@ case class PathOf(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Probe of the broadcast per-host-bucket bloom sidecar:
+/** Probe of a broadcast per-host-bucket bloom map:
   * (host_bucket:int, url_hash:long) -> "maybe seen". Native codegen keeps
-  * the frontier's hottest filter inside the whole-stage-codegen'd chain —
-  * the UDF form paid encoder ser/de per frontier row exactly where the
-  * engine is supposed to be one codegen stage. The broadcast handle rides
-  * the plan as a codegen reference object; executors read .value() locally.
+  * the probe inside the whole-stage-codegen'd chain — the UDF form paid
+  * encoder ser/de per row. The broadcast handle rides the plan as a
+  * codegen reference object; executors read .value() locally.
   */
 case class BloomMightContain(
     left: Expression,
@@ -136,30 +135,6 @@ case class BloomMightContain(
       s"${ev.value} = graft.functions.Bloom64.mightContainRef($ref, $b, $h);")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContain =
-    copy(left = l, right = r)
-}
-
-/** Cuckoo-sidecar twin of [[BloomMightContain]]: same codegen probe shape
-  * over the deletable filter (north_rule "bloom/cuckoo" — both filter kinds
-  * get the hot-path probe; FrontierJob.dedupeAgainstSeenCuckoo is the
-  * cuckoo-sidecar entry point, golden-equal to the bloom path).
-  */
-case class CuckooMightContain(
-    left: Expression,
-    right: Expression,
-    tables: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]])
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "cuckoo_maybe_seen"
-  override def nullSafeEval(bucket: Any, hash: Any): Any =
-    Cuckoo64.mightContainRef(tables, bucket.asInstanceOf[Int], hash.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cuckooBc", tables,
-      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-    nullSafeCodeGen(ctx, ev, (b, h) =>
-      s"${ev.value} = graft.functions.Cuckoo64.mightContainRef($ref, $b, $h);")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CuckooMightContain =
     copy(left = l, right = r)
 }
 
@@ -519,12 +494,11 @@ object GraftFunctions {
     call_function(name, text)
   }
 
-  /** Column probe over a concrete broadcast sidecar. The registered name is
-    * unique per broadcast id, so two dedupes against DIFFERENT sidecars
+  /** Column probe over a concrete broadcast bloom map. The registered name
+    * is unique per broadcast id, so two probes of DIFFERENT bloom maps
     * analyzed in one session can never cross-wire (a shared name would bind
-    * whichever broadcast registered last — and a wrong sidecar routes
-    * truly-seen URLs down the bloom-"fresh" branch that skips the exact
-    * anti-join). One registry entry per sidecar broadcast is negligible.
+    * whichever broadcast registered last, and answer for the wrong set).
+    * One registry entry per broadcast is negligible.
     */
   def bloomMaybeSeen(
       spark: SparkSession,
@@ -534,21 +508,6 @@ object GraftFunctions {
     val name = s"bloom_maybe_seen_${blooms.id}"
     registerBounded(spark, name,
       (exprs: Seq[Expression]) => BloomMightContain(exprs(0), exprs(1), blooms),
-      track = true)
-    call_function(name, bucket, hash)
-  }
-
-  /** Cuckoo twin of [[bloomMaybeSeen]] — same per-broadcast-id unique name
-    * discipline (no cross-wiring through the shared registry).
-    */
-  def cuckooMaybeSeen(
-      spark: SparkSession,
-      tables: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]],
-      bucket: Column,
-      hash: Column): Column = {
-    val name = s"cuckoo_maybe_seen_${tables.id}"
-    registerBounded(spark, name,
-      (exprs: Seq[Expression]) => CuckooMightContain(exprs(0), exprs(1), tables),
       track = true)
     call_function(name, bucket, hash)
   }

@@ -17,9 +17,6 @@ object CrawlPipeline {
 
   final case class EpochSummary(epoch: Int, n_scheduled: Long)
 
-  /** Host buckets of the crawl's seen sidecar (bloom or cuckoo). */
-  val SeenBuckets = 16
-
   /** The c44 aged carryover: (url, priority) Seed rows. */
   val CarryoverFamily: Snapshots.Family =
     Snapshots.Family("carryover", Encoders.product[Seed].schema)
@@ -317,11 +314,9 @@ object CrawlPipeline {
     * up from the manifest (E3). Each epoch runs the stages of [[Crawl]] in
     * write order; the manifest commit is the last write.
     *
-    * `sidecar` selects the seen-filter kind (north_rule "bloom/cuckoo"):
-    * "bloom" (default) or "cuckoo" — the sidecar only pre-routes rows
-    * around the exact anti-join, so the two runs are golden-equal on every
-    * output table; cuckoo additionally supports O(1) deletion (e.g.
-    * purging a host after a robots change) at ~2x the bytes per key.
+    * Single-tenant: the loop's shuffle-width and AQE settings are set on
+    * `spark`'s own conf for the whole run ([[graft.SparkEnv.withConf]]), so
+    * a query run concurrently on the same session sees them too.
     */
   def run(
       spark: SparkSession,
@@ -331,8 +326,6 @@ object CrawlPipeline {
       cfg0: FrontierJob.Config,
       outlinkFanout: Int = 2,
       fetchPartitions: Int = 32,
-      sidecar: String = "bloom",
-      sidecarPerBucket: Long = 0L,
       compactSeenEvery: Int = 8,
       retainEvery: Int = 0,
       retainWindow: Long = 4L,
@@ -353,22 +346,20 @@ object CrawlPipeline {
       payloadValidation: Boolean = false,
       retryFailures: Boolean = false,
       retryMax: Int = 2): Seq[EpochSummary] = {
-    require(sidecar == "bloom" || sidecar == "cuckoo", s"unknown sidecar kind: $sidecar")
     require(recrawlPolicy == "staleness" || recrawlPolicy == "changerate",
       s"unknown recrawl policy: $recrawlPolicy")
-    val c = new Crawl(spark, root, seedsPerEpoch, outlinkFanout, fetchPartitions, sidecar,
-      sidecarPerBucket, compactSeenEvery, retainEvery, retainWindow, retainStride, backoff,
-      backoffThresholdBp, byteBudgetPerHost, recrawl, recrawlPolicy, revalidate, rankOrdered,
-      sitemaps, adaptivePacing, aging, agingBoost, robotsFlipEpoch, robotsAvailability,
-      payloadValidation, retryFailures, retryMax)
+    val c = new Crawl(spark, root, seedsPerEpoch, outlinkFanout, fetchPartitions,
+      compactSeenEvery, retainEvery, retainWindow, retainStride, backoff, backoffThresholdBp,
+      byteBudgetPerHost, recrawl, recrawlPolicy, revalidate, rankOrdered, sitemaps,
+      adaptivePacing, aging, agingBoost, robotsFlipEpoch, robotsAvailability, payloadValidation,
+      retryFailures, retryMax)
     graft.SparkEnv.withConf(spark,
       "spark.sql.shuffle.partitions" -> c.loopPartitions,
       "spark.sql.adaptive.enabled" -> "false")(
       (Snapshots.latestCommittedEpoch(root) + 1 to untilEpoch).map { epoch =>
         val cfg = cfg0.copy(epoch = epoch, epochT0Ms = cfg0.epochT0Ms + epoch * 3600000L)
         val seen = SeenStore.load(spark, root)
-        val sidecars = SeenStore.loadSidecar(spark, root, sidecar, epoch - 1)
-        val (deduped, dedupeCounts) = c.dedupe(c.seeds(epoch), seen, sidecars)
+        val (deduped, dedupeCounts) = c.dedupe(c.seeds(epoch), seen)
         val toRobots = c.revisitFrontier(epoch, deduped)
         val robots = c.robots(epoch)
         val allowed = c.allowed(cfg, toRobots, robots)
@@ -376,7 +367,7 @@ object CrawlPipeline {
         deduped.unpersist()
         val nScheduled = scheduled.count()
         val summary = c.fetchAndSnapshot(epoch, scheduled, nScheduled, dedupeCounts)
-        c.seenAndSidecar(epoch, scheduled, seen, sidecars)
+        c.seenMerge(epoch, scheduled, seen)
         c.diffAndLatest(cfg)
         scheduled.unpersist()
         c.commit(epoch, summary)
@@ -394,8 +385,8 @@ object CrawlPipeline {
     */
   private final class Crawl(
       spark: SparkSession, root: String, seedsPerEpoch: Int, outlinkFanout: Int,
-      fetchPartitions: Int, sidecar: String, sidecarPerBucket: Long, compactSeenEvery: Int,
-      retainEvery: Int, retainWindow: Long, retainStride: Int, backoff: Boolean,
+      fetchPartitions: Int, compactSeenEvery: Int, retainEvery: Int, retainWindow: Long,
+      retainStride: Int, backoff: Boolean,
       backoffThresholdBp: Int, byteBudgetPerHost: Long, recrawl: Boolean,
       recrawlPolicy: String, revalidate: Boolean, rankOrdered: Boolean, sitemaps: Boolean,
       adaptivePacing: Boolean, aging: Boolean, agingBoost: Double, robotsFlipEpoch: Int,
@@ -478,16 +469,10 @@ object CrawlPipeline {
       * once the schedule is written), and the counts; the frontier's cache
       * serves only the ledger, whose one action fills the survivors' cache.
       */
-    def dedupe(seeds: Dataset[Seed], seen: Dataset[SeenEntry],
-               sidecars: Map[Int, Array[Byte]]): (DataFrame, Map[Int, Long]) = {
+    def dedupe(seeds: Dataset[Seed], seen: Dataset[SeenEntry]): (DataFrame, Map[Int, Long]) = {
       val pidCol = fetchPartitionId(col("url_hash"), fetchPartitions)
       val frontier = FrontierJob.canonicalizeFrontierCounted(seeds).persist()
-      val deduped = (
-        if (sidecar == "cuckoo")
-          FrontierJob.dedupeAgainstSeenCuckoo(frontier.drop("n_raw"), seen, sidecars, SeenBuckets)
-        else
-          FrontierJob.dedupeAgainstSeen(frontier.drop("n_raw"), seen, sidecars, SeenBuckets)
-        ).persist()
+      val deduped = FrontierJob.dedupeAgainstSeen(frontier.drop("n_raw"), seen).persist()
       // one action for both sides of the dedupe ledger (raw candidates and
       // survivors per fetch partition) — the former two collects were two
       // full job launches per epoch for <=fetchPartitions rows each
@@ -669,7 +654,7 @@ object CrawlPipeline {
     }
 
     /** Fetch wave + snapshot data write (NOT yet committed: committing
-      * before seen/blooms would let a crash produce a committed epoch whose
+      * before the seen merge would let a crash produce a committed epoch whose
       * URLs re-schedule), then the backoff and pacing state read off the
       * at-rest fetch log.
       */
@@ -707,14 +692,12 @@ object CrawlPipeline {
       summary
     }
 
-    /** Seen merge + the cumulative sidecar for the NEXT epoch. */
-    def seenAndSidecar(epoch: Int, scheduled: Dataset[Scheduled], seen: Dataset[SeenEntry],
-                       sidecars: Map[Int, Array[Byte]]): Unit = {
+    /** Seen merge: this epoch's newly scheduled URLs join the seen set. */
+    def seenMerge(epoch: Int, scheduled: Dataset[Scheduled], seen: Dataset[SeenEntry]): Unit = {
       val newSeen0 = scheduled
         .select(col("url_hash"), col("host"), lit(epoch).as("first_epoch"))
       // recrawled/retried URLs are already in the seen store — re-appending
-      // them would duplicate SeenEntry rows (double-inserting their cuckoo
-      // fingerprints, wasting bucket capacity every revisit); the anti-join
+      // them would duplicate SeenEntry rows every revisit; the anti-join
       // runs only when a seen-bypass mode is on so the default path stays
       // byte-identical
       val newSeen = (
@@ -723,11 +706,6 @@ object CrawlPipeline {
         else newSeen0
         ).as[SeenEntry]
       SeenStore.append(newSeen, root, epoch)
-      val perBucket =
-        if (sidecarPerBucket > 0L) sidecarPerBucket
-        else math.max(1024L, seedsPerEpoch.toLong)
-      SeenStore.advanceSidecar(spark, root, sidecar, epoch, sidecars, newSeen, SeenBuckets,
-        perBucket)
     }
 
     /** E2 diff for this epoch against the maintained latest-version table

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Bloom64, GraftFunctions, TopKAgg}
+import graft.functions.{GraftFunctions, TopKAgg}
 import graft.model._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -124,87 +124,32 @@ object FrontierJob {
     */
   val SeenBroadcastMaxBytes: Long = 2L << 20
 
-  /** Exact dedupe against the persistent URL-seen set, probing the
-    * host-bucket bloom sidecar inside the anti-join (see
-    * [[dedupeWithSidecarProbe]]); no sidecar yet (epoch 0 / cold resume)
-    * means the plain anti-join. Correctness never depends on the bloom.
-    * `seenBroadcastMaxBytes = 0` forces the shuffled anti-join (PlanSpec
-    * pins that plan).
+  /** Exact dedupe against the persistent URL-seen set: one left-anti join
+    * on `url_hash`. The frontier arrives hash-partitioned and sorted on
+    * url_hash by the batch-dedupe aggregate, so the shuffled (size-gated)
+    * form adds only the seen side's exchange and sort; below the gate the
+    * seen side broadcasts (PlanSpec pins both forms).
+    * `seenBroadcastMaxBytes = 0` forces the shuffled anti-join.
+    *
+    * No seen filter is probed here: as a join condition a bloom or cuckoo
+    * probe is evaluated only on rows whose url_hash the seen side already
+    * matched, where a filter with no false negatives always answers
+    * "maybe". A filter pays only by pruning a join input before the join
+    * (ROADMAP direction 1).
     */
   def dedupeAgainstSeen(
       frontier: DataFrame,
       seen: Dataset[SeenEntry],
-      blooms: Map[Int, Array[Byte]],
-      numBuckets: Int,
-      seenBroadcastMaxBytes: Long = SeenBroadcastMaxBytes): DataFrame = {
-    if (blooms.isEmpty)
-      return frontier.join(seenJoinSide(seen, seenBroadcastMaxBytes),
-        Seq("url_hash"), "left_anti")
-    val spark = frontier.sparkSession
-    GraftFunctions.ensureRegistered(spark)
-    val parsed = blooms.map { case (b, bytes) => b -> Bloom64.deserialize(bytes) }
-    val bc = spark.sparkContext.broadcast(parsed)
-    // Native codegen probe (BloomMightContain) — stays inside the frontier's
-    // whole-stage-codegen chain; the old UDF form paid encoder ser/de per
-    // row.
-    dedupeWithSidecarProbe(frontier, seen, numBuckets,
-      (b, h) => GraftFunctions.bloomMaybeSeen(spark, bc, b, h),
-      seenBroadcastMaxBytes)
-  }
+      seenBroadcastMaxBytes: Long = SeenBroadcastMaxBytes): DataFrame =
+    frontier.join(seenJoinSide(seen, seenBroadcastMaxBytes), Seq("url_hash"), "left_anti")
 
-  /** Cuckoo-sidecar dedupe — the deletable branch of the north_rule's
-    * "bloom/cuckoo URL-seen filter", sharing the one-pass plan and
-    * codegen-probe discipline with the bloom path (the filters differ
-    * only in the membership kernel behind the probe expression).
+  /** The crawl no longer keeps a seen sidecar; `blooms` and `numBuckets`
+    * are ignored. Kept for the benchmark's callers only.
     */
-  def dedupeAgainstSeenCuckoo(
-      frontier: DataFrame,
-      seen: Dataset[SeenEntry],
-      cuckoos: Map[Int, Array[Byte]],
-      numBuckets: Int): DataFrame = {
-    if (cuckoos.isEmpty)
-      return frontier.join(seenJoinSide(seen, SeenBroadcastMaxBytes),
-        Seq("url_hash"), "left_anti")
-    val spark = frontier.sparkSession
-    GraftFunctions.ensureRegistered(spark)
-    val parsed = cuckoos.map { case (b, bytes) => b -> graft.functions.Cuckoo64.deserialize(bytes) }
-    val bc = spark.sparkContext.broadcast(parsed)
-    dedupeWithSidecarProbe(frontier, seen, numBuckets,
-      (b, h) => GraftFunctions.cuckooMaybeSeen(spark, bc, b, h),
-      SeenBroadcastMaxBytes)
-  }
-
-  /** Shared one-pass dedupe over any sidecar probe: ONE left-anti join on
-    * `url_hash = seen_hash AND maybe_seen`. A bloom or cuckoo filter has
-    * no false negatives, so a seen URL always carries maybe_seen = true
-    * and the survivors are exactly the plain anti-join's. A null
-    * bucket/hash makes the probe null; coalesce -> true leaves such a row
-    * to the exact match, never drops it unmatched (the oracle keeps it).
-    *
-    * The frontier arrives hash-partitioned and sorted on url_hash by the
-    * batch-dedupe aggregate, so the shuffled (size-gated) form adds only
-    * the seen side's exchange and sort (PlanSpec pins both forms). For
-    * the same reason, splitting the frontier on the flag into a bypass
-    * branch and an anti-joined branch would save no shuffle, but would
-    * re-run the dedupe aggregate per branch, and AQE coalesces a union's
-    * shuffle reads into fewer tasks. As a join condition the probe is
-    * evaluated only for rows whose url_hash the seen side holds, so here
-    * the sidecar changes neither the result nor which rows the join
-    * looks up; whether E1 needs it at all is ROADMAP direction 3.
-    */
-  private def dedupeWithSidecarProbe(
-      frontier: DataFrame,
-      seen: Dataset[SeenEntry],
-      numBuckets: Int,
-      probe: (Column, Column) => Column,
-      seenBroadcastMaxBytes: Long): DataFrame = {
-    val maybeSeen = coalesce(
-      probe(pmod(xxhash64(col("host")), lit(numBuckets)).cast("int"), col("url_hash")),
-      lit(true))
-    val seenSide = seenJoinSide(seen, seenBroadcastMaxBytes)
-      .withColumnRenamed("url_hash", "seen_hash")
-    frontier.join(seenSide, col("url_hash") === col("seen_hash") && maybeSeen, "left_anti")
-  }
+  @deprecated("the seen sidecar is gone; use dedupeAgainstSeen(frontier, seen)", "0.1.0")
+  def dedupeAgainstSeen(frontier: DataFrame, seen: Dataset[SeenEntry],
+                        blooms: Map[Int, Array[Byte]], numBuckets: Int): DataFrame =
+    dedupeAgainstSeen(frontier, seen)
 
   /** robots.txt gate: join of the per-host rules cache, longest-prefix
     * allow/deny evaluated with higher-order array functions (no UDF). Hosts
@@ -407,12 +352,18 @@ object FrontierJob {
       seeds: Dataset[Seed],
       robots: Dataset[RobotsEntry],
       seen: Dataset[SeenEntry],
-      blooms: Map[Int, Array[Byte]],
-      numBuckets: Int,
       cfg: Config): Dataset[Scheduled] = {
     val frontier = canonicalizeFrontier(seeds)
-    val deduped = dedupeAgainstSeen(frontier, seen, blooms, numBuckets)
+    val deduped = dedupeAgainstSeen(frontier, seen)
     val allowed = applyRobots(deduped, robots, cfg)
     applyGlobalBudget(schedule(allowed, cfg), cfg)
   }
+
+  /** The sidecar arguments are ignored (see the deprecated
+    * [[dedupeAgainstSeen]] overload). Kept for the benchmark's callers only.
+    */
+  @deprecated("the seen sidecar is gone; use runEpoch(seeds, robots, seen, cfg)", "0.1.0")
+  def runEpoch(seeds: Dataset[Seed], robots: Dataset[RobotsEntry], seen: Dataset[SeenEntry],
+               blooms: Map[Int, Array[Byte]], numBuckets: Int, cfg: Config): Dataset[Scheduled] =
+    runEpoch(seeds, robots, seen, cfg)
 }

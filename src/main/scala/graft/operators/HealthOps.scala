@@ -231,12 +231,14 @@ object HealthOps {
         expr("mx * 10000 div sx").as("top_share_bp"))
       .orderBy("measure")
 
-  /** c99 — BLOOM-SIDECAR CAPACITY PLAN: the S4 seen-filter's false-
-    * positive rate is not a constant — it climbs as the seen set grows
-    * into the fixed bit array, and a bloom FP means a URL is silently
-    * NEVER fetched (the one non-recoverable error class in the dedupe
-    * path), so the epoch at which FPR crosses budget is a number the
-    * operator must know BEFORE it happens. Per future epoch e (seen-set
+  /** c99 — BLOOM CAPACITY PLAN: a seen bloom's false-positive rate is
+    * not a constant — it climbs as the seen set grows into the fixed bit
+    * array, so the epoch at which FPR crosses budget is a number to know
+    * BEFORE it happens. In graft a bloom never decides alone (a "maybe"
+    * only ever sent a row to the exact anti-join, and the crawl now keeps
+    * no bloom at all), so an FP there costs an exact lookup, not a lost
+    * URL; the plan sizes a filter for that role, or for a crawler whose
+    * filter does decide alone. Per future epoch e (seen-set
     * forecast n_e = e·|corpus| — every epoch contributes a corpus-sized
     * URL batch, matching the crawl pipeline's growth shape): the
     * standard-model FPR (1 − e^(−k·n/m))^k for the sidecar geometry

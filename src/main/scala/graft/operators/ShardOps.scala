@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * hashing (Thaler & Ravishankar, IEEE/ACM ToN 1998).
   *
   * Why the crawl needs it: politeness state, robots caches, and per-host
-  * seen sidecars are all keyed by HOST, so a host must be owned by exactly
+  * seen filters are all keyed by HOST, so a host must be owned by exactly
   * one crawler shard. The naive `hash(host) % S` reassigns ~(1 - 1/S) of
   * all hosts whenever the shard count changes — a fleet resize would
   * invalidate nearly every shard's warm state. Rendezvous hashing gives

@@ -98,8 +98,8 @@ object Snapshots {
     * (partition_id -> candidates dropped before scheduling, attributed by
     * the same hash(url_hash) routing as the wave) merges in driver-side —
     * it is at most one entry per fetch partition, never data-sized.
-    * The caller finishes all of the epoch's sibling state (url_seen, bloom
-    * sidecars, latest-version table) and only then calls
+    * The caller finishes all of the epoch's sibling state (url_seen,
+    * revisions, latest-version table) and only then calls
     * [[commitManifest]] — the manifest is the single atomic commit point, so
     * a crash anywhere before it leaves an uncommitted epoch that resume
     * re-runs idempotently (every write here is per-epoch overwrite).

@@ -1,6 +1,7 @@
 package graft
 
 import graft.SparkTestBase.spark
+import graft.functions.{Bloom64, GraftFunctions}
 import graft.operators.{DiffJob, FrontierJob, Relational}
 import graft.sources.{Gen, SeenStore}
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,13 +27,21 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString()
   }
 
+  /** The codegen bloom probe (`GraftFunctions.bloomMaybeSeen`) over the
+    * per-bucket blooms of `seen`, keyed like `SeenStore.buildBlooms`.
+    */
+  private def bloomProbe(seen: Seq[graft.model.SeenEntry]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.col
+    val blooms = SeenStore.buildBlooms(seen.toDS(), numBuckets = 16, expectedPerBucket = 128)
+      .collect().map(r => r.getInt(0) -> Bloom64.deserialize(r.getAs[Array[Byte]](1))).toMap
+    GraftFunctions.bloomMaybeSeen(spark, spark.sparkContext.broadcast(blooms),
+      SeenStore.bucketOf(col("host"), 16), col("url_hash"))
+  }
+
   test("frontier bloom probe is a codegen expression inside the scan stage (no UDF)") {
-    val seen = Seq(graft.model.SeenEntry(42L, "h", 0)).toDS()
-    val blooms = SeenStore.buildBlooms(seen, numBuckets = 16, expectedPerBucket = 128)
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-    val deduped = FrontierJob.dedupeAgainstSeen(
-      FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 100)), seen, blooms, 16)
-    val p = finalPlan(deduped)
+    val probed = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 100))
+      .where(bloomProbe(Seq(graft.model.SeenEntry(42L, "h", 0))))
+    val p = finalPlan(probed)
     assert(p.contains("bloom_maybe_seen"), "bloom probe expression missing from plan")
     assert(!p.contains("BatchEvalPython") && !p.toLowerCase.contains("scalaudf"),
       "bloom probe fell back to a UDF")
@@ -108,18 +117,16 @@ class PlanSpec extends AnyFunSuite {
     val rows = frontier.select("url_hash", "host").as[(Long, String)].collect().sortBy(_._1)
     val seenA = rows.take(40).map { case (h, host) => graft.model.SeenEntry(h, host, 0) }
     val seenB = rows.takeRight(40).map { case (h, host) => graft.model.SeenEntry(h, host, 0) }
-    def blooms(s: Seq[graft.model.SeenEntry]) =
-      SeenStore.buildBlooms(s.toDS(), numBuckets = 16, expectedPerBucket = 128)
-        .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
     // build BOTH plans before evaluating EITHER — a shared registry name
-    // would bind both probes to whichever sidecar registered last
-    val dedupA = FrontierJob.dedupeAgainstSeen(frontier, seenA.toIndexedSeq.toDS(), blooms(seenA.toIndexedSeq), 16)
-    val dedupB = FrontierJob.dedupeAgainstSeen(frontier, seenB.toIndexedSeq.toDS(), blooms(seenB.toIndexedSeq), 16)
-    val all = rows.map(_._1).toSet
-    val gotA = dedupA.select(col("url_hash")).as[Long].collect().toSet
-    val gotB = dedupB.select(col("url_hash")).as[Long].collect().toSet
-    assert(gotA == all.diff(seenA.map(_.url_hash).toSet), "dedupe A used the wrong sidecar")
-    assert(gotB == all.diff(seenB.map(_.url_hash).toSet), "dedupe B used the wrong sidecar")
+    // would bind both probes to whichever bloom map registered last
+    val maybeA = frontier.where(bloomProbe(seenA.toIndexedSeq))
+    val maybeB = frontier.where(bloomProbe(seenB.toIndexedSeq))
+    val gotA = maybeA.select(col("url_hash")).as[Long].collect().toSet
+    val gotB = maybeB.select(col("url_hash")).as[Long].collect().toSet
+    // a bloom has no false negatives, and each side's keys are almost all
+    // "definitely new" to the other side's bloom (1% FPP)
+    assert(seenA.forall(e => gotA(e.url_hash)), "probe A used the wrong bloom")
+    assert(seenB.forall(e => gotB(e.url_hash)), "probe B used the wrong bloom")
   }
 
   test("q19 single-pass plan: 2 file scans, 1 aggregate exchange; == set-op form") {
@@ -149,7 +156,7 @@ class PlanSpec extends AnyFunSuite {
       val cfgS = cfgB.copy(robotsBroadcastMaxBytes = 0L)
       def sched(cfg: FrontierJob.Config) = FrontierJob.runEpoch(
         Gen.seeds(spark, 300), Gen.robots(spark),
-        SeenStore.emptySeen(spark), Map.empty, 16, cfg).collect().toVector
+        SeenStore.emptySeen(spark), cfg).collect().toVector
       assert(sched(cfgB) == sched(cfgS), "shuffled robots join changed the schedule")
     }
   }
@@ -175,47 +182,31 @@ class PlanSpec extends AnyFunSuite {
 
   private def countLines(p: String, needle: String): Int = p.linesIterator.count(_.contains(needle))
 
-  test("E1 sidecar dedupe is one pass over the frontier subtree (bloom AND cuckoo)") {
-    // The sidecar probe rides the exact anti-join's condition: the
-    // canonicalize+dedupe subtree is consumed once, so the final adaptive
-    // plan shows ONE MapPartitions (seed scan), no Union and no
-    // ReusedExchange (a second consumer of the dedupe exchange), and ONE
-    // final dedupe aggregate — a split into branches would re-run that
-    // aggregate per branch and let AQE coalesce the union's reads into
-    // fewer tasks. NOTE: inspect the plan of the SAME QueryExecution that
-    // ran (collect()); a plan printed before execution is the initial one
-    // (isFinalPlan=false).
+  test("E1 dedupe is one pass over the frontier subtree") {
+    // The seen check is the exact anti-join alone: the canonicalize+dedupe
+    // subtree is consumed once, so the final adaptive plan shows ONE
+    // MapPartitions (seed scan), no Union and no ReusedExchange (a second
+    // consumer of the dedupe exchange), ONE final dedupe aggregate, and no
+    // seen-filter probe. NOTE: inspect the plan of the SAME QueryExecution
+    // that ran (collect()); a plan printed before execution is the initial
+    // one (isFinalPlan=false).
     val seen = Seq(graft.model.SeenEntry(42L, "news0.example.com", 0)).toDS()
-    val numBuckets = 16
-    val blooms = SeenStore.buildBlooms(seen, numBuckets, 128)
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-    val cuckoos = SeenStore.buildCuckoos(seen, numBuckets, 128)
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-    val cfg = FrontierJob.Config(globalBudget = 500)
     // seeds pinned to an explicit multi-partition split: r06's adaptive
     // source partitioning gives 2000 rows ONE partition, and a
     // single-partition child satisfies the dedupe's distribution with no
     // Exchange at all, which would make the exchange pins below vacuous.
-    for ((kind, sched) <- Seq(
-        "bloom" -> FrontierJob.runEpoch(
-          Gen.seeds(spark, 2000, 8), Gen.robots(spark), seen, blooms, numBuckets, cfg),
-        "cuckoo" -> FrontierJob.applyGlobalBudget(FrontierJob.schedule(
-          FrontierJob.applyRobots(
-            FrontierJob.dedupeAgainstSeenCuckoo(
-              FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 2000, 8)),
-              seen, cuckoos, numBuckets),
-            Gen.robots(spark), cfg), cfg), cfg))) {
-      val p = finalSection(sched.toDF())
-      assert(p.contains(s"${kind}_maybe_seen"), s"$kind: sidecar probe missing:\n$p")
-      assert(countLines(p, "MapPartitions") == 1,
-        s"$kind: seed scan executed ${countLines(p, "MapPartitions")} times (want 1):\n$p")
-      assert(countLines(p, "Union") == 0, s"$kind: dedupe split into a Union:\n$p")
-      assert(countLines(p, "ReusedExchange") == 0,
-        s"$kind: dedupe exchange consumed twice (ReusedExchange):\n$p")
-      val finalAggs = p.linesIterator.count(l =>
-        l.contains("SortAggregate") && l.contains("min(url_canon") && !l.contains("partial_"))
-      assert(finalAggs == 1, s"$kind: $finalAggs final dedupe aggregates (want 1):\n$p")
-    }
+    val sched = FrontierJob.runEpoch(Gen.seeds(spark, 2000, 8), Gen.robots(spark), seen,
+      FrontierJob.Config(globalBudget = 500))
+    val p = finalSection(sched.toDF())
+    assert(!p.contains("_maybe_seen"), s"a seen-filter probe is in the plan:\n$p")
+    assert(countLines(p, "MapPartitions") == 1,
+      s"seed scan executed ${countLines(p, "MapPartitions")} times (want 1):\n$p")
+    assert(countLines(p, "Union") == 0, s"dedupe split into a Union:\n$p")
+    assert(countLines(p, "ReusedExchange") == 0,
+      s"dedupe exchange consumed twice (ReusedExchange):\n$p")
+    val finalAggs = p.linesIterator.count(l =>
+      l.contains("SortAggregate") && l.contains("min(url_canon") && !l.contains("partial_"))
+    assert(finalAggs == 1, s"$finalAggs final dedupe aggregates (want 1):\n$p")
   }
 
   test("seen anti-join is size-gated: forced-shuffle path is SMJ and golden-equal") {
@@ -234,38 +225,34 @@ class PlanSpec extends AnyFunSuite {
       .select(col("url_hash"), col("host"), lit(0).as("first_epoch"))
       .write.mode("overwrite").parquet(dir)
     val seen = spark.read.parquet(dir).as[graft.model.SeenEntry]
-    val blooms = SeenStore.buildBlooms(seen, 16, 128)
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
     object stages extends AdaptiveSparkPlanHelper
-    for (sidecarMap <- Seq(Map.empty[Int, Array[Byte]], blooms)) {
-      // multi-partition seeds, so the batch dedupe has its own Exchange
-      val frontier = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 2000, 8))
-      val default = FrontierJob.dedupeAgainstSeen(frontier, seen, sidecarMap, 16)
-      val forced = FrontierJob.dedupeAgainstSeen(frontier, seen, sidecarMap, 16, 0L)
-      val p = finalSection(forced)
-      assert(p.contains("SortMergeJoin") && p.contains("LeftAnti"),
-        s"forced-gate seen join is not a shuffled SMJ anti-join:\n$p")
-      // the dedupe aggregate's output is already hash-partitioned and
-      // sorted on url_hash: the join shuffles and sorts the seen side only
-      assert(countLines(p, "Exchange hashpartitioning") == 2,
-        s"want only the dedupe and seen Exchanges:\n$p")
-      val smj = stages.collect(forced.queryExecution.executedPlan) {
-        case j: SortMergeJoinExec => j
-      }
-      assert(smj.size == 1, s"want one SortMergeJoin:\n$p")
-      def aboveDedupe(n: SparkPlan): Seq[SparkPlan] = n match {
-        case _: SortAggregateExec => Nil
-        case _ => n +: n.children.flatMap(aboveDedupe)
-      }
-      val added = aboveDedupe(smj.head.left).filter {
-        case _: SortExec | _: ShuffleExchangeExec | _: ShuffleQueryStageExec => true
-        case _ => false
-      }
-      assert(added.isEmpty, s"forced-gate dedupe added a frontier-side Sort/Exchange:\n$p")
-      val a = default.select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
-      val b = forced.select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
-      assert(a == b, "gated seen join changed the dedupe result")
+    // multi-partition seeds, so the batch dedupe has its own Exchange
+    val frontier = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 2000, 8))
+    val default = FrontierJob.dedupeAgainstSeen(frontier, seen)
+    val forced = FrontierJob.dedupeAgainstSeen(frontier, seen, 0L)
+    val p = finalSection(forced)
+    assert(p.contains("SortMergeJoin") && p.contains("LeftAnti"),
+      s"forced-gate seen join is not a shuffled SMJ anti-join:\n$p")
+    // the dedupe aggregate's output is already hash-partitioned and
+    // sorted on url_hash: the join shuffles and sorts the seen side only
+    assert(countLines(p, "Exchange hashpartitioning") == 2,
+      s"want only the dedupe and seen Exchanges:\n$p")
+    val smj = stages.collect(forced.queryExecution.executedPlan) {
+      case j: SortMergeJoinExec => j
     }
+    assert(smj.size == 1, s"want one SortMergeJoin:\n$p")
+    def aboveDedupe(n: SparkPlan): Seq[SparkPlan] = n match {
+      case _: SortAggregateExec => Nil
+      case _ => n +: n.children.flatMap(aboveDedupe)
+    }
+    val added = aboveDedupe(smj.head.left).filter {
+      case _: SortExec | _: ShuffleExchangeExec | _: ShuffleQueryStageExec => true
+      case _ => false
+    }
+    assert(added.isEmpty, s"forced-gate dedupe added a frontier-side Sort/Exchange:\n$p")
+    val a = default.select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
+    val b = forced.select("url_hash").collect().map(_.getLong(0)).sorted.toSeq
+    assert(a == b, "gated seen join changed the dedupe result")
   }
 
   test("bucketed seen table: anti-join exchanges only the frontier side; golden-equal") {

@@ -52,7 +52,7 @@ class CanonicalizeFrontierSpec extends AnyFunSuite {
     assert(nRaw == nonBlank, s"sum(n_raw) $nRaw != non-blank input count $nonBlank")
     // the full epoch on the same batch stays oracle-equal
     val got = FrontierJob.runEpoch(seeds, spark.emptyDataset[RobotsEntry],
-      SeenStore.emptySeen(spark), Map.empty, 16, cfg).collect().toVector
+      SeenStore.emptySeen(spark), cfg).collect().toVector
     assert(got == oracle.scheduled, "E1 schedule diverged from CrawlOracle")
   }
 

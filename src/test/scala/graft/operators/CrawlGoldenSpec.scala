@@ -23,7 +23,7 @@ class CrawlGoldenSpec extends AnyFunSuite {
     withShufflePartitions(shufflePartitions) {
       FrontierJob.runEpoch(
         Gen.seeds(spark, N, inputPartitions), Gen.robots(spark),
-        SeenStore.emptySeen(spark), Map.empty, 16, cfg)
+        SeenStore.emptySeen(spark), cfg)
         .collect().toVector
     }
 
@@ -122,8 +122,8 @@ class CrawlGoldenSpec extends AnyFunSuite {
 
   test("oracle parity on hostile URLs: non-default port, spaces, garbage (bloom path active)") {
     // parse_url would NULL or strip ports on several of these; the shared
-    // UrlKit kernel must keep Spark and oracle host/path/bucketing identical,
-    // and a null-ish row must never be silently dropped by the bloom flag.
+    // UrlKit kernel must keep Spark and oracle host/path identical, and a
+    // null-ish row must never be silently dropped by the seen dedupe.
     val hostile = Seq(
       Seed("http://news1.example.com:8080/x", 0.9), // explicit non-default port
       Seed("HTTP://News1.Example.com:80/a/../b#frag", 0.8),
@@ -136,12 +136,8 @@ class CrawlGoldenSpec extends AnyFunSuite {
     val cfgH = cfg.copy(epoch = 1)
     val seenHash = CrawlOracle.xxhash64("http://seenhost.example.com/seen")
     val seen = Seq(SeenEntry(seenHash, "seenhost.example.com", 0)).toDS()
-    // non-empty sidecar => the bloom-probe path (not the exact-only branch) runs
-    val blooms = SeenStore.buildBlooms(seen, numBuckets = 16, expectedPerBucket = 128)
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(blooms.nonEmpty)
     val got = FrontierJob.runEpoch(
-      spark.createDataset(hostile), Gen.robots(spark), seen, blooms, 16, cfgH)
+      spark.createDataset(hostile), Gen.robots(spark), seen, cfgH)
       .collect().toVector
     val want = CrawlOracle.runEpoch(hostile, robotsMap, Set(seenHash), cfgH)
     assert(got == want.scheduled)
@@ -155,7 +151,7 @@ class CrawlGoldenSpec extends AnyFunSuite {
     val cfgB = FrontierJob.Config(epoch = 0)
     val got = FrontierJob.runEpoch(
       spark.createDataset(many), spark.createDataset(Seq(bigBudget)),
-      SeenStore.emptySeen(spark), Map.empty, 16, cfgB).collect().toVector
+      SeenStore.emptySeen(spark), cfgB).collect().toVector
     val want = CrawlOracle.runEpoch(many, Map("hot.example.com" -> bigBudget), Set.empty, cfgB)
     assert(got == want.scheduled)
     assert(got.size == cfgB.maxHostBudget, "clamp not applied")
@@ -165,18 +161,10 @@ class CrawlGoldenSpec extends AnyFunSuite {
     // epoch 0 scheduled becomes the seen set; re-run the same seeds at epoch 1
     val seen = oracle.scheduled
       .map(s => SeenEntry(s.url_hash, s.host, 0)).toDS()
-    val blooms = SeenStore.buildBlooms(seen, numBuckets = 16, expectedPerBucket = 4096)
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
     val cfg1 = cfg.copy(epoch = 1)
-    val frontier = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, N, 8))
-    val exact = FrontierJob.dedupeAgainstSeen(frontier, seen, Map.empty, 16)
-      .select("url_hash").as[Long].collect().sorted
-    val bloomed = FrontierJob.dedupeAgainstSeen(frontier, seen, blooms, 16)
-      .select("url_hash").as[Long].collect().sorted
-    assert(exact.toSeq == bloomed.toSeq, "bloom path diverged from exact anti-join")
     // spark epoch-1 run equals oracle epoch-1 run end-to-end
     val sparkE1 = FrontierJob.runEpoch(Gen.seeds(spark, N, 8), Gen.robots(spark),
-      seen, blooms, 16, cfg1).collect().toVector
+      seen, cfg1).collect().toVector
     val oracleE1 = CrawlOracle.runEpoch(Gen.seedsLocal(N), robotsMap, oracle.seenAfter, cfg1)
     assert(sparkE1 == oracleE1.scheduled)
   }

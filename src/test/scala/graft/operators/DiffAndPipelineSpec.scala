@@ -259,112 +259,26 @@ class PipelineResumeSpec extends AnyFunSuite {
         s"epoch $e schedule differs after resume")
   }
 
-  test("cuckoo-sidecar pipeline == bloom-sidecar pipeline (every output table)") {
-    val rootB = tempDir("graft-bloomside")
-    val rootC = tempDir("graft-cuckooside")
-    CrawlPipeline.run(spark, rootB, untilEpoch = 2, seedsPerEpoch = 700, cfg)
-    CrawlPipeline.run(spark, rootC, untilEpoch = 2, seedsPerEpoch = 700, cfg,
-      sidecar = "cuckoo")
-    def seenSet(root: String): Set[(Long, Int)] =
-      spark.read.parquet(s"$root/url_seen").select("url_hash", "first_epoch")
-        .as[(Long, Int)].collect().toSet
-    def schedule(root: String, e: Int): Vector[(Long, Int, Long)] =
-      spark.read.parquet(s"$root/scheduled/epoch=$e")
-        .select("url_hash", "slot", "scheduled_at_ms")
-        .as[(Long, Int, Long)].collect().sortBy(x => (x._3, x._1)).toVector
-    assert(seenSet(rootB) == seenSet(rootC), "seen sets diverge across sidecar kinds")
-    (0 to 2).foreach(e =>
-      assert(schedule(rootB, e) == schedule(rootC, e), s"schedule diverges epoch $e"))
-    def revs(root: String) =
-      spark.read.parquet(s"$root/revisions/epoch=2").orderBy("image_id").collect().toVector
-    assert(revs(rootB) == revs(rootC), "revisions diverge across sidecar kinds")
-    // the cuckoo sidecar really is the one in play: per-epoch cumulative
-    // files exist and probe true for every seen hash
-    val tables = graft.sources.SeenStore.loadCuckoos(spark, rootC, 2)
-    assert(tables.nonEmpty, "no cuckoo sidecar written")
-    val seenRows = spark.read.parquet(s"$rootC/url_seen")
-      .select("url_hash", "host").as[(Long, String)].collect()
-    seenRows.foreach { case (h, host) =>
-      val bucket = ((graft.operators.CrawlOracle.xxhash64(host) % 16 + 16) % 16).toInt
-      val t = graft.functions.Cuckoo64.deserialize(tables(bucket))
-      assert(graft.functions.Cuckoo64.contains(t, h), s"seen hash $h missing from sidecar")
-    }
-  }
-
-  test("cuckoo saturation self-heal survives post-rebuild epochs (shape-matched merge)") {
-    // Force saturation: sidecarPerBucket=16 sizes each table at 8 buckets x
-    // 4 slots = 32 fingerprints, while ~700/16 hashes land per host bucket
-    // per epoch — epoch 0 overflows, triggering the rebuild; epochs 1-2 then
-    // exercise the post-rebuild merge path (per-epoch tables must be built
-    // at the GROWN persisted shape or Cuckoo64.mergeInto throws).
-    val rootB = tempDir("graft-bloomsat")
-    val rootC = tempDir("graft-cuckoosat")
-    CrawlPipeline.run(spark, rootB, untilEpoch = 2, seedsPerEpoch = 700, cfg)
-    CrawlPipeline.run(spark, rootC, untilEpoch = 2, seedsPerEpoch = 700, cfg,
-      sidecar = "cuckoo", sidecarPerBucket = 16L)
-    def schedule(root: String, e: Int): Vector[(Long, Int, Long)] =
-      spark.read.parquet(s"$root/scheduled/epoch=$e")
-        .select("url_hash", "slot", "scheduled_at_ms")
-        .as[(Long, Int, Long)].collect().sortBy(x => (x._3, x._1)).toVector
-    (0 to 2).foreach(e =>
-      assert(schedule(rootB, e) == schedule(rootC, e), s"schedule diverges epoch $e"))
-    val tables = graft.sources.SeenStore.loadCuckoos(spark, rootC, 2)
-    assert(tables.nonEmpty, "no cuckoo sidecar written")
-    // the rebuild really ran: persisted tables outgrew the seed shape and
-    // healing succeeded (skew-aware sizing left no bucket saturated)
-    val seedShape = graft.functions.Cuckoo64.numBucketsFor(16L)
-    val shapes = tables.values.map(graft.functions.Cuckoo64.tableBucketsOf)
-    assert(shapes.forall(_ > seedShape),
-      s"expected grown tables, got shapes ${shapes.toSeq.sorted} (seed $seedShape)")
-    tables.values.foreach(bytes => assert(
-      !graft.functions.Cuckoo64.isOverflowed(graft.functions.Cuckoo64.deserialize(bytes)),
-      "rebuild left a saturated bucket — skew-aware sizing failed"))
-    // no false negatives across the whole history
-    val seenRows = spark.read.parquet(s"$rootC/url_seen")
-      .select("url_hash", "host").as[(Long, String)].collect()
-    seenRows.foreach { case (h, host) =>
-      val bucket = ((graft.operators.CrawlOracle.xxhash64(host) % 16 + 16) % 16).toInt
-      val t = graft.functions.Cuckoo64.deserialize(tables(bucket))
-      assert(graft.functions.Cuckoo64.contains(t, h), s"seen hash $h missing after rebuild")
-    }
-  }
-
-  test("cuckoo host purge: host re-schedules, others untouched, no false negatives") {
-    import graft.functions.Cuckoo64
+  test("host purge: host re-schedules, others untouched") {
     val noBudget = FrontierJob.Config() // per-host budgets only — hosts stay independent
     val rootP = tempDir("graft-purge")
     val rootC = tempDir("graft-purgectl")
-    CrawlPipeline.run(spark, rootP, untilEpoch = 1, seedsPerEpoch = 700, noBudget,
-      sidecar = "cuckoo")
-    CrawlPipeline.run(spark, rootC, untilEpoch = 1, seedsPerEpoch = 700, noBudget,
-      sidecar = "cuckoo")
+    CrawlPipeline.run(spark, rootP, untilEpoch = 1, seedsPerEpoch = 700, noBudget)
+    CrawlPipeline.run(spark, rootC, untilEpoch = 1, seedsPerEpoch = 700, noBudget)
     val host = spark.read.parquet(s"$rootP/url_seen")
       .groupBy("host").count().orderBy(col("count").desc, col("host"))
       .select("host").as[String].head()
     val victimHashes = spark.read.parquet(s"$rootP/url_seen")
       .where(col("host") === host).select("url_hash").as[Long].collect().toSet
-    val nPurged = graft.sources.SeenStore.purgeHost(spark, rootP, host, 16)
+    val nPurged = graft.sources.SeenStore.purgeHost(spark, rootP, host)
     assert(nPurged == victimHashes.size && nPurged > 0)
-    // exact decider forgot the host; sidecar precision restored in place
+    // the exact decider forgot the host
     val remaining = graft.sources.SeenStore.load(spark, rootP).collect()
     assert(!remaining.exists(_.host == host), "purged host still in seen store")
-    val tables = graft.sources.SeenStore.loadCuckoos(spark, rootP, 1)
-    remaining.foreach { e =>
-      val b = ((CrawlOracle.xxhash64(e.host) % 16 + 16) % 16).toInt
-      assert(Cuckoo64.contains(Cuckoo64.deserialize(tables(b)), e.url_hash),
-        s"false negative for surviving ${e.host} after purge")
-    }
-    val vb = ((CrawlOracle.xxhash64(host) % 16 + 16) % 16).toInt
-    val vTable = Cuckoo64.deserialize(tables(vb))
-    val fpSurvivors = victimHashes.count(Cuckoo64.contains(vTable, _))
-    assert(fpSurvivors <= math.max(1, victimHashes.size / 20),
-      s"$fpSurvivors of ${victimHashes.size} purged fingerprints still probe true")
     // next epoch: the purged run re-schedules the host's previously-seen
     // URLs; every OTHER host's schedule is bit-identical to the control
-    CrawlPipeline.run(spark, rootP, untilEpoch = 2, seedsPerEpoch = 700, noBudget,
-      sidecar = "cuckoo")
-    CrawlPipeline.run(spark, rootC, untilEpoch = 2, seedsPerEpoch = 700, noBudget,
-      sidecar = "cuckoo")
+    CrawlPipeline.run(spark, rootP, untilEpoch = 2, seedsPerEpoch = 700, noBudget)
+    CrawlPipeline.run(spark, rootC, untilEpoch = 2, seedsPerEpoch = 700, noBudget)
     def sched(root: String): Seq[(Long, String)] =
       spark.read.parquet(s"$root/scheduled/epoch=2")
         .select("url_hash", "host").as[(Long, String)].collect().toSeq
@@ -490,11 +404,11 @@ class PipelineResumeSpec extends AnyFunSuite {
       }
     }
     matrix("default",
-      Seq("scheduled", "snapshots", "lineage", "url_seen", "bloom", "revisions", "latest"),
+      Seq("scheduled", "snapshots", "lineage", "url_seen", "revisions", "latest"),
       root => CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = 600, cfg))
     matrix("features",
       Seq("robots_held", "scheduled", "carryover", "snapshots", "lineage", "backoff",
-        "latency_hist", "url_seen", "bloom", "revisions", "robots_purged", "latest"),
+        "latency_hist", "url_seen", "revisions", "robots_purged", "latest"),
       root => CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = 600, cfg,
         aging = true, backoff = true, adaptivePacing = true, recrawl = true,
         retryFailures = true, robotsFlipEpoch = 2))

@@ -7,7 +7,7 @@ import graft.sources.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-epoch golden: the full CrawlPipeline (outlink discovery, seen-set
-  * accumulation, bloom sidecars, checkpointed commits) must reproduce a
+  * accumulation, checkpointed commits) must reproduce a
   * local single-threaded mirror of the same semantics for every epoch's
   * schedule AND the final URL-seen set (north_rule: "matching the
   * reference crawl ordering and final URL-seen set under identical seed

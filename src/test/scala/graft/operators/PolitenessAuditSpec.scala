@@ -16,7 +16,7 @@ class PolitenessAuditSpec extends AnyFunSuite {
   private def schedule() =
     FrontierJob.runEpoch(
       Gen.seeds(spark, 1500), Gen.robots(spark),
-      SeenStore.emptySeen(spark), Map.empty, 16, cfg).toDF()
+      SeenStore.emptySeen(spark), cfg).toDF()
 
   test("engine schedule passes gap, budget, and slot-uniqueness audits") {
     val audit = FrontierJob.politenessAudit(
