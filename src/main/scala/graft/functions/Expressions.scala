@@ -1,10 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the two hot-path custom scalars
@@ -20,10 +24,11 @@ case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "canon_url"
 
-  // canonicalizeU8 = zero-alloc byte-wise fast path for already-canonical
-  // URLs (returns the input UTF8String reference), reference-impl fallback
-  // otherwise — allocation is the measured scaling bottleneck (BENCH/
-  // BASELINE.md), and re-crawled frontiers are mostly already canonical.
+  // canonicalizeU8 = one byte pass over ASCII input that returns the input
+  // UTF8String reference when it is already canonical (no allocation) and
+  // one new UTF8String otherwise; non-ASCII input takes the String
+  // reference implementation. Allocation is the measured scaling
+  // bottleneck (BENCH/BASELINE.md).
   override def nullSafeEval(input: Any): Any =
     UrlKit.canonicalizeU8(input.asInstanceOf[UTF8String])
 
@@ -81,36 +86,102 @@ case class MinHashBandKeys(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Host of an ALREADY-canonical URL — same kernel (UrlKit.hostOf) as the
-  * single-threaded CrawlOracle, so politeness grouping / robots join /
+/** Host of an ALREADY-canonical URL — same cut as the single-threaded
+  * CrawlOracle's UrlKit.hostOf, so politeness grouping / robots join /
   * bloom bucketing can never diverge from the oracle on inputs parse_url
   * handles differently (explicit non-default ports, odd authorities).
+  * Slices the UTF8String bytes (UrlKit.hostOfU8): no String round trip.
   */
 case class HostOf(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "host_of"
   override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(UrlKit.hostOf(input.asInstanceOf[UTF8String].toString))
+    UrlKit.hostOfU8(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.UrlKit.hostOf($c.toString()))")
+    defineCodeGen(ctx, ev, c => s"graft.functions.UrlKit.hostOfU8($c)")
   override protected def withNewChildInternal(newChild: Expression): HostOf =
     copy(child = newChild)
 }
 
-/** Path (sans query) of an ALREADY-canonical URL — oracle-parity kernel. */
+/** Path (sans query) of an ALREADY-canonical URL — oracle-parity kernel
+  * on the UTF8String bytes (UrlKit.pathOfU8).
+  */
 case class PathOf(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "path_of"
   override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(UrlKit.pathOf(input.asInstanceOf[UTF8String].toString))
+    UrlKit.pathOfU8(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.UrlKit.pathOf($c.toString()))")
+    defineCodeGen(ctx, ev, c => s"graft.functions.UrlKit.pathOfU8($c)")
   override protected def withNewChildInternal(newChild: Expression): PathOf =
     copy(child = newChild)
+}
+
+/** Longest-prefix robots verdict (SURVEY.md §2.2 P4):
+  * `robots_allowed(rules array<struct<allow, prefix>>, path)` ->
+  * boolean, the RobotsKit.prefixAllowed kernel over the row bytes.
+  * Codegen'd: the filter+aggregate higher-order form it replaces is
+  * interpreted (ArrayFilter/ArrayAggregate are CodegenFallback) and
+  * allocated its lambda structs on every frontier row.
+  *
+  * Three-valued like that form: null rules -> null; a null path matches
+  * no rule -> true; null elements and null prefixes never match; if the
+  * winning rule's allow is null -> null. Not null-intolerant, so the
+  * null handling is written out instead of `nullSafeCodeGen`.
+  */
+case class RobotsAllowed(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = true
+  override def prettyName: String = "robots_allowed"
+
+  private def rule: StructType =
+    left.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def has(st: StructType, name: String, t: DataType): Boolean =
+      st.fields.exists(f => f.name == name && f.dataType == t)
+    left.dataType match {
+      case ArrayType(st: StructType, _)
+          if has(st, "prefix", StringType) && has(st, "allow", BooleanType) &&
+            right.dataType == StringType =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName needs (array<struct<allow: boolean, prefix: string>>, string), " +
+          s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
+    }
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val rules = left.eval(input)
+    if (rules == null) return null
+    val v = RobotsKit.prefixAllowed(rules.asInstanceOf[ArrayData],
+      right.eval(input).asInstanceOf[UTF8String], rule.length,
+      rule.fieldIndex("prefix"), rule.fieldIndex("allow"))
+    if (v < 0) null else v == 1
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val rules = left.genCode(ctx)
+    val path = right.genCode(ctx)
+    val v = ctx.freshName("verdict")
+    ev.copy(code = code"""
+      |${rules.code}
+      |boolean ${ev.isNull} = true;
+      |boolean ${ev.value} = false;
+      |if (!${rules.isNull}) {
+      |  ${path.code}
+      |  int $v = graft.functions.RobotsKit.prefixAllowed(${rules.value},
+      |    ${path.isNull} ? null : ${path.value}, ${rule.length},
+      |    ${rule.fieldIndex("prefix")}, ${rule.fieldIndex("allow")});
+      |  if ($v >= 0) {
+      |    ${ev.isNull} = false;
+      |    ${ev.value} = $v == 1;
+      |  }
+      |}""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): RobotsAllowed =
+    copy(left = l, right = r)
 }
 
 /** Probe of a broadcast per-host-bucket bloom map:
@@ -409,6 +480,7 @@ object GraftFunctions {
     "bpe_token_count" -> ((exprs: Seq[Expression]) => BpeTokenCount(exprs.head)),
     "host_of" -> ((exprs: Seq[Expression]) => HostOf(exprs.head)),
     "path_of" -> ((exprs: Seq[Expression]) => PathOf(exprs.head)),
+    "robots_allowed" -> ((exprs: Seq[Expression]) => RobotsAllowed(exprs(0), exprs(1))),
     "header_dims64" -> ((exprs: Seq[Expression]) => HeaderDims64(exprs.head)),
     "exif_orientation" -> ((exprs: Seq[Expression]) => ExifOrientationExpr(exprs.head)),
     "jpeg_quality" -> ((exprs: Seq[Expression]) => JpegQualityExpr(exprs.head)),

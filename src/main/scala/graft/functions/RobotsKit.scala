@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.model.RobotsRule
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal robots.txt parsing/rendering (RFC 9309 + de-facto conventions —
   * public format; reference tree empty, SURVEY.md §0). The crawl pipeline's
@@ -116,6 +118,46 @@ object RobotsKit {
       selected.flatMap(_.delayMs).headOption,
       dropped,
       sitemapUrls)
+  }
+
+  /** Longest-prefix verdict of one host's rules for `path`, over the Spark
+    * row bytes (the `robots_allowed` expression's kernel). Each element of
+    * `rules` is a struct of `numFields` fields with the prefix at
+    * `prefixOrd` and the allow flag at `allowOrd`. A rule matches when
+    * `path` starts with its prefix; a null element or null prefix never
+    * matches, nor does any rule when `path` is null. The longest match
+    * (in code points) wins, the earlier rule keeps a tie, and no match
+    * allows. Returns 1 (allow), 0 (disallow) or -1 when the winning rule's
+    * allow is null — SQL's three-valued answer, so the caller maps -1 to
+    * null.
+    */
+  def prefixAllowed(rules: ArrayData, path: UTF8String, numFields: Int,
+                    prefixOrd: Int, allowOrd: Int): Int = {
+    var bestLen = -1
+    var verdict = 1
+    if (path != null) {
+      val n = rules.numElements()
+      var i = 0
+      while (i < n) {
+        if (!rules.isNullAt(i)) {
+          val r = rules.getStruct(i, numFields)
+          if (!r.isNullAt(prefixOrd)) {
+            val p = r.getUTF8String(prefixOrd)
+            // numChars <= numBytes: a prefix no longer in bytes than the
+            // best match cannot be strictly longer in code points
+            if (p.numBytes > bestLen && path.startsWith(p)) {
+              val len = p.numChars()
+              if (len > bestLen) {
+                bestLen = len
+                verdict = if (r.isNullAt(allowOrd)) -1 else if (r.getBoolean(allowOrd)) 1 else 0
+              }
+            }
+          }
+        }
+        i += 1
+      }
+    }
+    verdict
   }
 
   // ---- c41: wildcard matching (RFC 9309 §2.2.2 full language) ------------

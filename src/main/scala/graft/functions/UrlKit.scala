@@ -1,5 +1,9 @@
 package graft.functions
 
+import java.util.Locale
+
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Pure, deterministic URL canonicalization (SURVEY.md §2.2 P1).
@@ -30,126 +34,235 @@ object UrlKit {
     "gclid", "fbclid", "igshid", "mc_cid", "mc_eid", "yclid", "msclkid",
     "ref", "ref_src", "spm", "_ga")
 
+  private val TrackingKeys: Array[String] = TrackingParams.toArray
+
   private def isTracking(key: String): Boolean =
     key.startsWith("utm_") || TrackingParams.contains(key)
 
-  /** Zero-allocation hot-path entry for the Catalyst expression: if the URL
-    * is ALREADY canonical (the common case for re-crawled frontiers), return
-    * the input UTF8String reference untouched — no toString, no new String,
-    * no new UTF8String. Otherwise fall back to the reference implementation.
+  /** Byte-level entry for the Catalyst expression: one pass over the
+    * `UTF8String` bytes for all-ASCII input, byte-for-byte equal to
+    * [[canonicalize]] (differentially fuzzed in UrlKitSpec). It writes the
+    * canonical form into a per-thread scratch buffer and returns the input
+    * reference untouched when the output equals the input (the re-crawl
+    * common case), so an already-canonical URL allocates nothing. Any byte
+    * >= 0x80 before the fragment, more than `MaxQueryPairs` kept query
+    * pairs, or an output that the String form would re-trim takes
+    * [[canonicalize]] instead.
     *
     * Allocation is the measured scaling bottleneck in this sandbox (see
     * BENCH/BASELINE.md): the JVM's anon-page commit path serializes under
     * concurrency, so rows that allocate nothing scale best.
-    *
-    * Correctness contract (property-tested in UrlKitSpec):
-    *   isCanonical(u)  =>  canonicalize(u.toString) == u.toString
-    * i.e. the fast path accepts ONLY inputs the slow path maps to
-    * themselves; any doubt (non-ASCII authority, percent-escapes, odd
-    * ports...) bails to the slow path.
     */
   def canonicalizeU8(u: UTF8String): UTF8String = {
     if (u == null) return null
-    if (isCanonical(u)) u else UTF8String.fromString(canonicalize(u.toString))
+    val n = u.numBytes
+    if (n == 0) return u
+    val s = scratch.get()
+    val out = canonicalizeAscii(u, n, s)
+    if (out == Fallback) UTF8String.fromString(canonicalize(u.toString))
+    else if (out == 0) UTF8String.EMPTY_UTF8
+    else if (out == n && ByteArrayMethods.arrayEquals(u.getBaseObject, u.getBaseOffset,
+        s.buf, Platform.BYTE_ARRAY_OFFSET, n)) u
+    else UTF8String.fromBytes(java.util.Arrays.copyOf(s.buf, out))
   }
 
-  /** Single byte-wise pass deciding "slow path would return this unchanged".
-    * Conservative: returns false on anything it is not POSITIVE about.
+  /** Kept query pairs the byte kernel sorts in place; more go to the
+    * String form.
     */
-  def isCanonical(u: UTF8String): Boolean = {
-    val n = u.numBytes
-    if (n == 0) return true // canonicalize("") == ""
-    @inline def b(j: Int): Int = u.getByte(j) & 0xff
-    // trim would strip leading/trailing chars <= ' '
-    if (b(0) <= ' ' || b(n - 1) <= ' ') return false
-    // scheme must be exactly http:// or https:// (lowercase)
-    if (n < 8 || b(0) != 'h' || b(1) != 't' || b(2) != 't' || b(3) != 'p') return false
-    var https = false
-    var i =
-      if (b(4) == ':' && b(5) == '/' && b(6) == '/') 7
-      else if (b(4) == 's' && n >= 9 && b(5) == ':' && b(6) == '/' && b(7) == '/') {
-        https = true; 8
-      } else return false
-    // authority: lowercase ascii letters/digits/.-_ plus at most one ':'
-    // with a valid non-default port; anything else (uppercase, '@',
-    // non-ASCII, IPv6 brackets) -> slow path
-    val authStart = i
-    var colonIdx = -1
-    var cont = true
-    while (i < n && cont) {
-      val c = b(i)
-      if (c == '/' || c == '?') cont = false
-      else {
-        if (c == ':') { if (colonIdx >= 0) return false; colonIdx = i }
-        else if (!((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
-          c == '.' || c == '-' || c == '_')) return false
-        i += 1
-      }
-    }
-    if (i == authStart || b(authStart) == ':') return false
-    if (colonIdx >= 0) {
-      val pStart = colonIdx + 1
-      if (i <= pStart) return false // empty port is stripped by the slow path
-      var j = pStart
-      while (j < i) { val c = b(j); if (c < '0' || c > '9') return false; j += 1 }
-      val plen = i - pStart
-      if (!https && plen == 2 && b(pStart) == '8' && b(pStart + 1) == '0') return false
-      if (https && plen == 3 && b(pStart) == '4' && b(pStart + 1) == '4' && b(pStart + 2) == '3')
-        return false
-    }
-    // path: must exist ("/..."), no '//', no '.'/'..' segments, no '%',
-    // no '#'; bytes >= 0x80 are fine (slow path passes them through)
-    if (i >= n || b(i) != '/') return false // empty path -> slow appends "/"
-    var qStart = -1
-    var prevSlash = true
-    i += 1
-    while (i < n && qStart < 0) {
-      val c = b(i)
-      if (c == '#' || c == '%') return false
-      else if (c == '?') qStart = i
-      else if (c == '/') {
-        if (prevSlash) return false
-        prevSlash = true
-      } else {
-        if (prevSlash && c == '.') {
-          val n1 = if (i + 1 < n) b(i + 1) else -1
-          if (n1 == '/' || n1 == '?' || n1 == -1) return false // "." segment
-          if (n1 == '.') {
-            val n2 = if (i + 2 < n) b(i + 2) else -1
-            if (n2 == '/' || n2 == '?' || n2 == -1) return false // ".." segment
-          }
-        }
-        prevSlash = false
+  private val MaxQueryPairs = 64
+
+  private final class Scratch {
+    var buf: Array[Byte] = new Array[Byte](256)
+    val pairs: Array[Int] = new Array[Int](2 * MaxQueryPairs)
+  }
+  private val scratch: ThreadLocal[Scratch] = ThreadLocal.withInitial(() => new Scratch)
+  private val Fallback = -1
+
+  @inline private def lower(c: Int): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
+
+  /** [[upperPercent]] over `buf[from, until)`, in place. */
+  private def upperPercentBytes(buf: Array[Byte], from: Int, until: Int): Unit = {
+    var i = from
+    while (i + 2 < until) {
+      if (buf(i) == '%' && isHex(buf(i + 1).toChar) && isHex(buf(i + 2).toChar)) {
+        if (buf(i + 1) >= 'a') buf(i + 1) = (buf(i + 1) - 32).toByte
+        if (buf(i + 2) >= 'a') buf(i + 2) = (buf(i + 2) - 32).toByte
       }
       i += 1
     }
-    if (qStart < 0) return true
-    // query: ASCII only, no '%'/'#', non-empty '&'-separated pairs, no
-    // tracking keys, pairs in natural sorted order (what the slow path emits)
-    if (qStart == n - 1) return false // bare '?' is dropped by the slow path
-    var pairStart = qStart + 1
-    var prevPair: String = null
-    var j = qStart + 1
-    while (j <= n) {
-      if (j == n || b(j) == '&') {
-        if (j == pairStart) return false // empty pair
-        val sb = new java.lang.StringBuilder(j - pairStart)
-        var t = pairStart
-        while (t < j) { sb.append(b(t).toChar); t += 1 }
-        val pair = sb.toString
-        if (prevPair != null && prevPair.compareTo(pair) > 0) return false // unsorted
-        val eq = pair.indexOf('=')
-        val key = if (eq >= 0) pair.substring(0, eq) else pair
-        if (isTracking(key.toLowerCase)) return false
-        prevPair = pair
-        pairStart = j + 1
-      } else {
-        val c = b(j)
-        if (c == '%' || c == '#' || c >= 0x80) return false
+  }
+
+  /** [[isTracking]] of the lowercased key `buf[from, until)`. */
+  private def isTrackingBytes(buf: Array[Byte], from: Int, until: Int): Boolean = {
+    val len = until - from
+    if (len >= 4 && lower(buf(from)) == 'u' && lower(buf(from + 1)) == 't' &&
+        lower(buf(from + 2)) == 'm' && buf(from + 3) == '_') return true
+    var k = 0
+    while (k < TrackingKeys.length) {
+      val name = TrackingKeys(k)
+      if (len == name.length) {
+        var i = 0
+        while (i < len && lower(buf(from + i)) == name.charAt(i)) i += 1
+        if (i == len) return true
       }
-      j += 1
+      k += 1
     }
-    true
+    false
+  }
+
+  /** Writes canonicalize(u) into `s.buf` for all-ASCII `u` and returns its
+    * length, or `Fallback`. Steps follow [[canonicalize]] one to one.
+    */
+  private def canonicalizeAscii(u: UTF8String, n: Int, s: Scratch): Int = {
+    @inline def b(i: Int): Int = u.getByte(i) & 0xff
+    // trim
+    var lo = 0
+    while (lo < n && b(lo) <= ' ') lo += 1
+    var hi = n
+    while (hi > lo && b(hi - 1) <= ' ') hi -= 1
+    if (lo == hi) return 0
+    // fragment, first "://", ASCII check
+    var end = lo
+    var schemeIdx = -1
+    while (end < hi && b(end) != '#') {
+      val c = b(end)
+      if (c >= 0x80) return Fallback
+      if (c == ':' && schemeIdx < 0 && end + 2 < hi && b(end + 1) == '/' && b(end + 2) == '/')
+        schemeIdx = end
+      end += 1
+    }
+    // the output outgrows the input by at most "http://" + "/", and the
+    // query pairs are staged past it (see below)
+    val need = 2 * (end - lo) + 16
+    if (s.buf.length < need) s.buf = new Array[Byte](math.max(need, 2 * s.buf.length))
+    val buf = s.buf
+    var o = 0
+    // scheme: 1 = http, 2 = https, 0 = other
+    var kind = 1
+    var rest = lo
+    var validScheme = schemeIdx > lo
+    if (validScheme) {
+      var i = lo
+      while (validScheme && i < schemeIdx) {
+        val c = lower(b(i))
+        validScheme = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
+          c == '+' || c == '-' || c == '.'
+        i += 1
+      }
+      rest = schemeIdx + 3
+    }
+    if (validScheme) {
+      var i = lo
+      while (i < schemeIdx) { buf(o) = lower(b(i)).toByte; o += 1; i += 1 }
+      kind =
+        if (o == 4 && buf(0) == 'h' && buf(1) == 't' && buf(2) == 't' && buf(3) == 'p') 1
+        else if (o == 5 && buf(0) == 'h' && buf(1) == 't' && buf(2) == 't' && buf(3) == 'p' &&
+          buf(4) == 's') 2
+        else 0
+    } else {
+      buf(0) = 'h'; buf(1) = 't'; buf(2) = 't'; buf(3) = 'p'; o = 4
+    }
+    buf(o) = ':'; buf(o + 1) = '/'; buf(o + 2) = '/'; o += 3
+    // authority: userinfo, lowercase, default/empty ports to the fixpoint
+    var pathStart = rest
+    var at = -1
+    while (pathStart < end && b(pathStart) != '/' && b(pathStart) != '?') {
+      if (b(pathStart) == '@') at = pathStart
+      pathStart += 1
+    }
+    val authStart = if (at >= 0) at + 1 else rest
+    var authEnd = pathStart
+    var portDone = false
+    while (!portDone) {
+      var colon = authEnd - 1
+      while (colon >= authStart && b(colon) != ':') colon -= 1
+      if (colon < authStart) portDone = true
+      else {
+        val plen = authEnd - colon - 1
+        if (plen == 0 ||
+            (kind == 1 && plen == 2 && b(colon + 1) == '8' && b(colon + 2) == '0') ||
+            (kind == 2 && plen == 3 && b(colon + 1) == '4' && b(colon + 2) == '4' &&
+              b(colon + 3) == '3'))
+          authEnd = colon
+        else portDone = true
+      }
+    }
+    var i = authStart
+    while (i < authEnd) { buf(o) = lower(b(i)).toByte; o += 1; i += 1 }
+    // path: dot segments, duplicate slashes, "/" when empty, %XX upper
+    var qIdx = pathStart
+    while (qIdx < end && b(qIdx) != '?') qIdx += 1
+    val pathOut = o
+    var trailingSlash = false
+    i = pathStart
+    while (i < qIdx) {
+      // i is at a '/': the segment is (i, segEnd)
+      var segEnd = i + 1
+      while (segEnd < qIdx && b(segEnd) != '/') segEnd += 1
+      val len = segEnd - i - 1
+      val dotDot = len == 2 && b(i + 1) == '.' && b(i + 2) == '.'
+      // a path ending in "/", "/." or "/.." keeps its trailing slash
+      trailingSlash = len == 0 || (len == 1 && b(i + 1) == '.') || dotDot
+      if (dotDot) {
+        while (o > pathOut && buf(o - 1) != '/') o -= 1
+        if (o > pathOut) o -= 1
+      } else if (!trailingSlash) {
+        buf(o) = '/'; o += 1
+        var j = i + 1
+        while (j < segEnd) { buf(o) = b(j).toByte; o += 1; j += 1 }
+      }
+      i = segEnd
+    }
+    if (o == pathOut || trailingSlash) { buf(o) = '/'; o += 1 }
+    upperPercentBytes(buf, pathOut, o)
+    // query: non-empty, non-tracking pairs, %XX upper, sorted as bytes;
+    // the pairs are staged past the longest possible output
+    if (qIdx < end) {
+      val pairs = s.pairs
+      var np = 0
+      var t = (end - lo) + 9
+      var start = qIdx + 1
+      while (start <= end) {
+        var stop = start
+        while (stop < end && b(stop) != '&') stop += 1
+        if (stop > start) {
+          val ps = t
+          var eq = -1
+          var j = start
+          while (j < stop) {
+            val c = b(j)
+            if (c == '=' && eq < 0) eq = t
+            buf(t) = c.toByte; t += 1; j += 1
+          }
+          upperPercentBytes(buf, ps, t)
+          if (isTrackingBytes(buf, ps, if (eq >= 0) eq else t)) t = ps
+          else {
+            if (np == MaxQueryPairs) return Fallback
+            pairs(2 * np) = ps; pairs(2 * np + 1) = t - ps; np += 1
+          }
+        }
+        start = stop + 1
+      }
+      var k = 1
+      while (k < np) { // insertion sort of (start, len) ranges, String order for ASCII
+        val ps = pairs(2 * k); val pl = pairs(2 * k + 1)
+        var j = k - 1
+        while (j >= 0 && java.util.Arrays.compareUnsigned(buf, pairs(2 * j),
+            pairs(2 * j) + pairs(2 * j + 1), buf, ps, ps + pl) > 0) {
+          pairs(2 * j + 2) = pairs(2 * j); pairs(2 * j + 3) = pairs(2 * j + 1); j -= 1
+        }
+        pairs(2 * j + 2) = ps; pairs(2 * j + 3) = pl
+        k += 1
+      }
+      k = 0
+      while (k < np) {
+        buf(o) = (if (k == 0) '?' else '&').toByte; o += 1
+        System.arraycopy(buf, pairs(2 * k), buf, o, pairs(2 * k + 1)); o += pairs(2 * k + 1)
+        k += 1
+      }
+    }
+    // canonicalize re-runs on an output ending in a byte <= ' '
+    if ((buf(o - 1) & 0xff) <= ' ') Fallback else o
   }
 
   def canonicalize(raw: String): String = {
@@ -162,7 +275,7 @@ object UrlKit {
     // 2. scheme
     val schemeIdx = s.indexOf("://")
     var (scheme, rest) =
-      if (schemeIdx > 0) (s.substring(0, schemeIdx).toLowerCase, s.substring(schemeIdx + 3))
+      if (schemeIdx > 0) (s.substring(0, schemeIdx).toLowerCase(Locale.ROOT), s.substring(schemeIdx + 3))
       else ("http", s)
     if (!scheme.forall(c => c.isLetterOrDigit || c == '+' || c == '-' || c == '.'))
       scheme = "http"
@@ -174,7 +287,7 @@ object UrlKit {
     // userinfo
     val atIdx = authority.lastIndexOf('@')
     if (atIdx >= 0) authority = authority.substring(atIdx + 1)
-    authority = authority.toLowerCase
+    authority = authority.toLowerCase(Locale.ROOT)
     // default port — strip to FIXPOINT: a single strip of a trailing
     // empty/default port can expose another one ("h:80:80", "h:::"), which
     // would break idempotence (fuzz-caught)
@@ -229,7 +342,7 @@ object UrlKit {
     val host = if (hasPort) auth.substring(0, colonIdx) else auth
     val port = if (hasPort) auth.substring(colonIdx) else ""
     val ace =
-      try java.net.IDN.toASCII(host, java.net.IDN.ALLOW_UNASSIGNED).toLowerCase
+      try java.net.IDN.toASCII(host, java.net.IDN.ALLOW_UNASSIGNED).toLowerCase(Locale.ROOT)
       catch { case _: IllegalArgumentException => host }
     ace + port
   }
@@ -282,7 +395,7 @@ object UrlKit {
       .filter { pair =>
         val eq = pair.indexOf('=')
         val key = if (eq >= 0) pair.substring(0, eq) else pair
-        !isTracking(key.toLowerCase)
+        !isTracking(key.toLowerCase(Locale.ROOT))
       }
       .toArray
     java.util.Arrays.sort(kept, java.util.Comparator.naturalOrder[String]())
@@ -298,6 +411,53 @@ object UrlKit {
     var j = rest.indexWhere(c => c == '/' || c == '?')
     if (j < 0) j = rest.length
     rest.substring(0, j)
+  }
+
+  /** [[hostOf]] on the `UTF8String` bytes: no String round trip. The
+    * separators are ASCII, and no byte of a multi-byte UTF-8 sequence is,
+    * so byte indices cut exactly where the char indices do.
+    */
+  def hostOfU8(canon: UTF8String): UTF8String = {
+    val i = schemeEnd(canon)
+    if (i < 0) return UTF8String.EMPTY_UTF8
+    val n = canon.numBytes
+    var j = i
+    while (j < n && canon.getByte(j) != '/' && canon.getByte(j) != '?') j += 1
+    slice(canon, i, j)
+  }
+
+  /** [[pathOf]] on the `UTF8String` bytes (same cut argument as [[hostOfU8]]). */
+  def pathOfU8(canon: UTF8String): UTF8String = {
+    val i = schemeEnd(canon)
+    if (i < 0) return Root
+    val n = canon.numBytes
+    var slash = i
+    while (slash < n && canon.getByte(slash) != '/') slash += 1
+    if (slash == n) return Root
+    var q = slash
+    while (q < n && canon.getByte(q) != '?') q += 1
+    slice(canon, slash, q)
+  }
+
+  private val Root = UTF8String.fromString("/")
+
+  /** Byte index just past the first "://", or -1. */
+  private def schemeEnd(u: UTF8String): Int = {
+    val last = u.numBytes - 3
+    var i = 0
+    while (i <= last) {
+      if (u.getByte(i) == ':' && u.getByte(i + 1) == '/' && u.getByte(i + 2) == '/') return i + 3
+      i += 1
+    }
+    -1
+  }
+
+  /** Copy of bytes [from, until): the input may sit in a reused row buffer. */
+  private def slice(u: UTF8String, from: Int, until: Int): UTF8String = {
+    val bytes = new Array[Byte](until - from)
+    Platform.copyMemory(u.getBaseObject, u.getBaseOffset + from, bytes,
+      Platform.BYTE_ARRAY_OFFSET, until - from)
+    UTF8String.fromBytes(bytes)
   }
 
   /** Embedded public-suffix snapshot (a deterministic SUBSET of the public

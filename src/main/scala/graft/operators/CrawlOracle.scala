@@ -26,8 +26,10 @@ object CrawlOracle {
     XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
 
   def robotsAllowed(rules: Seq[RobotsRule], path: String): Boolean = {
-    // mirror of FrontierJob.robotsAllowedCol: longest strictly-longer prefix
-    // wins; ties keep the earliest rule; no match => allow.
+    // independent String form of the robots_allowed expression's kernel
+    // (RobotsKit.prefixAllowed): longest strictly-longer prefix wins; ties
+    // keep the earliest rule; no match => allow. Lengths here are UTF-16
+    // units, the kernel's are code points: they agree on BMP prefixes.
     var bestLen = -1
     var allow = true
     rules.foreach { r =>

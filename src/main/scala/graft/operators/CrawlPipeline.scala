@@ -630,6 +630,7 @@ object CrawlPipeline {
       // this epoch's robots-rejected rows, kept so a future flip can
       // re-gate them; only when the feature is on
       if (robotsFlipEpoch >= 0) {
+        GraftFunctions.ensureRegistered(toRobots.sparkSession)
         toRobots
           .join(broadcast(robots.toDF().select(col("host"), col("rules"))), Seq("host"))
           .where(!FrontierJob.robotsAllowedCol(col("rules"), col("path")))

@@ -152,8 +152,9 @@ object FrontierJob {
     dedupeAgainstSeen(frontier, seen)
 
   /** robots.txt gate: join of the per-host rules cache, longest-prefix
-    * allow/deny evaluated with higher-order array functions (no UDF). Hosts
-    * absent from the cache are allowed with defaults.
+    * allow/deny evaluated by the codegen'd `robots_allowed` expression
+    * ([[robotsAllowedCol]]; no UDF, no interpreted higher-order function).
+    * Hosts absent from the cache are allowed with defaults.
     *
     * Join strategy is SIZE-GATED: a news-domain cache (tens of hosts) always
     * broadcasts, but at general-web scale a multi-GB robots cache would OOM
@@ -162,6 +163,7 @@ object FrontierJob {
     * (sort-merge on host). Both plans are PlanSpec-pinned and golden-equal.
     */
   def applyRobots(frontier: DataFrame, robots: Dataset[RobotsEntry], cfg: Config): DataFrame = {
+    GraftFunctions.ensureRegistered(frontier.sparkSession)
     val r = robots.select("host", "rules", "crawl_delay_ms", "host_budget")
     val small = r.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(cfg.robotsBroadcastMaxBytes)
@@ -178,21 +180,14 @@ object FrontierJob {
       .drop("rules")
   }
 
-  /** Longest-prefix robots match as a pure Catalyst column (SURVEY.md §2.2
-    * P4): filter rules to prefixes of `path`, fold keeping the longest
-    * (strictly longer wins; array order breaks ties), default allow.
+  /** Longest-prefix robots verdict (SURVEY.md §2.2 P4): the codegen'd
+    * `robots_allowed` expression (RobotsKit.prefixAllowed; strictly longer
+    * wins, array order breaks ties, default allow). The caller registers
+    * the graft functions in the session that analyzes the column
+    * (GraftFunctions.ensureRegistered).
     */
-  def robotsAllowedCol(rules: Column, path: Column): Column = {
-    val matched = filter(rules, r => startswith(path, r.getField("prefix")))
-    val best = aggregate(
-      matched,
-      struct(lit(-1).as("len"), lit(true).as("allow")),
-      (acc, r) =>
-        when(length(r.getField("prefix")) > acc.getField("len"),
-          struct(length(r.getField("prefix")).as("len"), r.getField("allow").as("allow")))
-          .otherwise(acc))
-    best.getField("allow")
-  }
+  def robotsAllowedCol(rules: Column, path: Column): Column =
+    call_function("robots_allowed", rules, path)
 
   /** c41 — FULL-language robots verdict as a pure Catalyst column (the
     * wildcard completion of P4's prefix engine): each pattern translates

@@ -97,6 +97,7 @@ object RobotsAvailabilityOps {
     */
   def availabilityReport(spark: SparkSession, epoch: Int = 4,
                          staleEpochs: Int = 1, nSeeds: Long = 4000L): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val robots = graft.sources.Gen.robots(spark).toDF()
     val frontier = FrontierJob.canonicalizeFrontier(
       graft.sources.Gen.seeds(spark, nSeeds))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions
 import graft.model.{RobotsEntry, RobotsRule}
 import graft.sources.Gen
 import org.apache.spark.sql.functions._
@@ -66,7 +67,8 @@ object RobotsDiffOps {
     * new generation (the re-enqueue set). `held` carries
     * (url_hash, host, path, priority).
     */
-  def newlyAllowed(held: DataFrame, oldR: DataFrame, newR: DataFrame): DataFrame =
+  def newlyAllowed(held: DataFrame, oldR: DataFrame, newR: DataFrame): DataFrame = {
+    GraftFunctions.ensureRegistered(held.sparkSession)
     held.join(
         broadcast(oldR.select(col("host"), col("rules").as("rules_old"))
           .join(newR.select(col("host"), col("rules").as("rules_new")), Seq("host"))),
@@ -74,6 +76,7 @@ object RobotsDiffOps {
       .where(!FrontierJob.robotsAllowedCol(col("rules_old"), col("path")) &&
         FrontierJob.robotsAllowedCol(col("rules_new"), col("path")))
       .select(held.columns.map(col): _*) // verdict columns drop; schema = held's
+  }
 
   /** The opposite flip: rows ALREADY FETCHED whose path the new generation
     * disallows — the compliance purge/stop-recrawl list (RFC 9309 has no
@@ -81,7 +84,8 @@ object RobotsDiffOps {
     * at their next retention pass; news-diff's user-facing deletes behave
     * the same way). Same broadcast-catalog shape as [[newlyAllowed]].
     */
-  def newlyDisallowed(fetched: DataFrame, oldR: DataFrame, newR: DataFrame): DataFrame =
+  def newlyDisallowed(fetched: DataFrame, oldR: DataFrame, newR: DataFrame): DataFrame = {
+    GraftFunctions.ensureRegistered(fetched.sparkSession)
     fetched.join(
         broadcast(oldR.select(col("host"), col("rules").as("rules_old"))
           .join(newR.select(col("host"), col("rules").as("rules_new")), Seq("host"))),
@@ -89,6 +93,7 @@ object RobotsDiffOps {
       .where(FrontierJob.robotsAllowedCol(col("rules_old"), col("path")) &&
         !FrontierJob.robotsAllowedCol(col("rules_new"), col("path")))
       .select(fetched.columns.map(col): _*)
+  }
 
   /** The compliance-purge list for a maintained latest table at a policy
     * flip: rows carried in `latest` (image_id == canonical URL — a
@@ -98,7 +103,6 @@ object RobotsDiffOps {
     * table against the broadcast two-generation catalog.
     */
   def purgeList(latest: DataFrame, oldR: DataFrame, newR: DataFrame): DataFrame = {
-    import graft.functions.GraftFunctions
     GraftFunctions.ensureRegistered(latest.sparkSession)
     val withHp = latest
       .withColumn("host", GraftFunctions.hostOf(col("image_id")))
@@ -112,6 +116,7 @@ object RobotsDiffOps {
     * of applyRobots's keep).
     */
   def robotsDiffDemo(spark: SparkSession, nSeeds: Long = 60000L): DataFrame = {
+    GraftFunctions.ensureRegistered(spark)
     val oldR = Gen.robots(spark).toDF()
     val newR = mutatedRobots(spark).toDF()
     val frontier = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, nSeeds, 16))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.RobotsKit
+import graft.functions.{GraftFunctions, RobotsKit}
 import graft.sources.Gen
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -52,6 +52,7 @@ object RobotsWildcardOps {
     * would have decided; `diverges` marks rows the completion changes.
     */
   def wildcardVerdicts(spark: SparkSession, nHosts: Int = 12): DataFrame = {
+    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val texts = robotsTexts(nHosts)
     val wdf = spark.createDataset(texts.map { case (h, t) =>

@@ -859,7 +859,8 @@ object StreamingJobs {
     * longest-prefix robots verdict, defaults applied where the dimension
     * has no row for the host.
     */
-  private[graft] def enrichJoin(entries: DataFrame, dim: DataFrame): DataFrame =
+  private[graft] def enrichJoin(entries: DataFrame, dim: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.ensureRegistered(entries.sparkSession)
     entries.join(broadcast(dim), Seq("host"), "left")
       .select(col("url_hash"), col("host"), col("path"),
         (col("rules").isNull ||
@@ -867,6 +868,7 @@ object StreamingJobs {
           .as("allowed"),
         coalesce(col("crawl_delay_ms"), lit(500L)).as("crawl_delay_ms"),
         coalesce(col("host_budget"), lit(40)).as("host_budget"))
+  }
 
   /** c40 — stream-STATIC enrichment (the dimension join every streaming
     * pipeline runs, and the one join family the streaming suite lacked:

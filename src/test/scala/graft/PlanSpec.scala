@@ -255,6 +255,35 @@ class PlanSpec extends AnyFunSuite {
     assert(a == b, "gated seen join changed the dedupe result")
   }
 
+  test("E1 row path is compiled: no CodegenFallback expression in either seen-join form") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // canon_url, host_of, path_of and robots_allowed generate code; an
+    // interpreted expression (a higher-order function, a UDF) evaluated per
+    // frontier row would show here. Aggregate functions are exempt: the
+    // politeness top-K is an ImperativeAggregate, which Spark never codegens.
+    object stages extends AdaptiveSparkPlanHelper
+    val seen = Seq(graft.model.SeenEntry(42L, "news0.example.com", 0)).toDS()
+    val cfg = FrontierJob.Config(globalBudget = 500)
+    val seeds = Gen.seeds(spark, 2000, 8)
+    val broadcastForm = FrontierJob.runEpoch(seeds, Gen.robots(spark), seen, cfg)
+    val shuffledForm = FrontierJob.applyGlobalBudget(FrontierJob.schedule(
+      FrontierJob.applyRobots(FrontierJob.dedupeAgainstSeen(
+        FrontierJob.canonicalizeFrontier(seeds), seen, 0L), Gen.robots(spark), cfg), cfg), cfg)
+    Seq("broadcast" -> broadcastForm, "seenBroadcastMaxBytes = 0" -> shuffledForm).foreach {
+      case (form, sched) =>
+        assert(sched.collect().nonEmpty, s"$form: empty schedule")
+        val fallbacks = stages.collect(sched.queryExecution.executedPlan) { case n => n }
+          .flatMap(_.expressions.flatMap(_.collect {
+            case f: CodegenFallback if !f.isInstanceOf[AggregateFunction] => f.prettyName
+          }))
+        assert(fallbacks.isEmpty,
+          s"$form: interpreted expressions ${fallbacks.distinct.mkString(", ")} in\n" +
+            sched.queryExecution.executedPlan)
+    }
+  }
+
   test("bucketed seen table: anti-join exchanges only the frontier side; golden-equal") {
     import org.apache.spark.sql.functions.{col, concat_ws, lit, pmod, xxhash64}
     val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed").toString

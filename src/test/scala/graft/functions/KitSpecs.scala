@@ -61,9 +61,7 @@ class UrlKitSpec extends AnyFunSuite {
       val slow = UrlKit.canonicalize(u)
       val fast = UrlKit.canonicalizeU8(UTF8String.fromString(u)).toString
       assert(fast == slow, s"fast != slow for <$u>: <$fast> vs <$slow>")
-      if (UrlKit.isCanonical(UTF8String.fromString(u)))
-        assert(slow == u, s"fast path accepted non-fixed-point <$u> -> <$slow>")
-      // and every slow output must itself be accepted or at least map to itself
+      // and every slow output must map to itself through the byte kernel
       val again = UrlKit.canonicalizeU8(UTF8String.fromString(slow)).toString
       assert(again == slow, s"not idempotent via fast path: <$slow> -> <$again>")
     }
@@ -85,6 +83,99 @@ class UrlKitSpec extends AnyFunSuite {
     (0 until 5000).foreach { _ =>
       val len = rnd.nextInt(40)
       check((0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
+    }
+  }
+
+  /** A seeded URL-shaped ASCII string: each part is drawn from the cases
+    * the canonicalizer treats specially, so most draws exercise several.
+    */
+  private def dirtyAscii(rnd: scala.util.Random): String = {
+    def pick(xs: String*): String = xs(rnd.nextInt(xs.length))
+    val ws = Seq(" ", "\t", "\n", "\u0000", "\u001f", "\u0020")
+    def junk: String = (0 until rnd.nextInt(3)).map(_ => ws(rnd.nextInt(ws.size))).mkString
+    val scheme = pick("", "", "http://", "HTTP://", "https://", "HtTpS://", "ftp://",
+      "FILE://", "a b://", "://", "+.-://", "1x://", "http:/", "http:")
+    val user = pick("", "", "", "u@", "U:P@", "@", "a@b@")
+    val host = pick("host.com", "Host.COM", "WIKI.EXAMPLE.COM", "h", "a-b_c.io", "",
+      "xn--r8jz45g.jp", "I.i", "h.io")
+    val port = pick("", "", "", ":80", ":443", ":", ":80:80", ":8080", "::", ":443:", ":0", ":08")
+    val segs = Seq("", ".", "..", "a", "B", "%2f", "%2F", "%aB", "%zz", "%", "%a", "...",
+      "a b", "x.y", ".well-known", "a%")
+    val path = (0 until rnd.nextInt(5)).map { _ =>
+      pick("/", "/", "/", "//") + segs(rnd.nextInt(segs.size))
+    }.mkString
+    val pairs = Seq("", "a=1", "b=2", "A=1", "a=0", "utm_source=x", "UTM_Medium=y",
+      "GCLID=1", "Ref=2", "ref_src=3", "refx=1", "k", "=v", "a=%2f", "b=%2F", "a=1=2",
+      "_GA=1", "mc_CID=3", "spm", "x=%e2%82", "b= ")
+    val query =
+      if (rnd.nextInt(3) == 0) ""
+      else "?" + (0 until rnd.nextInt(6)).map(_ => pairs(rnd.nextInt(pairs.size))).mkString("&")
+    val frag = pick("", "", "#", "#f", "#a?b&c=d", "#x#y", "#ü")
+    junk + scheme + user + host + port + path + query + frag + junk
+  }
+
+  test("byte kernel == canonicalize(String) on a seeded 100k dirty-URL fuzz") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(20261019L)
+    val alphabet = "hHtTpPsS:/?#&=.%aAbBfF0189_-@ \t\u0000~;,+uUmM"
+    var identities = 0
+    def check(u: String, byRef: Boolean = true): String = {
+      val in = UTF8String.fromString(u)
+      val fast = UrlKit.canonicalizeU8(in)
+      val slow = UrlKit.canonicalize(u)
+      assert(fast.toString == slow, s"byte kernel != String form for <$u>: <$fast> vs <$slow>")
+      if (byRef && slow == u && u.forall(_ < 0x80)) {
+        assert(fast eq in, s"canonical ASCII input <$u> was copied, not returned")
+        identities += 1
+      }
+      slow
+    }
+    (0 until 100000).foreach { i =>
+      val u = i % 4 match {
+        case 0 | 1 => dirtyAscii(rnd)
+        case 2 => (0 until rnd.nextInt(48)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+        case _ => // non-ASCII: the String fallback must give the same answer
+          val s = dirtyAscii(rnd)
+          val at = rnd.nextInt(s.length + 1)
+          s.substring(0, at) + Seq("ü", "例え", "\u00a0", "İ")(rnd.nextInt(4)) + s.substring(at)
+      }
+      check(check(u)) // and the canonical form, a fixed point, by reference
+    }
+    // past the kernel's in-place pair sort (the String form answers, by
+    // copy) and past its first scratch buffer
+    val manyPairs = (0 until 100).map(i => s"K${99 - i}=v&utm_$i=x").mkString("HTTP://H/p?", "&", "")
+    check(check(manyPairs), byRef = false)
+    check(check("http://H/" + "a%2f/./../b//" * 40 + "?z=1&" + "y=%2f&" * 40))
+    assert(identities > 50000, s"only $identities fixed points returned by reference")
+  }
+
+  test("canonicalize does not depend on the default locale") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      val u = "HTTP://WIKI.EXAMPLE.COM/a?GCLID=1&b=1"
+      assert(UrlKit.canonicalize(u) == "http://wiki.example.com/a?b=1")
+      assert(UrlKit.canonicalizeU8(UTF8String.fromString(u)).toString ==
+        "http://wiki.example.com/a?b=1")
+      assert(UrlKit.canonicalize("FILE://H/x") == "file://h/x")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("host_of/path_of byte kernels == the String forms") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(7L)
+    val fixed = Seq("", "h", "/", "?", "://", "http://", "http://h", "http://h?x=/y",
+      "http://h/a?b", "h/a/b", "h?x/y", "a://b://c/d", "http://h:8080/x?q=1/2",
+      "http://例え.jp/ü?ä=/x", "ftp://u@h/p", ":/", "x:/y", "http://h#f/x")
+    val drawn = (0 until 20000).map { i =>
+      val u = dirtyAscii(rnd)
+      if (i % 2 == 0) UrlKit.canonicalize(u) else u
+    }
+    (fixed ++ drawn).foreach { u =>
+      val b = UTF8String.fromString(u)
+      assert(UrlKit.hostOfU8(b).toString == UrlKit.hostOf(u), s"host_of <$u>")
+      assert(UrlKit.pathOfU8(b).toString == UrlKit.pathOf(u), s"path_of <$u>")
     }
   }
 
