@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one owner of session config. Every main and the test base build
   * their session with [[session]] (ScalingBench's pinned protocol shapes
-  * and ExtensionsCheck's bare builder extend [[applyCommon]] or bypass it
-  * on purpose), and every scoped conf change inside the engine or a spec
-  * goes through [[withConf]], which restores the caller's values on exit.
+  * extend [[applyCommon]], and the test-scope ExtensionsCheck's bare
+  * builder bypasses it, on purpose), and every scoped conf change inside
+  * the engine or a spec goes through [[withConf]], which restores the
+  * caller's values on exit.
   */
 object SparkEnv {
   /** tmpfs-backed spark.local.dir when available. Measured in this sandbox:

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.model.RobotsRule
+import java.util.Locale
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -50,7 +51,7 @@ object RobotsKit {
   private def parseImpl(text: String, agent: String,
                         keepWildcards: Boolean): Parsed = {
     if (text == null || text.isEmpty) return Parsed(Seq.empty, None)
-    val agentLc = agent.toLowerCase
+    val agentLc = agent.toLowerCase(Locale.ROOT)
     // split into groups: a group = 1+ user-agent lines followed by directives
     final case class Group(agents: Seq[String], rules: Seq[RobotsRule], delayMs: Option[Long])
     val groups = scala.collection.mutable.ArrayBuffer.empty[Group]
@@ -74,14 +75,14 @@ object RobotsKit {
       if (line.nonEmpty) {
         val colon = line.indexOf(':')
         if (colon > 0) {
-          val key = line.substring(0, colon).trim.toLowerCase
+          val key = line.substring(0, colon).trim.toLowerCase(Locale.ROOT)
           val value = line.substring(colon + 1).trim
           key match {
             case "user-agent" =>
               if (inDirectives) flush() // new group starts
               // an empty product token is invalid per RFC 9309 — never let
               // it match every agent at '*' specificity
-              if (value.nonEmpty) agents :+= value.toLowerCase
+              if (value.nonEmpty) agents :+= value.toLowerCase(Locale.ROOT)
             case "allow" | "disallow" =>
               inDirectives = true
               // empty Disallow = allow everything (no rule); wildcard rules

@@ -9,7 +9,7 @@ object TextKit {
 
   def tokenize(text: String): Array[String] = {
     if (text == null) return Array.empty
-    val t = text.trim.toLowerCase
+    val t = text.trim.toLowerCase(java.util.Locale.ROOT)
     if (t.isEmpty) Array.empty else t.split("\\W+").filter(_.nonEmpty)
   }
 

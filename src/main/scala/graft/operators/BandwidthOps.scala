@@ -43,12 +43,6 @@ object BandwidthOps {
               expr(s"$bytesPerHost div est_bytes"))).cast("int")))
       .drop("est_bytes")
 
-  /** Local mirror of the budget formula (specs compare against it). */
-  def budgetLocal(hostBudget: Int, estBytes: Option[Long],
-                  bytesPerHost: Long): Int =
-    estBytes.fold(hostBudget)(e =>
-      math.max(1L, math.min(hostBudget.toLong, bytesPerHost / e)).toInt)
-
   /** c54 demo: one byte-budgeted crawl; final epoch summarized per host —
     * learned mean page size, the implied request budget, and what
     * actually scheduled. BandwidthSpec pins stats==mirror, budget

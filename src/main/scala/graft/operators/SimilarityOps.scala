@@ -57,12 +57,6 @@ object SimilarityOps {
         col("rank").cast("long").as("rank"))
   }
 
-  /** Local mirror for tests — same kernel (VecKit) as the codegen'd
-    * LshBucket expression, the UrlKit/CrawlOracle parity pattern.
-    */
-  def lshBucketLocal(vec: Seq[Float], nBits: Int): Int =
-    graft.functions.VecKit.lshBucket(vec.toArray, nBits)
-
   /** Bucket width scaled to corpus size: target mean bucket ~`perBucket`
     * vectors so within-bucket candidate pairs stay ~quadratic in a CONSTANT,
     * not in corpus/2^nBits. Floor of 6 keeps small test corpora on the

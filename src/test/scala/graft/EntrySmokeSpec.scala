@@ -35,11 +35,6 @@ class EntrySmokeSpec extends AnyFunSuite {
     assert(graft.operators.SimilarityOps.annIvfPqTopK(spark, tmp).count() == 0)
   }
 
-  test("oracleSql keys are a subset of queries") {
-    val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(missing.isEmpty, s"oracleSql without query impl: $missing")
-  }
-
   // queries that may legitimately return 0 rows on tiny data
   private val mayBeEmpty = Set("q03_anti_join", "q09_setops")
 

@@ -159,6 +159,10 @@ class UrlKitSpec extends AnyFunSuite {
       assert(UrlKit.canonicalizeU8(UTF8String.fromString(u)).toString ==
         "http://wiki.example.com/a?b=1")
       assert(UrlKit.canonicalize("FILE://H/x") == "file://h/x")
+      val robots = RobotsKit.parse("USER-AGENT: *\nDISALLOW: /x\nSITEMAP: http://h/s.xml\n")
+      assert(robots.rules == Seq(graft.model.RobotsRule(allow = false, "/x")))
+      assert(robots.sitemaps == Seq("http://h/s.xml"))
+      assert(TextKit.tokenize("TITLE").toSeq == Seq("title"))
     } finally java.util.Locale.setDefault(saved)
   }
 

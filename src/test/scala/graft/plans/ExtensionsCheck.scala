@@ -1,6 +1,6 @@
 package graft.plans
 
-/** Dev/test-only child-JVM entry: proves GraftExtensions wires the scalar
+/** ExtensionsSpec's child-JVM entry: proves GraftExtensions wires the scalar
   * surface into plain `spark.sql` through the public `spark.sql.extensions`
   * config alone (no ensureRegistered call anywhere on this path). Run in
   * its own JVM because extensions bind at session construction — an
