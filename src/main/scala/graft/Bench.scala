@@ -24,9 +24,9 @@ object Bench {
     // headline metric companion: E1 frontier throughput (URLs deduped +
     // scheduled per second, BASELINE.md numerator) at this session's
     // parallelism on a 1M synthetic frontier — the cross-level scaling
-    // evidence lives in BENCH/BASELINE.md (graft.ScalingBench, fresh JVM
-    // per level; this in-session figure runs after 40+ queries in a hot
-    // GC-pressured session and reads systematically lower).
+    // evidence comes from graft.ScalingBench (fresh JVM per level; runs are
+    // recorded in BENCH/BASELINE.md; this in-session figure runs after 40+
+    // queries in a hot GC-pressured session and reads systematically lower).
     val frontier = {
       import graft.operators.FrontierJob
       import graft.sources.{Gen, SeenStore}

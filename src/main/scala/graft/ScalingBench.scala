@@ -6,19 +6,24 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Cluster-size scaling evidence (north_rule "N and 4N executors with
-  * throughput scaling efficiency >=0.8"; driver instruction: evidence by
-  * running the same job at two parallelism levels on the same input).
+/** Cluster-size scaling evidence: the same E1 frontier job on the same
+  * input at two or more parallelism levels, and the N -> 4N throughput
+  * scaling efficiency between neighbouring levels.
   *
   * Methodology: each level runs in its OWN fresh JVM (spawned child) so
   * JIT/codegen/GC state cannot leak between levels; inside a level the full
   * E1 frontier job (generate seeds -> canonicalize -> xxhash64 -> batch
   * dedupe -> robots gate -> salted politeness windows -> deterministic
-  * global order) executes once to warm, then 3 timed runs with a `noop`
-  * sink; the minimum wall is reported (robust to sandbox noise).
-  * Throughput numerator per BASELINE.md = rows surviving dedupe + rows
-  * assigned a politeness slot. local[8] vs local[32] stands in for N vs 4N
-  * executors (no real cluster in this sandbox).
+  * global order) executes once to warm, then 4 timed runs with a `noop`
+  * sink; the minimum wall is reported (robust to host noise).
+  * Throughput numerator = rows surviving dedupe + rows assigned a
+  * politeness slot. local[N] stands in for N executors in "local" mode;
+  * "cluster" mode runs real executor JVMs.
+  *
+  * Output: one JSON line per child (wall, throughput and the summed task
+  * metrics of every task the child ran) and one summary JSON line with the
+  * best child per level and each pair's efficiency. It writes no report
+  * file: the BENCH/ docs record runs as appended rows.
   */
 object ScalingBench {
 
@@ -50,100 +55,84 @@ object ScalingBench {
     // pair measures 0.87+. Same principle as the fixed shuffle-partition
     // override above: compare the identical plan on different resources.
     val aqeCoalesce = sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "false")
-    val builder = if (mode == "cluster")
-      SparkEnv.applyCommon(SparkSession.builder()
-        .master(s"local-cluster[$level,$coresPerExec,$execMemMb]")
-        .appName(s"graft-scaling-x$level")
-        // one executor per worker, sized exactly to the worker (defaults
-        // would request 1g executors — and then -Xms2g > -Xmx1g makes the
-        // executor JVM die in a relaunch loop)
-        .config("spark.executor.memory", s"${execMemMb}m")
-        .config("spark.executor.cores", coresPerExec.toString)
-        .config("spark.executor.extraClassPath", classesPath)
-        // fixed pre-touched executor heaps (see spawnLevel notes)
-        .config("spark.executor.extraJavaOptions",
-          s"-Xms${execMemMb}m -XX:+AlwaysPreTouch")
-        .config("spark.io.compression.codec", "zstd")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", aqeCoalesce)
-        .config("spark.sql.shuffle.partitions", shufParts))
-    else
-      SparkEnv.applyCommon(SparkSession.builder()
-        .master(s"local[$cores]")
-        .appName(s"graft-scaling-$cores")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", aqeCoalesce)
-        .config("spark.sql.shuffle.partitions", shufParts))
-    val spark = builder.getOrCreate()
+    val spark =
+      if (mode == "cluster")
+        SparkEnv.applyCommon(SparkSession.builder()
+          .master(s"local-cluster[$level,$coresPerExec,$execMemMb]")
+          .appName(s"graft-scaling-x$level")
+          // one executor per worker, sized exactly to the worker (defaults
+          // would request 1g executors — and then -Xms2g > -Xmx1g makes the
+          // executor JVM die in a relaunch loop)
+          .config("spark.executor.memory", s"${execMemMb}m")
+          .config("spark.executor.cores", coresPerExec.toString)
+          .config("spark.executor.extraClassPath", classesPath)
+          // fixed pre-touched executor heaps (see spawnLevel notes)
+          .config("spark.executor.extraJavaOptions",
+            s"-Xms${execMemMb}m -XX:+AlwaysPreTouch")
+          .config("spark.io.compression.codec", "zstd"))
+          .getOrCreate()
+      else SparkEnv.session(cores)
     spark.sparkContext.setLogLevel("ERROR")
-    // optional task-metrics telemetry (SPARK_GRAFT_METRICS=1)
+    // task-metric sums (ms): run, GC, deserialize, shuffle write, fetch wait
     val metrics = new java.util.concurrent.atomic.AtomicLongArray(5)
-    if (sys.env.contains("SPARK_GRAFT_METRICS"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            metrics.addAndGet(0, m.executorRunTime)
-            metrics.addAndGet(1, m.jvmGCTime)
-            metrics.addAndGet(2, m.executorDeserializeTime)
-            metrics.addAndGet(3, m.shuffleWriteMetrics.writeTime / 1000000)
-            metrics.addAndGet(4, m.shuffleReadMetrics.fetchWaitTime)
-          }
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null) {
+          metrics.addAndGet(0, m.executorRunTime)
+          metrics.addAndGet(1, m.jvmGCTime)
+          metrics.addAndGet(2, m.executorDeserializeTime)
+          metrics.addAndGet(3, m.shuffleWriteMetrics.writeTime / 1000000)
+          metrics.addAndGet(4, m.shuffleReadMetrics.fetchWaitTime)
         }
-      })
-    val inputParts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "64").toInt
-    val cfg = FrontierJob.Config(epoch = 0)
-    // Input mode: "gen" (default, the recorded protocol) codegens the seed
-    // rows in the scan stage; "parquet" materializes them once (untimed) and
-    // reads a table instead — measured on this sandbox the parquet variant
-    // is SLOWER at both levels (the extra tmpfs file footprint hits the
-    // slow page-commit path and the vectorized read still materializes a
-    // UTF8String per row), so generation stays the default; on a real
-    // cluster with local SSDs the table read is the natural form.
-    def seedTable() = sys.env.getOrElse("SPARK_GRAFT_INPUT", "gen") match {
-      case "parquet" =>
-        import spark.implicits._
-        val seedPath =
-          s"${SparkEnv.localDir.getOrElse(System.getProperty("java.io.tmpdir"))}/seeds-$n"
-        if (!new java.io.File(seedPath).exists())
-          Gen.seeds(spark, n, inputParts).write.mode("overwrite").parquet(seedPath)
-        spark.read.parquet(seedPath).as[graft.model.Seed]
-      case _ => Gen.seeds(spark, n, inputParts)
-    }
-    val sidecar = seenMode
-    val seenDs: org.apache.spark.sql.Dataset[graft.model.SeenEntry] =
-      if (sidecar == "none") SeenStore.emptySeen(spark)
-      else {
-        import spark.implicits._
-        import org.apache.spark.sql.functions.{col, lit}
-        val seenN = n / 4
-        val seenPath =
-          s"${SparkEnv.localDir.getOrElse(System.getProperty("java.io.tmpdir"))}/seen-$seenN"
-        // reuse is gated on the _SUCCESS marker, not bare dir existence: a
-        // run killed mid-write leaves a partial parquet directory that a
-        // bare exists() check would silently read, skewing every
-        // subsequent seen-set bench against a wrong seen set
-        if (!new java.io.File(s"$seenPath/_SUCCESS").exists())
-          FrontierJob.canonicalizeFrontier(Gen.seeds(spark, seenN, inputParts))
-            .select(col("url_hash"), col("host"), lit(0).as("first_epoch"))
-            .write.mode("overwrite").parquet(seenPath)
-        spark.read.parquet(seenPath).as[graft.model.SeenEntry]
       }
-    def job() = FrontierJob.runEpoch(seedTable(), Gen.robots(spark), seenDs, cfg)
-    job().write.format("noop").mode("overwrite").save() // warm JIT + codegen
-    val deduped = FrontierJob.canonicalizeFrontier(seedTable()).count()
-    val scheduled = job().count()
-    val walls = (1 to 4).map { _ =>
-      val t0 = System.nanoTime()
-      job().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+    })
+    val json = SparkEnv.withConf(spark,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> aqeCoalesce,
+        "spark.sql.shuffle.partitions" -> shufParts) {
+      val cfg = FrontierJob.Config(epoch = 0)
+      val sidecar = seenMode
+      val seenDs: org.apache.spark.sql.Dataset[graft.model.SeenEntry] =
+        if (sidecar == "none") SeenStore.emptySeen(spark)
+        else {
+          import spark.implicits._
+          import org.apache.spark.sql.functions.{col, lit}
+          val seenN = n / 4
+          val seenPath =
+            s"${SparkEnv.localDir.getOrElse(System.getProperty("java.io.tmpdir"))}/seen-$seenN"
+          // reuse is gated on the _SUCCESS marker, not bare dir existence: a
+          // run killed mid-write leaves a partial parquet directory that a
+          // bare exists() check would silently read, skewing every
+          // subsequent seen-set bench against a wrong seen set
+          if (!new java.io.File(s"$seenPath/_SUCCESS").exists())
+            FrontierJob.canonicalizeFrontier(Gen.seeds(spark, seenN, InputParts))
+              .select(col("url_hash"), col("host"), lit(0).as("first_epoch"))
+              .write.mode("overwrite").parquet(seenPath)
+          spark.read.parquet(seenPath).as[graft.model.SeenEntry]
+        }
+      def job() = FrontierJob.runEpoch(
+        Gen.seeds(spark, n, InputParts), Gen.robots(spark), seenDs, cfg)
+      job().write.format("noop").mode("overwrite").save() // warm JIT + codegen
+      val deduped = FrontierJob.canonicalizeFrontier(Gen.seeds(spark, n, InputParts)).count()
+      val scheduled = job().count()
+      val walls = (1 to 4).map { _ =>
+        val t0 = System.nanoTime()
+        job().write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      val wall = walls.min
+      val thr = (deduped + scheduled) / wall
+      f"""{"cores":$cores,"deduped":$deduped,"scheduled":$scheduled,"wall":$wall%.2f,"walls":[${walls.map(w => f"$w%.2f").mkString(",")}],"thr":$thr%.1f,"sidecar":"$sidecar",""" +
+        s""""runTimeMs":${metrics.get(0)},"gcMs":${metrics.get(1)},"deserMs":${metrics.get(2)},"shufWriteMs":${metrics.get(3)},"shufFetchWaitMs":${metrics.get(4)}}"""
     }
-    val wall = walls.min
-    val thr = (deduped + scheduled) / wall
-    if (sys.env.contains("SPARK_GRAFT_METRICS"))
-      System.err.println(s"[metrics] runTimeMs=${metrics.get(0)} gcMs=${metrics.get(1)} " +
-        s"deserMs=${metrics.get(2)} shufWriteMs=${metrics.get(3)} shufFetchWaitMs=${metrics.get(4)}")
     spark.stop()
-    f"""{"cores":$cores,"deduped":$deduped,"scheduled":$scheduled,"wall":$wall%.2f,"walls":[${walls.map(w => f"$w%.2f").mkString(",")}],"thr":$thr%.1f,"sidecar":"$sidecar"}"""
+    json
   }
+
+  /** Seed-table partitions, the same at every level (every recorded
+    * protocol ran 64).
+    */
+  private val InputParts = 64
 
   /** The seen-set shape, `SPARK_GRAFT_SIDECAR`: "none" (default) is the
     * epoch-0 shape, an empty seen set; "bloom" is the epoch >= 1 shape, a
@@ -255,8 +244,6 @@ object ScalingBench {
     val line = out.linesIterator.find(_.startsWith("""{"cores"""")).getOrElse(
       throw new IllegalStateException(s"no level JSON from child (level=$level):\n$out"))
     println(line)
-    // surface the child's optional task-metrics telemetry (merged stderr)
-    out.linesIterator.filter(_.startsWith("[metrics]")).foreach(println)
     // tiny flat-JSON parse (no deps)
     """"(\w+)":([0-9.]+)""".r.findAllMatchIn(line).map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
@@ -298,84 +285,8 @@ object ScalingBench {
       s"""{"n_cores":$lo,"four_n_cores":$hi,"efficiency":${f"$e%.3f"}}"""
     }.mkString("[", ",", "]")
     val json =
-      s"""{"metric":"frontier_scaling","n_urls":$n,"sidecar":"$sidecar","deduped":$deduped,"scheduled":$scheduled,""" +
+      s"""{"metric":"frontier_scaling","n_urls":$n,"mode":"$mode","rounds":$rounds,"sidecar":"$sidecar","deduped":$deduped,"scheduled":$scheduled,""" +
         s""""levels":$levelJson,"pairs":$pairJson}"""
     println(json)
-    // rows are embedded in a stripMargin block: double the leading '|' so
-    // one survives margin stripping
-    val levelRows = levels.map { c =>
-      val m = best(c)
-      f"|| ${c} | ${c} | ${m("wall")}%.2f | ${m("thr")}%.0f |"
-    }.mkString("\n")
-    val pairRows = pairs.map { case (lo, hi, e) =>
-      f"|| N=$lo -> 4N=$hi | ${best(lo)("thr")}%.0f | ${best(hi)("thr")}%.0f | **$e%.3f** |"
-    }.mkString("\n")
-    val md =
-      s"""# BENCH/BASELINE — measured frontier scaling
-         |
-         |Protocol: identical synthetic frontier (Gen.seeds, seed=42, n=$n
-         |URLs, 64 input partitions, Zipf-skewed hosts, sidecar=$sidecar —
-         |"none" is the epoch-0 empty-seen shape; "bloom" pre-seeds a
-         |quarter of the URL space into a parquet seen table, so the exact
-         |seen anti-join does real work; no filter is built), full E1 job
-         |(canonicalize -> xxhash64 -> batch dedupe -> robots gate ->
-         |bounded-heap politeness top-K -> deterministic global order),
-         |`noop` sink. One fresh child JVM per level, `taskset`-pinned to
-         |exactly that many CPUs (a real N-executor cluster has N cores
-         |TOTAL — unpinned local[N] borrows the host's other cores for
-         |GC/JIT and inflates the small level), fixed pre-touched heap
-         |(-Xms=-Xmx, AlwaysPreTouch; see "sandbox memory ceiling" below),
-         |zstd shuffle compression, shuffle partitions = cores. Levels are
-         |interleaved $rounds rounds (${levels.mkString("/")} cores); 1
-         |warm-up + min of 4 timed runs per child; best child per level.
-         |Throughput numerator = rows surviving dedupe ($deduped) + rows
-         |assigned a politeness slot ($scheduled).
-         |
-         || level cores | shuffle partitions | wall min (s) | URLs/sec |
-         ||---|---|---|---|
-         |$levelRows
-         |
-         || pair | thr_N | thr_4N | efficiency (thr_4N/thr_N)/4 |
-         ||---|---|---|---|
-         |$pairRows
-         |
-         |Target: >= 0.8 between N and 4N (north_rule). No real cluster
-         |exists in this sandbox; per the driver instruction the clause is
-         |evidenced at two parallelism levels of the same job on the same
-         |input ("local[8] and local[32], or N and 4N cores").
-         |
-         |## Sandbox memory ceiling (why 8->32 undershoots and 2->8 does not)
-         |
-         |Measured platform facts (graft.MemCeilingProbe, reproducible):
-         |1. Anonymous-page commit on this VM is pathologically slow and
-         |   SUPERLINEAR in footprint: pre-touching a fixed heap costs
-         |   6 GiB = ~5 s, 8 GiB = ~17 s, 10 GiB = ~30 s, 12 GiB = ~95 s,
-         |   24 GiB = ~186 s wall (68 CPU-minutes of sys time) — the kernel
-         |   serializes faults behind a lock. Round-1's growing -Xmx24g
-         |   heaps therefore spent their extra cores in the kernel, which
-         |   was the round-1 "even pure codegen doesn't scale in one JVM"
-         |   mystery. Fix applied: fixed pre-touched heaps so timed runs
-         |   recycle warm pages (this alone moved 32-core shuffle-write
-         |   task time from ~25% of total to ~2%).
-         |2. Even OUTSIDE Spark, raw JVM threads running the identical
-         |   per-row kernel (Gen.seedOf + UrlKit.canonicalize, zero shuffle,
-         |   zero Spark) cap at ~2.1-2.7x speedup from 8 -> 32 pinned
-         |   threads (~0.53-0.68 efficiency) on this host: one shared
-         |   memory system saturates. A real 4N-executor cluster adds
-         |   memory channels with every node; a 32-thread single VM does
-         |   not. The 2 -> 8 pair runs below that saturation knee, which is
-         |   why it reflects the job's actual scaling behavior and the
-         |   8 -> 32 pair reflects the platform's.
-         |
-         |Job-side fixes applied this round regardless: zero-allocation
-         |canonicalize fast path (already-canonical URLs return the input
-         |UTF8String reference), zstd shuffle, pinned fixed pre-touched
-         |heaps, codegen bloom probe (no per-row encoder ser/de).
-         |
-         |Raw JSON: `$json`
-         |""".stripMargin
-    Files.createDirectories(Paths.get("BENCH"))
-    val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH/BASELINE.md"))
-    Files.writeString(out, md)
   }
 }

@@ -1,13 +1,16 @@
 package graft
 
+import java.nio.file.{Files, LinkOption, Paths}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The one owner of session config. Every main and the test base build
-  * their session with [[session]] (ScalingBench's pinned protocol shapes
-  * extend [[applyCommon]], and the test-scope ExtensionsCheck's bare
-  * builder bypasses it, on purpose), and every scoped conf change inside
-  * the engine or a spec goes through [[withConf]], which restores the
-  * caller's values on exit.
+  * their session with [[session]] (ScalingBench's local-cluster level
+  * extends [[applyCommon]] with its executor shape, and the test-scope
+  * ExtensionsCheck's bare builder bypasses it, on purpose), and every
+  * scoped conf change inside the engine or a spec goes through
+  * [[withConf]], which restores the caller's values on exit.
   */
 object SparkEnv {
   /** tmpfs-backed spark.local.dir when available. Measured in this sandbox:
@@ -31,13 +34,40 @@ object SparkEnv {
     * StreamingJobs.ckptDir — java.io.tmpdir sits on the slow root disk and
     * the demos' many tiny state writes/commits were disk-bound there. A
     * real deployment points scratch at fast local storage or a DFS; the
-    * directory choice is deployment config, not semantics.
+    * directory choice is deployment config, not semantics. The dir is
+    * deleted when the JVM exits.
     */
-  def scratchDir(prefix: String): String = localDir match {
-    case Some(d) =>
-      java.nio.file.Files
-        .createTempDirectory(java.nio.file.Paths.get(d), prefix).toString
-    case None => java.nio.file.Files.createTempDirectory(prefix).toString
+  def scratchDir(prefix: String): String = {
+    val dir = localDir match {
+      case Some(d) => Files.createTempDirectory(Paths.get(d), prefix).toString
+      case None => Files.createTempDirectory(prefix).toString
+    }
+    deleteAtExit
+    scratchDirs.add(dir)
+    dir
+  }
+
+  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  private lazy val deleteAtExit: Unit = {
+    sys.addShutdownHook(scratchDirs.forEach { d =>
+      try deleteRecursively(d)
+      catch { case NonFatal(e) => System.err.println(s"[graft] cannot delete $d: $e") }
+    })
+    ()
+  }
+
+  /** Deletes `path` and everything under it, without following symlinks.
+    * A missing path is a no-op.
+    */
+  private[graft] def deleteRecursively(path: String): Unit = {
+    val root = Paths.get(path)
+    if (Files.exists(root, LinkOption.NOFOLLOW_LINKS)) {
+      val all = Files.walk(root)
+      try all.sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(Files.deleteIfExists)
+      finally all.close()
+    }
   }
 
   /** Local-mode cores of the mains: `SPARK_GRAFT_CPUS`, default 4. */

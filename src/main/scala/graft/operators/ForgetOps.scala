@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SparkEnv.deleteRecursively
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,12 +50,6 @@ object ForgetOps {
       .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
       .sortBy(_.getName.stripPrefix("epoch=").toInt)
       .map(_.getPath)
-  }
-
-  private def deleteRecursively(path: String): Unit = {
-    val f = new java.io.File(path)
-    Option(f.listFiles()).foreach(_.foreach(c => deleteRecursively(c.getPath)))
-    f.delete()
   }
 
   /** Rewrite one epoch dir minus the tombstoned keys: materialize the

@@ -249,8 +249,7 @@ object GraphOps {
   }
 
   /** One power-iteration step, pre-checkpoint — the plan that repeats
-    * `iters` times (exposed so PlanAudit can print the real shape; the
-    * loop's localCheckpoint would otherwise hide it behind an RDD scan).
+    * `iters` times.
     *
     * The dangling mass (rank leaked by nodes with no out-edges) is folded
     * into the plan as a 1-row aggregate cross-joined onto the update —
@@ -258,9 +257,9 @@ object GraphOps {
     * (the checkpoint's), not two. At 10 iterations that halves the
     * per-epoch job count; the 1-row side plans as a broadcast.
     */
-  private[graft] def step(nodes: DataFrame, outdeg: DataFrame,
-                          edgesDeg: DataFrame, ranks: DataFrame,
-                          n: Long, damping: Double): DataFrame = {
+  private def step(nodes: DataFrame, outdeg: DataFrame,
+                   edgesDeg: DataFrame, ranks: DataFrame,
+                   n: Long, damping: Double): DataFrame = {
     val dangling = ranks
       .join(outdeg, ranks("node") === outdeg("src"), "left_anti")
       .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))

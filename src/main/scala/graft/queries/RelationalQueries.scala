@@ -822,7 +822,7 @@ object RelationalQueries {
         |  GROUP BY h.l_returnflag, dev
         |)
         |SELECT d.l_returnflag, m.med AS median_qty, d.dev AS mad,
-        |  d.total AS n_rows
+        |  CAST(d.total AS BIGINT) AS n_rows
         |FROM (
         |  SELECT l_returnflag, dev, cnt,
         |    sum(cnt) OVER (PARTITION BY l_returnflag ORDER BY dev) AS cum,

@@ -236,13 +236,6 @@ object Snapshots {
     val rootDir = Paths.get(root)
     if (!Files.isDirectory(rootDir)) return 0L
     var removed = 0L
-    def rmTree(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val all = Files.walk(p)
-      try all.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      finally all.close()
-    }
     import scala.jdk.CollectionConverters._
     val families = Files.list(rootDir)
     try families.iterator().asScala
@@ -255,7 +248,7 @@ object Snapshots {
             val e = m.group(1).toInt
             val orphan = e > committed ||
               (Files.isDirectory(kid) && !Files.exists(kid.resolve("_SUCCESS")))
-            if (orphan) { rmTree(kid); removed += 1 }
+            if (orphan) { graft.SparkEnv.deleteRecursively(kid.toString); removed += 1 }
           }
         } finally kids.close()
       }

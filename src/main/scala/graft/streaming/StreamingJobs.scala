@@ -207,13 +207,9 @@ object StreamingJobs {
     * its per-batch state-store + offset-log fsyncs dominated these demos'
     * wall time. A real cluster would point this at fast local storage or a
     * DFS; the choice of directory is deployment config, not semantics.
+    * Deleted at JVM exit, like every [[graft.SparkEnv.scratchDir]].
     */
-  private def ckptDir(name: String): String = {
-    val base = graft.SparkEnv.localDir.getOrElse(System.getProperty("java.io.tmpdir"))
-    val dir = new java.io.File(base, s"ckpt-$name-${System.nanoTime()}")
-    dir.mkdirs()
-    dir.getAbsolutePath
-  }
+  private def ckptDir(name: String): String = graft.SparkEnv.scratchDir(s"ckpt-$name-")
 
   /** Per-host politeness as EXPLICIT streaming state: each incoming
     * frontier entry takes the host's next slot (FIFO within arrival order,

@@ -2,8 +2,10 @@
 """Local pre-flight for the driver's DuckDB correctness gate.
 
 Runs each oracle SQL from Verify's oracle_sql.json against DuckDB views over
-the same sf dir, and compares with the Spark result parquet: row count,
-column names (sorted), and a value hash over rows sorted by all columns.
+the same sf dir, and compares with the Spark result parquet: column names
+(sorted), each column's pandas dtype (DuckDB `.df()` against the parquet's
+`to_pandas()`), row count, and the rows sorted by all columns. A list-typed
+DuckDB column is a FAIL on its own: a pandas sort cannot order its values.
 Usage: validate_oracle.py <sfDir> <verifyOutDir>
 """
 import json, sys, math
@@ -42,7 +44,9 @@ def main(sf_dir, out_dir):
         try:
             res = con.execute(sql)
             d_cols = [c[0] for c in res.description]
+            d_lists = [c[0] for c in res.description if c[1] == "list"]
             d_rows = res.fetchall()
+            d_types = con.execute(sql).df().dtypes
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e}")
             n_bad += 1
@@ -52,14 +56,23 @@ def main(sf_dir, out_dir):
             s_cols = tbl.column_names
             s_rows = [tuple(tbl.column(c)[i].as_py() for c in s_cols)
                       for i in range(tbl.num_rows)]
+            s_types = tbl.to_pandas().dtypes
         except Exception as e:
             print(f"FAIL {name}: spark parquet error: {e}")
             n_bad += 1
             continue
         dc, dr = canon(d_cols, d_rows)
         sc, sr = canon(s_cols, s_rows)
+        dtype_diff = [f"{c}: spark={s_types[c]} duckdb={d_types[c]}"
+                      for c in dc if dc == sc and str(d_types[c]) != str(s_types[c])]
         if dc != sc:
             print(f"FAIL {name}: columns spark={sc} duckdb={dc}")
+            n_bad += 1
+        elif d_lists:
+            print(f"FAIL {name}: list-typed duckdb columns {sorted(d_lists)}")
+            n_bad += 1
+        elif dtype_diff:
+            print(f"FAIL {name}: dtypes differ: {'; '.join(dtype_diff)}")
             n_bad += 1
         elif len(dr) != len(sr):
             print(f"FAIL {name}: rows spark={len(sr)} duckdb={len(dr)}")
