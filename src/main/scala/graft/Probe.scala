@@ -18,9 +18,11 @@ import scala.jdk.CollectionConverters._
   * separates from execution cost; each run prints its wall, row, job and
   * task counts and the call sites with the most job time, so fixed
   * overhead (many tiny actions) separates from real work.
-  * `--plans`: writes each query's `explain("formatted")` to
-  * `<outDir>/<query>_<suffix>.txt` (the plan evidence under plans/rNN/)
-  * with its Exchange/ReusedExchange counts, without running it.
+  * `--plans`: runs each query once, then writes its final (adaptive)
+  * plan's `explain("formatted")` to `<outDir>/<query>_<suffix>.txt` (the
+  * plan evidence under plans/rNN/) and prints the final plan's
+  * Exchange/ReusedExchange counts. Before a run an adaptive plan holds
+  * only its initial form, in which no exchange is reused yet.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -39,9 +41,11 @@ object Probe {
       case Some((outDir, suffix)) =>
         Files.createDirectories(Paths.get(outDir))
         queries.foreach { case (name, fn) =>
-          val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+          val df = fn(spark, sfDir)
+          df.collect()
           val file = Paths.get(outDir, s"${name}_$suffix.txt")
-          Files.writeString(file, plan)
+          Files.writeString(file, df.queryExecution.explainString(FormattedMode))
+          val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
           println(s"[probe] $name -> $file (Exchange=${"Exchange".r.findAllIn(plan).length} " +
             s"Reused=${"ReusedExchange".r.findAllIn(plan).length})")
         }

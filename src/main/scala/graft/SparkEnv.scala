@@ -37,20 +37,24 @@ object SparkEnv {
     * directory choice is deployment config, not semantics. The dir is
     * deleted when the JVM exits.
     */
-  def scratchDir(prefix: String): String = {
-    val dir = localDir match {
-      case Some(d) => Files.createTempDirectory(Paths.get(d), prefix).toString
-      case None => Files.createTempDirectory(prefix).toString
-    }
-    deleteAtExit
-    scratchDirs.add(dir)
+  def scratchDir(prefix: String): String = deleteAtExit(localDir match {
+    case Some(d) => Files.createTempDirectory(Paths.get(d), prefix).toString
+    case None => Files.createTempDirectory(prefix).toString
+  })
+
+  /** Registers `dir` to be deleted, with everything under it, when the
+    * JVM exits; returns `dir`.
+    */
+  private[graft] def deleteAtExit(dir: String): String = {
+    exitHook
+    exitDirs.add(dir)
     dir
   }
 
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
-  private lazy val deleteAtExit: Unit = {
-    sys.addShutdownHook(scratchDirs.forEach { d =>
+  private lazy val exitHook: Unit = {
+    sys.addShutdownHook(exitDirs.forEach { d =>
       try deleteRecursively(d)
       catch { case NonFatal(e) => System.err.println(s"[graft] cannot delete $d: $e") }
     })
@@ -106,6 +110,22 @@ object SparkEnv {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs a loop `body` whose tables hold about `rows` rows in
+    * [[withConf]] scope: shuffle partitions sized to the data,
+    * max(1, min(session setting, rows / rowsPerPartition + 1)), and AQE
+    * off. The width is never raised above the session setting. The loops
+    * (crawl epochs, graph iterations) evaluate each step eagerly on
+    * already-sized shuffles, so AQE's per-exchange stage materialization
+    * only multiplies their job count.
+    */
+  def withLoopConf[T](spark: SparkSession, rows: Long, rowsPerPartition: Long)(body: => T): T = {
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val parts = math.max(1L, math.min(sessionParts, rows / rowsPerPartition + 1L))
+    withConf(spark,
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.adaptive.enabled" -> "false")(body)
   }
 
   def applyCommon(b: SparkSession.Builder): SparkSession.Builder = {

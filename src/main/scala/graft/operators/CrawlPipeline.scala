@@ -353,9 +353,14 @@ object CrawlPipeline {
       byteBudgetPerHost, recrawl, recrawlPolicy, revalidate, rankOrdered, sitemaps,
       adaptivePacing, aging, agingBoost, robotsFlipEpoch, robotsAvailability, payloadValidation,
       retryFailures, retryMax)
-    graft.SparkEnv.withConf(spark,
-      "spark.sql.shuffle.partitions" -> c.loopPartitions,
-      "spark.sql.adaptive.enabled" -> "false")(
+    // Shuffles sized to the FRONTIER: an epoch's tables are bounded by
+    // seeds+outlinks+recrawl (~seedsPerEpoch x (1+fanout) rows); AQE on
+    // multiplied each demo's job count ~3x. Values are partitioning-
+    // invariant (politeness windows and budgets are fully ordered; fetch
+    // pids are hash-derived at a pinned width).
+    graft.SparkEnv.withLoopConf(spark,
+      rows = seedsPerEpoch.toLong * (1L + math.max(0, outlinkFanout)),
+      rowsPerPartition = 65536L)(
       (Snapshots.latestCommittedEpoch(root) + 1 to untilEpoch).map { epoch =>
         val cfg = cfg0.copy(epoch = epoch, epochT0Ms = cfg0.epochT0Ms + epoch * 3600000L)
         val seen = SeenStore.load(spark, root)
@@ -393,23 +398,6 @@ object CrawlPipeline {
       robotsAvailability: Boolean, payloadValidation: Boolean, retryFailures: Boolean,
       retryMax: Int) {
     import spark.implicits._
-
-    /** Size the epoch loop's shuffles to the FRONTIER, not the session
-      * default; [[run]] also drops AQE inside the loop (the GraphOps loop
-      * discipline): an epoch's tables are bounded by seeds+outlinks+recrawl
-      * (~seedsPerEpoch x (1+fanout) rows), every epoch action is evaluated
-      * eagerly in this scope, and AQE's per-exchange stage materialization
-      * multiplied each demo's job count ~3x for nothing it could improve at
-      * these sizes. Values are partitioning-invariant (politeness windows
-      * and budgets are fully ordered; fetch pids are hash-derived at a
-      * pinned width). Partitions are never raised above the session
-      * setting, so a production-sized frontier keeps full width.
-      */
-    def loopPartitions: String = {
-      val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-      val epochRows = seedsPerEpoch.toLong * (1L + math.max(0, outlinkFanout))
-      math.max(1L, math.min(sessionParts, epochRows / 65536L + 1L)).toString
-    }
 
     /** Seeds: Gen seeds, sitemap discoveries, the aged carryover and the
       * previous schedule's outlinks.

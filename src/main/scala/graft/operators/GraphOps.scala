@@ -126,13 +126,8 @@ object GraphOps {
     * counts), so both are purely cost knobs. `body` must return
     * materialized results: the conf is restored when it exits.
     */
-  private def withGraphConf[T](spark: SparkSession, graphSize: Long)(body: => T): T = {
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val parts = math.max(1L, math.min(sessionParts, graphSize / 250000L + 1L))
-    graft.SparkEnv.withConf(spark,
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      "spark.sql.adaptive.enabled" -> "false")(body)
-  }
+  private def withGraphConf[T](spark: SparkSession, graphSize: Long)(body: => T): T =
+    graft.SparkEnv.withLoopConf(spark, graphSize, rowsPerPartition = 250000L)(body)
 
   def pageRankFrom(spark: SparkSession, edges: DataFrame,
                    init: Option[DataFrame],

@@ -13,8 +13,8 @@ final case class RetryVerdict(image_id: String, last_epoch: Int,
     last_status: String, n_transient: Long, due: Boolean)
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
 /** Structured Streaming skin (SURVEY.md §2.10 phase-2): the same epoch
   * semantics expressed over streams. Batch remains the production path
@@ -33,19 +33,11 @@ object StreamingJobs {
     * mode memory sink is O(result) per trigger — 22% of the round-1 bench).
     */
   def windowedEventCounts(spark: SparkSession, dir: String): DataFrame =
-    withFewStatePartitions(spark) { windowedEventCountsImpl(spark, dir) }
-
-  private def windowedEventCountsImpl(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val name = s"stream_win_${math.abs(dir.hashCode)}"
-    // FileStreamSource needs a directory; the sf dirs hold one file per
-    // table, so stream the dir with a glob pinned to the events table.
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events*.parquet")
-      .parquet(dir)
-    runToTable(hourlyAgg(stream), ckptDir(name), name)
-  }
+    withFewStatePartitions(spark) {
+      val name = s"stream_win_${math.abs(dir.hashCode)}"
+      memoryTable(hourlyAgg(eventStream(spark, dir)), OutputMode.Complete(), name,
+        ckptDir(name))(drain)
+    }
 
   /** The tumbling agg body, shared verbatim by the streaming paths and
     * the batch-parity mirrors (watermark is a no-op on bounded input).
@@ -60,18 +52,6 @@ object StreamingJobs {
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
         col("event_type"), col("n"), col("total"))
 
-  private def runToTable(agg: DataFrame, ckpt: String, name: String): DataFrame = {
-    val spark = agg.sparkSession
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", ckpt)
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
-
   /** q18's windowed agg with an EXPLICIT checkpoint over a dedicated
     * source directory — the restartable form. A stopped query restarted
     * with the same checkpoint resumes from the offset log + state store:
@@ -85,9 +65,8 @@ object StreamingJobs {
   def windowedEventCountsFrom(spark: SparkSession, srcDir: String,
                               ckpt: String, name: String): DataFrame =
     withFewStatePartitions(spark) {
-      val batchSchema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(batchSchema).parquet(srcDir)
-      runToTable(hourlyAgg(stream), ckpt, name)
+      memoryTable(hourlyAgg(parquetStream(spark, srcDir, srcDir, "*")), OutputMode.Complete(),
+        name, ckpt)(drain)
     }
 
   /** Streaming SESSION windows (c24 — the streaming form of q36):
@@ -100,33 +79,19 @@ object StreamingJobs {
     * parity transitively (pinned in StreamingSpec).
     */
   def sessionizedEvents(spark: SparkSession, dir: String, gapMin: Int = 10): DataFrame =
-    withFewStatePartitions(spark) { sessionizedEventsImpl(spark, dir, gapMin) }
-
-  private def sessionizedEventsImpl(spark: SparkSession, dir: String, gapMin: Int): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val name = s"stream_sess_${math.abs(dir.hashCode)}"
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events*.parquet")
-      .parquet(dir)
-    val agg = stream
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"), session_window(col("ts"), s"$gapMin minutes"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
-      .select(col("user_id"),
-        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
-        col("n"), col("total"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", ckptDir(name))
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
+    withFewStatePartitions(spark) {
+      val name = s"stream_sess_${math.abs(dir.hashCode)}"
+      val agg = eventStream(spark, dir)
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"), s"$gapMin minutes"))
+        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
+        .select(col("user_id"),
+          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+          date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
+          col("n"), col("total"))
+      memoryTable(agg, OutputMode.Complete(), name, ckptDir(name))(drain)
+    }
 
   /** Stream-STREAM interval join (q39): click->purchase attribution —
     * purchases joined to any click by the same user within the preceding
@@ -141,26 +106,14 @@ object StreamingJobs {
     * doubles bit-for-bit.
     */
   def streamStreamAttribution(spark: SparkSession, dir: String): DataFrame =
-    withFewStatePartitions(spark) { streamStreamAttributionImpl(spark, dir) }
-
-  private def streamStreamAttributionImpl(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val name = s"stream_join_${math.abs(dir.hashCode)}"
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events*.parquet")
-      .parquet(dir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val joined = attributionJoin(stream)
-    val q = joined.writeStream
-      .outputMode(OutputMode.Append()) // stream-stream joins are append-only
-      .option("checkpointLocation", ckptDir(name))
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("click_id", "purchase_id")
-  }
+    withFewStatePartitions(spark) {
+      val name = s"stream_join_${math.abs(dir.hashCode)}"
+      val joined = attributionJoin(
+        eventStream(spark, dir).withColumn("ts", col("ts").cast("timestamp")))
+      // stream-stream joins are append-only
+      memoryTable(joined, OutputMode.Append(), name, ckptDir(name))(drain)
+        .orderBy("click_id", "purchase_id")
+    }
 
   /** The join itself, shared verbatim by the streaming path and the
     * batch-parity mirror in StreamingSpec (same plan, bounded input).
@@ -210,6 +163,73 @@ object StreamingJobs {
     * Deleted at JVM exit, like every [[graft.SparkEnv.scratchDir]].
     */
   private def ckptDir(name: String): String = graft.SparkEnv.scratchDir(s"ckpt-$name-")
+
+  /** The parquet files in `dir` whose names match `files`, consumed as a
+    * file stream with the schema of the parquet at `schemaOf`.
+    */
+  private def parquetStream(spark: SparkSession, dir: String, schemaOf: String,
+                            files: String): DataFrame =
+    spark.readStream
+      .schema(spark.read.parquet(schemaOf).schema)
+      .option("pathGlobFilter", files)
+      .parquet(dir)
+
+  /** The events table of the sf dir `dir` as a file stream.
+    * FileStreamSource needs a directory; the sf dirs hold one file per
+    * table, so stream the dir with a glob pinned to the events table.
+    */
+  private def eventStream(spark: SparkSession, dir: String): DataFrame =
+    parquetStream(spark, dir, s"$dir/events.parquet", "events*.parquet")
+
+  /** Starts `out` into the in-memory table `name`, checkpointed under
+    * `ckpt`, hands the running query to `drive` (which feeds, drains and
+    * stops it) and returns the table.
+    */
+  private def memoryTable(out: Dataset[_], mode: OutputMode, name: String,
+                          ckpt: String)(drive: StreamingQuery => Unit): DataFrame = {
+    drive(out.writeStream.outputMode(mode)
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName(name).start())
+    out.sparkSession.table(name)
+  }
+
+  /** Processes everything a file-sourced query's input holds, then stops it. */
+  private def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** A MemoryStream input (`ds`) that [[run]] feeds to its query one
+    * micro-batch per wave.
+    */
+  private final class Waves[A: Encoder](spark: SparkSession) {
+    private val stream = MemoryStream[A](spark)
+    def ds: Dataset[A] = stream.toDS()
+
+    /** Adds each wave and processes it before adding the next, so every
+      * wave is its own micro-batch (its own epoch in an [[epochSink]]),
+      * then stops `q`.
+      */
+    def run(waves: Seq[Seq[A]])(q: StreamingQuery): Unit =
+      try waves.foreach { w => stream.addData(w); q.processAllAvailable() }
+      finally q.stop()
+  }
+
+  /** `xs` as three waves cut at exact thirds (the last takes the rest). */
+  private def thirds[A](xs: Array[A]): Seq[Seq[A]] = {
+    val third = xs.length / 3
+    Seq(xs.take(third), xs.slice(third, 2 * third), xs.drop(2 * third)).map(_.toIndexedSeq)
+  }
+
+  /** Starts `in` into a foreachBatch sink that runs `body` on micro-batch
+    * `batchId` as epoch `startEpoch + batchId`, checkpointed under
+    * `ckptDir(name_startEpoch)`.
+    */
+  private def epochSink(in: DataFrame, name: String, startEpoch: Int)(
+      body: (DataFrame, Int) => Unit): StreamingQuery =
+    in.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", ckptDir(s"${name}_$startEpoch"))
+      .foreachBatch { (batch: DataFrame, batchId: Long) => body(batch, startEpoch + batchId.toInt) }
+      .start()
 
   /** Per-host politeness as EXPLICIT streaming state: each incoming
     * frontier entry takes the host's next slot (FIFO within arrival order,
@@ -299,43 +319,28 @@ object StreamingJobs {
     * asserts first-arrival semantics against a single-threaded mirror.
     */
   def dedupeDemo(spark: SparkSession, n: Int = 3000): DataFrame =
-    withFewStatePartitions(spark) { dedupeDemoImpl(spark, n) }
-
-  private def dedupeDemoImpl(spark: SparkSession, n: Int): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val feed: Array[(Long, String, java.sql.Timestamp)] =
-      graft.sources.Gen.seedsLocal(n).zipWithIndex.flatMap { case (s, i) =>
-        val uc = graft.functions.UrlKit.canonicalize(s.url)
-        if (uc == null || uc.isEmpty) None
-        else Some((graft.operators.CrawlOracle.xxhash64(uc),
-          graft.functions.UrlKit.hostOf(uc),
-          new java.sql.Timestamp(1704067200000L + i * 1000L)))
-      }.toArray
-    val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
-    // horizon wider than the feed's 50-min event-time span: no state
-    // expires mid-demo, so the output is exactly global first-arrival and
-    // the single-threaded mirror needs no watermark modeling (expiry
-    // timing is engine-internal; the BOUND is what production relies on)
-    val out = streamingDedupe(stream.toDS(), horizon = "2 hours")
-    val name = s"stream_dedupe_$n"
-    val q = out.writeStream.outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(name))
-      .format("memory").queryName(name).start()
-    try {
-      val third = feed.length / 3
-      stream.addData(feed.take(third).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(feed.slice(third, 2 * third).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(feed.drop(2 * third).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name)
-      .select(col("url_hash"), col("host"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("first_ts"))
-      .orderBy("url_hash")
-  }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val feed: Array[(Long, String, java.sql.Timestamp)] =
+        graft.sources.Gen.seedsLocal(n).zipWithIndex.flatMap { case (s, i) =>
+          val uc = graft.functions.UrlKit.canonicalize(s.url)
+          if (uc == null || uc.isEmpty) None
+          else Some((graft.operators.CrawlOracle.xxhash64(uc),
+            graft.functions.UrlKit.hostOf(uc),
+            new java.sql.Timestamp(1704067200000L + i * 1000L)))
+        }.toArray
+      val in = new Waves[(Long, String, java.sql.Timestamp)](spark)
+      val name = s"stream_dedupe_$n"
+      // horizon wider than the feed's 50-min event-time span: no state
+      // expires mid-demo, so the output is exactly global first-arrival and
+      // the single-threaded mirror needs no watermark modeling (expiry
+      // timing is engine-internal; the BOUND is what production relies on)
+      memoryTable(streamingDedupe(in.ds, horizon = "2 hours"), OutputMode.Append(), name,
+        ckptDir(name))(in.run(thirds(feed)))
+        .select(col("url_hash"), col("host"),
+          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("first_ts"))
+        .orderBy("url_hash")
+    }
 
   /** Driver-contract wrapper: run statefulPoliteness over a MemoryStream
     * of synthetic frontier entries split into 3 micro-batches; returns the
@@ -343,46 +348,32 @@ object StreamingJobs {
     * invariants and cross-batch state carry-over).
     */
   def politenessDemo(spark: SparkSession, n: Int = 3000, budget: Int = 40): DataFrame =
-    withFewStatePartitions(spark) { politenessDemoImpl(spark, n, budget) }
-
-  private def politenessDemoImpl(spark: SparkSession, n: Int, budget: Int): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // MemoryStream input is built with the LOCAL generator + kernels (the
-    // same pure functions the distributed plan codegens), not by collecting
-    // a Spark job to the driver — the stream harness feeds test data, it
-    // must not pull a distributed frontier through the driver.
-    val frontier: Array[(String, Long, Double)] = {
-      val canon = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      graft.sources.Gen.seedsLocal(n).foreach { s =>
-        val uc = graft.functions.UrlKit.canonicalize(s.url)
-        if (uc != null && uc.nonEmpty)
-          canon.updateWith(uc) {
-            case Some(p) => Some(math.max(p, s.priority))
-            case None    => Some(s.priority)
-          }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      // MemoryStream input is built with the LOCAL generator + kernels (the
+      // same pure functions the distributed plan codegens), not by collecting
+      // a Spark job to the driver — the stream harness feeds test data, it
+      // must not pull a distributed frontier through the driver.
+      val frontier: Array[(String, Long, Double)] = {
+        val canon = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+        graft.sources.Gen.seedsLocal(n).foreach { s =>
+          val uc = graft.functions.UrlKit.canonicalize(s.url)
+          if (uc != null && uc.nonEmpty)
+            canon.updateWith(uc) {
+              case Some(p) => Some(math.max(p, s.priority))
+              case None    => Some(s.priority)
+            }
+        }
+        canon.iterator.map { case (uc, p) =>
+          (graft.functions.UrlKit.hostOf(uc), graft.operators.CrawlOracle.xxhash64(uc), p)
+        }.toArray.sortBy(e => (e._1, e._2))
       }
-      canon.iterator.map { case (uc, p) =>
-        (graft.functions.UrlKit.hostOf(uc), graft.operators.CrawlOracle.xxhash64(uc), p)
-      }.toArray.sortBy(e => (e._1, e._2))
+      val in = new Waves[(String, Long, Double)](spark)
+      val out = statefulPoliteness(in.ds, budget, delayMs = 200L, t0Ms = 1704067200000L)
+      val name = s"stream_polite_$n"
+      memoryTable(out, OutputMode.Append(), name, ckptDir(name))(in.run(thirds(frontier)))
+        .orderBy("host", "slot")
     }
-    val stream = MemoryStream[(String, Long, Double)]
-    val out = statefulPoliteness(stream.toDS(), budget, delayMs = 200L, t0Ms = 1704067200000L)
-    val name = s"stream_polite_$n"
-    val q = out.writeStream.outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(name))
-      .format("memory").queryName(name).start()
-    try {
-      val third = frontier.length / 3
-      stream.addData(frontier.take(third).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(frontier.slice(third, 2 * third).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(frontier.drop(2 * third).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).orderBy("host", "slot")
-  }
 
   /** c84 — the c83 retry ledger as LIVE keyed streaming state: fetch
     * outcomes arrive as a stream, mapGroupsWithState keeps each URL's
@@ -426,7 +417,22 @@ object StreamingJobs {
     */
   def retryLedgerDemo(spark: SparkSession, n: Int = 3000,
                       epochs: Int = 2, maxRetries: Int = 2): DataFrame =
-    withFewStatePartitions(spark) { retryLedgerDemoImpl(spark, n, epochs, maxRetries) }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val in = new Waves[(String, String, Int)](spark)
+      val name = s"stream_retry_$n"
+      val ledger = memoryTable(streamingRetryLedger(in.ds, maxRetries), OutputMode.Update(), name,
+        ckptDir(name))(in.run(retryOutcomeWaves(n, epochs).map(_.toIndexedSeq)))
+      // final verdict per URL = the row from its LAST update (epochs are
+      // monotone, so max last_epoch picks it deterministically)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("image_id").orderBy(col("last_epoch").desc)
+      ledger
+        .withColumn("rn", row_number().over(w))
+        .where(col("rn") === 1 && col("n_transient") >= 1)
+        .drop("rn")
+        .orderBy("image_id")
+    }
 
   private[graft] def retryOutcomeWaves(
       n: Int, epochs: Int): Seq[Array[(String, String, Int)]] = {
@@ -453,33 +459,6 @@ object StreamingJobs {
     }
   }
 
-  private def retryLedgerDemoImpl(spark: SparkSession, n: Int,
-                                  epochs: Int, maxRetries: Int): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stream = MemoryStream[(String, String, Int)]
-    val out = streamingRetryLedger(stream.toDS(), maxRetries)
-    val name = s"stream_retry_$n"
-    val q = out.writeStream.outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckptDir(name))
-      .format("memory").queryName(name).start()
-    try {
-      retryOutcomeWaves(n, epochs).foreach { wave =>
-        stream.addData(wave.toIndexedSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // final verdict per URL = the row from its LAST update (epochs are
-    // monotone, so max last_epoch picks it deterministically)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("image_id").orderBy(col("last_epoch").desc)
-    spark.table(name)
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
-      .where(col("rn") === 1 && col("n_transient") >= 1)
-      .drop("rn")
-      .orderBy("image_id")
-  }
-
   /** Streaming copy-detection — the ONLINE form of the news-diff
     * "is this article a copy of an earlier one" check, wired through the
     * persisted similarity index (SimIndex): every micro-batch of incoming
@@ -495,18 +474,12 @@ object StreamingJobs {
   def streamingCopyDetect(
       docs: Dataset[(Long, String)],
       root: String,
-      startEpoch: Int): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.toDF("doc_id", "text").writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(s"copydetect_$startEpoch"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val epoch = startEpoch + batchId.toInt
-        graft.operators.SimIndex.writeShingleIndex(batch, root, epoch)
-        graft.operators.SimIndex.crossEpochNearDups(spark, root, epoch)
-          .write.mode("overwrite").parquet(s"$root/copy_pairs/epoch=$epoch")
-      }
-      .start()
+      startEpoch: Int): StreamingQuery =
+    epochSink(docs.toDF("doc_id", "text"), "copydetect", startEpoch) { (batch, epoch) =>
+      graft.operators.SimIndex.writeShingleIndex(batch, root, epoch)
+      graft.operators.SimIndex.crossEpochNearDups(batch.sparkSession, root, epoch)
+        .write.mode("overwrite").parquet(s"$root/copy_pairs/epoch=$epoch")
+    }
 
   /** Streaming EXACT copy-detection through the persisted suffix index —
     * [[streamingCopyDetect]]'s window-granular sibling (that one flags
@@ -521,22 +494,17 @@ object StreamingJobs {
   def streamingExactCopyDetect(
       docs: Dataset[(Long, String)],
       root: String,
-      startEpoch: Int): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.toDF("doc_id", "text").writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(s"exactcopy_$startEpoch"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val epoch = startEpoch + batchId.toInt
-        batch.write.mode("overwrite").parquet(s"$root/docs/epoch=$epoch")
-        val committed = spark.read.parquet(s"$root/docs/epoch=$epoch")
-        graft.operators.SimIndex.writeSuffixIndex(committed, root, epoch)
-        val docsUpTo = spark.read.parquet(s"$root/docs")
-          .where(col("epoch") <= epoch).select("doc_id", "text")
-        graft.operators.SimIndex.crossEpochDupWindows(spark, root, epoch, docsUpTo)
-          .write.mode("overwrite").parquet(s"$root/exact_copy/epoch=$epoch")
-      }
-      .start()
+      startEpoch: Int): StreamingQuery =
+    epochSink(docs.toDF("doc_id", "text"), "exactcopy", startEpoch) { (batch, epoch) =>
+      val spark = batch.sparkSession
+      batch.write.mode("overwrite").parquet(s"$root/docs/epoch=$epoch")
+      val committed = spark.read.parquet(s"$root/docs/epoch=$epoch")
+      graft.operators.SimIndex.writeSuffixIndex(committed, root, epoch)
+      val docsUpTo = spark.read.parquet(s"$root/docs")
+        .where(col("epoch") <= epoch).select("doc_id", "text")
+      graft.operators.SimIndex.crossEpochDupWindows(spark, root, epoch, docsUpTo)
+        .write.mode("overwrite").parquet(s"$root/exact_copy/epoch=$epoch")
+    }
 
   /** Driver-contract demo (c58): epoch 0 = the spanCorpus base docs,
     * indexed batch-side; the stream delivers fresh docs then the planted
@@ -545,36 +513,28 @@ object StreamingJobs {
     * StreamingSpec.
     */
   def exactCopyDetectDemo(spark: SparkSession, dir: String): DataFrame =
-    withFewStatePartitions(spark) { exactCopyDetectDemoImpl(spark, dir) }
-
-  private def exactCopyDetectDemoImpl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.SparkEnv.scratchDir("graft-c58")
-    val corpus = graft.operators.TextOps.spanCorpus(spark, dir)
-    val base = corpus.where(col("doc_id") < 2000000L)
-    val e0 = base.where(pmod(col("doc_id"), lit(2)) === 0)
-    e0.write.mode("overwrite").parquet(s"$root/docs/epoch=0")
-    graft.operators.SimIndex.writeSuffixIndex(
-      spark.read.parquet(s"$root/docs/epoch=0"), root, 0)
-    val fresh = base.where(pmod(col("doc_id"), lit(2)) === 1)
-      .as[(Long, String)].collect()
-    val plants = corpus.where(col("doc_id") >= 2000000L)
-      .as[(Long, String)].collect()
-    val stream = MemoryStream[(Long, String)]
-    val q = streamingExactCopyDetect(stream.toDS(), root, startEpoch = 1)
-    try {
-      stream.addData(fresh.toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(plants.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.read.parquet(s"$root/exact_copy")
-      .groupBy(col("doc_id"), col("epoch").as("found_in_batch"))
-      .agg(count(lit(1)).cast("long").as("n_dup"),
-        min("pos").cast("long").as("first_pos"))
-      .orderBy("doc_id", "found_in_batch")
-  }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val root = graft.SparkEnv.scratchDir("graft-c58")
+      val corpus = graft.operators.TextOps.spanCorpus(spark, dir)
+      val base = corpus.where(col("doc_id") < 2000000L)
+      val e0 = base.where(pmod(col("doc_id"), lit(2)) === 0)
+      e0.write.mode("overwrite").parquet(s"$root/docs/epoch=0")
+      graft.operators.SimIndex.writeSuffixIndex(
+        spark.read.parquet(s"$root/docs/epoch=0"), root, 0)
+      val fresh = base.where(pmod(col("doc_id"), lit(2)) === 1)
+        .as[(Long, String)].collect()
+      val plants = corpus.where(col("doc_id") >= 2000000L)
+        .as[(Long, String)].collect()
+      val in = new Waves[(Long, String)](spark)
+      in.run(Seq(fresh.toIndexedSeq, plants.toIndexedSeq))(
+        streamingExactCopyDetect(in.ds, root, startEpoch = 1))
+      spark.read.parquet(s"$root/exact_copy")
+        .groupBy(col("doc_id"), col("epoch").as("found_in_batch"))
+        .agg(count(lit(1)).cast("long").as("n_dup"),
+          min("pos").cast("long").as("first_pos"))
+        .orderBy("doc_id", "found_in_batch")
+    }
 
   /** Streaming IMAGE copy-detection — [[streamingCopyDetect]]'s twin on
     * the payload the north_rule is about: each micro-batch of
@@ -588,25 +548,20 @@ object StreamingJobs {
       images: Dataset[(String, Long)],
       root: String,
       startEpoch: Int,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    images.toDF("image_id", "phash").writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(s"imgcopydetect_$startEpoch"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val epoch = startEpoch + batchId.toInt
-        graft.operators.SimIndex.writePhashIndex(batch, root, epoch)
-        graft.operators.SimIndex.crossEpochNearDupPhash(spark, root, epoch)
-          .write.mode("overwrite").parquet(s"$root/image_copy_pairs/epoch=$epoch")
-        // online index maintenance: a stream writes one mini-epoch per
-        // micro-batch, so a long run would pay an O(batches) listing per
-        // probe — fold the block dirs periodically (crash-safe + idempotent
-        // like the probe itself; the probed pairs are unchanged either way,
-        // pinned by the stream==recompute golden running with cadence 1)
-        if (compactEvery > 0 && epoch % compactEvery == 0)
-          graft.operators.SimIndex.compactPhashIndex(spark, root, epoch)
-      }
-      .start()
+      compactEvery: Int = 0): StreamingQuery =
+    epochSink(images.toDF("image_id", "phash"), "imgcopydetect", startEpoch) { (batch, epoch) =>
+      val spark = batch.sparkSession
+      graft.operators.SimIndex.writePhashIndex(batch, root, epoch)
+      graft.operators.SimIndex.crossEpochNearDupPhash(spark, root, epoch)
+        .write.mode("overwrite").parquet(s"$root/image_copy_pairs/epoch=$epoch")
+      // online index maintenance: a stream writes one mini-epoch per
+      // micro-batch, so a long run would pay an O(batches) listing per
+      // probe — fold the block dirs periodically (crash-safe + idempotent
+      // like the probe itself; the probed pairs are unchanged either way,
+      // pinned by the stream==recompute golden running with cadence 1)
+      if (compactEvery > 0 && epoch % compactEvery == 0)
+        graft.operators.SimIndex.compactPhashIndex(spark, root, epoch)
+    }
 
   /** Driver-contract demo (c21): epoch 0 images indexed batch-side; the
     * stream delivers new images in two micro-batches, the second carrying
@@ -615,36 +570,27 @@ object StreamingJobs {
     * pinned in StreamingSpec.
     */
   def imageCopyDetectDemo(spark: SparkSession): DataFrame =
-    withFewStatePartitions(spark) { imageCopyDetectDemoImpl(spark) }
-
-  private def imageCopyDetectDemoImpl(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.SparkEnv.scratchDir("graft-c21")
-    def img(i: Int): (String, Long) =
-      (s"http://h${i % 7}.example/img-$i",
-        graft.functions.ImageKit.mix64(i.toLong * 2654435761L + 13L))
-    val e0 = (0 until 60).map(img)
-    graft.operators.SimIndex.writePhashIndex(
-      e0.toDF("image_id", "phash"), root, 0)
-    val fresh = (60 until 100).map(img)
-    val copies = e0.take(12).map { case (id, p) => (s"$id?utm=copy", p) }
-    val stream = MemoryStream[(String, Long)]
-    // cadence 1: batch 2's probe reads compact(1) + tail(2) — the
-    // compacted read path is exercised INSIDE the golden equality
-    val q = streamingImageCopyDetect(stream.toDS(), root, startEpoch = 1,
-      compactEvery = 1)
-    try {
-      stream.addData(fresh)
-      q.processAllAvailable()
-      stream.addData(copies)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.read.parquet(s"$root/image_copy_pairs")
-      .select(col("image_a"), col("image_b"), col("img_a"), col("img_b"),
-        col("hamming"), col("epoch").as("found_in_batch"))
-      .orderBy("image_a", "image_b")
-  }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val root = graft.SparkEnv.scratchDir("graft-c21")
+      def img(i: Int): (String, Long) =
+        (s"http://h${i % 7}.example/img-$i",
+          graft.functions.ImageKit.mix64(i.toLong * 2654435761L + 13L))
+      val e0 = (0 until 60).map(img)
+      graft.operators.SimIndex.writePhashIndex(
+        e0.toDF("image_id", "phash"), root, 0)
+      val fresh = (60 until 100).map(img)
+      val copies = e0.take(12).map { case (id, p) => (s"$id?utm=copy", p) }
+      val in = new Waves[(String, Long)](spark)
+      // cadence 1: batch 2's probe reads compact(1) + tail(2) — the
+      // compacted read path is exercised INSIDE the golden equality
+      in.run(Seq(fresh, copies))(
+        streamingImageCopyDetect(in.ds, root, startEpoch = 1, compactEvery = 1))
+      spark.read.parquet(s"$root/image_copy_pairs")
+        .select(col("image_a"), col("image_b"), col("img_a"), col("img_b"),
+          col("hamming"), col("epoch").as("found_in_batch"))
+        .orderBy("image_a", "image_b")
+    }
 
   /** Streaming DUST rule mining (c31): each micro-batch of fetched
     * (host, url, content_hash) rows appends its observation partials and
@@ -656,15 +602,9 @@ object StreamingJobs {
   def streamingDustMine(
       logs: Dataset[(String, String, String)],
       root: String,
-      startEpoch: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    logs.toDF("host", "url", "content_hash").writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(s"dust_$startEpoch"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.DustOps.writeDustEpoch(batch, root,
-          startEpoch + batchId.toInt)
-      }
-      .start()
+      startEpoch: Int = 0): StreamingQuery =
+    epochSink(logs.toDF("host", "url", "content_hash"), "dust", startEpoch)(
+      graft.operators.DustOps.writeDustEpoch(_, root, _))
 
   /** Driver-contract demo (c31): the synthetic fetched-URL log arrives
     * over three micro-batches in an ADVERSARIAL slicing (url-hash based,
@@ -673,28 +613,20 @@ object StreamingJobs {
     * DuckDB oracle (c28's SQL, shared verbatim) checks.
     */
   def dustMineDemo(spark: SparkSession, dir: String): DataFrame =
-    withFewStatePartitions(spark) { dustMineDemoImpl(spark, dir) }
-
-  private def dustMineDemoImpl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.SparkEnv.scratchDir("graft-c31")
-    val rows = graft.operators.DustOps.syntheticUrlLog(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    // deterministic 3-way slicing on the URL text, uncorrelated with the
-    // row kind — bare and alias forms of one page usually land in
-    // DIFFERENT batches, which is exactly the case the delta join covers
-    def slice(u: String): Int = math.floorMod(u.hashCode, 3)
-    val stream = MemoryStream[(String, String, String)]
-    val q = streamingDustMine(stream.toDS(), root)
-    try {
-      (0 until 3).foreach { k =>
-        stream.addData(rows.filter(r => slice(r._2) == k).toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    graft.operators.DustOps.dustRulesFrom(spark, root, uptoEpoch = 2)
-  }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val root = graft.SparkEnv.scratchDir("graft-c31")
+      val rows = graft.operators.DustOps.syntheticUrlLog(spark, dir)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      // deterministic 3-way slicing on the URL text, uncorrelated with the
+      // row kind — bare and alias forms of one page usually land in
+      // DIFFERENT batches, which is exactly the case the delta join covers
+      def slice(u: String): Int = math.floorMod(u.hashCode, 3)
+      val in = new Waves[(String, String, String)](spark)
+      in.run((0 until 3).map(k => rows.filter(r => slice(r._2) == k).toSeq))(
+        streamingDustMine(in.ds, root))
+      graft.operators.DustOps.dustRulesFrom(spark, root, uptoEpoch = 2)
+    }
 
   /** Streaming adaptive pacing (c32): each micro-batch of (host,
     * latency_ms) fetch observations appends an exact-mergeable histogram
@@ -706,15 +638,9 @@ object StreamingJobs {
   def streamingPacing(
       latencies: Dataset[(String, Long)],
       root: String,
-      startEpoch: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    latencies.toDF("host", "latency_ms").writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(s"pacing_$startEpoch"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.PacingOps.writeLatencyEpoch(batch, root,
-          startEpoch + batchId.toInt)
-      }
-      .start()
+      startEpoch: Int = 0): StreamingQuery =
+    epochSink(latencies.toDF("host", "latency_ms"), "pacing", startEpoch)(
+      graft.operators.PacingOps.writeLatencyEpoch(_, root, _))
 
   /** Driver-contract demo (c32): the synthetic latency log arrives over
     * three url-hash-sliced micro-batches; the final store-derived delay
@@ -722,25 +648,17 @@ object StreamingJobs {
     * shared verbatim).
     */
   def pacingMineDemo(spark: SparkSession, dir: String): DataFrame =
-    withFewStatePartitions(spark) { pacingMineDemoImpl(spark, dir) }
-
-  private def pacingMineDemoImpl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.SparkEnv.scratchDir("graft-c32")
-    val rows = graft.operators.PacingOps.syntheticFetchLatencies(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val stream = MemoryStream[(String, Long)]
-    val q = streamingPacing(stream.toDS(), root)
-    try {
-      (0 until 3).foreach { k =>
-        stream.addData(rows.zipWithIndex
-          .filter { case (_, i) => i % 3 == k }.map(_._1).toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    graft.operators.PacingOps.adaptiveDelaysFrom(spark, root, uptoEpoch = 2)
-  }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val root = graft.SparkEnv.scratchDir("graft-c32")
+      val rows = graft.operators.PacingOps.syntheticFetchLatencies(spark, dir)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val in = new Waves[(String, Long)](spark)
+      in.run((0 until 3).map(k =>
+        rows.zipWithIndex.filter { case (_, i) => i % 3 == k }.map(_._1).toSeq))(
+        streamingPacing(in.ds, root))
+      graft.operators.PacingOps.adaptiveDelaysFrom(spark, root, uptoEpoch = 2)
+    }
 
   /** Streaming BEST-COPY catalog maintenance (c80) — the c78 upgrade
     * semantics kept current online: each micro-batch of
@@ -754,18 +672,14 @@ object StreamingJobs {
   def streamingBestCopyCatalog(
       images: Dataset[(String, Long, Int, Int, String)],
       root: String,
-      startEpoch: Int): org.apache.spark.sql.streaming.StreamingQuery =
-    images.toDF("image_id", "phash", "w", "h", "fmt").writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(s"bestcopy_$startEpoch"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      startEpoch: Int): StreamingQuery =
+    epochSink(images.toDF("image_id", "phash", "w", "h", "fmt"), "bestcopy", startEpoch) {
+      (batch, epoch) =>
         val spark = batch.sparkSession
-        val epoch = startEpoch + batchId.toInt
         graft.operators.ImageOps.admitEpochBestCopy(spark, root, epoch, batch)
         graft.operators.ImageOps.upgradeActions(spark, root, epoch)
           .write.mode("overwrite").parquet(s"$root/catalog_actions/epoch=$epoch")
-      }
-      .start()
+    }
 
   /** Driver-contract demo (c80): epoch 0 = the scale corpus's lesser
     * copies of even groups + full pngs of odd groups, admitted
@@ -776,37 +690,28 @@ object StreamingJobs {
     * StreamingSpec.
     */
   def bestCopyCatalogDemo(spark: SparkSession): DataFrame =
-    withFewStatePartitions(spark) { bestCopyCatalogDemoImpl(spark) }
-
-  private def bestCopyCatalogDemoImpl(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.SparkEnv.scratchDir("graft-c80")
-    val all = graft.operators.ImageOps.scaleCorpus(spark)
-      .select("image_id", "phash", "w", "h", "fmt")
-    val grp = regexp_extract(col("image_id"), "img-(\\d+)-", 1).cast("long")
-    val isFull = col("image_id").endsWith("-full")
-    val e0 = all.where((pmod(grp, lit(2)) === 0 && !isFull) ||
-      (pmod(grp, lit(2)) === 1 && isFull) || col("image_id").endsWith("-solo"))
-    graft.operators.ImageOps.admitEpochBestCopy(spark, root, 0, e0)
-    def rows(df: DataFrame) = df
-      .as[(String, Long, Int, Int, String)].collect()
-    val upgrades = rows(all.where(pmod(grp, lit(2)) === 0 && isFull))
-    val lateLessers = rows(all
-      .where(pmod(grp, lit(2)) === 1 && !isFull &&
-        !col("image_id").endsWith("-solo")))
-    val stream = MemoryStream[(String, Long, Int, Int, String)]
-    val q = streamingBestCopyCatalog(stream.toDS(), root, startEpoch = 1)
-    try {
-      stream.addData(upgrades)
-      q.processAllAvailable()
-      stream.addData(lateLessers)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.read.parquet(s"$root/catalog_actions")
-      .select(col("image_id"), col("action"), col("epoch").as("in_batch"))
-      .orderBy("in_batch", "action", "image_id")
-  }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val root = graft.SparkEnv.scratchDir("graft-c80")
+      val all = graft.operators.ImageOps.scaleCorpus(spark)
+        .select("image_id", "phash", "w", "h", "fmt")
+      val grp = regexp_extract(col("image_id"), "img-(\\d+)-", 1).cast("long")
+      val isFull = col("image_id").endsWith("-full")
+      val e0 = all.where((pmod(grp, lit(2)) === 0 && !isFull) ||
+        (pmod(grp, lit(2)) === 1 && isFull) || col("image_id").endsWith("-solo"))
+      graft.operators.ImageOps.admitEpochBestCopy(spark, root, 0, e0)
+      def rows(df: DataFrame) = df
+        .as[(String, Long, Int, Int, String)].collect().toSeq
+      val upgrades = rows(all.where(pmod(grp, lit(2)) === 0 && isFull))
+      val lateLessers = rows(all
+        .where(pmod(grp, lit(2)) === 1 && !isFull &&
+          !col("image_id").endsWith("-solo")))
+      val in = new Waves[(String, Long, Int, Int, String)](spark)
+      in.run(Seq(upgrades, lateLessers))(streamingBestCopyCatalog(in.ds, root, startEpoch = 1))
+      spark.read.parquet(s"$root/catalog_actions")
+        .select(col("image_id"), col("action"), col("epoch").as("in_batch"))
+        .orderBy("in_batch", "action", "image_id")
+    }
 
   /** Driver-contract demo (c18): epoch 0 = half the documents table,
     * indexed batch-side; the stream delivers the other half in two
@@ -815,37 +720,29 @@ object StreamingJobs {
     * equality per batch vs full recompute is pinned in StreamingSpec.
     */
   def copyDetectDemo(spark: SparkSession, dir: String): DataFrame =
-    withFewStatePartitions(spark) { copyDetectDemoImpl(spark, dir) }
-
-  private def copyDetectDemoImpl(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = graft.SparkEnv.scratchDir("graft-c18")
-    // demo runs on a deterministic quarter of the table: the semantics are
-    // what the golden pins; the full-corpus cost story belongs to t05/c16
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select("doc_id", "text").where(pmod(col("doc_id"), lit(4)) < 2)
-    val e0 = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-    graft.operators.SimIndex.writeShingleIndex(e0, root, 0)
-    val rest = docs.where(pmod(col("doc_id"), lit(2)) === 1)
-      .as[(Long, String)].collect()
-    val planted = e0.where(pmod(col("doc_id"), lit(20)) === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" appended revision marker tokens")).as("text"))
-      .as[(Long, String)].collect()
-    val stream = MemoryStream[(Long, String)]
-    val q = streamingCopyDetect(stream.toDS(), root, startEpoch = 1)
-    try {
-      stream.addData(rest.toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(planted.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.read.parquet(s"$root/copy_pairs")
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
-        col("epoch").as("found_in_batch"))
-      .orderBy("doc_a", "doc_b")
-  }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val root = graft.SparkEnv.scratchDir("graft-c18")
+      // demo runs on a deterministic quarter of the table: the semantics are
+      // what the golden pins; the full-corpus cost story belongs to t05/c16
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+        .select("doc_id", "text").where(pmod(col("doc_id"), lit(4)) < 2)
+      val e0 = docs.where(pmod(col("doc_id"), lit(2)) === 0)
+      graft.operators.SimIndex.writeShingleIndex(e0, root, 0)
+      val rest = docs.where(pmod(col("doc_id"), lit(2)) === 1)
+        .as[(Long, String)].collect()
+      val planted = e0.where(pmod(col("doc_id"), lit(20)) === 0)
+        .select((col("doc_id") + 1000000L).as("doc_id"),
+          concat(col("text"), lit(" appended revision marker tokens")).as("text"))
+        .as[(Long, String)].collect()
+      val in = new Waves[(Long, String)](spark)
+      in.run(Seq(rest.toIndexedSeq, planted.toIndexedSeq))(
+        streamingCopyDetect(in.ds, root, startEpoch = 1))
+      spark.read.parquet(s"$root/copy_pairs")
+        .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
+          col("epoch").as("found_in_batch"))
+        .orderBy("doc_a", "doc_b")
+    }
 
   // ---- c40: stream-STATIC enrichment join --------------------------------
 
@@ -888,7 +785,14 @@ object StreamingJobs {
     * StreamingSpec asserts stream == batch mirror exactly.
     */
   def enrichDemo(spark: SparkSession, n: Int = 3000): DataFrame =
-    withFewStatePartitions(spark) { enrichDemoImpl(spark, n) }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val in = new Waves[(Long, String, String)](spark)
+      val name = s"stream_enrich_$n"
+      memoryTable(streamStaticEnrich(in.ds, graft.sources.Gen.robots(spark).toDF()),
+        OutputMode.Append(), name, ckptDir(name))(in.run(thirds(enrichFeed(n))))
+        .orderBy("url_hash", "path")
+    }
 
   private[graft] def enrichFeed(n: Int): Array[(Long, String, String)] =
     (graft.sources.Gen.seedsLocal(n).flatMap { s =>
@@ -898,29 +802,6 @@ object StreamingJobs {
         graft.functions.UrlKit.hostOf(uc), graft.functions.UrlKit.pathOf(uc)))
     } ++ (0 until 7).map(i =>
       (9000000L + i, s"unknown-$i.example", s"/page/$i"))).toArray
-
-  private def enrichDemoImpl(spark: SparkSession, n: Int): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dim = graft.sources.Gen.robots(spark).toDF()
-    val feed = enrichFeed(n)
-    val stream = MemoryStream[(Long, String, String)]
-    val out = streamStaticEnrich(stream.toDS(), dim)
-    val name = s"stream_enrich_$n"
-    val q = out.writeStream.outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir(name))
-      .format("memory").queryName(name).start()
-    try {
-      val third = feed.length / 3
-      stream.addData(feed.take(third).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(feed.slice(third, 2 * third).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(feed.drop(2 * third).toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).orderBy("url_hash", "path")
-  }
 
   /** c101 — STREAMING Lindley backlog: c98's token-bucket recursion as
     * keyed state — per-epoch demand rows arrive as a stream and each
@@ -966,7 +847,23 @@ object StreamingJobs {
     */
   def backlogDemo(spark: SparkSession, dir: String,
                   capBytes: Long = 30000L): DataFrame =
-    withFewStatePartitions(spark) { backlogDemoImpl(spark, dir, capBytes) }
+    withFewStatePartitions(spark) {
+      import spark.implicits._
+      val hosts = spark.read.parquet(s"$dir/documents.parquet")
+        .select("source").distinct().collect().map(_.getString(0)).sorted
+      def wave(es: Range): IndexedSeq[(String, Long, Long)] =
+        for { e <- es; h <- hosts.toIndexedSeq }
+          yield (h, e.toLong, demandLocal(h, e.toLong))
+      val in = new Waves[(String, Long, Long)](spark)
+      val name = "stream_backlog"
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("host")
+        .orderBy(col("total_demand").desc)
+      memoryTable(streamingBacklog(in.ds, capBytes), OutputMode.Update(), name, ckptDir(name))(
+        in.run(Seq(wave(1 to 3), wave(4 to 6), wave(7 to 8))))
+        .withColumn("rn", row_number().over(w))
+        .where(col("rn") === 1).drop("rn")
+        .orderBy("host")
+    }
 
   private[graft] def demandLocal(host: String, e: Long): Long = {
     def h6(s: String): Long = java.lang.Long.parseLong(
@@ -975,33 +872,5 @@ object StreamingJobs {
         .mkString, 16)
     10000L + (h6(s"bf:$host") % 7L) * 1000L * e +
       h6(s"bfn:$host:$e") % 997L
-  }
-
-  private def backlogDemoImpl(spark: SparkSession, dir: String,
-                              capBytes: Long): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val hosts = spark.read.parquet(s"$dir/documents.parquet")
-      .select("source").distinct().collect().map(_.getString(0)).sorted
-    def wave(es: Range): IndexedSeq[(String, Long, Long)] =
-      for { e <- es; h <- hosts.toIndexedSeq }
-        yield (h, e.toLong, demandLocal(h, e.toLong))
-    val stream = MemoryStream[(String, Long, Long)]
-    val out = streamingBacklog(stream.toDS(), capBytes)
-    val name = "stream_backlog"
-    val q = out.writeStream.outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckptDir(name))
-      .format("memory").queryName(name).start()
-    try {
-      stream.addData(wave(1 to 3)); q.processAllAvailable()
-      stream.addData(wave(4 to 6)); q.processAllAvailable()
-      stream.addData(wave(7 to 8)); q.processAllAvailable()
-    } finally q.stop()
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("host")
-      .orderBy(col("total_demand").desc)
-    spark.table(name)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1).drop("rn")
-      .orderBy("host")
   }
 }

@@ -138,7 +138,7 @@ class EntrySmokeSpec extends AnyFunSuite {
       .toSeq
     assert(viaStore == oneShot, "persisted-store PQ diverged from one-shot")
     // codebook parquet roundtrip is float-exact
-    val root = java.nio.file.Files.createTempDirectory("graft-emb10-rt").toString
+    val root = graft.SparkTestBase.tempDir("graft-emb10-rt")
     val e = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
     val cents = graft.operators.SimilarityOps.pqTrain(e)
     graft.operators.SimilarityOps.writePqCodebooks(spark, cents, root)
@@ -152,7 +152,7 @@ class EntrySmokeSpec extends AnyFunSuite {
   test("emb10 stale codebooks (trained on epoch 0 only) still hold the recall floor") {
     // the PQ incremental story: later epochs encode against the ORIGINAL
     // codebooks — approximation degrades recall only, never scores
-    val root = java.nio.file.Files.createTempDirectory("graft-emb10-stale").toString
+    val root = graft.SparkTestBase.tempDir("graft-emb10-stale")
     import org.apache.spark.sql.functions._
     val e = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
     val epoch0 = e.where(pmod(col("vec_id"), lit(2)) === 0)

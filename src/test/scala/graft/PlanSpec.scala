@@ -53,7 +53,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("revision diff scans never read the bytes column (both forms)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-planspec").toString
+    val dir = graft.SparkTestBase.tempDir("graft-planspec")
     spark.createDataset((0 until 10).map(i =>
       Gen.snapshotRow(s"http://h/a-$i", 0, 0, "png", epoch = 0)))
       .drop("epoch").write.mode("overwrite").parquet(s"$dir/snapshots/epoch=0")
@@ -220,7 +220,7 @@ class PlanSpec extends AnyFunSuite {
     // to 0 must yield a SortMergeJoin (the only honest plan at 10^10
     // seen URLs — a broadcast would mean a driver-serial HashedRelation
     // build per epoch) with identical results
-    val dir = java.nio.file.Files.createTempDirectory("graft-planspec-seen").toString
+    val dir = graft.SparkTestBase.tempDir("graft-planspec-seen")
     FrontierJob.canonicalizeFrontier(Gen.seeds(spark, 500))
       .select(col("url_hash"), col("host"), lit(0).as("first_epoch"))
       .write.mode("overwrite").parquet(dir)
@@ -286,7 +286,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("bucketed seen table: anti-join exchanges only the frontier side; golden-equal") {
     import org.apache.spark.sql.functions.{col, concat_ws, lit, pmod, xxhash64}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    val tmp = graft.SparkTestBase.tempDir("graft-bucketed")
     // map-only frontier (no internal exchange) so the single exchange the
     // pin counts below is unambiguously the join's frontier side
     val frontier = spark.range(0, 2000)
@@ -653,7 +653,7 @@ class PlanSpec extends AnyFunSuite {
   test("c63 dims audit: one codegen projection, no hash exchange, no UDF") {
     // parquet-backed (a LocalRelation corpus constant-folds the whole
     // projection away at plan time — nothing left to pin)
-    val dir = java.nio.file.Files.createTempDirectory("graft-c63-plan").toString
+    val dir = graft.SparkTestBase.tempDir("graft-c63-plan")
     graft.operators.ImageOps.dimsCorpus(spark).write
       .mode("overwrite").parquet(dir)
     val df = graft.operators.ImageOps.dimsAudit(spark.read.parquet(dir))
@@ -689,7 +689,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("c56 suffix-index probe: persisted keys probe without text on exchanges") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("planspec-c56").toString
+    val root = graft.SparkTestBase.tempDir("planspec-c56")
     val corpus = graft.operators.TextOps.spanCorpus(spark, dir)
     import org.apache.spark.sql.functions.col
     graft.operators.SimIndex.writeSuffixIndex(

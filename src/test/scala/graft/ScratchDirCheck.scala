@@ -1,13 +1,15 @@
 package graft
 
-/** SparkEnvSpec's child-JVM entry: makes a scratch dir, writes a file into
-  * it, prints the dir and exits, so the spec can check that JVM exit
-  * deleted it.
+/** SparkEnvSpec's child-JVM entry: makes a scratch dir and a test temp
+  * dir, writes a file into each, prints both dirs and exits, so the spec
+  * can check that JVM exit deleted them.
   */
 object ScratchDirCheck {
   def main(args: Array[String]): Unit = {
-    val dir = SparkEnv.scratchDir("graft-scratchcheck")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "part-0"), "x")
-    println(s"SCRATCH|$dir")
+    Seq("SCRATCH" -> SparkEnv.scratchDir("graft-scratchcheck"),
+      "TEMP" -> SparkTestBase.tempDir("graft-tempcheck")).foreach { case (kind, dir) =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "part-0"), "x")
+      println(s"$kind|$dir")
+    }
   }
 }

@@ -44,8 +44,10 @@ class SparkEnvSpec extends AnyFunSuite {
     val p = new ProcessBuilder(cmd).redirectErrorStream(true).start()
     val out = new String(p.getInputStream.readAllBytes())
     assert(p.waitFor() == 0, s"ScratchDirCheck JVM failed:\n$out")
-    val dir = out.linesIterator.find(_.startsWith("SCRATCH|"))
-      .getOrElse(fail(s"no SCRATCH line in:\n$out")).stripPrefix("SCRATCH|")
-    assert(dir.nonEmpty && !new java.io.File(dir).exists())
+    Seq("SCRATCH|", "TEMP|").foreach { tag =>
+      val dir = out.linesIterator.find(_.startsWith(tag))
+        .getOrElse(fail(s"no $tag line in:\n$out")).stripPrefix(tag)
+      assert(dir.nonEmpty && !new java.io.File(dir).exists(), s"$tag$dir outlived its JVM")
+    }
   }
 }

@@ -12,8 +12,12 @@ object SparkTestBase {
   def withShufflePartitions[T](n: Int)(f: => T): T =
     SparkEnv.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(f)
 
+  /** A fresh dir in java.io.tmpdir, deleted when the test JVM exits. It
+    * stays off the tmpfs scratch root of [[SparkEnv.scratchDir]]: a suite
+    * run writes about 2 GB of these dirs, which would sit in RAM there.
+    */
   def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    SparkEnv.deleteAtExit(java.nio.file.Files.createTempDirectory(prefix).toString)
 
   /** The Spark jobs `body` starts on this thread (and on the threads its
     * queries spawn). Jobs are told apart by a job group private to the

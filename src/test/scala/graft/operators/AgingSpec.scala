@@ -26,8 +26,7 @@ class AgingSpec extends AnyFunSuite {
   private val budget = 100
 
   private def runMode(aging: Boolean): String = {
-    val root = java.nio.file.Files.createTempDirectory(
-      s"graft-aging-$aging").toString
+    val root = graft.SparkTestBase.tempDir(s"graft-aging-$aging")
     CrawlPipeline.run(spark, root, untilEpoch = epochs, seedsPerEpoch = nSeeds,
       cfg0 = FrontierJob.Config(epoch = 0, globalBudget = budget),
       aging = aging, agingBoost = 2.0)

@@ -29,7 +29,7 @@ class BackoffSpec extends AnyFunSuite {
       defaultHostBudget = 4, maxHostBudget = 4)
     val th = 100 // any failure trips the decrease (base synthetic rate ~2%)
     def go(backoff: Boolean): String = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-c50-$backoff").toString
+      val root = graft.SparkTestBase.tempDir(s"graft-c50-$backoff")
       CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = 600,
         cfg0 = cfg, backoff = backoff, backoffThresholdBp = th)
       root

@@ -18,8 +18,8 @@ class BandwidthSpec extends AnyFunSuite {
   private val allowance = 16000L
 
   private lazy val roots: (String, String) = {
-    val bw = java.nio.file.Files.createTempDirectory("graft-c54-bw").toString
-    val ctl = java.nio.file.Files.createTempDirectory("graft-c54-ctl").toString
+    val bw = graft.SparkTestBase.tempDir("graft-c54-bw")
+    val ctl = graft.SparkTestBase.tempDir("graft-c54-ctl")
     val cfg = FrontierJob.Config(epoch = 0, globalBudget = 4000)
     CrawlPipeline.run(spark, bw, untilEpoch = epochs, seedsPerEpoch = seeds,
       cfg0 = cfg, byteBudgetPerHost = allowance)

@@ -29,7 +29,7 @@ class CatalogUpgradeSpec extends AnyFunSuite {
 
   test("c78 incremental catalog == from-scratch election after every epoch") {
     val (all, e0, e1) = splitCorpus()
-    val root = java.nio.file.Files.createTempDirectory("graft-c78-spec").toString
+    val root = graft.SparkTestBase.tempDir("graft-c78-spec")
     ImageOps.admitEpochBestCopy(spark, root, 0, e0)
     val cat0 = ImageOps.bestCopyCatalog(spark, root, 0)
       .select("image_id").collect().map(_.getString(0)).toSet
@@ -53,7 +53,7 @@ class CatalogUpgradeSpec extends AnyFunSuite {
 
   test("c78 upgrade actions: late full png admits + evicts; late lesser copies drop") {
     val (all, e0, e1) = splitCorpus()
-    val root = java.nio.file.Files.createTempDirectory("graft-c78-act").toString
+    val root = graft.SparkTestBase.tempDir("graft-c78-act")
     def ids(df: DataFrame): Set[String] =
       df.select("image_id").collect().map(_.getString(0)).toSet
     val elect0 = ids(ImageOps.electBestCopies(e0, 6))

@@ -56,7 +56,7 @@ class FlipMatchSpec extends AnyFunSuite {
   test("composition: canonical hashes feed the persisted index — cross-epoch mirrored reposts found incrementally") {
     import org.apache.spark.sql.functions.col
     import graft.SparkTestBase.spark
-    val root = java.nio.file.Files.createTempDirectory("graft-c52-idx").toString
+    val root = graft.SparkTestBase.tempDir("graft-c52-idx")
     // epoch 0: originals only; epoch 1: mirrored reposts of every 3rd —
     // the flipped copy arrives LATER and must pair against the corpus-so-
     // far through the persisted index (no re-hash of epoch 0)

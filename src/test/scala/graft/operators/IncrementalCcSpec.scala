@@ -17,7 +17,7 @@ class IncrementalCcSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def incremental(batches: Seq[Seq[(Long, Long)]]): Map[Long, Long] = {
-    val root = java.nio.file.Files.createTempDirectory("graft-g08-spec").toString
+    val root = graft.SparkTestBase.tempDir("graft-g08-spec")
     var last: Map[Long, Long] = Map.empty
     batches.zipWithIndex.foreach { case (batch, e) =>
       last = DedupResolve.updateLabels(spark, root, e,
@@ -41,7 +41,7 @@ class IncrementalCcSpec extends AnyFunSuite {
   }
 
   test("untouched components keep their labels across an epoch") {
-    val root = java.nio.file.Files.createTempDirectory("graft-g08-spec2").toString
+    val root = graft.SparkTestBase.tempDir("graft-g08-spec2")
     DedupResolve.updateLabels(spark, root, 0,
       Seq((1L, 2L), (7L, 8L)).toDF("a", "b"), "a", "b")
     val after = DedupResolve.updateLabels(spark, root, 1,

@@ -90,7 +90,7 @@ class RecrawlSpec extends AnyFunSuite {
 
   test("pipeline recrawlPolicy=changerate: re-scheduled URLs within the policy's due set") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-recrawl-cr").toString
+    val root = graft.SparkTestBase.tempDir("graft-recrawl-cr")
     CrawlPipeline.run(spark, root, untilEpoch = 2, seedsPerEpoch = 300,
       cfg0 = FrontierJob.Config(epoch = 0, globalBudget = 100000),
       recrawl = true, recrawlPolicy = "changerate")

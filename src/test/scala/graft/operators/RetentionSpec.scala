@@ -63,7 +63,7 @@ class RetentionSpec extends AnyFunSuite {
   }
 
   test("c48 pipeline wiring: persisted keys == direct kernel; resume no-op") {
-    val root = java.nio.file.Files.createTempDirectory("graft-retain").toString
+    val root = graft.SparkTestBase.tempDir("graft-retain")
     CrawlPipeline.run(spark, root, untilEpoch = 5, seedsPerEpoch = 120,
       cfg0 = FrontierJob.Config(epoch = 0, globalBudget = 100),
       retainEvery = 2, retainWindow = 2L, retainStride = 2)
@@ -89,7 +89,7 @@ class RetentionSpec extends AnyFunSuite {
   test("c48 thinned archive: exact, drops versions, preserves every latest (multi-version history)") {
     import org.apache.spark.sql.functions.col
     import graft.SparkTestBase.spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-retain-hist").toString
+    val root = graft.SparkTestBase.tempDir("graft-retain-hist")
     // fabricate revision-heavy history: 30 pages, versions at epochs 0..7
     // (page i skips epoch e when mix64(i*13+e)%4==0; page i%6==0 dies at 3)
     (0 to 7).foreach { e =>

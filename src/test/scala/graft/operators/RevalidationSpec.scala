@@ -25,8 +25,8 @@ class RevalidationSpec extends AnyFunSuite {
   private val budget = 4000
 
   private lazy val roots: (String, String) = {
-    val on = java.nio.file.Files.createTempDirectory("graft-c51spec-on").toString
-    val off = java.nio.file.Files.createTempDirectory("graft-c51spec-off").toString
+    val on = graft.SparkTestBase.tempDir("graft-c51spec-on")
+    val off = graft.SparkTestBase.tempDir("graft-c51spec-off")
     val cfg = FrontierJob.Config(epoch = 0, globalBudget = budget)
     CrawlPipeline.run(spark, on, untilEpoch = epochs, seedsPerEpoch = seeds,
       cfg0 = cfg, recrawl = true, revalidate = true)

@@ -67,7 +67,7 @@ class SketchOpsSpec extends AnyFunSuite {
   // is a combined-estimator 4% band; the accuracy gate vs TRUE distincts
   // (5%, which the merged path must meet on its own) is the next test.
   test("c26 merged per-epoch sketches track the one-shot sketch (combined-estimator band)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hll-spec").toString
+    val root = graft.SparkTestBase.tempDir("graft-hll-spec")
     spans.zipWithIndex.foreach { case ((lo, hi), ep) =>
       SketchOps.writeEpochHostHll(SketchOps.epochHostUrls(spark, lo, hi, HllN), root, ep)
     }
@@ -98,7 +98,7 @@ class SketchOpsSpec extends AnyFunSuite {
   }
 
   test("c26 compaction: compact prefix + tail epochs == full merge (exact)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hll-compact").toString
+    val root = graft.SparkTestBase.tempDir("graft-hll-compact")
     spans.zipWithIndex.foreach { case ((lo, hi), ep) =>
       SketchOps.writeEpochHostHll(SketchOps.epochHostUrls(spark, lo, hi, HllN), root, ep)
     }

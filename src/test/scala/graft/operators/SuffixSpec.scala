@@ -101,7 +101,7 @@ class SuffixSpec extends AnyFunSuite {
     import spark.implicits._
     val corpus = TextOps.spanCorpus(spark, dir)
     val all = corpus.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-suffixidx").toString
+    val root = graft.SparkTestBase.tempDir("graft-suffixidx")
     val e0 = corpus.where(col("doc_id") < 2000000L)
     val e1 = corpus.where(col("doc_id") >= 2000000L)
     SimIndex.writeSuffixIndex(e0, root, 0)

@@ -19,7 +19,7 @@ class ValidationPipelineSpec extends AnyFunSuite {
     val cfg = FrontierJob.Config(epoch = 0, globalBudget = 400,
       defaultHostBudget = 4, maxHostBudget = 4)
     def go(on: Boolean): String = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-c67-$on").toString
+      val root = graft.SparkTestBase.tempDir(s"graft-c67-$on")
       CrawlPipeline.run(spark, root, untilEpoch = 1, seedsPerEpoch = 600,
         cfg0 = cfg, payloadValidation = on)
       root

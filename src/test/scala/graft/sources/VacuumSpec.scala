@@ -22,8 +22,8 @@ class VacuumSpec extends AnyFunSuite {
       .select("url_hash").collect().map(_.getLong(0)).toSet)
 
   test("vacuum removes exactly the orphans; resume converges to the control") {
-    val vac = Files.createTempDirectory("graft-vacuum").toString
-    val ctl = Files.createTempDirectory("graft-vacuum-ctl").toString
+    val vac = graft.SparkTestBase.tempDir("graft-vacuum")
+    val ctl = graft.SparkTestBase.tempDir("graft-vacuum-ctl")
     crawl(vac, 1)
     crawl(ctl, 1)
 

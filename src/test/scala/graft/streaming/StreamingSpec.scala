@@ -27,8 +27,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("restart from checkpoint: stop, add files, resume == single-shot batch") {
-    val src = java.nio.file.Files.createTempDirectory("graft-restart-src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-restart-ckpt").toString
+    val src = graft.SparkTestBase.tempDir("graft-restart-src")
+    val ckpt = graft.SparkTestBase.tempDir("graft-restart-ckpt")
     val ev = spark.read.parquet(s"$dir/events.parquet")
     ev.where(col("event_id") % 2 === 0).coalesce(1)
       .write.mode("append").parquet(src)
@@ -234,7 +234,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     // mirror: the identical epoch sequence admitted batch-side in a fresh
     // root; the stream's per-batch action deltas must match exactly
-    val root = java.nio.file.Files.createTempDirectory("graft-c80-mirror").toString
+    val root = graft.SparkTestBase.tempDir("graft-c80-mirror")
     val all = graft.operators.ImageOps.scaleCorpus(spark)
       .select("image_id", "phash", "w", "h", "fmt")
     val grp = regexp_extract(col("image_id"), "img-(\\d+)-", 1).cast("long")
