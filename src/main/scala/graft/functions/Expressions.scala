@@ -458,12 +458,6 @@ object GraftFunctions {
   val MinHashK = 64
   val MinHashBands = 16
 
-  /** Idempotent per-session registration of all graft temp functions.
-    * No done-set: createOrReplaceTempFunction is an idempotent map put and
-    * this runs once per plan BUILD, never per row — a cache keyed on
-    * session identity (the old sessionState.toString trick) bought nothing
-    * and could wrongly skip a fresh session reusing a freed address.
-    */
   /** Stable one-arg scalar surface, shared by the runtime registration path
     * (ensureRegistered) and the SparkSessionExtensions injector
     * (graft.plans.GraftExtensions) so both routes expose the identical
@@ -488,6 +482,12 @@ object GraftFunctions {
     "vec_dot" -> ((exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))),
     "vec_sumsq" -> ((exprs: Seq[Expression]) => VecSumSq(exprs.head)))
 
+  /** Idempotent per-session registration of all graft temp functions.
+    * No done-set: createOrReplaceTempFunction is an idempotent map put and
+    * this runs once per plan BUILD, never per row — a cache keyed on
+    * session identity (the old sessionState.toString trick) bought nothing
+    * and could wrongly skip a fresh session reusing a freed address.
+    */
   def ensureRegistered(spark: SparkSession): Unit = {
     synchronized {
       // register-once: re-registering an existing name is a no-op, not a

@@ -691,16 +691,6 @@ object ImageKit {
     phashOfPixels(dpx, dw, dh)
   }
 
-  /** c68 — the phash of every element of the image's dihedral orbit
-    * (EXIF codes 1..8 ARE the full D4 group: identity, mirror, 180,
-    * upside-down mirror, the two transposes, 90 CW and 90 CCW), from ONE
-    * decode: each transform is an index remap of the already-decoded
-    * pixels. This is the metadata-FREE rotation story — c64 normalizes by
-    * the DECLARED tag, but the common web repost is rotate-then-strip
-    * (editors bake the rotation into the pixel grid and drop EXIF), which
-    * leaves no tag to read; matching any of the orbit's hashes against a
-    * stored hash catches those. Index i holds orientation code i+1.
-    */
   /** c71 — global contrast measurement: (intensity range, stddev x100)
     * over all pixels, all-integer (the stddev is the floor integer square
     * root of the exact integer variance x10000, so the score is
@@ -782,6 +772,16 @@ object ImageKit {
       scan(isRow = false, w - 1, -1, w / 2))
   }
 
+  /** c68 — the phash of every element of the image's dihedral orbit
+    * (EXIF codes 1..8 ARE the full D4 group: identity, mirror, 180,
+    * upside-down mirror, the two transposes, 90 CW and 90 CCW), from ONE
+    * decode: each transform is an index remap of the already-decoded
+    * pixels. This is the metadata-FREE rotation story — c64 normalizes by
+    * the DECLARED tag, but the common web repost is rotate-then-strip
+    * (editors bake the rotation into the pixel grid and drop EXIF), which
+    * leaves no tag to read; matching any of the orbit's hashes against a
+    * stored hash catches those. Index i holds orientation code i+1.
+    */
   def dihedralPhashes(bytes: Array[Byte]): Array[Long] = {
     val out = new Array[Long](8)
     if (bytes == null || bytes.isEmpty) return out

@@ -321,7 +321,6 @@ object TextKit {
     new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Tiny n-gram language-ID heuristic over a fixed marker table. */
   /** Word-level minimal edit script between two strings — the engine's
     * analog of news-diff's user-facing version diff rendering (the one
     * surface feature not otherwise represented as an operator). Tokens are
@@ -372,6 +371,7 @@ object TextKit {
     out.toSeq
   }
 
+  /** Tiny n-gram language-ID heuristic over a fixed marker table. */
   def langId(text: String): String = {
     val toks = tokenize(text).take(400)
     if (toks.isEmpty) return "und"

@@ -61,42 +61,36 @@ object DedupResolve {
       .select(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("dst"))
       .distinct()
       .localCheckpoint()
-    // Small-graph driver-local path (the GraphOps.SmallGraphLimit
-    // discipline): component = min id is pure INTEGER semantics, so a
-    // union-find that always attaches the larger root under the smaller
+    // Small-graph driver-local path (GraphOps.smallGraph, the one
+    // small-graph gate): component = min id is pure INTEGER semantics, so
+    // a union-find that always attaches the larger root under the smaller
     // produces the byte-identical (id, comp) table the contraction loop
     // does — with ~3 jobs instead of rounds x ~6. The collect is bounded
-    // by the gate (2^20 canonical edges; conf spark.graft.smallGraphLimit
-    // overrides, tests pin 0 to force the distributed loop); a
-    // production-sized pair graph fails the early-terminating limit probe
-    // and stays on the contraction loop.
+    // by the gate; a production-sized pair graph fails its
+    // early-terminating limit probe and stays on the contraction loop.
     locally {
       val spark = pairs.sparkSession
-      val limit = spark.conf.getOption("spark.graft.smallGraphLimit")
-        .map(_.toLong).getOrElse(1L << 20)
-      if (limit > 0) {
-        import spark.implicits._
-        val probe = e.as[(Long, Long)].limit(limit.toInt + 1).collect()
-        if (probe.length <= limit) {
-          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent(r) != r) r = parent(r)
-            var c = x
-            while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-            r
-          }
-          probe.foreach { case (a, b) =>
-            parent.getOrElseUpdate(a, a)
-            parent.getOrElseUpdate(b, b)
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) {
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-          }
-          val labelSeq = parent.keys.toSeq.sorted.map(id => (id, find(id)))
-          return spark.createDataset(labelSeq).toDF("id", "comp")
+      import spark.implicits._
+      val small = GraphOps.smallGraph(e.as[(Long, Long)])
+      if (small.nonEmpty) {
+        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x
+          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+          r
         }
+        small.get.foreach { case (a, b) =>
+          parent.getOrElseUpdate(a, a)
+          parent.getOrElseUpdate(b, b)
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) {
+            if (ra < rb) parent(rb) = ra else parent(ra) = rb
+          }
+        }
+        val labelSeq = parent.keys.toSeq.sorted.map(id => (id, find(id)))
+        return spark.createDataset(labelSeq).toDF("id", "comp")
       }
     }
     // one action for both setup scalars (e is checkpointed — scans are

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
 /** Link-graph analytics over the crawl's host graph (PageRank, Brin &
@@ -29,22 +30,45 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
 
-  /** Deterministic source-citation edge list over the documents table:
-    * document i "cites" document (i*17+3) mod n, lifted to the source
-    * (host) level, self-loops dropped, de-duplicated. Both engines derive
-    * the identical graph from the same parquet (integer arithmetic only).
+  private val docId = col("doc_id")
+  /** g01's citation map: document i cites document (i*17+3) mod n. */
+  private val linearCite = docId * 17L + 3L
+  /** g09's second citation map, (i*i*7 + i*31 + 5) mod n. */
+  private val quadraticCite = docId * docId * 7L + docId * 31L + 5L
+
+  /** The documents table's (doc_id, source) columns and its row count,
+    * the modulus every citation map reduces by.
     */
-  def sourceEdges(spark: SparkSession, dir: String): DataFrame = {
+  private def documents(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("source"))
-    val nDocs = docs.count()
-    val a = docs.select(col("doc_id"), col("source").as("src"))
-      .withColumn("cited", (col("doc_id") * 17L + 3L) % nDocs)
-    val b = docs.select(col("doc_id").as("cited_id"), col("source").as("dst"))
-    a.join(b, a("cited") === b("cited_id"))
+    (docs, docs.count())
+  }
+
+  /** The host graph of document citations: for each (citing, map) pair,
+    * every citing document cites document `map % nDocs` of `docs`; each
+    * citation is lifted to (citing source, cited source), self-loops
+    * dropped, de-duplicated. Integer arithmetic only, so DuckDB derives
+    * the identical graph from the same parquet.
+    */
+  private def citationEdges(docs: DataFrame, nDocs: Long,
+                            maps: (DataFrame, Column)*): DataFrame = {
+    val cites = maps.map { case (citing, cite) =>
+      citing.select(col("source").as("src"), (cite % nDocs).as("cited"))
+    }.reduce(_ unionByName _)
+    val cited = docs.select(col("doc_id").as("cited_id"), col("source").as("dst"))
+    cites.join(cited, col("cited") === col("cited_id"))
       .where(col("src") =!= col("dst"))
       .select("src", "dst")
       .distinct()
+  }
+
+  /** Deterministic source-citation edge list over the documents table:
+    * the linear citation map, lifted to the source (host) level.
+    */
+  def sourceEdges(spark: SparkSession, dir: String): DataFrame = {
+    val (docs, nDocs) = documents(spark, dir)
+    citationEdges(docs, nDocs, docs -> linearCite)
   }
 
   /** g01 — host PageRank by power iteration. Returns (source, pagerank)
@@ -65,14 +89,6 @@ object GraphOps {
                iters: Int, damping: Double): DataFrame =
     pageRankFrom(spark, edges, None, iters, damping)
 
-  /** Power iteration from an explicit starting vector — the warm-start
-    * form behind g03's incremental refresh. `init` is a (node, pagerank)
-    * table from a PREVIOUS graph version: nodes it covers start there,
-    * new nodes start at the uniform 1/n. The fixpoint is
-    * start-independent, so a warm start changes only how many iterations
-    * the refresh needs, never what it converges to; with `init = None`
-    * this IS pageRank (uniform start).
-    */
   /** Graphs at or below this many edges+nodes run the power iteration as
     * one driver-local kernel instead of iters x ~5 Spark jobs. The host
     * graph of a small crawl is a few thousand edges — at that size the
@@ -87,27 +103,31 @@ object GraphOps {
   private val SmallGraphLimit = 1L << 20
 
   /** The collected edge list iff the graph is under the small-graph gate
-    * ([[SmallGraphLimit]] edges by default; session conf
-    * `spark.graft.smallGraphLimit` overrides — tests pin it to 0 to force
-    * the distributed loops) and string-keyed (every registry caller is);
-    * None => stay distributed. One limit-scan decides —
+    * ([[SmallGraphLimit]] edges by default; the session conf key read
+    * here overrides it, and tests pin it to 0 to force the distributed
+    * loops); None => stay distributed. One limit-scan decides —
     * early-terminating, so a production-sized graph pays one truncated
-    * scan, not a count.
+    * scan, not a count. The one gate for every driver-local graph kernel
+    * here and in DedupResolve.
     */
-  private def smallGraph(edges: DataFrame): Option[Seq[(String, String)]] = {
-    val fields = edges.schema.fields
-    val stringKeyed = Seq("src", "dst").forall(c =>
-      fields.exists(f => f.name == c &&
-        f.dataType == org.apache.spark.sql.types.StringType))
-    if (!stringKeyed) return None
-    val spark = edges.sparkSession
-    val limit = spark.conf.getOption("spark.graft.smallGraphLimit")
+  private[operators] def smallGraph[T](edges: Dataset[T]): Option[Array[T]] = {
+    val limit = edges.sparkSession.conf.getOption("spark.graft.smallGraphLimit")
       .map(_.toLong).getOrElse(SmallGraphLimit)
     if (limit <= 0L) return None
+    val probe = edges.limit(limit.toInt + 1).collect()
+    if (probe.length > limit) None else Some(probe)
+  }
+
+  /** [[smallGraph]] for a host edge list: only a string-keyed (src, dst)
+    * table (every registry caller's) takes the driver-local path.
+    */
+  private def smallHostGraph(edges: DataFrame): Option[Seq[(String, String)]] = {
+    val stringKeyed = Seq("src", "dst").forall(c =>
+      edges.schema.fields.exists(f => f.name == c && f.dataType == StringType))
+    if (!stringKeyed) return None
+    val spark = edges.sparkSession
     import spark.implicits._
-    val probe = edges.select(col("src"), col("dst")).as[(String, String)]
-      .limit(limit.toInt + 1).collect()
-    if (probe.length > limit) None else Some(probe.toSeq)
+    smallGraph(edges.select(col("src"), col("dst")).as[(String, String)]).map(_.toSeq)
   }
 
   /** Runs a distributed graph loop over `graphSize` nodes/edges with its
@@ -129,11 +149,19 @@ object GraphOps {
   private def withGraphConf[T](spark: SparkSession, graphSize: Long)(body: => T): T =
     graft.SparkEnv.withLoopConf(spark, graphSize, rowsPerPartition = 250000L)(body)
 
+  /** Power iteration from an explicit starting vector — the warm-start
+    * form behind g03's incremental refresh. `init` is a (node, pagerank)
+    * table from a PREVIOUS graph version: nodes it covers start there,
+    * new nodes start at the uniform 1/n. The fixpoint is
+    * start-independent, so a warm start changes only how many iterations
+    * the refresh needs, never what it converges to; with `init = None`
+    * this IS pageRank (uniform start).
+    */
   def pageRankFrom(spark: SparkSession, edges: DataFrame,
                    init: Option[DataFrame],
                    iters: Int, damping: Double): DataFrame = {
     import spark.implicits._
-    val smallForm = smallGraph(edges)
+    val smallForm = smallHostGraph(edges)
     if (smallForm.nonEmpty) {
       val edgeArr = smallForm.get
       val initMap = init.map(_.select(col("node").cast("string"), col("pagerank"))
@@ -141,19 +169,8 @@ object GraphOps {
       val res = LocalPageRank.computeFrom(edgeArr, initMap, iters, damping)
       return spark.createDataset(res.toSeq.sortBy(_._1)).toDF("node", "pagerank")
     }
-    val e = edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val nEdges = e.count()
-    // out-degree joined onto edges once, up front: the per-iteration join
-    // then carries (src, dst, deg) and needs no second lookup
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    withGraphConf(spark, math.max(n, nEdges)) {
-      var ranks = init match {
+    powerIteration(spark, edges, iters, "pagerank") { (nodes, n) =>
+      val start = () => init match {
         case None => nodes.withColumn("rank", round(lit(1.0) / n, 10))
         case Some(prev) =>
           // warm start: carried-over nodes resume at their persisted rank
@@ -169,20 +186,74 @@ object GraphOps {
             .select(col("node"),
               coalesce(col("pagerank"), round(lit(1.0) / n, 10)).as("rank"))
             .localCheckpoint()
-          val mass = joined.agg(round(sum(col("rank")), 10)).head.getDouble(0)
+          val mass = joined.agg(round(sum(col("rank")), 10)).head().getDouble(0)
           joined.select(col("node"), round(col("rank") / mass, 10).as("rank"))
       }
+      Walk(nodes, start, (contrib, dang) =>
+        lit((1.0 - damping) / n) + lit(damping) * (contrib + dang / n))
+    }
+  }
+
+  /** What distinguishes one power iteration from another: `base` is the
+    * per-node table every round left-joins the contributions onto (it
+    * carries any per-node update input, such as TrustRank's teleport
+    * share `t`), `start` builds the start vector (node, rank) inside the
+    * loop's conf scope, and `update(contrib, dang)` is the new rank
+    * before its 10 dp rounding, from the summed in-link shares and the
+    * round's dangling mass.
+    */
+  private case class Walk(base: DataFrame, start: () => DataFrame,
+                          update: (Column, Column) => Column)
+
+  /** The distributed power iteration shared by PageRank and TrustRank.
+    * `walk(nodes, n)` supplies the start vector and the update over the
+    * persisted node set. Per round the dangling mass (rank leaked by nodes
+    * with no out-edges) is folded into the plan as a 1-row aggregate
+    * cross-joined onto the update — NOT collected to the driver, the
+    * 1-row side plans as a broadcast — so the whole round is ONE Spark
+    * job, the checkpoint's. The checkpoint keeps the per-round plan flat:
+    * 10 rounds of join-on-join lineage would re-plan from scratch every
+    * round otherwise (the DedupResolve contraction-loop discipline).
+    * Output: (node, `out` = round(rank, 6)).
+    */
+  private def powerIteration(spark: SparkSession, edges: DataFrame,
+                             iters: Int, out: String)(
+      walk: (DataFrame, Long) => Walk): DataFrame = {
+    val e = edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node")))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = nodes.count()
+    val nEdges = e.count()
+    // out-degree joined onto edges once, up front: the per-iteration join
+    // then carries (src, dst, deg) and needs no second lookup
+    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    val edgesDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    val Walk(base, start, update) = walk(nodes, n)
+    withGraphConf(spark, math.max(n, nEdges)) {
+      var ranks = start()
       var i = 0
       while (i < iters) {
-        // 10 iterations of join-on-join lineage re-plans from scratch each
-        // round otherwise; checkpoint keeps the per-iteration plan flat
-        // (same discipline as DedupResolve's contraction loop)
-        ranks = step(nodes, outdeg, edgesDeg, ranks, n, damping).localCheckpoint()
+        val dangling = ranks
+          .join(outdeg, ranks("node") === outdeg("src"), "left_anti")
+          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
+        val contribs = ranks
+          .join(edgesDeg, ranks("node") === edgesDeg("src"))
+          .select(col("dst").as("node"), (col("rank") / col("deg")).as("share"))
+          .groupBy("node").agg(sum(col("share")).as("contrib"))
+        ranks = base
+          .join(contribs, Seq("node"), "left")
+          .crossJoin(dangling)
+          .select(col("node"),
+            round(update(coalesce(col("contrib"), lit(0.0)), col("dang")), 10)
+              .as("rank"))
+          .localCheckpoint()
         i += 1
       }
-      val out = ranks.select(col("node"), round(col("rank"), 6).as("pagerank"))
-      e.unpersist(); nodes.unpersist(); edgesDeg.unpersist()
-      out
+      val res = ranks.select(col("node"), round(col("rank"), 6).as(out))
+      e.unpersist(); nodes.unpersist(); edgesDeg.unpersist(); base.unpersist()
+      res
     }
   }
 
@@ -218,16 +289,8 @@ object GraphOps {
     * same shape as sourceEdges, mostly overlapping hosts.
     */
   def sourceEdgesDelta(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("source"))
-    val nDocs = docs.count()
-    val a = docs.select(col("doc_id"), col("source").as("src"))
-      .withColumn("cited", (col("doc_id") * 31L + 7L) % nDocs)
-    val b = docs.select(col("doc_id").as("cited_id"), col("source").as("dst"))
-    a.join(b, a("cited") === b("cited_id"))
-      .where(col("src") =!= col("dst"))
-      .select("src", "dst")
-      .distinct()
+    val (docs, nDocs) = documents(spark, dir)
+    citationEdges(docs, nDocs, docs -> (docId * 31L + 7L))
   }
 
   /** g03 demo query: rank the epoch-0 graph, grow it by the delta edges,
@@ -241,36 +304,6 @@ object GraphOps {
     refreshHostRanks(spark, e1, r0, iters = 3)
       .withColumnRenamed("node", "source")
       .orderBy("source")
-  }
-
-  /** One power-iteration step, pre-checkpoint — the plan that repeats
-    * `iters` times.
-    *
-    * The dangling mass (rank leaked by nodes with no out-edges) is folded
-    * into the plan as a 1-row aggregate cross-joined onto the update —
-    * NOT collected to the driver — so the whole step is ONE Spark job
-    * (the checkpoint's), not two. At 10 iterations that halves the
-    * per-epoch job count; the 1-row side plans as a broadcast.
-    */
-  private def step(nodes: DataFrame, outdeg: DataFrame,
-                   edgesDeg: DataFrame, ranks: DataFrame,
-                   n: Long, damping: Double): DataFrame = {
-    val dangling = ranks
-      .join(outdeg, ranks("node") === outdeg("src"), "left_anti")
-      .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-    val contribs = ranks
-      .join(edgesDeg, ranks("node") === edgesDeg("src"))
-      .select(col("dst").as("node"), (col("rank") / col("deg")).as("share"))
-      .groupBy("node").agg(sum(col("share")).as("contrib"))
-    nodes
-      .join(contribs, Seq("node"), "left")
-      .crossJoin(dangling)
-      .select(
-        col("node"),
-        round(
-          lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("dang") / n),
-          10).as("rank"))
   }
 
   // ---- g04: HITS hubs & authorities -----------------------------------
@@ -304,7 +337,7 @@ object GraphOps {
     // the spec-pinned value-identical mirror
     locally {
       import spark.implicits._
-      val smallForm = smallGraph(edges)
+      val smallForm = smallHostGraph(edges)
       if (smallForm.nonEmpty) {
         val res = LocalHits.compute(smallForm.get, iters)
         return spark.createDataset(
@@ -393,7 +426,7 @@ object GraphOps {
     // node list via a LocalRelation before the local loop runs
     locally {
       import spark.implicits._
-      val smallForm = smallGraph(edges)
+      val smallForm = smallHostGraph(edges)
       if (smallForm.nonEmpty) {
         val edgeArr = smallForm.get
         val nodesArr = (edgeArr.map(_._1) ++ edgeArr.map(_._2)).distinct
@@ -405,60 +438,40 @@ object GraphOps {
           .toDF("node", "trustrank")
       }
     }
-    val e = edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val nEdges = e.count()
-    val tCount = nodes.where(trustedCol(col("node"))).count()
-    require(tCount > 0, "trustRank: empty trusted set")
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val teleT = nodes.select(col("node"),
-      when(trustedCol(col("node")), lit(1.0 / tCount)).otherwise(lit(0.0)).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    withGraphConf(spark, math.max(n, nEdges)) {
-      var ranks = teleT.select(col("node"), round(col("t"), 10).as("rank"))
-      var i = 0
-      while (i < iters) {
-        val dangling = ranks
-          .join(outdeg, ranks("node") === outdeg("src"), "left_anti")
-          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        val contribs = ranks
-          .join(edgesDeg, ranks("node") === edgesDeg("src"))
-          .select(col("dst").as("node"), (col("rank") / col("deg")).as("share"))
-          .groupBy("node").agg(sum(col("share")).as("contrib"))
-        ranks = teleT
-          .join(contribs, Seq("node"), "left")
-          .crossJoin(dangling)
-          .select(col("node"),
-            round(lit(1.0 - damping) * col("t") +
-              lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-                col("dang") * col("t")), 10).as("rank"))
-          .localCheckpoint()
-        i += 1
-      }
-      val out = ranks.select(col("node"), round(col("rank"), 6).as("trustrank"))
-      e.unpersist(); nodes.unpersist(); edgesDeg.unpersist(); teleT.unpersist()
-      out
+    powerIteration(spark, edges, iters, "trustrank") { (nodes, _) =>
+      val tCount = nodes.where(trustedCol(col("node"))).count()
+      require(tCount > 0, "trustRank: empty trusted set")
+      val teleT = nodes.select(col("node"),
+        when(trustedCol(col("node")), lit(1.0 / tCount)).otherwise(lit(0.0)).as("t"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      Walk(teleT, () => teleT.select(col("node"), round(col("t"), 10).as("rank")),
+        (contrib, dang) =>
+          lit(1.0 - damping) * col("t") + lit(damping) * (contrib + dang * col("t")))
     }
   }
+
+  /** The g01 graph as materialized DuckDB CTEs — docs, cnt, edges (the
+    * linear citation map lifted to hosts) and nodes — the head of every
+    * rank oracle (g01, g04, g06, c34). Ends with ",\n" so the caller's
+    * next CTE follows.
+    */
+  private val rankGraphSql =
+    """WITH docs AS MATERIALIZED (SELECT doc_id, source FROM documents),
+      |cnt AS MATERIALIZED (SELECT count(*) AS c FROM docs),
+      |edges AS MATERIALIZED (
+      |  SELECT DISTINCT a.source AS src, b.source AS dst
+      |  FROM docs a, cnt, docs b
+      |  WHERE b.doc_id = (a.doc_id * 17 + 3) % cnt.c AND a.source <> b.source),
+      |nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+      |""".stripMargin
 
   /** Unrolled-iteration DuckDB SQL mirroring `hostTrustRank` exactly
     * (trusted = hosts whose last character is '0' or '1'; dangling mass
     * redistributed along the trust vector).
     */
   def trustRankOracleSql(iters: Int = 10, damping: Double = 0.85): String = {
-    val base =
-      s"""WITH docs AS MATERIALIZED (SELECT doc_id, source FROM documents),
-         |cnt AS MATERIALIZED (SELECT count(*) AS c FROM docs),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT a.source AS src, b.source AS dst
-         |  FROM docs a, cnt, docs b
-         |  WHERE b.doc_id = (a.doc_id * 17 + 3) % cnt.c AND a.source <> b.source),
-         |nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-         |tc AS MATERIALIZED (
+    val base = rankGraphSql +
+      s"""tc AS MATERIALIZED (
          |  SELECT count(*) AS tcnt FROM nodes WHERE right(node, 1) IN ('0','1')),
          |tele AS MATERIALIZED (
          |  SELECT node, CASE WHEN right(node, 1) IN ('0','1')
@@ -546,15 +559,8 @@ object GraphOps {
     * final 6 dp. Generated so the iteration count stays in one place.
     */
   def hitsOracleSql(iters: Int = 8): String = {
-    val base =
-      s"""WITH docs AS MATERIALIZED (SELECT doc_id, source FROM documents),
-         |cnt AS MATERIALIZED (SELECT count(*) AS c FROM docs),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT a.source AS src, b.source AS dst
-         |  FROM docs a, cnt, docs b
-         |  WHERE b.doc_id = (a.doc_id * 17 + 3) % cnt.c AND a.source <> b.source),
-         |nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-         |h0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) AS hub FROM nodes)""".stripMargin
+    val base = rankGraphSql +
+      "h0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) AS hub FROM nodes)"
     val steps = (1 to iters).map { k =>
       val p = k - 1
       s"""araw$k AS MATERIALIZED (
@@ -599,15 +605,8 @@ object GraphOps {
     * reused by the g01 oracle and the c34 budget-apportionment oracle.
     */
   private def pageRankCtes(iters: Int, damping: Double): String = {
-    val base =
-      s"""WITH docs AS MATERIALIZED (SELECT doc_id, source FROM documents),
-         |cnt AS MATERIALIZED (SELECT count(*) AS c FROM docs),
-         |edges AS MATERIALIZED (
-         |  SELECT DISTINCT a.source AS src, b.source AS dst
-         |  FROM docs a, cnt, docs b
-         |  WHERE b.doc_id = (a.doc_id * 17 + 3) % cnt.c AND a.source <> b.source),
-         |nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-         |nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
+    val base = rankGraphSql +
+      s"""nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
          |outdeg AS MATERIALIZED (SELECT src, CAST(count(*) AS DOUBLE) AS deg FROM edges GROUP BY src),
          |r0 AS MATERIALIZED (SELECT node, round(CAST(1.0 AS DOUBLE) / nn.n, 10) AS rank FROM nodes, nn)""".stripMargin
     val steps = (1 to iters).map { k =>
@@ -745,6 +744,28 @@ object GraphOps {
        |FROM ranked WHERE rank <= $k
        |ORDER BY target_source, rank""".stripMargin
 
+  /** g09's edge derivation: TWO deterministic citation maps per document —
+    * g01's linear map plus a quadratic one. The linear map alone lifts to
+    * a triangle-free host graph (source = doc_id mod |hosts|, so a linear
+    * cite is a linear map on host ids, and the closing congruence
+    * 2a ≡ k (mod 20) is unsolvable for odd k); the quadratic map breaks
+    * the linearity and the lifted graph carries triangles at every SF.
+    */
+  def denseSourceEdges(spark: SparkSession, dir: String): DataFrame = {
+    val (docs, nDocs) = documents(spark, dir)
+    citationEdges(docs, nDocs, docs -> linearCite, docs -> quadraticCite)
+  }
+
+  /** The undirected view of a (src, dst) edge list: both orientations as
+    * (a, b), self-loops dropped, de-duplicated. A lazy plan: callers that
+    * read it more than once localCheckpoint it.
+    */
+  private[operators] def undirected(e: DataFrame): DataFrame =
+    e.select(col("src").as("a"), col("dst").as("b"))
+      .union(e.select(col("dst").as("a"), col("src").as("b")))
+      .where(col("a") =!= col("b"))
+      .distinct()
+
   /** g09 — TRIANGLE COUNT per host over the undirected host graph, by
     * degree-ordered wedge enumeration (the skew-proof shape: orient every
     * edge from its lower-(degree, name) endpoint to the higher one, so
@@ -756,31 +777,6 @@ object GraphOps {
     * name-ordered triple join. Exchanges carry (host, host) string pairs
     * only — the host graph is edges-of-hosts, ~6 orders below page scale.
     */
-  /** g09's edge derivation: TWO deterministic citation maps per document —
-    * g01's linear map plus a quadratic one. The linear map alone lifts to
-    * a triangle-free host graph (source = doc_id mod |hosts|, so a linear
-    * cite is a linear map on host ids, and the closing congruence
-    * 2a ≡ k (mod 20) is unsolvable for odd k); the quadratic map breaks
-    * the linearity and the lifted graph carries triangles at every SF.
-    * Same integer-only arithmetic contract as `sourceEdges`, so DuckDB
-    * derives the identical graph.
-    */
-  def denseSourceEdges(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("source"))
-    val nDocs = docs.count()
-    val cites = docs
-      .select(col("source").as("src"), ((col("doc_id") * 17L + 3L) % nDocs).as("cited"))
-      .unionByName(docs.select(col("source").as("src"),
-        ((col("doc_id") * col("doc_id") * 7L + col("doc_id") * 31L + 5L) % nDocs)
-          .as("cited")))
-    val b = docs.select(col("doc_id").as("cited_id"), col("source").as("dst"))
-    cites.join(b, cites("cited") === b("cited_id"))
-      .where(col("src") =!= col("dst"))
-      .select("src", "dst")
-      .distinct()
-  }
-
   def hostTriangles(spark: SparkSession, dir: String): DataFrame =
     triangleCounts(denseSourceEdges(spark, dir))
 
@@ -788,10 +784,7 @@ object GraphOps {
     * (direction and duplicates ignored; self-loops dropped).
     */
   def triangleCounts(e0: DataFrame): DataFrame = {
-    val und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
+    val und = undirected(e0).localCheckpoint()
     val deg = und.groupBy(col("a").as("h")).agg(count(lit(1)).as("deg"))
     val oriented = und
       .join(deg.select(col("h").as("a"), col("deg").as("da")), Seq("a"))
@@ -832,10 +825,7 @@ object GraphOps {
     */
   def coreNumbers(e0: DataFrame): DataFrame = {
     val spark = e0.sparkSession
-    var und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
+    var und = undirected(e0).localCheckpoint()
     val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var k = 1L
     var guard = 0
@@ -861,11 +851,12 @@ object GraphOps {
   def hostCoreNumbers(spark: SparkSession, dir: String): DataFrame =
     coreNumbers(denseSourceEdges(spark, dir))
 
-  /** Naive name-ordered triple-join DuckDB mirror of `hostTriangles` —
-    * per-host counts are orientation-invariant, so the two enumeration
-    * strategies agree exactly.
+  /** `denseSourceEdges` as DuckDB CTEs — docs, cnt, cites (both citation
+    * maps) and dedges (the lifted, de-duplicated host edges) — the head of
+    * every dense-graph oracle (g09-g16, g18-g20). Ends with ",\n" so the
+    * caller's next CTE follows.
     */
-  def trianglesOracleSql(): String =
+  private val denseGraphSql =
     """WITH docs AS (SELECT doc_id, source FROM documents),
       |cnt AS (SELECT count(*) AS c FROM docs),
       |cites AS (
@@ -877,7 +868,25 @@ object GraphOps {
       |  SELECT DISTINCT a.src, b.source AS dst
       |  FROM cites a JOIN docs b ON b.doc_id = a.cited
       |  WHERE a.src <> b.source),
-      |canon AS (
+      |""".stripMargin
+
+  /** [[denseGraphSql]] plus `und`, the SQL form of [[undirected]]. */
+  private val denseUndSql = denseGraphSql +
+    """und AS (
+      |  SELECT DISTINCT a, b FROM (
+      |    SELECT src AS a, dst AS b FROM dedges
+      |    UNION ALL
+      |    SELECT dst, src FROM dedges)
+      |  WHERE a <> b),
+      |""".stripMargin
+
+  /** Naive name-ordered triple-join DuckDB mirror of `hostTriangles` —
+    * per-host counts are orientation-invariant, so the two enumeration
+    * strategies agree exactly.
+    */
+  def trianglesOracleSql(): String =
+    denseGraphSql +
+    """canon AS (
       |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
       |  FROM dedges),
       |tri AS (
@@ -909,11 +918,11 @@ object GraphOps {
     * (node, votes) — all exchanges carry (node, label, count) scalars;
     * localCheckpoint bounds lineage across rounds.
     */
-  def labelPropagation(e0: DataFrame, rounds: Int = 4): DataFrame = {
-    val und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
+  def labelPropagation(e0: DataFrame, rounds: Int = 4): DataFrame =
+    communities(undirected(e0).localCheckpoint(), rounds)
+
+  /** [[labelPropagation]] over an already materialized undirected view. */
+  private def communities(und: DataFrame, rounds: Int): DataFrame = {
     var labels = und.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to rounds) {
@@ -941,40 +950,60 @@ object GraphOps {
     * update, same (count desc, label asc) tie-break, so labels agree
     * exactly after each round.
     */
-  def lpaOracleSql(rounds: Int = 4): String = {
-    val prefix =
-      """WITH docs AS (SELECT doc_id, source FROM documents),
-        |cnt AS (SELECT count(*) AS c FROM docs),
-        |cites AS (
-        |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-        |  UNION ALL
-        |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-        |  FROM docs, cnt),
-        |dedges AS (
-        |  SELECT DISTINCT a.src, b.source AS dst
-        |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-        |  WHERE a.src <> b.source),
-        |und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT src AS a, dst AS b FROM dedges
-        |    UNION ALL
-        |    SELECT dst, src FROM dedges)
-        |  WHERE a <> b),
-        |r0 AS (SELECT DISTINCT a AS node, a AS label FROM und)""".stripMargin
-    val steps = (1 to rounds).map { i =>
-      s"""v$i AS (
-         |  SELECT u.a AS node, r.label, count(*) AS c
-         |  FROM und u JOIN r${i - 1} r ON r.node = u.b
-         |  GROUP BY 1, 2),
-         |r$i AS (
-         |  SELECT node, label FROM (
-         |    SELECT node, label,
-         |      row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-         |    FROM v$i)
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n", ",\n", "\n")
-    prefix + steps +
-      s"SELECT node AS source, label AS community FROM r$rounds ORDER BY source"
+  def lpaOracleSql(rounds: Int = 4): String =
+    lpaSql(rounds) +
+      s"\nSELECT node AS source, label AS community FROM r$rounds ORDER BY source"
+
+  /** The g11 label rounds as DuckDB CTEs r0..r`rounds` over
+    * [[denseUndSql]], shared by the g11 and g20 oracles.
+    */
+  private def lpaSql(rounds: Int): String =
+    denseUndSql + "r0 AS (SELECT DISTINCT a AS node, a AS label FROM und)" +
+      (1 to rounds).map { i =>
+        s"""v$i AS (
+           |  SELECT u.a AS node, r.label, count(*) AS c
+           |  FROM und u JOIN r${i - 1} r ON r.node = u.b
+           |  GROUP BY 1, 2),
+           |r$i AS (
+           |  SELECT node, label FROM (
+           |    SELECT node, label,
+           |      row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
+           |    FROM v$i)
+           |  WHERE rn = 1)""".stripMargin
+      }.mkString(",\n", ",\n", "")
+
+  /** Frontier BFS from `seeds` (a `node` column) over (a, b) edges,
+    * `rounds` hops deep: (node, dist) for every node reached, dist = 0 at
+    * the seeds, or with `perSeed` (seed, node, dist) per seed, so that
+    * every seed runs its own search in the same rounds. Each round expands
+    * only the nodes first reached in the round before: ONE equi-join
+    * frontier x edges, ONE distinct and ONE key-only anti-join against the
+    * settled set, so total join work is O(edges touched once per first
+    * reach), the textbook Pregel BFS. Exchanges carry (seed, node, dist)
+    * scalars; localCheckpoint bounds lineage; the driver sees nothing.
+    * Fixed round count + first-reach distances make the result
+    * parallelism-independent and expressible as unrolled DuckDB CTE
+    * rounds. g17 runs it over directed edges; g12, g13 and g18 over the
+    * [[undirected]] view.
+    */
+  private[operators] def bfs(edges: DataFrame, seeds: DataFrame, rounds: Int,
+                                 perSeed: Boolean = false): DataFrame = {
+    val seed = if (perSeed) Seq("seed") else Nil
+    val key = seed :+ "node"
+    var settled = seeds.withColumn("seed", col("node"))
+      .select(key.map(col) :+ lit(0L).as("dist"): _*)
+      .localCheckpoint()
+    var frontier = settled
+    for (i <- 1 to rounds) {
+      frontier = frontier
+        .join(edges, col("node") === col("a"))
+        .select(seed.map(col) :+ col("b").as("node"): _*).distinct()
+        .join(settled.select(key.map(col): _*), key, "left_anti")
+        .withColumn("dist", lit(i.toLong))
+        .localCheckpoint()
+      settled = settled.unionByName(frontier).localCheckpoint()
+    }
+    settled
   }
 
   /** g12 — multi-source BFS HOP DISTANCE over the host graph: how many
@@ -987,40 +1016,10 @@ object GraphOps {
     * the exact integer hop count is what an operator reads off a crawl
     * report.
     *
-    * Scale shape: FRONTIER-style rounds — each round expands only the
-    * nodes first reached THAT round (an anti-join against the settled
-    * set), not the whole reached set, so total join work is O(edges
-    * touched once per first-reach), the textbook Pregel BFS; exchanges
-    * carry (node, dist) scalars; localCheckpoint bounds lineage. Fixed
-    * round count + integer min make the result parallelism-independent
-    * and expressible as unrolled DuckDB CTE rounds (min-merge per round
-    * is order-free, unlike LPA's vote argmax, so the oracle is even
-    * simpler than g11's).
-    */
-  def hopDistance(e0: DataFrame, seeds: DataFrame,
-                  rounds: Int = 4): DataFrame = {
-    val und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
-    var settled = seeds.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var frontier = settled
-    for (i <- 1 to rounds) {
-      val reached = frontier
-        .join(und, col("node") === col("a"))
-        .select(col("b").as("node")).distinct()
-      frontier = reached
-        .join(settled.select("node"), Seq("node"), "left_anti")
-        .withColumn("dist", lit(i.toLong))
-        .localCheckpoint()
-      settled = settled.unionByName(frontier).localCheckpoint()
-    }
-    settled
-  }
-
-  /** g12 on the derived host graph, seeded by the two lexicographically
-    * smallest sources; unreached hosts report hops = -1.
+    * Runs [[bfs]] over the undirected view, seeded by the two
+    * lexicographically smallest sources; unreached hosts report
+    * hops = -1. The oracle's per-round min-merge is order-free, unlike
+    * LPA's vote argmax, so it is even simpler than g11's.
     */
   def hostHopDistance(spark: SparkSession, dir: String,
                       rounds: Int = 4): DataFrame = {
@@ -1029,8 +1028,8 @@ object GraphOps {
     val seeds = hosts.orderBy("source").limit(2)
       .select(col("source").as("node"))
     hosts
-      .join(hopDistance(denseSourceEdges(spark, dir), seeds, rounds)
-          .withColumnRenamed("node", "source"),
+      .join(bfs(undirected(denseSourceEdges(spark, dir)).localCheckpoint(),
+          seeds, rounds).withColumnRenamed("node", "source"),
         Seq("source"), "left")
       .select(col("source"), coalesce(col("dist"), lit(-1L)).as("hops"))
       .orderBy("source")
@@ -1041,25 +1040,8 @@ object GraphOps {
     * order-free so rounds unroll to plain CTEs.
     */
   def hopOracleSql(rounds: Int = 4): String = {
-    val prefix =
-      """WITH docs AS (SELECT doc_id, source FROM documents),
-        |cnt AS (SELECT count(*) AS c FROM docs),
-        |cites AS (
-        |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-        |  UNION ALL
-        |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-        |  FROM docs, cnt),
-        |dedges AS (
-        |  SELECT DISTINCT a.src, b.source AS dst
-        |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-        |  WHERE a.src <> b.source),
-        |und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT src AS a, dst AS b FROM dedges
-        |    UNION ALL
-        |    SELECT dst, src FROM dedges)
-        |  WHERE a <> b),
-        |seeds AS (SELECT DISTINCT source FROM documents ORDER BY source LIMIT 2),
+    val prefix = denseUndSql +
+      """seeds AS (SELECT DISTINCT source FROM documents ORDER BY source LIMIT 2),
         |d0 AS (SELECT source AS node, CAST(0 AS BIGINT) AS dist FROM seeds)"""
         .stripMargin
     val steps = (1 to rounds).map { i =>
@@ -1084,42 +1066,17 @@ object GraphOps {
     * deterministic pivot sample — the centrality that handles
     * disconnected graphs natively (unreachable pivots contribute 0, no
     * ∞), which PageRank-family scores (g01/g06) only approximate via
-    * damping. Pivot distances come from the g12 BFS generalized to carry
-    * its seed: settled is keyed (seed, node), min-merge per key, so the
-    * oracle unrolls identically. 1/d terms are quantized to 1e6
-    * fixed-point LONGs before summation (the q74 discipline) — integer
-    * sums at any parallelism, one final rounded division for display.
+    * damping. Pivot distances come from the g12 BFS keyed by its seed
+    * ([[bfs]] with `perSeed`): settled is keyed (seed, node), min-merge
+    * per key, so the oracle unrolls identically. 1/d terms are quantized
+    * to 1e6 fixed-point LONGs before summation (the q74 discipline) —
+    * integer sums at any parallelism, one final rounded division for
+    * display. On the derived host graph: pivots = the 4 lexicographically
+    * smallest sources; h_q = Σ round(1e6/d) over reached pivots (d ≥ 1),
+    * h = h_q/1e6 rounded 4 dp; hosts reaching no pivot score 0.
     *
     * Scale: pivots are O(1) (4 here), so the frontier tables are |pivots|
     * × hosts keyed scalars; exchanges carry (seed, node, dist) only.
-    */
-  def multiSourceHops(e0: DataFrame, seeds: DataFrame,
-                      rounds: Int = 4): DataFrame = {
-    val und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
-    var settled = seeds
-      .select(col("node").as("seed"), col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var frontier = settled
-    for (i <- 1 to rounds) {
-      val reached = frontier
-        .join(und, col("node") === col("a"))
-        .select(col("seed"), col("b").as("node")).distinct()
-      frontier = reached
-        .join(settled.select("seed", "node"), Seq("seed", "node"),
-          "left_anti")
-        .withColumn("dist", lit(i.toLong))
-        .localCheckpoint()
-      settled = settled.unionByName(frontier).localCheckpoint()
-    }
-    settled
-  }
-
-  /** g13 on the derived host graph: pivots = the 4 lexicographically
-    * smallest sources; h_q = Σ round(1e6/d) over reached pivots (d ≥ 1),
-    * h = h_q/1e6 rounded 4 dp; hosts reaching no pivot score 0.
     */
   def harmonicCentrality(spark: SparkSession, dir: String,
                          rounds: Int = 4, nSeeds: Int = 4): DataFrame = {
@@ -1127,7 +1084,8 @@ object GraphOps {
       .select(col("source")).distinct()
     val seeds = hosts.orderBy("source").limit(nSeeds)
       .select(col("source").as("node"))
-    val perHost = multiSourceHops(denseSourceEdges(spark, dir), seeds, rounds)
+    val perHost = bfs(undirected(denseSourceEdges(spark, dir)).localCheckpoint(),
+        seeds, rounds, perSeed = true)
       .where(col("dist") >= 1L)
       .groupBy("node")
       .agg(count(lit(1)).as("n_reached"),
@@ -1155,10 +1113,7 @@ object GraphOps {
     * tables to edges — exchanges carry (host, degree) scalars.
     */
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = denseSourceEdges(spark, dir)
-    val und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b")).distinct()
+    val und = undirected(denseSourceEdges(spark, dir))
     val deg = und.groupBy("a").agg(count(lit(1)).as("d"))
     val pts = und
       .join(deg.select(col("a"), col("d").as("dx")), Seq("a"))
@@ -1187,10 +1142,7 @@ object GraphOps {
     * oracled.
     */
   def clusteringCoefficient(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = denseSourceEdges(spark, dir)
-    val und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b")).distinct()
+    val und = undirected(denseSourceEdges(spark, dir))
     val wedges = und.groupBy("a").agg(count(lit(1)).as("d"))
       .agg(sum(expr("(d * (d - 1)) div 2")).as("n_wedges"))
     val tri = hostTriangles(spark, dir)
@@ -1205,24 +1157,8 @@ object GraphOps {
     * folded to a total plus the degree-wedge sum.
     */
   def transitivityOracleSql(): String =
-    """WITH docs AS (SELECT doc_id, source FROM documents),
-      |cnt AS (SELECT count(*) AS c FROM docs),
-      |cites AS (
-      |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-      |  UNION ALL
-      |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-      |  FROM docs, cnt),
-      |dedges AS (
-      |  SELECT DISTINCT a.src, b.source AS dst
-      |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-      |  WHERE a.src <> b.source),
-      |und AS (
-      |  SELECT DISTINCT a, b FROM (
-      |    SELECT src AS a, dst AS b FROM dedges
-      |    UNION ALL
-      |    SELECT dst, src FROM dedges)
-      |  WHERE a <> b),
-      |deg AS (SELECT a, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY a),
+    denseUndSql +
+    """deg AS (SELECT a, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY a),
       |w AS (SELECT CAST(sum((d * (d - 1)) // 2) AS BIGINT) AS n_wedges
       |  FROM deg),
       |tri AS (
@@ -1259,18 +1195,8 @@ object GraphOps {
     * then the same semi-join count.
     */
   def reciprocityOracleSql(): String =
-    """WITH docs AS (SELECT doc_id, source FROM documents),
-      |cnt AS (SELECT count(*) AS c FROM docs),
-      |cites AS (
-      |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-      |  UNION ALL
-      |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-      |  FROM docs, cnt),
-      |dedges AS (
-      |  SELECT DISTINCT a.src, b.source AS dst
-      |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-      |  WHERE a.src <> b.source),
-      |r AS (
+    denseGraphSql +
+    """r AS (
       |  SELECT CAST(count(*) AS BIGINT) AS n_reciprocal
       |  FROM dedges e WHERE EXISTS (
       |    SELECT 1 FROM dedges x WHERE x.src = e.dst AND x.dst = e.src)),
@@ -1283,24 +1209,8 @@ object GraphOps {
     * then the same integer moments.
     */
   def assortativityOracleSql(): String =
-    """WITH docs AS (SELECT doc_id, source FROM documents),
-      |cnt AS (SELECT count(*) AS c FROM docs),
-      |cites AS (
-      |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-      |  UNION ALL
-      |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-      |  FROM docs, cnt),
-      |dedges AS (
-      |  SELECT DISTINCT a.src, b.source AS dst
-      |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-      |  WHERE a.src <> b.source),
-      |und AS (
-      |  SELECT DISTINCT a, b FROM (
-      |    SELECT src AS a, dst AS b FROM dedges
-      |    UNION ALL
-      |    SELECT dst, src FROM dedges)
-      |  WHERE a <> b),
-      |deg AS (SELECT a, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY a),
+    denseUndSql +
+    """deg AS (SELECT a, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY a),
       |pts AS (
       |  SELECT da.d AS dx, db.d AS dy
       |  FROM und u JOIN deg da ON da.a = u.a JOIN deg db ON db.a = u.b),
@@ -1318,33 +1228,13 @@ object GraphOps {
       |    AS assortativity
       |FROM m""".stripMargin
 
-  /** Unrolled DuckDB mirror of `harmonicCentrality` — the g12 oracle
-    * with a seed column carried through every round.
+  /** The per-seed BFS rounds d1..d`rounds` over `und` as DuckDB CTEs,
+    * each the min-merge of the round before with its (seed, neighbor,
+    * dist + 1) rows; the g13 and g18 oracles start them from their own
+    * d0. Starts and ends with ",\n".
     */
-  def harmonicOracleSql(rounds: Int = 4, nSeeds: Int = 4): String = {
-    val prefix =
-      s"""WITH docs AS (SELECT doc_id, source FROM documents),
-        |cnt AS (SELECT count(*) AS c FROM docs),
-        |cites AS (
-        |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-        |  UNION ALL
-        |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-        |  FROM docs, cnt),
-        |dedges AS (
-        |  SELECT DISTINCT a.src, b.source AS dst
-        |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-        |  WHERE a.src <> b.source),
-        |und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT src AS a, dst AS b FROM dedges
-        |    UNION ALL
-        |    SELECT dst, src FROM dedges)
-        |  WHERE a <> b),
-        |seeds AS (SELECT DISTINCT source FROM documents
-        |  ORDER BY source LIMIT $nSeeds),
-        |d0 AS (SELECT source AS seed, source AS node,
-        |  CAST(0 AS BIGINT) AS dist FROM seeds)""".stripMargin
-    val steps = (1 to rounds).map { i =>
+  private def seededHopSql(rounds: Int): String =
+    (1 to rounds).map { i =>
       s"""d$i AS (
          |  SELECT seed, node, min(dist) AS dist FROM (
          |    SELECT seed, node, dist FROM d${i - 1}
@@ -1353,7 +1243,17 @@ object GraphOps {
          |    FROM und u JOIN d${i - 1} r ON r.node = u.a)
          |  GROUP BY seed, node)""".stripMargin
     }.mkString(",\n", ",\n", ",\n")
-    prefix + steps +
+
+  /** Unrolled DuckDB mirror of `harmonicCentrality` — the g12 oracle
+    * with a seed column carried through every round.
+    */
+  def harmonicOracleSql(rounds: Int = 4, nSeeds: Int = 4): String = {
+    val prefix = denseUndSql +
+      s"""seeds AS (SELECT DISTINCT source FROM documents
+        |  ORDER BY source LIMIT $nSeeds),
+        |d0 AS (SELECT source AS seed, source AS node,
+        |  CAST(0 AS BIGINT) AS dist FROM seeds)""".stripMargin
+    prefix + seededHopSql(rounds) +
       s"""per AS (
          |  SELECT node,
          |    CAST(count(*) AS BIGINT) AS n_reached,
@@ -1374,7 +1274,7 @@ object GraphOps {
     * metric): all-source bounded BFS (the g12/g13 kernel with every
     * host as a seed — the host graph is small enough that all-pairs is
     * the honest form; at larger graphs the standard estimator swaps in
-    * a seed sample, which is exactly `multiSourceHops` with fewer
+    * a seed sample, which is exactly this [[bfs]] with fewer
     * seeds) → ordered-pair count per distance, cumulative share in
     * integer bp, and the effective-diameter flag on the first distance
     * covering ≥90% of reachable pairs. The one-number companion to
@@ -1392,7 +1292,8 @@ object GraphOps {
     val seeds = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("source")).distinct()
       .select(col("source").as("node"))
-    val d = multiSourceHops(denseSourceEdges(spark, dir), seeds, rounds)
+    val d = bfs(undirected(denseSourceEdges(spark, dir)).localCheckpoint(),
+        seeds, rounds, perSeed = true)
       .where(col("dist") >= 1L)
     val total = d.agg(count(lit(1)).as("total_pairs"))
     val w = org.apache.spark.sql.expressions.Window.orderBy("dist")
@@ -1414,37 +1315,11 @@ object GraphOps {
     * steps with seeds = every host, then the same histogram arithmetic.
     */
   def distanceHistogramOracleSql(rounds: Int = 6): String = {
-    val prefix =
-      """WITH docs AS (SELECT doc_id, source FROM documents),
-        |cnt AS (SELECT count(*) AS c FROM docs),
-        |cites AS (
-        |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-        |  UNION ALL
-        |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-        |  FROM docs, cnt),
-        |dedges AS (
-        |  SELECT DISTINCT a.src, b.source AS dst
-        |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-        |  WHERE a.src <> b.source),
-        |und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT src AS a, dst AS b FROM dedges
-        |    UNION ALL
-        |    SELECT dst, src FROM dedges)
-        |  WHERE a <> b),
-        |d0 AS (SELECT source AS seed, source AS node,
+    val prefix = denseUndSql +
+      """d0 AS (SELECT source AS seed, source AS node,
         |  CAST(0 AS BIGINT) AS dist FROM (SELECT DISTINCT source FROM documents))"""
         .stripMargin
-    val steps = (1 to rounds).map { i =>
-      s"""d$i AS (
-         |  SELECT seed, node, min(dist) AS dist FROM (
-         |    SELECT seed, node, dist FROM d${i - 1}
-         |    UNION ALL
-         |    SELECT r.seed, u.b AS node, r.dist + 1 AS dist
-         |    FROM und u JOIN d${i - 1} r ON r.node = u.a)
-         |  GROUP BY seed, node)""".stripMargin
-    }.mkString(",\n", ",\n", ",\n")
-    prefix + steps +
+    prefix + seededHopSql(rounds) +
       s"""reach AS (SELECT dist FROM d$rounds WHERE dist >= 1),
          |tot AS (SELECT CAST(count(*) AS BIGINT) AS total_pairs FROM reach),
          |hist AS (
@@ -1502,18 +1377,8 @@ object GraphOps {
     * shared-destination self-join and integer Jaccard.
     */
   def cocitationOracleSql(): String =
-    """WITH docs AS (SELECT doc_id, source FROM documents),
-      |cnt AS (SELECT count(*) AS c FROM docs),
-      |cites AS (
-      |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-      |  UNION ALL
-      |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-      |  FROM docs, cnt),
-      |dedges AS (
-      |  SELECT DISTINCT a.src, b.source AS dst
-      |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-      |  WHERE a.src <> b.source),
-      |sizes AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
+    denseGraphSql +
+    """sizes AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
       |  FROM dedges GROUP BY src),
       |pairs AS (
       |  SELECT a.src AS host_a, b.src AS host_b,
@@ -1545,23 +1410,12 @@ object GraphOps {
     */
   def rankStability(spark: SparkSession, dir: String,
                     iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val base = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("source"))
-    val nDocs = base.count()
-    def edgesOf(citing: DataFrame): DataFrame = {
-      val b = base.select(col("doc_id").as("cited_id"),
-        col("source").as("dst"))
-      citing
-        .select(col("source").as("src"),
-          ((col("doc_id") * 17L + 3L) % nDocs).as("cited"))
-        .join(b, col("cited") === col("cited_id"))
-        .where(col("src") =!= col("dst"))
-        .select("src", "dst").distinct()
-    }
-    val prFull = pageRank(spark, edgesOf(base), iters, damping)
+    val (docs, nDocs) = documents(spark, dir)
+    val prFull = pageRank(spark, citationEdges(docs, nDocs, docs -> linearCite),
+      iters, damping)
       .select(col("node"), col("pagerank").as("pr_full"))
-    val prDrop = pageRank(spark,
-      edgesOf(base.where(pmod(col("doc_id"), lit(4L)) =!= 0L)),
+    val prDrop = pageRank(spark, citationEdges(docs, nDocs,
+        docs.where(pmod(docId, lit(4L)) =!= 0L) -> linearCite),
       iters, damping)
       .select(col("node"), col("pagerank").as("pr_drop"))
     val j = prFull.join(prDrop, Seq("node"))
@@ -1675,12 +1529,8 @@ object GraphOps {
     */
   def modularity(spark: SparkSession, dir: String,
                  rounds: Int = 4): DataFrame = {
-    val e = denseSourceEdges(spark, dir)
-    val und = e.select(col("src").as("a"), col("dst").as("b"))
-      .union(e.select(col("dst").as("a"), col("src").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
-    val labels = labelPropagation(e, rounds).localCheckpoint()
+    val und = undirected(denseSourceEdges(spark, dir)).localCheckpoint()
+    val labels = communities(und, rounds).localCheckpoint()
     val la = labels.select(col("source").as("a"), col("community").as("ca"))
     val lb = labels.select(col("source").as("b"), col("community").as("cb"))
     val tm = und.agg(count(lit(1)).as("two_m"))
@@ -1708,40 +1558,10 @@ object GraphOps {
   /** Unrolled DuckDB mirror of `modularity`: the g11 LPA steps, then the
     * identical cleared-denominator arithmetic.
     */
-  def modularityOracleSql(rounds: Int = 4): String = {
-    val prefix =
-      """WITH docs AS (SELECT doc_id, source FROM documents),
-        |cnt AS (SELECT count(*) AS c FROM docs),
-        |cites AS (
-        |  SELECT source AS src, (doc_id * 17 + 3) % c AS cited FROM docs, cnt
-        |  UNION ALL
-        |  SELECT source, (doc_id * doc_id * 7 + doc_id * 31 + 5) % c
-        |  FROM docs, cnt),
-        |dedges AS (
-        |  SELECT DISTINCT a.src, b.source AS dst
-        |  FROM cites a JOIN docs b ON b.doc_id = a.cited
-        |  WHERE a.src <> b.source),
-        |und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT src AS a, dst AS b FROM dedges
-        |    UNION ALL
-        |    SELECT dst, src FROM dedges)
-        |  WHERE a <> b),
-        |r0 AS (SELECT DISTINCT a AS node, a AS label FROM und)""".stripMargin
-    val steps = (1 to rounds).map { i =>
-      s"""v$i AS (
-         |  SELECT u.a AS node, r.label, count(*) AS c
-         |  FROM und u JOIN r${i - 1} r ON r.node = u.b
-         |  GROUP BY 1, 2),
-         |r$i AS (
-         |  SELECT node, label FROM (
-         |    SELECT node, label,
-         |      row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-         |    FROM v$i)
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n", ",\n", ",\n")
-    prefix + steps +
-      s"""lab AS (SELECT node, label FROM r$rounds),
+  def modularityOracleSql(rounds: Int = 4): String =
+    lpaSql(rounds) +
+      s""",
+         |lab AS (SELECT node, label FROM r$rounds),
          |tm AS (SELECT CAST(count(*) AS BIGINT) AS two_m FROM und),
          |per AS (
          |  SELECT la.label AS community,
@@ -1766,7 +1586,6 @@ object GraphOps {
          |    / (CAST(two_m AS DOUBLE) * CAST(two_m AS DOUBLE)), 4)
          |    AS modularity
          |FROM q CROSS JOIN tot ORDER BY community""".stripMargin
-  }
 
   /** g17's edge derivation: the two citation maps of `denseSourceEdges`,
     * each THINNED to a residue class (linear map on doc_id % 5 == 0,
@@ -1774,47 +1593,13 @@ object GraphOps {
     * connected at every SF — every host would classify as CORE and the
     * decomposition below would be vacuous; thinning keeps the directed
     * graph sparse enough that all four bow-tie classes are inhabited at
-    * sf0.001/0.01/0.1 (verified empirically). Integer-only arithmetic, so
-    * DuckDB derives the identical graph.
+    * sf0.001/0.01/0.1 (verified empirically).
     */
   def thinSourceEdges(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("source"))
-    val nDocs = docs.count()
-    val cites = docs
-      .where(pmod(col("doc_id"), lit(5L)) === 0L)
-      .select(col("source").as("src"),
-        ((col("doc_id") * 17L + 3L) % nDocs).as("cited"))
-      .unionByName(docs
-        .where(pmod(col("doc_id"), lit(6L)) === 1L)
-        .select(col("source").as("src"),
-          ((col("doc_id") * col("doc_id") * 7L + col("doc_id") * 31L + 5L)
-            % nDocs).as("cited")))
-    val b = docs.select(col("doc_id").as("cited_id"), col("source").as("dst"))
-    cites.join(b, cites("cited") === b("cited_id"))
-      .where(col("src") =!= col("dst"))
-      .select("src", "dst")
-      .distinct()
-  }
-
-  /** Directed reachable set from `seeds` within `rounds` hops: per round
-    * ONE equi-join frontier×edges + ONE distinct + ONE id-only anti-join
-    * against the settled set (the g12 shape, without distances).
-    * localCheckpoint bounds lineage; the driver sees nothing.
-    */
-  private def reachFrom(edges: DataFrame, seeds: DataFrame,
-                        rounds: Int): DataFrame = {
-    var settled = seeds.select("node").distinct().localCheckpoint()
-    var frontier = settled
-    for (_ <- 1 to rounds) {
-      val nxt = frontier.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .localCheckpoint()
-      frontier = nxt
-      settled = settled.unionByName(nxt).localCheckpoint()
-    }
-    settled
+    val (docs, nDocs) = documents(spark, dir)
+    citationEdges(docs, nDocs,
+      docs.where(pmod(docId, lit(5L)) === 0L) -> linearCite,
+      docs.where(pmod(docId, lit(6L)) === 1L) -> quadraticCite)
   }
 
   /** g17 — BOW-TIE DECOMPOSITION of the directed host graph (Broder et
@@ -1842,9 +1627,10 @@ object GraphOps {
     val pv = e.groupBy("src").agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("src").asc).limit(1)
       .select(col("src").as("node"))
-    val fwd = reachFrom(e, pv, rounds).select(col("node").as("fnode"))
-    val rev = e.select(col("dst").as("src"), col("src").as("dst"))
-    val bwd = reachFrom(rev, pv, rounds).select(col("node").as("bnode"))
+    val fwd = bfs(e.select(col("src").as("a"), col("dst").as("b")), pv, rounds)
+      .select(col("node").as("fnode"))
+    val bwd = bfs(e.select(col("dst").as("a"), col("src").as("b")), pv, rounds)
+      .select(col("node").as("bnode"))
     spark.read.parquet(s"$dir/documents.parquet")
       .select(col("source")).distinct()
       .join(fwd, col("source") === col("fnode"), "left")

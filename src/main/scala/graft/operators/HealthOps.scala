@@ -160,25 +160,6 @@ object HealthOps {
     priorityCalibration(spark, root, epochs)
   }
 
-  /** c87 — crawl-budget FAIRNESS audit: Jain's index (Jain/Chiu/Hawe,
-    * DEC TR-301 1984) over what the crawl actually spent per host, for
-    * both request count and byte volume — the one-number answer to "is
-    * the corpus a balanced sample of the host population or did three
-    * hot domains eat the budget?" J = (Σx)²/(n·Σx²) ∈ (0,1]: 1 = every
-    * host got an equal share, 1/n = one host got everything. Read next
-    * to c85's per-host ledger (this is the rollup) and c34's allocation
-    * (this audits what allocation actually produced); the salted
-    * politeness scheduler (J3/W2) exists precisely to keep this number
-    * from collapsing under Zipf host skew.
-    *
-    * Integer-exact by construction: x (docs, bytes) are BIGINTs, so
-    * numerator (Σx)² and denominator n·Σx² are exact BIGINT products and
-    * J is ONE final double division rounded 6 dp; the dominant-host
-    * share is an integer-div basis-point figure (the c85/c86 idiom).
-    * Shape: ONE scan → per-host map-side-combined agg (|hosts| rows) →
-    * a 2-row stack + rollup; nothing wider than (host, 2 longs) ever
-    * reaches an exchange.
-    */
   /** c94 — per-host THROUGHPUT CEILING classification: is each host's
     * crawl rate limited by POLITENESS (its Crawl-delay caps legal
     * fetches per epoch), by BUDGET (c34's allocation), or by nothing
@@ -216,6 +197,25 @@ object HealthOps {
       .orderBy("host")
   }
 
+  /** c87 — crawl-budget FAIRNESS audit: Jain's index (Jain/Chiu/Hawe,
+    * DEC TR-301 1984) over what the crawl actually spent per host, for
+    * both request count and byte volume — the one-number answer to "is
+    * the corpus a balanced sample of the host population or did three
+    * hot domains eat the budget?" J = (Σx)²/(n·Σx²) ∈ (0,1]: 1 = every
+    * host got an equal share, 1/n = one host got everything. Read next
+    * to c85's per-host ledger (this is the rollup) and c34's allocation
+    * (this audits what allocation actually produced); the salted
+    * politeness scheduler (J3/W2) exists precisely to keep this number
+    * from collapsing under Zipf host skew.
+    *
+    * Integer-exact by construction: x (docs, bytes) are BIGINTs, so
+    * numerator (Σx)² and denominator n·Σx² are exact BIGINT products and
+    * J is ONE final double division rounded 6 dp; the dominant-host
+    * share is an integer-div basis-point figure (the c85/c86 idiom).
+    * Shape: ONE scan → per-host map-side-combined agg (|hosts| rows) →
+    * a 2-row stack + rollup; nothing wider than (host, 2 longs) ever
+    * reaches an exchange.
+    */
   def budgetFairness(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
       .groupBy("source")

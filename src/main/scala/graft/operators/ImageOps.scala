@@ -76,15 +76,6 @@ object ImageOps {
         psnrUdf(col("bytes"), col("prev_bytes")).as("psnr_db"))
   }
 
-  /** Image near-dup PAIRS on the 64-bit phash space: the c15 cross-modal
-    * blocking applied within the image table itself — 4x16-bit phash
-    * blocks as join keys (certain recall for Hamming <= 3: four blocks
-    * can absorb at most 3 flipped bits without one block matching
-    * exactly), exact bit_count verify, ids + phash only on the exchange.
-    * Ids are carried as img_a/img_b = xxhash64(image_id) so downstream
-    * component resolution works on 8-byte keys (the engine's universal
-    * identity discipline); the string ids ride along for readability.
-    */
   /** The 4x16-bit phash block rows of an (image_id, phash) table — the
     * shared blocking kernel of [[nearDupPhash]] and the persisted
     * SimIndex.writePhashIndex (the two MUST agree so a persisted index is
@@ -102,6 +93,15 @@ object ImageOps {
         col("block.blk").as("blk"), col("block.key").as("key"))
   }
 
+  /** Image near-dup PAIRS on the 64-bit phash space: the c15 cross-modal
+    * blocking applied within the image table itself — 4x16-bit phash
+    * blocks as join keys (certain recall for Hamming <= 3: four blocks
+    * can absorb at most 3 flipped bits without one block matching
+    * exactly), exact bit_count verify, ids + phash only on the exchange.
+    * Ids are carried as img_a/img_b = xxhash64(image_id) so downstream
+    * component resolution works on 8-byte keys (the engine's universal
+    * identity discipline); the string ids ride along for readability.
+    */
   def nearDupPhash(images: DataFrame, maxHamming: Int = 3): DataFrame = {
     val blocked = phashBlocks(images)
     blocked.as("a").join(blocked.as("b"),

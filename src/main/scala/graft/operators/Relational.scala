@@ -1198,18 +1198,6 @@ object Relational {
         count(lit(1)).as("n"))
       .orderBy("l_returnflag")
 
-  /** q72 — exact WEIGHTED percentiles (p50/p90/p99 of quantity, weighted
-    * by revenue cents) per return flag: the "which quantity level carries
-    * half the money" cut that unweighted percentile_disc (q23) cannot
-    * answer. Shape: pre-aggregate weight per DISTINCT (flag, qty) first —
-    * the cumulative-sum window then runs over |flags|x|distinct qty| rows
-    * (a few hundred) instead of every lineitem, and its ordering is unique
-    * per partition so the cumsum is deterministic at any parallelism. All
-    * arithmetic stays in BIGINT cents (round(x*100)::long, the q65 idiom);
-    * the percentile is the smallest qty whose cumulative weight reaches
-    * p% of the total (weighted lower percentile), so the result is
-    * integer-exact and hash-comparable — no FP summation order anywhere.
-    */
   /** Generic exact SPEARMAN rank correlation per group: entities are
     * ranked by x and by y (row_number with a deterministic entity-id
     * tie-break — documented policy: distinct ranks, not averaged ties,
@@ -1285,6 +1273,18 @@ object Relational {
           col("sinv").cast("double"), 4).as("hmean_qty"))
       .orderBy("l_returnflag")
 
+  /** q72 — exact WEIGHTED percentiles (p50/p90/p99 of quantity, weighted
+    * by revenue cents) per return flag: the "which quantity level carries
+    * half the money" cut that unweighted percentile_disc (q23) cannot
+    * answer. Shape: pre-aggregate weight per DISTINCT (flag, qty) first —
+    * the cumulative-sum window then runs over |flags|x|distinct qty| rows
+    * (a few hundred) instead of every lineitem, and its ordering is unique
+    * per partition so the cumsum is deterministic at any parallelism. All
+    * arithmetic stays in BIGINT cents (round(x*100)::long, the q65 idiom);
+    * the percentile is the smallest qty whose cumulative weight reaches
+    * p% of the total (weighted lower percentile), so the result is
+    * integer-exact and hash-comparable — no FP summation order anywhere.
+    */
   def weightedPercentiles(spark: SparkSession, dir: String): DataFrame = {
     val perQty = t(spark, dir, "lineitem")
       .select(col("l_returnflag"),

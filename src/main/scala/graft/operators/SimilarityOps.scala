@@ -112,24 +112,6 @@ object SimilarityOps {
       .where(col("cos") >= threshold)
   }
 
-  /** IVF (inverted-file) ANN — the k-means-partitioned alternative to LSH
-    * bucketing (coarse quantizer of Jégou/Douze/Schmid, TPAMI 2011 — public
-    * technique; this is IVF-flat: no product quantization, exact cosine
-    * within probed lists).
-    *
-    * Build: deterministic stride-sampled seed centroids -> ONE distributed
-    * Lloyd iteration (assign via Catalyst HOFs, per-dimension mean via
-    * posexplode + groupBy — k*d tiny rows collected; means rounded to 1e-4
-    * so float-summation order across partitions cannot flip an assignment)
-    * -> every corpus vector labeled with its nearest-centroid list id.
-    * Query: rank centroids per query (query x k cross join — both tiny),
-    * probe the `nProbe` nearest lists, exact cosine over candidates only.
-    *
-    * Scale shape: the list id is a partition/cluster key exactly like the
-    * LSH bucket — a probe touches ~nProbe/nClusters of the corpus, the
-    * (query x probe) set broadcasts, the corpus never shuffles, and
-    * approximation affects recall only (candidates are scored exactly).
-    */
   /** List count scaled to corpus size: ~sqrt(n) lists (the standard IVF
     * sizing — probe cost nProbe*n/k and list-scan cost balance at k~sqrt(n))
     * with a floor for tiny test corpora and a cap that bounds the broadcast
@@ -214,6 +196,24 @@ object SimilarityOps {
     }
   }
 
+  /** IVF (inverted-file) ANN — the k-means-partitioned alternative to LSH
+    * bucketing (coarse quantizer of Jégou/Douze/Schmid, TPAMI 2011 — public
+    * technique; this is IVF-flat: no product quantization, exact cosine
+    * within probed lists).
+    *
+    * Build: deterministic stride-sampled seed centroids -> ONE distributed
+    * Lloyd iteration (assign via Catalyst HOFs, per-dimension mean via
+    * posexplode + groupBy — k*d tiny rows collected; means rounded to 1e-4
+    * so float-summation order across partitions cannot flip an assignment)
+    * -> every corpus vector labeled with its nearest-centroid list id.
+    * Query: rank centroids per query (query x k cross join — both tiny),
+    * probe the `nProbe` nearest lists, exact cosine over candidates only.
+    *
+    * Scale shape: the list id is a partition/cluster key exactly like the
+    * LSH bucket — a probe touches ~nProbe/nClusters of the corpus, the
+    * (query x probe) set broadcasts, the corpus never shuffles, and
+    * approximation affects recall only (candidates are scored exactly).
+    */
   def annIvfTopK(spark: SparkSession, dir: String,
                  nQueries: Int = 3, k: Int = 5, nClusters: Int = 0,
                  nProbe: Int = 0, nIter: Int = 2): DataFrame = {
@@ -384,21 +384,6 @@ object SimilarityOps {
     cents
   }
 
-  /** PQ-flat ANN (emb05): encode the corpus to m-byte codes, score every
-    * code per query by ASYMMETRIC DISTANCE (one m x kSub dot-product
-    * lookup table per query; approx dot(q, v) = sum of m table lookups),
-    * keep the top `refine` approximate candidates, then re-score those
-    * few EXACTLY (the engine's verify discipline — approximation affects
-    * recall only, never returned scores).
-    *
-    * Scale shape: the scan side is the CODES table (m bytes/vector, 384x
-    * smaller than the floats — RAM-resident at 10^9 vectors), the query
-    * tables broadcast, the float vectors are touched only for the
-    * refine-set rejoin. Complements LSH (emb02: probe a bucket slice)
-    * and IVF (emb04: probe nearest lists): PQ scans everything but at
-    * bytes-per-vector cost — the right tool when recall must not depend
-    * on a partition guess.
-    */
   /** IVF-PQ ANN (emb06) — the two approximations COMPOSED, which is the
     * layout every production billion-scale index actually ships (FAISS
     * IVFPQ; Jégou et al. TPAMI'11 §V): the IVF coarse quantizer cuts the
@@ -468,6 +453,21 @@ object SimilarityOps {
       .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"), col("rank"))
   }
 
+  /** PQ-flat ANN (emb05): encode the corpus to m-byte codes, score every
+    * code per query by ASYMMETRIC DISTANCE (one m x kSub dot-product
+    * lookup table per query; approx dot(q, v) = sum of m table lookups),
+    * keep the top `refine` approximate candidates, then re-score those
+    * few EXACTLY (the engine's verify discipline — approximation affects
+    * recall only, never returned scores).
+    *
+    * Scale shape: the scan side is the CODES table (m bytes/vector, 384x
+    * smaller than the floats — RAM-resident at 10^9 vectors), the query
+    * tables broadcast, the float vectors are touched only for the
+    * refine-set rejoin. Complements LSH (emb02: probe a bucket slice)
+    * and IVF (emb04: probe nearest lists): PQ scans everything but at
+    * bytes-per-vector cost — the right tool when recall must not depend
+    * on a partition guess.
+    */
   def annPqTopK(spark: SparkSession, dir: String,
                 nQueries: Int = 3, k: Int = 5, m: Int = 8, kSub: Int = 16,
                 refine: Int = 0): DataFrame = {

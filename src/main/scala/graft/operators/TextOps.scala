@@ -205,32 +205,6 @@ object TextOps {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Exact word-3-gram Jaccard near-dup via an inverted shingle index —
-    * the exact counterpart of [[nearDupMinhash]] (which estimates the same
-    * measure probabilistically). DuckDB-oracled end to end (t05).
-    *
-    * Plan (the scale-honest shape):
-    *   1. shingle: tokens -> distinct word 3-grams per doc; the shuffle key
-    *      is `xxhash64(shingle)` so exchanges carry (doc_id, long), never
-    *      shingle text (collision probability over the corpus is ~m^2/2^65
-    *      — negligible, and intersection counts are unaffected without
-    *      collisions, so the integer output stays oracle-exact);
-    *   2. df-cap: shingles occurring in more than `maxDf` docs are dropped
-    *      from the index BEFORE the self-join (a hot stop-shingle joins
-    *      df^2 pairs — the quadratic blowup at web scale). The cap makes
-    *      n_inter a conservative estimate; it is applied identically in
-    *      the DuckDB oracle so the gate stays exact.
-    *   3. pair counts: inverted-index self-join on the shingle hash with
-    *      doc_a < doc_b -> count = |A ∩ B| (id-only shuffle);
-    *   4. threshold without floats: Jaccard >= 1/2 iff 2*|A∩B| >= |A∪B|;
-    *      output (n_inter, n_union) as integers — no double division that
-    *      could round differently across engines.
-    */
-  /** The t05/t07/t08 demo corpus: every 20th base doc gets a planted
-    * near-identical revision (id + 1e6, a few appended tokens) so the
-    * near-dup family has known-positive pairs with a DuckDB-expressible
-    * construction.
-    */
   // ---- t13: benchmark decontamination ------------------------------
   //
   // The training-data step the near-dup family does NOT cover: eval-set
@@ -308,6 +282,11 @@ object TextOps {
       .join(contaminationReport(spark, dir, n).select("doc_id"),
         Seq("doc_id"), "left_anti")
 
+  /** The t05/t07/t08 demo corpus: every 20th base doc gets a planted
+    * near-identical revision (id + 1e6, a few appended tokens) so the
+    * near-dup family has known-positive pairs with a DuckDB-expressible
+    * construction.
+    */
   def plantedCorpus(spark: SparkSession, dir: String): DataFrame = {
     val base = docs(spark, dir).select("doc_id", "text")
     val planted = base.where(pmod(col("doc_id"), lit(20)) === 0)
@@ -433,6 +412,27 @@ object TextOps {
       .distinct()
   }
 
+  /** Exact word-3-gram Jaccard near-dup via an inverted shingle index —
+    * the exact counterpart of [[nearDupMinhash]] (which estimates the same
+    * measure probabilistically). DuckDB-oracled end to end (t05).
+    *
+    * Plan (the scale-honest shape):
+    *   1. shingle: tokens -> distinct word 3-grams per doc; the shuffle key
+    *      is `xxhash64(shingle)` so exchanges carry (doc_id, long), never
+    *      shingle text (collision probability over the corpus is ~m^2/2^65
+    *      — negligible, and intersection counts are unaffected without
+    *      collisions, so the integer output stays oracle-exact);
+    *   2. df-cap: shingles occurring in more than `maxDf` docs are dropped
+    *      from the index BEFORE the self-join (a hot stop-shingle joins
+    *      df^2 pairs — the quadratic blowup at web scale). The cap makes
+    *      n_inter a conservative estimate; it is applied identically in
+    *      the DuckDB oracle so the gate stays exact.
+    *   3. pair counts: inverted-index self-join on the shingle hash with
+    *      doc_a < doc_b -> count = |A ∩ B| (id-only shuffle);
+    *   4. threshold without floats: Jaccard >= 1/2 iff 2*|A∩B| >= |A∪B|;
+    *      output (n_inter, n_union) as integers — no double division that
+    *      could round differently across engines.
+    */
   def nearDupNgramJaccard(spark: SparkSession, dir: String, maxDf: Int = 64): DataFrame =
     ngramJaccardPairs(plantedCorpus(spark, dir), maxDf)
       .orderBy("doc_a", "doc_b")
@@ -597,23 +597,6 @@ object TextOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Repeated-span detection — the shuffle-friendly screen of
-    * exact-substring dedup (Lee et al. ACL 2022 use a suffix array; at
-    * Spark scale the equivalent signal is an inverted index of winnowed
-    * rolling-hash anchors, TextKit.winnowedWindows): any byte span of
-    * length >= k + w - 1 shared verbatim between two documents is
-    * GUARANTEED to produce at least one identical anchor, so joining
-    * anchors finds every long verbatim overlap (boilerplate, quotes,
-    * mirrored paragraphs). Plan discipline matches t05: exchanges carry
-    * (hash, doc_id, offset) scalars only; anchors whose document frequency
-    * exceeds `maxDf` (universal boilerplate) are dropped before the
-    * self-join. Output per pair: anchor count + the offset extent of the
-    * shared material in each document.
-    *
-    * A deterministic 4% of docs is planted as partial copies (a verbatim
-    * 300-byte slice inside otherwise-new text) so the operator provably
-    * fires on the test corpus.
-    */
   /** The t06/t10 demo corpus: base docs plus a deterministic 4% planted as
     * PARTIAL copies — a verbatim 300-byte slice of the source inside
     * otherwise-new text (fresh lead-in, unrelated tail), so span-level
@@ -652,6 +635,23 @@ object TextOps {
       .where(col("n_anchors") >= minAnchors)
   }
 
+  /** Repeated-span detection — the shuffle-friendly screen of
+    * exact-substring dedup (Lee et al. ACL 2022 use a suffix array; at
+    * Spark scale the equivalent signal is an inverted index of winnowed
+    * rolling-hash anchors, TextKit.winnowedWindows): any byte span of
+    * length >= k + w - 1 shared verbatim between two documents is
+    * GUARANTEED to produce at least one identical anchor, so joining
+    * anchors finds every long verbatim overlap (boilerplate, quotes,
+    * mirrored paragraphs). Plan discipline matches t05: exchanges carry
+    * (hash, doc_id, offset) scalars only; anchors whose document frequency
+    * exceeds `maxDf` (universal boilerplate) are dropped before the
+    * self-join. Output per pair: anchor count + the offset extent of the
+    * shared material in each document.
+    *
+    * A deterministic 4% of docs is planted as partial copies (a verbatim
+    * 300-byte slice inside otherwise-new text) so the operator provably
+    * fires on the test corpus.
+    */
   def repeatedSpans(spark: SparkSession, dir: String,
                     minAnchors: Int = 2, maxDf: Int = 64): DataFrame =
     repeatedSpanPairs(spanCorpus(spark, dir), minAnchors, maxDf)

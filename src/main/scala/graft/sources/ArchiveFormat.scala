@@ -52,9 +52,9 @@ object ArchiveFormat {
     * the corresponding body with a seek instead of materializing it —
     * the column-pruning fast path (a metadata scan of a payload archive
     * reads ~1% of the bytes).
-    */
-  /** `keepEpoch` is the header-evaluable pushed predicate: a rejected
-    * record's bodies are seek-skipped and the record never materializes.
+    *
+    * @param keepEpoch the header-evaluable pushed predicate: a rejected
+    *   record's bodies are seek-skipped and the record never materializes.
     */
   final class FileReader(file: File, wantCaption: Boolean, wantBytes: Boolean,
                          keepEpoch: Int => Boolean = _ => true)
