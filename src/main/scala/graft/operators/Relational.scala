@@ -1618,7 +1618,7 @@ object Relational {
         .as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("n"))
     val tot = obs.agg(sum("n").as("nt"))
-    broadcast(benford).join(obs, Seq("digit"), "left")
+    benford.join(obs, Seq("digit"), "left")
       .withColumn("n", coalesce(col("n"), lit(0L)))
       .crossJoin(broadcast(tot))
       .withColumn("e", (col("nt") * col("exp_ppm")).cast("double") / 1e6)

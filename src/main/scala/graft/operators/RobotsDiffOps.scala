@@ -75,7 +75,7 @@ object RobotsDiffOps {
         Seq("host"))
       .where(!FrontierJob.robotsAllowedCol(col("rules_old"), col("path")) &&
         FrontierJob.robotsAllowedCol(col("rules_new"), col("path")))
-      .select(held.columns.map(col): _*) // verdict columns drop; schema = held's
+      .select(held.columns.toIndexedSeq.map(col): _*) // verdict columns drop; schema = held's
   }
 
   /** The opposite flip: rows ALREADY FETCHED whose path the new generation
@@ -92,7 +92,7 @@ object RobotsDiffOps {
         Seq("host"))
       .where(FrontierJob.robotsAllowedCol(col("rules_old"), col("path")) &&
         !FrontierJob.robotsAllowedCol(col("rules_new"), col("path")))
-      .select(fetched.columns.map(col): _*)
+      .select(fetched.columns.toIndexedSeq.map(col): _*)
   }
 
   /** The compliance-purge list for a maintained latest table at a policy

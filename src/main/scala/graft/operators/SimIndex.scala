@@ -178,28 +178,15 @@ object SimIndex {
       k: Int = 5,
       probeRadius: Int = 2): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val masks = (0 until (1 << nBits)).filter(m => Integer.bitCount(m) <= probeRadius)
     val buckets = spark.read.parquet(s"$root/lsh_buckets")
       .where(col("epoch") <= upToEpoch).select("vec_id", "bucket")
-    val q = queries.select(col("query_id"),
-      col("qvec"),
-      explode(transform(typedLit(masks), m =>
-        graft.functions.GraftFunctions.lshBucket(spark, nBits, col("qvec"))
-          .bitwiseXOR(m))).as("probe_bucket"))
-    val candIds = buckets.join(broadcast(q.select("query_id", "probe_bucket")),
-        col("bucket") === col("probe_bucket"))
+    val probes = queries.select(col("query_id"), SimilarityOps.probeBuckets(
+      graft.functions.GraftFunctions.lshBucket(spark, nBits, col("qvec")), nBits, probeRadius)
+      .as("probe_bucket"))
+    val candIds = buckets.join(broadcast(probes), col("bucket") === col("probe_bucket"))
       .select("query_id", "vec_id")
-    val scored = candIds
-      .join(vectors, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
       .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        SimilarityOps.cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"), col("rank"))
+    SimilarityOps.topKRows(SimilarityOps.exactScores(candIds, vectors, queries), k)
   }
 
   /** Cross-epoch embedding near-dup through the persisted bucket table —
@@ -239,16 +226,7 @@ object SimIndex {
       .select(least(col("a.vec_id"), col("b.vec_id")).as("vec_a"),
         greatest(col("a.vec_id"), col("b.vec_id")).as("vec_b"))
       .dropDuplicates("vec_a", "vec_b")
-    val candIds = cand.select(col("vec_a").as("vec_id"))
-      .unionByName(cand.select(col("vec_b").as("vec_id")))
-      .dropDuplicates("vec_id")
-    val candVecs = vectors.join(broadcast(candIds), Seq("vec_id"), "left_semi")
-    cand
-      .join(candVecs.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
-      .join(candVecs.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(SimilarityOps.cosineCol(col("emb_a"), col("emb_b")), 4).as("cos"))
-      .where(col("cos") >= threshold)
+    SimilarityOps.verifyPairs(cand, vectors, threshold)
   }
 
   // --------------------------------------------------------------- images
@@ -420,16 +398,11 @@ object SimIndex {
       epoch: Int,
       nClusters: Int = 0,
       nIter: Int = 2): Unit = {
-    val spark = emb.sparkSession
     val e = emb.select("vec_id", "embedding")
-    val k = if (nClusters > 0) nClusters else SimilarityOps.clustersFor(e.count())
-    val cents = SimilarityOps.ivfTrain(e, k, nIter)
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("list_id", "centroid")
-      .coalesce(1)
+    val ivf = SimilarityOps.ivfBuild(e, nClusters, nIter)
+    ivf.centTable(emb.sparkSession).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/ivf_centroids/epoch=$epoch")
-    e.withColumn("list_id", SimilarityOps.ivfAssignCol(col("embedding"), cents))
-      .select("vec_id", "list_id")
+    ivf.listed(e).select("vec_id", "list_id")
       .write.mode("overwrite").parquet(s"$root/ivf_lists/epoch=$epoch")
   }
 
@@ -471,24 +444,13 @@ object SimIndex {
     val centTable = spark.read.parquet(s"$root/ivf_centroids/epoch=$centroidEpoch")
     val lists = spark.read.parquet(s"$root/ivf_lists")
       .where(col("epoch") <= upToEpoch).select("vec_id", "list_id")
-    val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(SimilarityOps.cosineCol(col("qvec"), col("centroid")).desc,
-        col("list_id").asc)
-    val probes = queries.crossJoin(centTable)
-      .withColumn("probe_rank", row_number().over(probeW))
-      .where(col("probe_rank") <= nProbe)
+    val probes = SimilarityOps.nearestLists(queries, centTable, nProbe)
       .select("query_id", "qvec", "list_id")
-    val scored = lists.join(broadcast(probes), Seq("list_id"))
+    SimilarityOps.topKRows(lists.join(broadcast(probes), Seq("list_id"))
       .where(col("vec_id") =!= col("query_id"))
       .join(vectors, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        SimilarityOps.cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"), col("rank"))
+        SimilarityOps.cosineCol(col("embedding"), col("qvec")).as("cos")), k)
   }
 
   // ------------------------------------------- exact-substring (suffix) index

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -35,26 +36,180 @@ object SimilarityOps {
   def cosineCol(a: Column, b: Column): Column =
     dotCol(a, b) / (normCol(a) * normCol(b))
 
+  // ---- the search path: one owner per decision --------------------------
+  //
+  // Every search below is a composition of these: the query set, a probe
+  // of the corpus against it, an optional approximate first stage refined
+  // exactly, and the per-query top-K ranker.
+
+  /** The query set: corpus vectors vec_id < nQueries as (query_id, qvec),
+    * plus any `extra` columns over the same rows (the LSH probe buckets).
+    */
+  private[operators] def querySet(e: DataFrame, nQueries: Int, extra: Column*): DataFrame =
+    e.where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id") +: col("embedding").as("qvec") +: extra: _*)
+
+  /** Each corpus row against each broadcast query it meets under `on`; a
+    * query never meets itself. The query side is tiny, so the corpus
+    * never shuffles.
+    */
+  private def againstQueries(corpus: DataFrame, queries: DataFrame, on: Column*): DataFrame =
+    corpus.join(broadcast(queries), (on :+ (col("vec_id") =!= col("query_id"))).reduce(_ && _))
+
+  /** The exact score of a corpus row against its query. */
+  private def qcos: Column = cosineCol(col("embedding"), col("qvec")).as("cos")
+
+  /** The per-query ranker: `rankCol` numbers each `by` group's rows by
+    * `order`, ties broken on `tie` ascending, so every rank is
+    * deterministic.
+    */
+  private[operators] def ranked(df: DataFrame, order: Column, by: Seq[String] = Seq("query_id"),
+                                tie: String = "vec_id", rankCol: String = "rank"): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+      Window.partitionBy(by.map(col): _*).orderBy(order, col(tie).asc)))
+
+  /** The per-query top-K: [[ranked]] rows with rank <= k. */
+  private[operators] def topK(df: DataFrame, k: Int, order: Column, by: Seq[String] = Seq("query_id"),
+                              tie: String = "vec_id", rankCol: String = "rank"): DataFrame =
+    ranked(df, order, by, tie, rankCol).where(col(rankCol) <= k)
+
+  /** A search's result rows: each query's top `k` (query_id, vec_id) by
+    * `score` descending, the score rounded to 4 dp after ranking. `rank`
+    * is int, or long where the query's declared output has it long
+    * (DuckDB's row_number() is BIGINT and the oracle's schema compare is
+    * name+type exact).
+    */
+  private[operators] def topKRows(scored: DataFrame, k: Int, score: String = "cos",
+                                  longRank: Boolean = false): DataFrame =
+    topK(scored, k, col(score).desc).select(col("query_id"), col("vec_id"),
+      round(col(score), 4).as(score),
+      if (longRank) col("rank").cast("long").as("rank") else col("rank"))
+
+  /** Exact cosine for candidate (query_id, vec_id) ids: the candidates'
+    * vectors re-join by vec_id (the candidate ids pinned to a broadcast
+    * when `pinCand`) and the broadcast query vectors by query_id.
+    */
+  private[operators] def exactScores(cand: DataFrame, vectors: DataFrame, queries: DataFrame,
+                                     pinCand: Boolean = false): DataFrame = {
+    val withVecs =
+      if (pinCand) vectors.join(broadcast(cand), Seq("vec_id"))
+      else cand.join(vectors, Seq("vec_id"))
+    withVecs.join(broadcast(queries), Seq("query_id"))
+      .select(col("query_id"), col("vec_id"), qcos)
+  }
+
+  /** The approximate→exact refine: each query's `refineN` best candidates
+    * by the approximate `order` (ids only) re-score with exact cosine
+    * against the floats, so approximation affects recall only, never a
+    * returned score. Candidate-complete (refineN >= corpus) it is brute
+    * force.
+    */
+  private def exactRefine(approx: DataFrame, order: Column, refineN: Int, e: DataFrame,
+                          queries: DataFrame, k: Int, longRank: Boolean,
+                          pinCand: Boolean = false): DataFrame = {
+    val cand = topK(approx, refineN, order, rankCol = "arank").select("query_id", "vec_id")
+    topKRows(exactScores(cand, e, queries, pinCand), k, longRank = longRank)
+  }
+
+  /** The quantized scans' refine depth: `refine`, else max(50, 10k). */
+  private def refineDepth(refine: Int, k: Int): Int =
+    if (refine > 0) refine else math.max(50, 10 * k)
+
+  /** The multi-probe LSH mask set (Lv et al., VLDB'07): every XOR mask
+    * within Hamming distance `radius`, a plan-time constant list.
+    */
+  private[operators] def probeMasks(nBits: Int, radius: Int): IndexedSeq[Int] =
+    (0 until (1 << nBits)).filter(m => Integer.bitCount(m) <= radius)
+
+  /** One row per bucket within Hamming `radius` of `bucket`. */
+  private[operators] def probeBuckets(bucket: Column, nBits: Int, radius: Int): Column =
+    explode(transform(typedLit(probeMasks(nBits, radius)), m => bucket.bitwiseXOR(m)))
+
+  /** The ids-only candidate-pair verify: (vec_a, vec_b) candidates restrict
+    * `vectors` by one broadcast semi-join on their ids (ids are pairs of
+    * longs; the corpus is never re-shuffled), the surviving vectors
+    * re-join, and pairs at rounded cosine >= threshold remain.
+    */
+  private[operators] def verifyPairs(cand: DataFrame, vectors: DataFrame,
+                                     threshold: Double): DataFrame = {
+    val candIds = cand.select(col("vec_a").as("vec_id"))
+      .unionByName(cand.select(col("vec_b").as("vec_id")))
+      .dropDuplicates("vec_id")
+    val candVecs = vectors.join(broadcast(candIds), Seq("vec_id"), "left_semi")
+    cand
+      .join(candVecs.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
+      .join(candVecs.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
+      .select(col("vec_a"), col("vec_b"),
+        round(cosineCol(col("emb_a"), col("emb_b")), 4).as("cos"))
+      .where(col("cos") >= threshold)
+  }
+
+  /** The recall-vs-brute curve of an ANN operating-point sweep. Candidate
+    * rows (query_id, vec_id, cos, `level`) fan out over `grid` AFTER the
+    * one candidate-cosine pass (explode a constant literal, keep level <=
+    * grid point — the t41 pattern), so a sweep costs windows, not
+    * re-probes. Per grid point: the top-k within it, `n_hits` against
+    * bruteCosineTopK and `recall_bp` (hits as integer bp of the truth;
+    * a zero-hit point still reports), plus `n_cand`, the fanned
+    * candidate count, when `countCand`.
+    */
+  private def recallCurve(spark: SparkSession, dir: String, nQueries: Int, k: Int,
+                          cand: DataFrame, level: String, gridCol: String, grid: Seq[Int],
+                          countCand: Boolean = false): DataFrame = {
+    import spark.implicits._
+    val fan = cand
+      .select(col("query_id"), col("vec_id"), col("cos"), col(level),
+        explode(lit(grid.toArray)).as(gridCol))
+      .where(col(level) <= col(gridCol))
+    val topk = topK(fan, k, col("cos").desc, by = Seq(gridCol, "query_id"))
+    val brute = bruteCosineTopK(spark, dir, nQueries, k).select("query_id", "vec_id")
+    val truthN = math.max(1L, brute.count())
+    val hits = topk.join(brute, Seq("query_id", "vec_id"), "left_semi")
+      .groupBy(gridCol).agg(count(lit(1)).as("n_hits"))
+    val perPoint =
+      (if (countCand) Seq(fan.groupBy(gridCol).agg(count(lit(1)).as("n_cand"))) else Nil) :+ hits
+    perPoint.foldLeft(grid.map(_.toLong).toDF(gridCol)) { (curve, t) =>
+        curve.join(t.select(col(gridCol).cast("long").as(gridCol), col(t.columns(1))),
+          Seq(gridCol), "left")
+      }
+      .na.fill(0L, perPoint.map(_.columns(1)))
+      .withColumn("recall_bp", expr(s"n_hits * 10000 div $truthN"))
+  }
+
+  /** A vector column with component `dim` nudged by `delta` (double add,
+    * float-rounded — an IEEE edit every engine reproduces).
+    */
+  private def nudged(dim: Int, delta: Double): Column =
+    transform(col("embedding"), (x, i) =>
+      when(i === dim, (x.cast("double") + lit(delta)).cast("float")).otherwise(x))
+
+  /** The near-dup plant: a deterministic 5% of (vec_id, embedding) rows
+    * (vec_id % 20 == 0) as slightly-perturbed copies at vec_id + 10^6, so
+    * the embedding near-dup operators provably fire on the test corpus
+    * (same pattern as the text near-dup plants).
+    */
+  def plantedCopies(base: DataFrame): DataFrame =
+    base.where(pmod(col("vec_id"), lit(20)) === 0)
+      .select((col("vec_id") + 1000000L).as("vec_id"), nudged(0, 0.05).as("embedding"))
+
+  /** The embeddings table with its near-dup plant. */
+  private def plantedEmb(spark: SparkSession, dir: String): DataFrame = {
+    val base = emb(spark, dir).select("vec_id", "embedding")
+    base.unionByName(plantedCopies(base))
+  }
+
+  // ---- searches ----------------------------------------------------------
+
   /** Brute-force cosine top-k for query vectors vec_id < nQueries: the
     * (tiny) query set broadcasts against a full corpus scan — one pass,
-    * no index. Rank ties break on vec_id (determinism).
+    * no index. Rank ties break on vec_id (determinism); rank is long
+    * (emb01 is in the hard oracle gate).
     */
   def bruteCosineTopK(spark: SparkSession, dir: String,
                       nQueries: Int = 3, k: Int = 5): DataFrame = {
     val e = emb(spark, dir)
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val scored = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      // rank cast to long: DuckDB's row_number() is BIGINT and emb01 is in
-      // the hard oracle gate (schema compare is name+type exact)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    topKRows(againstQueries(e, querySet(e, nQueries))
+      .select(col("query_id"), col("vec_id"), qcos), k, longRank = true)
   }
 
   /** Bucket width scaled to corpus size: target mean bucket ~`perBucket`
@@ -70,47 +225,29 @@ object SimilarityOps {
     * the dedup family): LSH bucket is the blocking key, exact cosine the
     * verify. Scale discipline (the t03 minhash pattern): the bucket
     * self-join carries (bucket, vec_id) ONLY — embeddings never ride the
-    * candidate exchange — then candidate ids restrict the corpus via a
-    * broadcast semi-join (ids are pairs of longs; the corpus is never
-    * re-shuffled) and vectors are re-joined for the exact-cosine verify on
-    * the candidate set alone. nBits grows with the corpus (nBitsFor), so a
-    * bucket's expected occupancy — and hence the quadratic term — is
-    * constant. A deterministic 5% of vectors is planted as
-    * slightly-perturbed copies so the operator provably fires on the test
-    * corpus (same pattern as the text near-dup plants).
+    * candidate exchange — then [[verifyPairs]] restricts the corpus to the
+    * candidate ids and re-joins their vectors for the exact cosine. nBits
+    * grows with the corpus (nBitsFor), so a bucket's expected occupancy —
+    * and hence the quadratic term — is constant. The corpus carries the
+    * near-dup plant ([[plantedCopies]]).
     */
   def nearDupCosine(spark: SparkSession, dir: String,
                     threshold: Double = 0.99, nBits: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    val base = emb(spark, dir).select("vec_id", "embedding")
-    val planted = base.where(pmod(col("vec_id"), lit(20)) === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          when(i === 0, (x.cast("double") + lit(0.05)).cast("float")).otherwise(x))
-          .as("embedding"))
-    val corpus = base.unionByName(planted)
+    val corpus = plantedEmb(spark, dir)
     val bits = if (nBits > 0) nBits else nBitsFor(emb(spark, dir).count() * 21 / 20)
-    val bucketed = corpus.withColumn("bucket",
-      graft.functions.GraftFunctions.lshBucket(spark, bits, col("embedding")))
     // candidate generation: ids only through the bucket exchange
-    val ids = bucketed.select("bucket", "vec_id")
+    val ids = corpus.withColumn("bucket",
+        graft.functions.GraftFunctions.lshBucket(spark, bits, col("embedding")))
+      .select("bucket", "vec_id")
     val cand = ids.as("a").join(ids.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .dropDuplicates("vec_a", "vec_b") // multi-probe/banded variants dedupe here
-    // verify: restrict corpus to candidate ids (broadcast semi — the corpus
-    // side never shuffles), then re-join the surviving vectors
-    val candIds = cand.select(col("vec_a").as("vec_id"))
-      .unionByName(cand.select(col("vec_b").as("vec_id")))
-      .dropDuplicates("vec_id")
-    val candVecs = corpus.join(broadcast(candIds), Seq("vec_id"), "left_semi")
-    cand
-      .join(candVecs.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
-      .join(candVecs.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(cosineCol(col("emb_a"), col("emb_b")), 4).as("cos"))
-      .where(col("cos") >= threshold)
+    verifyPairs(cand, corpus, threshold)
   }
+
+  // ---- IVF: one build ----------------------------------------------------
 
   /** List count scaled to corpus size: ~sqrt(n) lists (the standard IVF
     * sizing — probe cost nProbe*n/k and list-scan cost balance at k~sqrt(n))
@@ -121,6 +258,19 @@ object SimilarityOps {
     */
   def clustersFor(corpusRows: Long): Int =
     math.max(16, math.min(4096, math.round(math.sqrt(corpusRows.toDouble)))).toInt
+
+  /** The BOUNDED default probe count (round-4 verdict "what's wrong #1"):
+    * nProbe = kLists/4 kept the probed FRACTION of the corpus at a constant
+    * 1/4 at every scale — sqrt(n) clusters then buy only a 4x constant over
+    * brute force. The standard IVF shape is a fixed (or very slowly grown)
+    * probe count: with k ~ sqrt(n) lists of ~sqrt(n) vectors, a capped
+    * nProbe scans ~nProbe*sqrt(n) candidates per query — a vanishing
+    * fraction as the corpus grows. The kLists/4 ramp is kept only below the
+    * cap so tiny test corpora (16-64 lists) probe enough lists to hold the
+    * measured recall floor (EntrySmokeSpec).
+    */
+  private[operators] def probeDefault(kLists: Int): Int =
+    math.min(64, math.max(4, kLists / 4))
 
   /** argmax_c cos(v, c) over a plan-time constant centroid list: ||v|| is
     * constant across c, so rank by dot(v,c)/||c||; ties resolve to the
@@ -146,8 +296,49 @@ object SimilarityOps {
       graft.functions.VecKit.ivfAssign(vec, bcC.value, bcN.value)).apply(v)
   }
 
+  /** One IVF build (coarse quantizer of Jégou/Douze/Schmid, TPAMI 2011 —
+    * public technique) over a (vec_id, embedding) frame: `n` is the one
+    * corpus count, which sizes the lists and every training stride.
+    */
+  private[operators] final case class Ivf(n: Long, kLists: Int, cents: Seq[Seq[Float]]) {
+    /** The corpus labeled with each vector's nearest-centroid list id. */
+    def listed(e: DataFrame): DataFrame =
+      e.withColumn("list_id", ivfAssignCol(col("embedding"), cents))
+
+    /** (list_id, centroid) — the persistable centroid table. */
+    def centTable(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("list_id", "centroid")
+    }
+
+    /** `nProbe`, else the bounded default. */
+    def probeN(nProbe: Int): Int = if (nProbe > 0) nProbe else probeDefault(kLists)
+  }
+
+  /** Count the corpus once, size the lists (`nClusters`, else
+    * clustersFor), train the centroids.
+    */
+  private[operators] def ivfBuild(e: DataFrame, nClusters: Int = 0, nIter: Int = 2): Ivf = {
+    val n = e.count()
+    val kLists = if (nClusters > 0) nClusters else clustersFor(n)
+    Ivf(n, kLists, trainIvf(e, n, kLists, nIter, 32768L))
+  }
+
+  /** The centroid ranking: each query's lists by cos(qvec, centroid)
+    * descending, list_id ascending, as `probe_rank` (query x lists — both
+    * tiny — cross-joined).
+    */
+  private[operators] def listRanks(queries: DataFrame, centTable: DataFrame): DataFrame =
+    ranked(queries.crossJoin(centTable), cosineCol(col("qvec"), col("centroid")).desc,
+      tie = "list_id", rankCol = "probe_rank")
+
+  /** Each query's `nProbe` nearest lists. */
+  private[operators] def nearestLists(queries: DataFrame, centTable: DataFrame,
+                                      nProbe: Int): DataFrame =
+    listRanks(queries, centTable).where(col("probe_rank") <= nProbe)
+
   /** Deterministic IVF training: stride-sampled seed centroids, then
-    * `nIter` distributed Lloyd steps (assign via Catalyst HOFs,
+    * `nIter` distributed Lloyd steps (assign via the VecKit kernel,
     * per-dimension mean via posexplode + groupBy, re-packed to ONE array
     * row per list before collect — k tiny rows per step; means rounded to
     * 1e-4 so float-summation order across partitions cannot flip an
@@ -155,9 +346,13 @@ object SimilarityOps {
     * centroid (deterministic fallback).
     */
   def ivfTrain(e: DataFrame, nClusters: Int, nIter: Int = 2,
-               sampleTarget: Long = 32768L): Seq[Seq[Float]] = {
+               sampleTarget: Long = 32768L): Seq[Seq[Float]] =
+    trainIvf(e, e.count(), nClusters, nIter, sampleTarget)
+
+  /** [[ivfTrain]] over a corpus of `n` rows (the caller's count). */
+  private def trainIvf(e: DataFrame, n: Long, nClusters: Int, nIter: Int,
+                       sampleTarget: Long): Seq[Seq[Float]] = {
     import e.sparkSession.implicits._
-    val n = e.count()
     // Train on a bounded deterministic sample (stride on vec_id), the
     // standard IVF practice: k-means quality needs ~a few hundred points
     // per centroid, not the corpus — at 10^9 vectors a full-corpus Lloyd
@@ -196,18 +391,13 @@ object SimilarityOps {
     }
   }
 
-  /** IVF (inverted-file) ANN — the k-means-partitioned alternative to LSH
-    * bucketing (coarse quantizer of Jégou/Douze/Schmid, TPAMI 2011 — public
-    * technique; this is IVF-flat: no product quantization, exact cosine
-    * within probed lists).
+  /** IVF-flat ANN — the k-means-partitioned alternative to LSH bucketing:
+    * no product quantization, exact cosine within probed lists.
     *
-    * Build: deterministic stride-sampled seed centroids -> ONE distributed
-    * Lloyd iteration (assign via Catalyst HOFs, per-dimension mean via
-    * posexplode + groupBy — k*d tiny rows collected; means rounded to 1e-4
-    * so float-summation order across partitions cannot flip an assignment)
-    * -> every corpus vector labeled with its nearest-centroid list id.
-    * Query: rank centroids per query (query x k cross join — both tiny),
-    * probe the `nProbe` nearest lists, exact cosine over candidates only.
+    * Build: [[ivfBuild]] (stride-sampled seed centroids, distributed Lloyd
+    * steps) -> every corpus vector labeled with its nearest-centroid list.
+    * Query: [[nearestLists]] picks each query's `nProbe` nearest lists,
+    * exact cosine over candidates only.
     *
     * Scale shape: the list id is a partition/cluster key exactly like the
     * LSH bucket — a probe touches ~nProbe/nClusters of the corpus, the
@@ -217,41 +407,13 @@ object SimilarityOps {
   def annIvfTopK(spark: SparkSession, dir: String,
                  nQueries: Int = 3, k: Int = 5, nClusters: Int = 0,
                  nProbe: Int = 0, nIter: Int = 2): DataFrame = {
-    import spark.implicits._
     val e = emb(spark, dir).select("vec_id", "embedding")
-    val kLists = if (nClusters > 0) nClusters else clustersFor(e.count())
-    // BOUNDED probe count (round-4 verdict "what's wrong #1"): nProbe =
-    // kLists/4 kept the probed FRACTION of the corpus at a constant 1/4 at
-    // every scale — sqrt(n) clusters then buy only a 4x constant over brute
-    // force. The standard IVF shape is a fixed (or very slowly grown)
-    // probe count: with k ~ sqrt(n) lists of ~sqrt(n) vectors, a capped
-    // nProbe scans ~nProbe*sqrt(n) candidates per query — a vanishing
-    // fraction as the corpus grows. The kLists/4 ramp is kept only below
-    // the cap so tiny test corpora (16-64 lists) probe enough lists to
-    // hold the measured recall floor (EntrySmokeSpec).
-    val probeN = if (nProbe > 0) nProbe else math.min(64, math.max(4, kLists / 4))
-    val cents = ivfTrain(e, kLists, nIter)
-    val listed = e.withColumn("list_id", ivfAssignCol(col("embedding"), cents))
-    val centTable = cents.zipWithIndex
-      .map { case (c, i) => (i, c) }.toDF("list_id", "centroid")
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(cosineCol(col("qvec"), col("centroid")).desc, col("list_id").asc)
-    val probes = queries.crossJoin(centTable)
-      .withColumn("probe_rank", row_number().over(probeW))
-      .where(col("probe_rank") <= probeN)
+    val ivf = ivfBuild(e, nClusters, nIter)
+    val listed = ivf.listed(e)
+    val probes = nearestLists(querySet(e, nQueries), ivf.centTable(spark), ivf.probeN(nProbe))
       .select("query_id", "qvec", "list_id")
-    val scored = listed.join(broadcast(probes),
-        listed("list_id") === probes("list_id") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"), col("rank"))
+    topKRows(againstQueries(listed, probes, listed("list_id") === probes("list_id"))
+      .select(col("query_id"), col("vec_id"), qcos), k)
   }
 
   /** emb18 — IVF OPERATING-POINT sweep: recall@k versus probe count over
@@ -259,67 +421,36 @@ object SimilarityOps {
     * nProbe policy (round-4 verdict fix) from an assertion into a curve —
     * the ANN family's t41. For each probe budget p: the fraction of the
     * corpus scanned (p/kLists, integer bp) and recall@k against the
-    * brute-force truth (hit counts are integers; recall is one integer
-    * div). The grid always includes p = kLists, where IVF degenerates to
-    * brute force by construction — that row's recall MUST be 10000 bp
-    * (same candidates, same (cos desc, vec_id asc) ties), a self-
-    * verifying invariant IvfSweepSpec pins along with monotonicity.
+    * brute-force truth ([[recallCurve]]). The grid always includes p =
+    * kLists, where IVF degenerates to brute force by construction — that
+    * row's recall MUST be 10000 bp (same candidates, same (cos desc,
+    * vec_id asc) ties), a self-verifying invariant IvfSweepSpec pins
+    * along with monotonicity.
     *
     * Scale shape: ONE training, ONE assignment pass, ONE candidate scan —
-    * the probe grid fans out AFTER the expensive cosine is computed (the
-    * t41 pattern: explode a constant literal, filter probe_rank <= p), so
     * sweeping 5 budgets costs one query's work plus a 5x window on the
     * candidate rows, not 5 retrainings.
     */
   def ivfOperatingPoints(spark: SparkSession, dir: String,
                          nQueries: Int = 8, k: Int = 10,
                          probeGrid: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    import spark.implicits._
     val e = emb(spark, dir).select("vec_id", "embedding")
-    val kLists = clustersFor(e.count())
-    val grid = (probeGrid.filter(_ < kLists) :+ kLists).distinct.sorted
-    val cents = ivfTrain(e, kLists, 2)
-    val listed = e.withColumn("list_id", ivfAssignCol(col("embedding"), cents))
-    val centTable = cents.zipWithIndex
-      .map { case (c, i) => (i, c) }.toDF("list_id", "centroid")
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(cosineCol(col("qvec"), col("centroid")).desc, col("list_id").asc)
-    val ranked = queries.crossJoin(centTable)
-      .withColumn("probe_rank", row_number().over(probeW))
+    val ivf = ivfBuild(e)
+    val kLists = ivf.kLists
+    val listed = ivf.listed(e)
+    val ranks = listRanks(querySet(e, nQueries), ivf.centTable(spark))
       .select("query_id", "qvec", "list_id", "probe_rank")
-    val cand = listed.join(broadcast(ranked),
-        listed("list_id") === ranked("list_id") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("probe_rank"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val fan = cand
-      .select(col("query_id"), col("vec_id"), col("cos"), col("probe_rank"),
-        explode(lit(grid.toArray)).as("n_probe"))
-      .where(col("probe_rank") <= col("n_probe"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("n_probe", "query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val topk = fan.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-    val brute = bruteCosineTopK(spark, dir, nQueries, k)
-      .select("query_id", "vec_id")
-    val truthN = brute.count()
-    val hits = topk.join(brute, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy("n_probe").agg(count(lit(1)).as("n_hits"))
-    // grid rows with zero hits must still report (a p=1 budget that finds
-    // nothing is the most important row on the curve)
-    grid.map(_.toLong).toDF("n_probe")
-      .join(hits.select(col("n_probe").cast("long").as("n_probe"), col("n_hits")),
-        Seq("n_probe"), "left")
-      .na.fill(0L, Seq("n_hits"))
+    val cand = againstQueries(listed, ranks, listed("list_id") === ranks("list_id"))
+      .select(col("query_id"), col("vec_id"), col("probe_rank"), qcos)
+    recallCurve(spark, dir, nQueries, k, cand, "probe_rank", "n_probe",
+        (probeGrid.filter(_ < kLists) :+ kLists).distinct.sorted)
       .select(col("n_probe"), lit(kLists.toLong).as("n_lists"),
         expr(s"n_probe * 10000 div $kLists").as("probed_bp"),
-        col("n_hits"), expr(s"n_hits * 10000 div ${math.max(1L, truthN)}")
-          .as("recall_bp"))
+        col("n_hits"), col("recall_bp"))
       .orderBy("n_probe")
   }
+
+  // ---- quantized scans ---------------------------------------------------
 
   /** Per-subspace PQ codebooks (product quantization, Jégou/Douze/Schmid
     * TPAMI 2011 — public technique): the corpus dimension is split into
@@ -332,9 +463,13 @@ object SimilarityOps {
     * with 1e-4 mean rounding so arrival order can never flip a code.
     */
   def pqTrain(e: DataFrame, m: Int = 8, kSub: Int = 16, nIter: Int = 2,
-              sampleTarget: Long = 4096L): Array[Array[Array[Float]]] = {
+              sampleTarget: Long = 4096L): Array[Array[Array[Float]]] =
+    trainPq(e, e.count(), m, kSub, nIter, sampleTarget)
+
+  /** [[pqTrain]] over a corpus of `n` rows (the caller's count). */
+  private def trainPq(e: DataFrame, n: Long, m: Int, kSub: Int, nIter: Int = 2,
+                      sampleTarget: Long = 4096L): Array[Array[Array[Float]]] = {
     import e.sparkSession.implicits._
-    val n = e.count()
     if (n == 0) return Array.empty
     val stride = math.max(1L, n / sampleTarget)
     val sample: Array[Array[Float]] = e
@@ -384,6 +519,29 @@ object SimilarityOps {
     cents
   }
 
+  /** A vector column's m-byte PQ code against `cents` (codebooks ride one
+    * broadcast).
+    */
+  private def pqEncodeCol(v: Column, cents: Array[Array[Array[Float]]]): Column = {
+    val bcC = org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(cents)
+    udf((vec: Seq[Float]) => graft.functions.VecKit.pqEncode(vec, bcC.value)).apply(v)
+  }
+
+  /** Asymmetric-distance scoring against PQ codebooks: one m x kSub
+    * lookup table per query vector (nQueries tiny rows collected, the
+    * tables broadcast), approx dot(q, v) = sum of m table lookups. Returns
+    * the query ids and the (query_id, code) -> approx score function.
+    */
+  private def adcScorer(queries: DataFrame, cents: Array[Array[Array[Float]]])
+      : (Seq[Long], UserDefinedFunction) = {
+    val qRows = queries.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val bcT = queries.sparkSession.sparkContext.broadcast(qRows.map { case (qid, qv) =>
+      qid -> graft.functions.VecKit.pqAdcTable(qv, cents)
+    }.toMap)
+    (qRows.map(_._1).toIndexedSeq, udf((qid: Long, code: Array[Byte]) =>
+      graft.functions.VecKit.pqAdcScore(code, bcT.value(qid))))
+  }
+
   /** IVF-PQ ANN (emb06) — the two approximations COMPOSED, which is the
     * layout every production billion-scale index actually ships (FAISS
     * IVFPQ; Jégou et al. TPAMI'11 §V): the IVF coarse quantizer cuts the
@@ -394,71 +552,34 @@ object SimilarityOps {
     * Codes quantize the raw vectors (FAISS by_residual=false variant) so
     * the emb05 codebooks/ADC kernels are reused verbatim. The index
     * table is (vec_id, list_id, code) — the persistable layout. Top
-    * `refineN` ADC candidates re-score EXACTLY against the floats (the
-    * engine's verify discipline: approximation affects recall only,
-    * never a returned score).
+    * `refine` ADC candidates re-score EXACTLY against the floats
+    * ([[exactRefine]]). One corpus count serves the list count and both
+    * trainings.
     */
   def annIvfPqTopK(spark: SparkSession, dir: String,
                    nQueries: Int = 3, k: Int = 5, nClusters: Int = 0,
                    nProbe: Int = 0, m: Int = 8, kSub: Int = 16,
                    refine: Int = 0): DataFrame = {
-    import spark.implicits._
     val e = emb(spark, dir).select("vec_id", "embedding")
-    val kLists = if (nClusters > 0) nClusters else clustersFor(e.count())
-    val probeN = if (nProbe > 0) nProbe else math.min(64, math.max(4, kLists / 4))
-    val cents = ivfTrain(e, kLists)
-    val pqC = pqTrain(e, m, kSub)
-    val bcPq = spark.sparkContext.broadcast(pqC)
-    val encodeUdf = udf((v: Seq[Float]) =>
-      graft.functions.VecKit.pqEncode(v, bcPq.value))
-    val index = e.select(col("vec_id"),
-      ivfAssignCol(col("embedding"), cents).as("list_id"),
-      encodeUdf(col("embedding")).as("code"))
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val centTable = cents.zipWithIndex
-      .map { case (c, i) => (i, c) }.toDF("list_id", "centroid")
-    val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(cosineCol(col("qvec"), col("centroid")).desc, col("list_id").asc)
-    val probes = queries.crossJoin(centTable)
-      .withColumn("probe_rank", row_number().over(probeW))
-      .where(col("probe_rank") <= probeN)
+    val ivf = ivfBuild(e, nClusters)
+    val pqC = trainPq(e, ivf.n, m, kSub)
+    val index = ivf.listed(e)
+      .select(col("vec_id"), col("list_id"), pqEncodeCol(col("embedding"), pqC).as("code"))
+    val queries = querySet(e, nQueries)
+    val probes = nearestLists(queries, ivf.centTable(spark), ivf.probeN(nProbe))
       .select("query_id", "list_id")
-    val qRows = queries.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val tables = qRows.map { case (qid, qv) =>
-      qid -> graft.functions.VecKit.pqAdcTable(qv, pqC)
-    }.toMap
-    val bcT = spark.sparkContext.broadcast(tables)
-    val scoreUdf = udf((qid: Long, code: Array[Byte]) =>
-      graft.functions.VecKit.pqAdcScore(code, bcT.value(qid)))
-    val refineN = if (refine > 0) refine else math.max(50, 10 * k)
-    val wA = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("approx").desc, col("vec_id").asc)
-    val cand = index.join(broadcast(probes), Seq("list_id"))
+    val (_, adc) = adcScorer(queries, pqC)
+    val approx = index.join(broadcast(probes), Seq("list_id"))
       .where(col("vec_id") =!= col("query_id"))
-      .withColumn("approx", scoreUdf(col("query_id"), col("code")))
-      .withColumn("arank", row_number().over(wA))
-      .where(col("arank") <= refineN)
-      .select("query_id", "vec_id")
-    val scored = cand
-      .join(e, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"), col("rank"))
+      .withColumn("approx", adc(col("query_id"), col("code")))
+    exactRefine(approx, col("approx").desc, refineDepth(refine, k), e, queries, k,
+      longRank = false)
   }
 
   /** PQ-flat ANN (emb05): encode the corpus to m-byte codes, score every
-    * code per query by ASYMMETRIC DISTANCE (one m x kSub dot-product
-    * lookup table per query; approx dot(q, v) = sum of m table lookups),
-    * keep the top `refine` approximate candidates, then re-score those
-    * few EXACTLY (the engine's verify discipline — approximation affects
-    * recall only, never returned scores).
+    * code per query by ASYMMETRIC DISTANCE ([[adcScorer]]), keep the top
+    * `refine` approximate candidates, then re-score those few EXACTLY
+    * ([[exactRefine]]).
     *
     * Scale shape: the scan side is the CODES table (m bytes/vector, 384x
     * smaller than the floats — RAM-resident at 10^9 vectors), the query
@@ -480,11 +601,8 @@ object SimilarityOps {
     * are a pure per-vector function of the codebooks, so re-encoding is
     * reproducible and epoch slices encode independently.
     */
-  def pqCodesOf(e: DataFrame, cents: Array[Array[Array[Float]]]): DataFrame = {
-    val bcC = e.sparkSession.sparkContext.broadcast(cents)
-    val encodeUdf = udf((v: Seq[Float]) => graft.functions.VecKit.pqEncode(v, bcC.value))
-    e.select(col("vec_id"), encodeUdf(col("embedding")).as("code"))
-  }
+  def pqCodesOf(e: DataFrame, cents: Array[Array[Array[Float]]]): DataFrame =
+    e.select(col("vec_id"), pqEncodeCol(col("embedding"), cents).as("code"))
 
   /** PQ ADC top-k against an explicit code table — the kernel shared by
     * the one-shot emb05 and the persisted-store emb10 path (identical
@@ -495,38 +613,13 @@ object SimilarityOps {
                                 cents: Array[Array[Array[Float]]],
                                 nQueries: Int, k: Int, refine: Int): DataFrame = {
     import e.sparkSession.implicits._
-    val spark = e.sparkSession
-    val sc = spark.sparkContext
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    // per-query ADC tables: nQueries tiny rows collected, tables broadcast
-    val qRows = queries.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val tables = qRows.map { case (qid, qv) =>
-      qid -> graft.functions.VecKit.pqAdcTable(qv, cents)
-    }.toMap
-    val bcT = sc.broadcast(tables)
-    val scoreUdf = udf((qid: Long, code: Array[Byte]) =>
-      graft.functions.VecKit.pqAdcScore(code, bcT.value(qid)))
-    val refineN = if (refine > 0) refine else math.max(50, 10 * k)
-    val qIds = qRows.map(_._1).toIndexedSeq.toDF("query_id")
-    val wA = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("approx").desc, col("vec_id").asc)
-    val cand = codes.crossJoin(broadcast(qIds))
+    val queries = querySet(e, nQueries)
+    val (qIds, adc) = adcScorer(queries, cents)
+    val approx = codes.crossJoin(broadcast(qIds.toDF("query_id")))
       .where(col("vec_id") =!= col("query_id"))
-      .withColumn("approx", scoreUdf(col("query_id"), col("code")))
-      .withColumn("arank", row_number().over(wA))
-      .where(col("arank") <= refineN)
-      .select("query_id", "vec_id")
-    val scored = cand
-      .join(e, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"), col("rank"))
+      .withColumn("approx", adc(col("query_id"), col("code")))
+    exactRefine(approx, col("approx").desc, refineDepth(refine, k), e, queries, k,
+      longRank = false)
   }
 
   // ---- emb10: persisted PQ index ------------------------------------------
@@ -605,10 +698,8 @@ object SimilarityOps {
     * exact in every engine at any summation order, which is what makes
     * this the first ANN whose CANDIDATE GENERATION is DuckDB-oracle-
     * deterministic end to end (emb02/04/05/06 gate on recall floors;
-    * emb07 gates on rows+schema+hash). Top `refineN` approximate
-    * candidates re-score exactly against the floats (the engine's verify
-    * discipline — approximation affects recall only, never a returned
-    * score).
+    * emb07 gates on rows+schema+hash). Top `refine` approximate
+    * candidates re-score exactly against the floats ([[exactRefine]]).
     *
     * Scale shape: the codes table is the scan side (1 byte/dim — RAM-
     * resident long after floats are not), the query codes broadcast, the
@@ -642,35 +733,17 @@ object SimilarityOps {
     */
   private def annSqAgainstCodes(e: DataFrame, codes: DataFrame,
                                 nQueries: Int, k: Int, refine: Int): DataFrame = {
-    val queries = sqCodesOf(e.where(col("vec_id") < nQueries))
+    val qCodes = sqCodesOf(e.where(col("vec_id") < nQueries))
       .select(col("vec_id").as("query_id"), col("code").as("qcode"),
         col("qq").as("qqq"))
     val intDot = aggregate(
       zip_with(col("code"), col("qcode"), (x, y) => x * y), lit(0L), (a, x) => a + x)
-    val refineN = if (refine > 0) refine else math.max(50, 10 * k)
-    val wA = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("approx").desc, col("vec_id").asc)
-    val cand = codes
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    val approx = againstQueries(codes, qCodes)
       .select(col("query_id"), col("vec_id"),
         (intDot.cast("double") / sqrt((col("qq") * col("qqq")).cast("double")))
           .as("approx"))
-      .withColumn("arank", row_number().over(wA))
-      .where(col("arank") <= refineN)
-      .select("query_id", "vec_id")
-    val qVecs = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val scored = cand
-      .join(e, Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    exactRefine(approx, col("approx").desc, refineDepth(refine, k), e,
+      querySet(e, nQueries), k, longRank = true)
   }
 
   /** emb08 — the PERSISTED SQ8 code store (SimIndex discipline applied
@@ -710,10 +783,10 @@ object SimilarityOps {
 
   /** emb09 — SemDeDup, SEMANTIC deduplication of an embedding corpus
     * (Abbas et al. 2023, arXiv:2303.09540 — public technique): k-means
-    * partitions the embedding space (the IVF coarse quantizer, ivfTrain,
-    * reused verbatim), near-dup pairs are searched ONLY within each
-    * cluster, the pair graph resolves to connected components (the D9
-    * operator), and the component-min vector survives.
+    * partitions the embedding space (the IVF coarse quantizer,
+    * [[ivfBuild]], reused verbatim), near-dup pairs are searched ONLY
+    * within each cluster, the pair graph resolves to connected components
+    * (the D9 operator), and the component-min vector survives.
     *
     * The cluster scoping IS the scale story: with k ~ sqrt(n) clusters of
     * ~sqrt(n) vectors the pair join costs sum_c n_c^2 ~ n^1.5 instead of
@@ -733,19 +806,6 @@ object SimilarityOps {
     semDedupOf(plantedEmb(spark, dir), threshold, nClusters)
       .orderBy("vec_id")
 
-  /** The nearDupCosine plant (deterministic 5% perturbed copies) so the
-    * operator provably fires on the test corpus.
-    */
-  private def plantedEmb(spark: SparkSession, dir: String): DataFrame = {
-    val base = emb(spark, dir).select("vec_id", "embedding")
-    val planted = base.where(pmod(col("vec_id"), lit(20)) === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          when(i === 0, (x.cast("double") + lit(0.05)).cast("float")).otherwise(x))
-          .as("embedding"))
-    base.unionByName(planted)
-  }
-
   /** SemDeDup kernel over any (vec_id, embedding) frame: returns
     * (vec_id, component, is_survivor) for every vector in a near-dup
     * pair; component = min vec_id (the survivor), the DedupResolve
@@ -753,10 +813,7 @@ object SimilarityOps {
     */
   def semDedupOf(corpus: DataFrame, threshold: Double = 0.99,
                  nClusters: Int = 0): DataFrame = {
-    val kLists = if (nClusters > 0) nClusters else clustersFor(corpus.count())
-    val cents = ivfTrain(corpus, kLists)
-    val listed = corpus
-      .withColumn("list_id", ivfAssignCol(col("embedding"), cents))
+    val listed = ivfBuild(corpus, nClusters).listed(corpus)
       .select("list_id", "vec_id", "embedding")
     val pairs = listed.as("a").join(listed.as("b"),
         col("a.list_id") === col("b.list_id") && col("a.vec_id") < col("b.vec_id"))
@@ -778,6 +835,8 @@ object SimilarityOps {
     corpus.join(broadcast(drop), Seq("vec_id"), "left_anti")
   }
 
+  // ---- LSH ---------------------------------------------------------------
+
   /** MULTI-PROBE LSH ANN (Lv et al., VLDB'07 — public technique):
     * sign-of-random-hyperplane bucket per corpus vector; each query probes
     * every bucket within Hamming distance `probeRadius` of its own bucket
@@ -794,23 +853,12 @@ object SimilarityOps {
                  nQueries: Int = 3, k: Int = 5, nBits: Int = 6,
                  probeRadius: Int = 2): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    // all XOR masks within the probe radius — a plan-time constant list
-    val masks = (0 until (1 << nBits)).filter(m => Integer.bitCount(m) <= probeRadius)
     val e = emb(spark, dir).withColumn("bucket",
       graft.functions.GraftFunctions.lshBucket(spark, nBits, col("embedding")))
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-        explode(transform(typedLit(masks), m => col("bucket").bitwiseXOR(m)))
-          .as("probe_bucket"))
-    val scored = e.join(broadcast(queries),
-        col("bucket") === col("probe_bucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"), col("rank"))
+    val queries = querySet(e, nQueries,
+      probeBuckets(col("bucket"), nBits, probeRadius).as("probe_bucket"))
+    topKRows(againstQueries(e, queries, col("bucket") === col("probe_bucket"))
+      .select(col("query_id"), col("vec_id"), qcos), k)
   }
 
   /** emb19 — multi-probe LSH OPERATING-POINT sweep: recall@k AND candidate
@@ -820,63 +868,38 @@ object SimilarityOps {
     * point (2.9f asserts a 0.6 recall floor at radius 2; this shows the
     * whole trade). Each candidate pair is reached at exactly ONE radius
     * (the mask is bq XOR bv, unique per pair), so the radius grid fans
-    * out AFTER the one candidate-cosine pass (the t41/emb18 pattern) and
-    * costs windows, not re-probes. The grid ends at radius = nBits where
-    * every bucket is probed and LSH degenerates to brute force — that
-    * row's recall MUST be 10000 bp (same candidates, same ties), pinned
-    * in LshSweepSpec. Cost column: candidates as bp of (queries x
-    * corpus) — the fraction of the brute-force work actually done.
+    * out AFTER the one candidate-cosine pass ([[recallCurve]]). The grid
+    * ends at radius = nBits where every bucket is probed and LSH
+    * degenerates to brute force — that row's recall MUST be 10000 bp
+    * (same candidates, same ties), pinned in LshSweepSpec. Cost column:
+    * candidates as bp of (queries x corpus) — the fraction of the
+    * brute-force work actually done.
     */
   def lshOperatingPoints(spark: SparkSession, dir: String,
                          nQueries: Int = 8, k: Int = 10,
                          nBits: Int = 6): DataFrame = {
-    import spark.implicits._
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val e = emb(spark, dir).select("vec_id", "embedding").withColumn("bucket",
       graft.functions.GraftFunctions.lshBucket(spark, nBits, col("embedding")))
     val corpusN = e.count()
-    val masks = (0 until (1 << nBits)).toArray
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-        explode(transform(typedLit(masks),
+    val queries = querySet(e, nQueries,
+        explode(transform(typedLit(probeMasks(nBits, nBits)),
           m => struct(col("bucket").bitwiseXOR(m).as("probe_bucket"),
             bit_count(m).as("radius")))).as("p"))
       .select(col("query_id"), col("qvec"),
         col("p.probe_bucket"), col("p.radius"))
-    val cand = e.join(broadcast(queries),
-        col("bucket") === col("probe_bucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("radius"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val grid = (0 to nBits).toArray
-    val fan = cand
-      .select(col("query_id"), col("vec_id"), col("cos"), col("radius"),
-        explode(lit(grid)).as("probe_radius"))
-      .where(col("radius") <= col("probe_radius"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_radius", "query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val topk = fan.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-    val brute = bruteCosineTopK(spark, dir, nQueries, k)
-      .select("query_id", "vec_id")
-    val truthN = math.max(1L, brute.count())
-    val nCand = fan.groupBy("probe_radius")
-      .agg(count(lit(1)).as("n_cand"))
-    val hits = topk.join(brute, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy("probe_radius").agg(count(lit(1)).as("n_hits"))
-    grid.map(_.toLong).toSeq.toDF("probe_radius")
-      .join(nCand.select(col("probe_radius").cast("long").as("probe_radius"),
-        col("n_cand")), Seq("probe_radius"), "left")
-      .join(hits.select(col("probe_radius").cast("long").as("probe_radius"),
-        col("n_hits")), Seq("probe_radius"), "left")
-      .na.fill(0L, Seq("n_cand", "n_hits"))
+    val cand = againstQueries(e, queries, col("bucket") === col("probe_bucket"))
+      .select(col("query_id"), col("vec_id"), col("radius"), qcos)
+    recallCurve(spark, dir, nQueries, k, cand, "radius", "probe_radius", 0 to nBits,
+        countCand = true)
       .select(col("probe_radius"), col("n_cand"),
         expr(s"n_cand * 10000 div ${math.max(1L, nQueries.toLong * corpusN)}")
           .as("cand_bp"),
-        col("n_hits"),
-        expr(s"n_hits * 10000 div $truthN").as("recall_bp"))
+        col("n_hits"), col("recall_bp"))
       .orderBy("probe_radius")
   }
+
+  // ---- filtered and two-stage searches -----------------------------------
 
   /** emb11 — PREDICATE-FILTERED similarity search (hybrid vector+metadata
     * search — the "filtered ANN" every production vector store exposes;
@@ -897,17 +920,8 @@ object SimilarityOps {
   def filteredCosineTopK(spark: SparkSession, dir: String,
                          nQueries: Int = 3, k: Int = 5): DataFrame = {
     val e = emb(spark, dir).where(pmod(col("vec_id"), lit(3)) === 0)
-    val queries = emb(spark, dir).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val scored = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    topKRows(againstQueries(e, querySet(emb(spark, dir), nQueries))
+      .select(col("query_id"), col("vec_id"), qcos), k, longRank = true)
   }
 
   /** The lossy alternative emb11 exists to avoid, exposed for the spec's
@@ -927,41 +941,26 @@ object SimilarityOps {
     * scan reads prefixDims/d of the vector bytes and column-prunes the
     * rest — keeping `overfetch*k` candidate ids per query (ids only on
     * the ranking exchange). Stage 2 reranks ONLY the candidates with
-    * exact full-dim cosine: the candidate set joins back via a broadcast
-    * hash join (~nQueries*overfetch*k ids), so full vectors are read for
-    * a vanishing fraction of the corpus and never shuffle. Unlike the
-    * quantized scans (emb05/07), the coarse stage here is EXACT over a
-    * sub-space — no codebook training, trivially incremental (new epochs
-    * need no retrain), at the cost of recall depending on how much mass
-    * the embedding packs into its prefix.
+    * exact full-dim cosine ([[exactRefine]]): the candidate set joins back
+    * via a broadcast hash join (~nQueries*overfetch*k ids), so full
+    * vectors are read for a vanishing fraction of the corpus and never
+    * shuffle. Unlike the quantized scans (emb05/07), the coarse stage here
+    * is EXACT over a sub-space — no codebook training, trivially
+    * incremental (new epochs need no retrain), at the cost of recall
+    * depending on how much mass the embedding packs into its prefix.
     */
   def annPrefixRerankTopK(spark: SparkSession, dir: String,
                           nQueries: Int = 8, k: Int = 5,
                           prefixDims: Int = 24, overfetch: Int = 12): DataFrame = {
     val e = emb(spark, dir)
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val qPre = broadcast(queries.select(col("query_id"),
-      slice(col("qvec"), 1, prefixDims).as("qpre")))
-    val coarse = e.select(col("vec_id"), slice(col("embedding"), 1, prefixDims).as("pre"))
-      .join(qPre, col("vec_id") =!= col("query_id"))
+    val queries = querySet(e, nQueries)
+    val qPre = queries.select(col("query_id"), slice(col("qvec"), 1, prefixDims).as("qpre"))
+    val coarse = againstQueries(
+        e.select(col("vec_id"), slice(col("embedding"), 1, prefixDims).as("pre")), qPre)
       .select(col("query_id"), col("vec_id"),
         cosineCol(col("pre"), col("qpre")).as("ccos"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("ccos").desc, col("vec_id").asc)
-    val cand = coarse.withColumn("crank", row_number().over(wc))
-      .where(col("crank") <= k * overfetch)
-      .select("query_id", "vec_id")
-    val rer = e.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    rer.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    exactRefine(coarse, col("ccos").desc, k * overfetch, e, queries, k,
+      longRank = true, pinCand = true)
   }
 
   /** Sign bits of 32 consecutive embedding dims packed into one long
@@ -998,29 +997,14 @@ object SimilarityOps {
     val words = e.select(col("vec_id"),
       signWordCol(col("embedding"), 0).as("w0"),
       signWordCol(col("embedding"), 1).as("w1"))
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val qWords = broadcast(words.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("w0").as("qw0"), col("w1").as("qw1")))
-    val coarse = words.join(qWords, col("vec_id") =!= col("query_id"))
+    val qWords = words.where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("w0").as("qw0"), col("w1").as("qw1"))
+    val coarse = againstQueries(words, qWords)
       .select(col("query_id"), col("vec_id"),
         (bit_count(col("w0").bitwiseXOR(col("qw0"))) +
           bit_count(col("w1").bitwiseXOR(col("qw1")))).as("ham"))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("ham").asc, col("vec_id").asc)
-    val cand = coarse.withColumn("crank", row_number().over(wc))
-      .where(col("crank") <= k * overfetch)
-      .select("query_id", "vec_id")
-    val rer = e.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    rer.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("cos"), 4).as("cos"),
-        col("rank").cast("long").as("rank"))
+    exactRefine(coarse, col("ham").asc, k * overfetch, e, querySet(e, nQueries), k,
+      longRank = true, pinCand = true)
   }
 
   // ---- emb15: cosine range search (radius retrieval) -------------------
@@ -1042,16 +1026,11 @@ object SimilarityOps {
     val base = emb(spark, dir).select("vec_id", "embedding")
     def twin(offset: Long, dim: Int, delta: Double) =
       base.where(col("vec_id") < nQueries)
-        .select((col("vec_id") + offset).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            when(i === dim, (x.cast("double") + lit(delta)).cast("float"))
-              .otherwise(x)).as("embedding"))
+        .select((col("vec_id") + offset).as("vec_id"), nudged(dim, delta).as("embedding"))
     val corpus = base
       .unionByName(twin(1000000L, 0, 0.05))
       .unionByName(twin(2000000L, 1, 1.0))
-    val queries = base.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    againstQueries(corpus, querySet(base, nQueries))
       .select(col("query_id"), col("vec_id"),
         round(cosineCol(col("embedding"), col("qvec")), 4).as("cos"))
       .where(col("cos") >= tau)
@@ -1087,24 +1066,18 @@ object SimilarityOps {
         .as("embedding"))
   }
 
+  /** The raw inner product of a corpus row and its query. */
+  private def qdot: Column = dotCol(col("embedding"), col("qvec")).as("dot")
+
   /** Exact MIPS top-k: query vectors vec_id < nQueries broadcast against a
     * full corpus scan; rank ties break on vec_id. `dot` rounded 4 dp (the
-    * emb01 discipline; rank cast long for the oracle's BIGINT row_number).
+    * emb01 discipline; rank long for the oracle's BIGINT row_number).
     */
   def bruteMipsTopK(spark: SparkSession, dir: String,
                     nQueries: Int = 3, k: Int = 5): DataFrame = {
     val e = mipsCorpus(spark, dir)
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val scored = e.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        dotCol(col("embedding"), col("qvec")).as("dot"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("dot").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("dot"), 4).as("dot"),
-        col("rank").cast("long").as("rank"))
+    topKRows(againstQueries(e, querySet(e, nQueries))
+      .select(col("query_id"), col("vec_id"), qdot), k, "dot", longRank = true)
   }
 
   /** Approximate MIPS via the norm-augmentation reduction + multi-probe
@@ -1124,7 +1097,7 @@ object SimilarityOps {
                  probeRadius: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val e = mipsCorpus(spark, dir)
-    val maxNorm = e.agg(max(normCol(col("embedding")))).head.getDouble(0)
+    val maxNorm = e.agg(max(normCol(col("embedding")))).head().getDouble(0)
     val m2 = maxNorm * maxNorm
     def augment(tail: Column): Column =
       concat(col("embedding"),
@@ -1132,25 +1105,14 @@ object SimilarityOps {
     val corpus = e.withColumn("aug",
       augment(sqrt(greatest(lit(m2) - normCol(col("embedding")) *
         normCol(col("embedding")), lit(0.0)))))
-    val masks = (0 until (1 << nBits)).filter(m => Integer.bitCount(m) <= probeRadius)
     val bucketed = corpus.withColumn("bucket",
       graft.functions.GraftFunctions.lshBucket(spark, nBits, col("aug")))
-    val queries = bucketed.where(col("vec_id") < nQueries)
-      .withColumn("qbucket",
-        graft.functions.GraftFunctions.lshBucket(spark, nBits, augment(lit(0.0))))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-        explode(transform(typedLit(masks), mk => col("qbucket").bitwiseXOR(mk)))
-          .as("probe_bucket"))
-    val scored = bucketed.join(broadcast(queries),
-        col("bucket") === col("probe_bucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        dotCol(col("embedding"), col("qvec")).as("dot"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("dot").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("dot"), 4).as("dot"),
-        col("rank").cast("long").as("rank"))
+    val queries = querySet(
+      bucketed.withColumn("qbucket",
+        graft.functions.GraftFunctions.lshBucket(spark, nBits, augment(lit(0.0)))),
+      nQueries, probeBuckets(col("qbucket"), nBits, probeRadius).as("probe_bucket"))
+    topKRows(againstQueries(bucketed, queries, col("bucket") === col("probe_bucket"))
+      .select(col("query_id"), col("vec_id"), qdot), k, "dot", longRank = true)
   }
 
   /** emb17 — SQ8 QUANTIZATION-ERROR AUDIT: per-label distribution of
@@ -1203,10 +1165,8 @@ object SimilarityOps {
     val c = s.select(col("vec_id").as("b"), col("embedding").as("vb"))
     val scored = q.join(broadcast(c), col("a") =!= col("b"))
       .select(col("a"), col("b"), cosineCol(col("va"), col("vb")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("a").orderBy(col("cos").desc, col("b").asc)
-    val knn = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k).select("a", "b", "cos")
+    val knn = topK(scored, k, col("cos").desc, by = Seq("a"), tie = "b")
+      .select("a", "b", "cos")
     knn.join(knn.select(col("b").as("a"), col("a").as("b")), Seq("a", "b"))
       .where(col("a") < col("b"))
       .select(col("a").as("vec_a"), col("b").as("vec_b"),
@@ -1292,7 +1252,7 @@ object SimilarityOps {
       .withColumn("delta_q", col("sq_b") - col("sq_a"))
       .withColumn("label_max",
         max(abs(col("delta_q"))).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("label")))
+          Window.partitionBy("label")))
     j.groupBy("label")
       .agg(max("n_sq_a").as("n"), count(lit(1)).as("dims"),
         sum(col("delta_q") * col("delta_q")).as("l2q"),
@@ -1336,8 +1296,7 @@ object SimilarityOps {
           - (col("s_q").cast("double") / col("n").cast("double") / 1e6)
           * (col("s_q").cast("double") / col("n").cast("double") / 1e6))
       .withColumn("vq", round(col("variance") * 1e9).cast("long"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
+    val w = Window.partitionBy(lit(1))
     perDim
       .withColumn("sv", sum("vq").over(w))
       .withColumn("svv", sum(col("vq") * col("vq")).over(w))
@@ -1375,10 +1334,7 @@ object SimilarityOps {
     val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("probe_label"), col("vec_id"),
         col("label"), cosineCol(col("embedding"), col("pvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topK(scored, k, col("cos").desc, by = Seq("probe_id"))
       .groupBy("probe_label")
       .agg(countDistinct("probe_id").as("n_probes"),
         count(lit(1)).as("n_neighbors"),
@@ -1527,16 +1483,10 @@ object SimilarityOps {
     val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         cosineCol(col("embedding"), col("pvec")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id").asc)
-    val top = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-    val occ = top.groupBy("vec_id").agg(count(lit(1)).as("occ"))
-    val wOcc = org.apache.spark.sql.expressions.Window
-      .orderBy(col("occ").desc, col("vec_id").asc)
-    val ranked = occ.withColumn("rn", row_number().over(wOcc))
+    val occ = topK(scored, k, col("cos").desc, by = Seq("probe_id"))
+      .groupBy("vec_id").agg(count(lit(1)).as("occ"))
     val nProbes = probes.count()
-    ranked.agg(
+    ranked(occ, col("occ").desc, by = Nil, rankCol = "rn").agg(
         count(lit(1)).as("n_distinct_neighbors"),
         sum("occ").as("n_slots"),
         max("occ").as("max_k_occurrence"),

@@ -718,11 +718,7 @@ object CrawlQueries {
         .select("vec_id", "embedding")
       val e0 = base.where(pmod(col("vec_id"), lit(2)) === 0)
       val e1 = base.where(pmod(col("vec_id"), lit(2)) === 1)
-        .unionByName(e0.where(pmod(col("vec_id"), lit(20)) === 0)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            transform(col("embedding"), (x, i) =>
-              when(i === 0, (x.cast("double") + lit(0.05)).cast("float")).otherwise(x))
-              .as("embedding")))
+        .unionByName(operators.SimilarityOps.plantedCopies(e0))
       val all = e0.unionByName(e1)
       operators.SimIndex.writeLshIndex(e0, root, 0, 6)
       operators.SimIndex.writeLshIndex(e1, root, 1, 6)

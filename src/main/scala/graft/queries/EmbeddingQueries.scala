@@ -8,11 +8,67 @@ import graft.operators._
   * engine-exact ones with DuckDB oracle SQL.
   */
 object EmbeddingQueries {
+  // ---- oracle SQL fragments: each written once ---------------------------
+
+  /** emb01's exact dot in DuckDB: per-element double casts and a
+    * sequential list sum — the Spark column arithmetic (VecKit's kernel)
+    * step for step, so the UNROUNDED scores rank identically in both
+    * engines.
+    */
+  private def dotSql(v: String, q: String): String =
+    s"""list_aggregate(list_transform(generate_series(1, len($v)),
+        |      i -> CAST($v[i] AS DOUBLE) * CAST($q[i] AS DOUBLE)), 'sum')""".stripMargin
+
+  private def normSql(v: String): String =
+    s"""sqrt(list_aggregate(list_transform($v,
+        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))""".stripMargin
+
+  /** emb01's exact cosine: dot / (norm * norm). */
+  private def cosSql(v: String, q: String): String =
+    s"""${dotSql(v, q)}
+        |    / (${normSql(v)}
+        |     * ${normSql(q)})""".stripMargin
+
+  /** The query set: vectors vec_id < 3 of `from` as (query_id, qvec). */
+  private def querySql(from: String): String =
+    s"SELECT vec_id AS query_id, embedding AS qvec FROM $from WHERE vec_id < 3"
+
+  /** The per-query top-5 over a `scored` CTE: `score` desc, vec_id asc,
+    * the score rounded to 4 dp after ranking.
+    */
+  private def top5Sql(score: String): String =
+    s"""SELECT query_id, vec_id, round($score, 4) AS $score, rank FROM (
+        |  SELECT query_id, vec_id, $score,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY $score DESC, vec_id ASC) AS rank
+        |  FROM scored
+        |) WHERE rank <= 5""".stripMargin
+
+  /** emb01's brute top-5; `pred` adds a corpus-side predicate (emb11). */
+  private def bruteSql(pred: String): String =
+    s"""WITH q AS (
+        |  ${querySql("embeddings")}
+        |), scored AS (
+        |  SELECT q.query_id, e.vec_id,
+        |    ${cosSql("e.embedding", "q.qvec")} AS cos
+        |  FROM embeddings e, q
+        |  WHERE e.vec_id <> q.query_id$pred
+        |)
+        |${top5Sql("cos")}""".stripMargin
+
+  /** SimilarityOps.signWordCol in DuckDB: the sign bits of the 32 dims at
+    * `embedding[idx]`, i = 1..32, packed into one BIGINT.
+    */
+  private def signWordSql(idx: String): String =
+    s"""CAST(list_aggregate(list_transform(generate_series(1, 32),
+        |      i -> CASE WHEN CAST(embedding[$idx] AS DOUBLE) > 0
+        |        THEN (CAST(1 AS BIGINT) << (i-1)) ELSE CAST(0 AS BIGINT) END), 'sum')
+        |      AS BIGINT)""".stripMargin
+
   /** emb07's SQ8 oracle SQL — shared verbatim by emb08 (the persisted
     * code store must return identical rows).
     */
   private val Sq8Sql: String =
-    """WITH base AS (SELECT vec_id, embedding FROM embeddings),
+    s"""WITH base AS (SELECT vec_id, embedding FROM embeddings),
         |codes AS (
         |  SELECT vec_id, embedding,
         |    list_transform(embedding,
@@ -44,24 +100,15 @@ object EmbeddingQueries {
         |                         ORDER BY approx DESC, vec_id ASC) AS arank
         |    FROM approx) WHERE arank <= 50
         |), qv AS (
-        |  SELECT vec_id AS query_id, embedding AS qvec FROM base WHERE vec_id < 3
+        |  ${querySql("base")}
         |), scored AS (
         |  SELECT cand.query_id, cand.vec_id,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(qv.qvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
+        |    ${cosSql("e.embedding", "qv.qvec")} AS cos
         |  FROM cand
         |  JOIN base e ON cand.vec_id = e.vec_id
         |  JOIN qv ON cand.query_id = qv.query_id
         |)
-        |SELECT query_id, vec_id, round(cos, 4) AS cos, rank FROM (
-        |  SELECT query_id, vec_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank
-        |  FROM scored
-        |) WHERE rank <= 5""".stripMargin
+        |${top5Sql("cos")}""".stripMargin
 
   val all: Seq[Query] = Seq(
     Query("emb01_cosine_topk", (s, d) => SimilarityOps.bruteCosineTopK(s, d),
@@ -70,24 +117,7 @@ object EmbeddingQueries {
       // per-element double casts, sequential list sums, dot/(norm*norm) —
       // so the UNROUNDED score ranks identically; ties break on vec_id in
       // both engines and the displayed cos rounds to 4dp after ranking.
-      Some("""WITH q AS (
-        |  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 3
-        |), scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(q.qvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
-        |  FROM embeddings e, q
-        |  WHERE e.vec_id <> q.query_id
-        |)
-        |SELECT query_id, vec_id, round(cos, 4) AS cos, rank FROM (
-        |  SELECT query_id, vec_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank
-        |  FROM scored
-        |) WHERE rank <= 5""".stripMargin)),
+      Some(bruteSql(""))),
     Query("emb02_ann_lsh", (s, d) => SimilarityOps.annLshTopK(s, d)),
     Query("emb03_neardup_cosine", (s, d) =>
       SimilarityOps.nearDupCosine(s, d).orderBy("vec_a", "vec_b")),
@@ -119,24 +149,7 @@ object EmbeddingQueries {
       // emb11: emb01's brute SQL with the metadata predicate on the corpus
       // side — pre-filter semantics are exactly expressible, so the hybrid
       // search contract sits in the hard gate.
-      Some("""WITH q AS (
-        |  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 3
-        |), scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(q.qvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
-        |  FROM embeddings e, q
-        |  WHERE e.vec_id <> q.query_id AND e.vec_id % 3 = 0
-        |)
-        |SELECT query_id, vec_id, round(cos, 4) AS cos, rank FROM (
-        |  SELECT query_id, vec_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank
-        |  FROM scored
-        |) WHERE rank <= 5""".stripMargin)),
+      Some(bruteSql(" AND e.vec_id % 3 = 0"))),
     // emb12: two-stage prefix-dimension retrieval — coarse rank on the
     // first 24 of 64 components (the only full-corpus pass; column-pruned
     // at scale), exact full-dim rerank over the overfetched candidates
@@ -149,19 +162,13 @@ object EmbeddingQueries {
       // integer Hamming rank with vec_id tie-break, then emb01's exact
       // cosine over the candidate set. First Hamming-ANN query in the hard
       // gate.
-      Some("""WITH b AS (
+      Some(s"""WITH b AS (
         |  SELECT vec_id,
-        |    CAST(list_aggregate(list_transform(generate_series(1, 32),
-        |      i -> CASE WHEN CAST(embedding[i] AS DOUBLE) > 0
-        |        THEN (CAST(1 AS BIGINT) << (i-1)) ELSE CAST(0 AS BIGINT) END), 'sum')
-        |      AS BIGINT) AS w0,
-        |    CAST(list_aggregate(list_transform(generate_series(1, 32),
-        |      i -> CASE WHEN CAST(embedding[i+32] AS DOUBLE) > 0
-        |        THEN (CAST(1 AS BIGINT) << (i-1)) ELSE CAST(0 AS BIGINT) END), 'sum')
-        |      AS BIGINT) AS w1
+        |    ${signWordSql("i")} AS w0,
+        |    ${signWordSql("i+32")} AS w1
         |  FROM embeddings
         |), q0 AS (
-        |  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 3
+        |  ${querySql("embeddings")}
         |), qb AS (
         |  SELECT q0.query_id, b.w0 AS qw0, b.w1 AS qw1
         |  FROM q0 JOIN b ON b.vec_id = q0.query_id
@@ -175,21 +182,12 @@ object EmbeddingQueries {
         |  ) WHERE crank <= 60
         |), scored AS (
         |  SELECT c.query_id, c.vec_id,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(q.qvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
+        |    ${cosSql("e.embedding", "q.qvec")} AS cos
         |  FROM cand c
         |  JOIN embeddings e ON e.vec_id = c.vec_id
         |  JOIN q0 q ON q.query_id = c.query_id
         |)
-        |SELECT query_id, vec_id, round(cos, 4) AS cos, rank FROM (
-        |  SELECT query_id, vec_id, cos,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank
-        |  FROM scored
-        |) WHERE rank <= 5""".stripMargin)),
+        |${top5Sql("cos")}""".stripMargin)),
     // emb14: exact maximum-inner-product top-k (recommender/dual-encoder
     // scoring — raw dot, NOT cosine); the Bachrach norm-augmentation
     // reduction to cosine-ANN is spec-gated with a recall floor
@@ -197,33 +195,28 @@ object EmbeddingQueries {
       // emb14: exact MIPS — emb01's scored CTE with the norm division
       // dropped, over the float-rounded magnitude-planted corpus;
       // identical ordered double summation, same tie-break.
-      Some("""WITH scaled AS (
+      Some(s"""WITH scaled AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(CAST(x AS DOUBLE)
         |      * (1.0 + (vec_id % 7) * 0.1) AS FLOAT)) AS embedding
         |  FROM embeddings
         |), q AS (
-        |  SELECT vec_id AS query_id, embedding AS qvec FROM scaled WHERE vec_id < 3
+        |  ${querySql("scaled")}
         |), scored AS (
         |  SELECT q.query_id, e.vec_id,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qvec[i] AS DOUBLE)), 'sum')
+        |    ${dotSql("e.embedding", "q.qvec")}
         |    AS dot
         |  FROM scaled e, q
         |  WHERE e.vec_id <> q.query_id
         |)
-        |SELECT query_id, vec_id, round(dot, 4) AS dot, rank FROM (
-        |  SELECT query_id, vec_id, dot,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY dot DESC, vec_id ASC) AS rank
-        |  FROM scored
-        |) WHERE rank <= 5""".stripMargin)),
+        |${top5Sql("dot")}""".stripMargin)),
     // emb15: cosine range search — guaranteed-complete neighborhood at
     // cos >= tau; planted strong/weak twins prove the threshold separates
     Query("emb15_range_search", (s, d) => SimilarityOps.rangeSearch(s, d),
       // emb15: range search — emb01's scored CTE thresholded on the rounded
       // cosine, over the twin-planted corpus rebuilt in SQL (float-rounded
       // element edits, same IEEE casts as the Spark transform).
-      Some("""WITH base AS (
+      Some(s"""WITH base AS (
         |  SELECT vec_id, embedding FROM embeddings
         |), tw1 AS (
         |  SELECT vec_id + 1000000 AS vec_id,
@@ -239,15 +232,10 @@ object EmbeddingQueries {
         |), corpus AS (
         |  SELECT * FROM base UNION ALL SELECT * FROM tw1 UNION ALL SELECT * FROM tw2
         |), q AS (
-        |  SELECT vec_id AS query_id, embedding AS qvec FROM base WHERE vec_id < 3
+        |  ${querySql("base")}
         |), scored AS (
         |  SELECT q.query_id, e.vec_id,
-        |    round(list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(q.qvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))), 4) AS cos
+        |    round(${cosSql("e.embedding", "q.qvec")}, 4) AS cos
         |  FROM corpus e, q
         |  WHERE e.vec_id <> q.query_id
         |)
@@ -257,16 +245,11 @@ object EmbeddingQueries {
     Query("emb16_mutual_knn", (s, d) => SimilarityOps.mutualKnn(s, d),
       // emb16: emb01's cosine kernel over the sampled self-join; mutuality
       // via the swapped-id join; a < b canonical direction
-      Some("""WITH s AS (
+      Some(s"""WITH s AS (
         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0
         |), scored AS (
         |  SELECT q.vec_id AS a, e.vec_id AS b,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(q.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
+        |    ${cosSql("e.embedding", "q.embedding")} AS cos
         |  FROM s q, s e WHERE q.vec_id <> e.vec_id
         |), knn AS (
         |  SELECT a, b, cos FROM (
@@ -432,19 +415,14 @@ object EmbeddingQueries {
       operators.SimilarityOps.knnLabelPurity(s, d),
       // emb23: emb01's exact cosine + tie-break over the probe sample,
       // per-label purity from the same integers
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
         |  SELECT vec_id AS probe_id, embedding AS pvec,
         |    CAST(label AS BIGINT) AS probe_label
         |  FROM embeddings WHERE vec_id % 29 = 0
         |), scored AS (
         |  SELECT p.probe_id, p.probe_label, e.vec_id,
         |    CAST(e.label AS BIGINT) AS nlabel,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.pvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(p.pvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
+        |    ${cosSql("e.embedding", "p.pvec")} AS cos
         |  FROM embeddings e, p
         |  WHERE e.vec_id <> p.probe_id
         |), top AS (
@@ -469,19 +447,14 @@ object EmbeddingQueries {
       operators.SimilarityOps.marginViolations(s, d),
       // emb24: same exact cosine; per-probe best-same/best-diff maxima,
       // margins quantized before the sum
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
         |  SELECT vec_id AS probe_id, embedding AS pvec,
         |    CAST(label AS BIGINT) AS probe_label
         |  FROM embeddings WHERE vec_id % 17 = 0
         |), scored AS (
         |  SELECT p.probe_id, p.probe_label,
         |    CAST(e.label AS BIGINT) AS nlabel,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.pvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(p.pvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
+        |    ${cosSql("e.embedding", "p.pvec")} AS cos
         |  FROM embeddings e, p
         |  WHERE e.vec_id <> p.probe_id
         |), per AS (
@@ -565,17 +538,12 @@ object EmbeddingQueries {
       operators.SimilarityOps.hubnessAudit(s, d),
       // emb26: emb01's cosine + tie-break; k-occurrence counts and the
       // same integer occupancy arithmetic
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
         |  SELECT vec_id AS probe_id, embedding AS pvec
         |  FROM embeddings WHERE vec_id % 7 = 0
         |), scored AS (
         |  SELECT p.probe_id, e.vec_id,
-        |    list_aggregate(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.pvec[i] AS DOUBLE)), 'sum')
-        |    / (sqrt(list_aggregate(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-        |     * sqrt(list_aggregate(list_transform(p.pvec,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))) AS cos
+        |    ${cosSql("e.embedding", "p.pvec")} AS cos
         |  FROM embeddings e, p
         |  WHERE e.vec_id <> p.probe_id
         |), top AS (

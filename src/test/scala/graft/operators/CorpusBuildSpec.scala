@@ -43,7 +43,7 @@ class CorpusBuildSpec extends AnyFunSuite {
     val quality = rows.filter(r => passes(r._1, r._2, r._3, r._4, r._6))
     // dedup mirror over quality survivors only: brute pairs + union-find +
     // (area, png-bit, ~hash) argmax
-    val parent = scala.collection.mutable.Map(quality.map(r => r._1 -> r._1): _*)
+    val parent = scala.collection.mutable.Map(quality.map(r => r._1 -> r._1).toIndexedSeq: _*)
     def find(x: String): String =
       if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
     for {

@@ -33,7 +33,7 @@ class PolitenessAuditSpec extends AnyFunSuite {
     val sched = schedule().cache()
     // pick the busiest host so the squeeze has real gaps to compress
     val victim = sched.groupBy("host").count()
-      .orderBy(col("count").desc, col("host")).head.getString(0)
+      .orderBy(col("count").desc, col("host")).head().getString(0)
     // compress the victim host's timeline 10x: gaps fall below Crawl-delay
     val squeezed = sched.withColumn("scheduled_at_ms",
       when(col("host") === victim,
@@ -41,7 +41,7 @@ class PolitenessAuditSpec extends AnyFunSuite {
         .otherwise(col("scheduled_at_ms")))
     val gapAudit = FrontierJob.politenessAudit(
       squeezed, Gen.robots(spark).toDF(), cfg)
-      .where(col("host") === victim).head
+      .where(col("host") === victim).head()
     // the victim schedules >1 row under budget 500, so gaps exist
     assert(!gapAudit.getBoolean(5), "squeezed host should fail gap_ok")
     assert(gapAudit.getBoolean(6), "budget untouched")
@@ -51,7 +51,7 @@ class PolitenessAuditSpec extends AnyFunSuite {
       sched.where(col("host") === victim).withColumn("slot", lit(0)))
     val dupAudit = FrontierJob.politenessAudit(
       doubled, Gen.robots(spark).toDF(), cfg)
-      .where(col("host") === victim).head
+      .where(col("host") === victim).head()
     assert(!dupAudit.getBoolean(7), "duplicated slots should fail slots_ok")
     sched.unpersist()
   }

@@ -56,7 +56,7 @@ class ScaleDedupSpec extends AnyFunSuite {
   test("c77 election == union-find + argmax mirror; full png survives") {
     val imgs = corpus()
     val ids = imgs.map(_._1)
-    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i).toIndexedSeq: _*)
     def find(x: String): String =
       if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
     brutePairs(imgs).foreach { case (a, b, _) =>

@@ -226,7 +226,7 @@ class SimIndexSpec extends AnyFunSuite {
     SimIndex.writeIvfIndex(e, root, 0, nClusters = kLists, nIter = 2)
     val queries = e.where(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    val probeN = math.min(64, math.max(4, kLists / 4)) // annIvfTopK's bounded default
+    val probeN = SimilarityOps.probeDefault(kLists) // annIvfTopK's bounded default
     val probed = SimIndex.probeIvf(spark, root, 0, 0, e, queries, nProbe = probeN)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val mem = SimilarityOps.annIvfTopK(spark, dir)
