@@ -439,8 +439,7 @@ object DedupResolve {
     * are |langs| rows and the totals broadcast back.
     */
   def distributionShift(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Column
-    def lq(c: Column): Column = round(log(2.0, c) * 1e6).cast("long")
+    import TextOps.{log2q => lq}
     val langOf = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id").as("bid"), col("lang"))
     // byte mass is computed BEFORE the keep-list anti-join and the lang
@@ -488,7 +487,7 @@ object DedupResolve {
   def dupQualityCrosstab(spark: SparkSession, dir: String): DataFrame = {
     val corpus = TextOps.plantedCorpus(spark, dir)
       .select(col("doc_id"),
-        (size(split(trim(col("text")), "\\s+")) >= 30).cast("long")
+        (size(TextOps.words) >= 30).cast("long")
           .as("pass"))
     val drops = resolve(TextOps.nearDupNgramJaccard(spark, dir),
       "doc_a", "doc_b")

@@ -709,7 +709,7 @@ object GraphOps {
     val nDocs = docs.count()
     val citing = docs.select(col("doc_id"),
       (col("doc_id") * 17L + 3L) % nDocs as "cited",
-      concat_ws(" ", slice(split(trim(col("text")), "\\s+"), 1, 3)).as("anchor"))
+      concat_ws(" ", slice(TextOps.words, 1, 3)).as("anchor"))
     val target = docs.select(col("doc_id").as("cited_id"),
       col("source").as("target_source"))
     val counts = citing.join(target, citing("cited") === target("cited_id"))

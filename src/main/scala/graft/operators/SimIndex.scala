@@ -26,8 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * document frequency ACROSS epochs is the sum of per-epoch dfs (a doc
   * writes its shingles in exactly one epoch), so the df-cap needs no
   * index rescan. Kernels are shared with the in-memory operators
-  * (TextOps.wordShingles, GraftFunctions.lshBucket, SimilarityOps
-  * centroid assignment), so a persisted index is probe-compatible by
+  * (TextOps.wordShingles and the t05 score tail withSizes/jaccardScored/
+  * jaccardGate, GraftFunctions.lshBucket, SimilarityOps centroid
+  * assignment), so a persisted index is probe-compatible by
   * construction — golden-tested equal to full recomputation in
   * SimIndexSpec.
   */
@@ -141,12 +142,7 @@ object SimIndex {
       .groupBy(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .agg(count(lit(1)).as("n_inter"))
-    pairs
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
-      .where(col("n_inter") * 2 >= col("n_union"))
-      .select("doc_a", "doc_b", "n_inter", "n_union")
+    TextOps.jaccardScored(TextOps.withSizes(pairs, sizes)).where(TextOps.jaccardGate)
   }
 
   // ----------------------------------------------------------- embeddings

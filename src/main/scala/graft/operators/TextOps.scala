@@ -49,6 +49,107 @@ object TextOps {
     else df
   }
 
+  /** The whitespace tokenizer over `text` — the form every DuckDB oracle
+    * mirrors as `regexp_split_to_array(trim(text), '\s+')`.
+    */
+  private[operators] val words: Column = split(trim(col("text")), "\\s+")
+
+  /** Lower-cased alphanumeric runs of `text`, empty tokens dropped. */
+  private val alnumWords: Column =
+    filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "")
+
+  /** log2(c) as a 1e-6 fixed-point long: quantized before any sum, so the
+    * sums are integer-exact in every engine at any partitioning.
+    */
+  private[operators] def log2q(c: Column): Column =
+    round(log(2.0, c) * 1e6).cast("long")
+
+  /** (doc_id, t) with `t` the whitespace tokens of each doc's text. */
+  private def tokensOf(corpus: DataFrame): DataFrame =
+    corpus.select(col("doc_id"), words.as("t"))
+
+  /** 0-based start offsets of every `n`-token window of the array `t`.
+    * Guarded because Spark's `sequence(0, k)` DESCENDS for k < 0: an
+    * unguarded window over a doc shorter than `n` would fabricate grams.
+    */
+  private def windowStarts(t: Column, n: Int): Column =
+    when(size(t) >= n, sequence(lit(0), size(t) - n))
+      .otherwise(array().cast("array<int>"))
+
+  /** The space-joined word `n`-grams of the token array `t`, in order,
+    * repeats kept.
+    */
+  private def ngrams(t: Column, n: Int): Column =
+    transform(windowStarts(t, n), i =>
+      concat_ws(" ", (1 to n).map(k => element_at(t, i + k)): _*))
+
+  /** The df-capped inverted-index overlap join over a (doc_id, sh) table:
+    * every doc pair sharing a shingle that occurs in at most `maxDf` docs,
+    * as (doc_a < doc_b, n_inter, sz_a, sz_b). n_inter = |A ∩ B| over the
+    * capped index; sz = the doc's uncapped set size. Shingles above the
+    * cap are dropped BEFORE the self-join (a hot stop-shingle joins df²
+    * pairs), and every exchange carries (doc_id, sh) rows only.
+    */
+  private def overlapIndex(shingles: DataFrame, maxDf: Int): DataFrame = {
+    // The shingle table feeds four consumers (sizes, the df-cap, both
+    // self-join sides). Exchange reuse was assumed to serve them from one
+    // map output, but the consumers prune different columns, so their
+    // shuffle subtrees are NOT byte-identical and the corpus was being
+    // re-tokenized per consumer — measured directly in the r06 plan audit
+    // (t22: 72 Exchanges, 0 reused). localCheckpoint materializes the
+    // (doc_id, sh) rows once (ids+hashes only, never text) and is
+    // self-cleaning via the ContextCleaner; at production scale this is a
+    // written intermediate table — see SimIndex. Callers spread the
+    // corpus before the shingle pass so the one-time materialization uses
+    // every core.
+    val sh = shingles.localCheckpoint()
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
+      .where(col("df") > maxDf).select("sh")
+    val idx = sh.join(hot, Seq("sh"), "left_anti")
+    val pairs = idx.as("a")
+      .join(idx.as("b"),
+        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("n_inter"))
+    withSizes(pairs, sizes)
+  }
+
+  /** Pairs (doc_a, doc_b, ...) joined to both sides' (doc_id, sz) set
+    * sizes as sz_a and sz_b.
+    */
+  private[operators] def withSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    pairs
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+
+  /** The t05 score row (doc_a, doc_b, n_inter, n_union) of sized pairs. */
+  private[operators] def jaccardScored(sized: DataFrame): DataFrame =
+    sized.withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
+      .select("doc_a", "doc_b", "n_inter", "n_union")
+
+  /** Jaccard >= 1/2 without a float: 2·|A ∩ B| >= |A ∪ B|. */
+  private[operators] val jaccardGate: Column = col("n_inter") * 2 >= col("n_union")
+
+  /** The near-dup family's plant rule: every 20th doc gets a revision. */
+  private val isPlanted: Column = pmod(col("doc_id"), lit(20)) === 0
+
+  /** The planted revisions of a (doc_id, text) frame: id + 1e6, a few
+    * tokens appended — the near-dup family's known positives, a
+    * construction the DuckDB oracles rebuild verbatim.
+    */
+  private[graft] def plantedRevisions(base: DataFrame): DataFrame =
+    base.where(isPlanted)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" appended revision marker tokens")).as("text"))
+
+  /** The planted truth: one (doc_a = d, doc_b = d + 1e6) pair per planted
+    * revision.
+    */
+  private def plantTruth(spark: SparkSession, dir: String): DataFrame =
+    docs(spark, dir).where(isPlanted)
+      .select(col("doc_id").as("doc_a"), (col("doc_id") + 1000000L).as("doc_b"))
+
   /** SQL-checkable slice of quality scoring: char/token/punct stats. */
   def qualityStats(spark: SparkSession, dir: String): DataFrame =
     qualityStatsOf(docs(spark, dir))
@@ -60,7 +161,7 @@ object TextOps {
     corpus.select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars_act"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
+      size(words).cast("long").as("n_tokens"),
       round(
         length(regexp_replace(col("text"), "[^.!?,;:]", "")).cast("double") /
           greatest(length(col("text")), lit(1)), 4).as("punct_ratio"))
@@ -179,11 +280,7 @@ object TextOps {
     */
   def nearDupMinhash(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
-    val base = docs(spark, dir).select("doc_id", "text")
-    val planted = base.where(pmod(col("doc_id"), lit(20)) === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" appended revision marker tokens")).as("text"))
-    val corpus = base.unionByName(planted)
+    val corpus = plantedCorpus(spark, dir)
     // the banding pass shingles + hashes every doc k times — spread it;
     // the verify join reads text by id for the small candidate set only
     val banded = spreadNarrow(corpus)
@@ -238,7 +335,7 @@ object TextOps {
     val quotes = base.where(pmod(col("doc_id"), lit(23)) === 0)
       .select((col("doc_id") + 2000000L).as("doc_id"),
         concat(
-          concat_ws(" ", slice(split(trim(col("text")), "\\s+"), 1, 20)),
+          concat_ws(" ", slice(words, 1, 20)),
           lit(" then entirely novel commentary continues past the quotation"))
           .as("text"))
     base.unionByName(quotes)
@@ -249,15 +346,9 @@ object TextOps {
     * instead of a post-explode distinct(): the n-gram stream of a doc
     * never leaves its input partition.
     */
-  def wordNgrams(corpus: DataFrame, n: Int): DataFrame = {
-    val toks = corpus.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
-    val idxs = when(size(col("t")) >= n, sequence(lit(0), size(col("t")) - n))
-      .otherwise(array().cast("array<int>"))
-    toks.select(col("doc_id"),
-      explode(array_distinct(transform(idxs, i =>
-        xxhash64(concat_ws(" ",
-          (1 to n).map(k => element_at(col("t"), i + k)): _*))))).as("ng"))
-  }
+  def wordNgrams(corpus: DataFrame, n: Int): DataFrame =
+    tokensOf(corpus).select(col("doc_id"),
+      explode(array_distinct(transform(ngrams(col("t"), n), xxhash64(_)))).as("ng"))
 
   /** t13 — contamination report: (doc_id, n_hits) for every corpus doc
     * sharing at least one word `n`-gram with the benchmark. n = 8 by
@@ -289,10 +380,7 @@ object TextOps {
     */
   def plantedCorpus(spark: SparkSession, dir: String): DataFrame = {
     val base = docs(spark, dir).select("doc_id", "text")
-    val planted = base.where(pmod(col("doc_id"), lit(20)) === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" appended revision marker tokens")).as("text"))
-    base.unionByName(planted)
+    base.unionByName(plantedRevisions(base))
   }
 
   /** t26 demo corpus: every 17th base doc gets a planted EXCERPT doc
@@ -303,9 +391,7 @@ object TextOps {
     */
   def excerptCorpus(spark: SparkSession, dir: String): DataFrame = {
     val base = docs(spark, dir).select("doc_id", "text")
-    val excerpts = base
-      .where(pmod(col("doc_id"), lit(17)) === 0)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
+    val excerpts = tokensOf(base.where(pmod(col("doc_id"), lit(17)) === 0))
       .select((col("doc_id") + 2000000L).as("doc_id"),
         concat(
           array_join(slice(col("t"), lit(1),
@@ -322,22 +408,8 @@ object TextOps {
     * ngramJaccardPairs — one shingle index (hashed 3-grams, df-capped),
     * exchanges carry (doc_id, long) only, integer threshold compare.
     */
-  def containmentPairs(corpus: DataFrame, maxDf: Int = 64): DataFrame = {
-    // same 4-consumer shingle table as ngramJaccardScores — spread the
-    // corpus and materialize the (doc_id, sh) rows once
-    val shingles = wordShingles(spreadNarrow(corpus)).localCheckpoint()
-    val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val hot = shingles.groupBy("sh").agg(count(lit(1)).as("df"))
-      .where(col("df") > maxDf).select("sh")
-    val idx = shingles.join(hot, Seq("sh"), "left_anti")
-    val pairs = idx.as("a")
-      .join(idx.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    pairs
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+  def containmentPairs(corpus: DataFrame, maxDf: Int = 64): DataFrame =
+    overlapIndex(wordShingles(spreadNarrow(corpus)), maxDf)
       // containment >= 0.5 of the smaller side, exact integer compare —
       // AND not already a Jaccard-level near-dup (2*inter < union), so the
       // result is precisely the pairs t05 CANNOT see
@@ -345,7 +417,6 @@ object TextOps {
       .where(col("n_inter") * 2 >= col("sz_min") &&
         col("n_inter") * 2 < col("sz_a") + col("sz_b") - col("n_inter"))
       .select("doc_a", "doc_b", "n_inter", "sz_min")
-  }
 
   /** t26 — containment near-dup over the excerpt demo corpus (oracled). */
   def containmentNearDup(spark: SparkSession, dir: String, maxDf: Int = 64): DataFrame =
@@ -379,38 +450,19 @@ object TextOps {
     * (the two MUST share this kernel so a persisted index built here is
     * probe-compatible with the in-memory operator).
     */
-  def wordShingles(corpus: DataFrame): DataFrame = {
-    val toks = corpus.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
-    // word 3-grams; guard short docs (Spark's sequence(0, n) DESCENDS for
-    // n < 0, so an unguarded size-3 would fabricate shingles)
-    val idxs = when(size(col("t")) >= 3, sequence(lit(0), size(col("t")) - 3))
-      .otherwise(array().cast("array<int>"))
-    toks
-      .select(col("doc_id"),
-        explode(transform(idxs, i => xxhash64(concat_ws(" ",
-          element_at(col("t"), i + 1),
-          element_at(col("t"), i + 2),
-          element_at(col("t"), i + 3))))).as("sh"))
+  def wordShingles(corpus: DataFrame): DataFrame =
+    tokensOf(corpus)
+      .select(col("doc_id"), explode(transform(ngrams(col("t"), 3), xxhash64(_))).as("sh"))
       .distinct()
-  }
 
   /** wordShingles without the xxhash64 — the STRING 3-grams, for
     * operators whose arithmetic must reproduce in DuckDB (t43's md5
     * permutations need the text; the engine-local xxhash64 key stays the
     * right choice everywhere the shingle never leaves Spark).
     */
-  def wordShingleStrings(corpus: DataFrame): DataFrame = {
-    val toks = corpus.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
-    val idxs = when(size(col("t")) >= 3, sequence(lit(0), size(col("t")) - 3))
-      .otherwise(array().cast("array<int>"))
-    toks
-      .select(col("doc_id"),
-        explode(transform(idxs, i => concat_ws(" ",
-          element_at(col("t"), i + 1),
-          element_at(col("t"), i + 2),
-          element_at(col("t"), i + 3)))).as("sh"))
+  def wordShingleStrings(corpus: DataFrame): DataFrame =
+    tokensOf(corpus).select(col("doc_id"), explode(ngrams(col("t"), 3)).as("sh"))
       .distinct()
-  }
 
   /** Exact word-3-gram Jaccard near-dup via an inverted shingle index —
     * the exact counterpart of [[nearDupMinhash]] (which estimates the same
@@ -442,8 +494,7 @@ object TextOps {
     * incremental index (SimIndexSpec).
     */
   def ngramJaccardPairs(corpus: DataFrame, maxDf: Int = 64): DataFrame =
-    ngramJaccardScores(corpus, maxDf)
-      .where(col("n_inter") * 2 >= col("n_union"))
+    ngramJaccardScores(corpus, maxDf).where(jaccardGate)
 
   /** The t05 kernel WITHOUT the 0.5-Jaccard gate: every candidate pair
     * sharing at least one under-df-cap shingle, with its exact
@@ -452,35 +503,8 @@ object TextOps {
     * as t05 (text never on an exchange; ReuseExchange serves the shared
     * distinct-shingle subtree).
     */
-  def ngramJaccardScores(corpus: DataFrame, maxDf: Int = 64): DataFrame = {
-    // The shingle table feeds five consumers (sizes, the df-cap, both
-    // self-join sides). Exchange reuse was assumed to serve them from one
-    // map output, but the consumers prune different columns, so their
-    // shuffle subtrees are NOT byte-identical and the corpus was being
-    // re-tokenized per consumer — measured directly in the r06 plan audit
-    // (t22: 72 Exchanges, 0 reused). localCheckpoint materializes the
-    // (doc_id, sh) rows once (ids+hashes only, never text) and is
-    // self-cleaning via the ContextCleaner; at production scale this is a
-    // written intermediate table — see SimIndex. The corpus is spread
-    // before the shingle pass so the one-time materialization uses every
-    // core (the exchange is consumed by the checkpoint and never appears
-    // in consumer plans).
-    val shingles = wordShingles(spreadNarrow(corpus)).localCheckpoint()
-    val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val hot = shingles.groupBy("sh").agg(count(lit(1)).as("df"))
-      .where(col("df") > maxDf).select("sh")
-    val idx = shingles.join(hot, Seq("sh"), "left_anti")
-    val pairs = idx.as("a")
-      .join(idx.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    pairs
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
-      .select("doc_a", "doc_b", "n_inter", "n_union")
-  }
+  def ngramJaccardScores(corpus: DataFrame, maxDf: Int = 64): DataFrame =
+    jaccardScored(overlapIndex(wordShingles(spreadNarrow(corpus)), maxDf))
 
   /** t41 — dedup threshold OPERATING-POINT audit: exact precision/recall
     * of the n-gram-Jaccard detector at each candidate threshold, against
@@ -502,11 +526,7 @@ object TextOps {
   def dedupOperatingPoints(spark: SparkSession, dir: String,
                            maxDf: Int = 64): DataFrame = {
     val scores = ngramJaccardScores(plantedCorpus(spark, dir), maxDf)
-    val truth = docs(spark, dir)
-      .where(pmod(col("doc_id"), lit(20)) === 0)
-      .select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1000000L).as("doc_b"),
-        lit(1L).as("is_true"))
+    val truth = plantTruth(spark, dir).withColumn("is_true", lit(1L))
     val joined = scores
       .join(truth, Seq("doc_a", "doc_b"), "full_outer")
       .select(
@@ -564,7 +584,7 @@ object TextOps {
     val base = docs(spark, dir).select("doc_id")
     val cand = ngramJaccardPairs(corpus).select("doc_a", "doc_b")
       .unionByName(
-        base.where(pmod(col("doc_id"), lit(20)) === 0)
+        base.where(isPlanted)
           .select(col("doc_id").as("doc_a"), (col("doc_id") + 1L).as("doc_b"))
           .join(base.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
           .select("doc_a", "doc_b"))
@@ -586,10 +606,8 @@ object TextOps {
       .join(sh.select(col("doc_id").as("doc_a"), col("sh")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    m.join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+    withSizes(m.join(inter, Seq("doc_a", "doc_b"), "left")
+        .na.fill(0L, Seq("n_inter")), sizes)
       .select(col("doc_a"), col("doc_b"), col("n_match"),
         (col("n_match") * lit((10000 / k).toLong)).as("est_bp"),
         expr("n_inter * 10000 div (sz_a + sz_b - n_inter)").as("exact_bp"))
@@ -841,7 +859,7 @@ object TextOps {
         org.apache.spark.sql.expressions.Window.currentRow)
     corpus.select(col("doc_id"),
         pmod(col("doc_id"), lit(shards.toLong)).as("shard"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
+        size(words).cast("long").as("n_tokens"),
         md5(concat(lit("pack1:"), col("doc_id"))).as("ord"))
       .withColumn("cum", sum(col("n_tokens")).over(w))
       .select(col("doc_id"), col("shard"), col("n_tokens"),
@@ -1032,12 +1050,8 @@ object TextOps {
     * shuffles every gram occurrence of a 100 TB corpus twice).
     */
   def repetitionStatsOf(corpus: DataFrame): DataFrame = {
-    val toks = corpus.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
     def topGramFrac(n: Int): Column = {
-      val idxs = when(size(col("t")) >= n, sequence(lit(0), size(col("t")) - n))
-        .otherwise(array().cast("array<int>"))
-      val grams = array_sort(transform(idxs, i =>
-        concat_ws(" ", (1 to n).map(j => element_at(col("t"), i + j)): _*)))
+      val grams = array_sort(ngrams(col("t"), n))
       // run-length max over the sorted grams: state = (prev, run, best)
       val best = aggregate(
         grams,
@@ -1052,7 +1066,7 @@ object TextOps {
       round(best.cast("double") /
         greatest(size(col("t")) - (n - 1), lit(1)), 4)
     }
-    toks.select(
+    tokensOf(corpus).select(
       col("doc_id"),
       size(col("t")).cast("long").as("n_tokens"),
       round(lit(1.0) - size(array_distinct(col("t"))).cast("double") /
@@ -1192,22 +1206,16 @@ object TextOps {
   // is word-granular); byte-level BPE is the same plan with a different
   // initial alphabet.
 
-  private def tokensOf(corpus: DataFrame): DataFrame =
-    corpus.select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
-
   /** Corpus-wide adjacent-pair counts of a (doc_id, t: array<string>)
     * frame — the per-round kernel.
     */
-  private[operators] def pairCounts(toks: DataFrame): DataFrame = {
-    val idxs = when(size(col("t")) >= 2, sequence(lit(0), size(col("t")) - 2))
-      .otherwise(array().cast("array<int>"))
+  private[operators] def pairCounts(toks: DataFrame): DataFrame =
     toks
-      .select(explode(transform(idxs, i => struct(
+      .select(explode(transform(windowStarts(col("t"), 2), i => struct(
         element_at(col("t"), i + 1).as("tok_l"),
         element_at(col("t"), i + 2).as("tok_r")))).as("p"))
       .groupBy(col("p.tok_l").as("tok_l"), col("p.tok_r").as("tok_r"))
       .agg(count(lit(1)).as("cnt"))
-  }
 
   /** t20 — the ORACLED slice: top-5 round-1 pair counts with a total
     * (cnt desc, pair asc) tie-break.
@@ -1242,26 +1250,30 @@ object TextOps {
         .as("t"))
 
   /** Multi-round BPE trainer: returns (round, tok_l, tok_r, cnt) for each
-    * selected merge. One collect of ONE row per round; the rewritten
-    * corpus is localCheckpoint'd so round N+1's count doesn't replay
-    * round N's rewrite lineage. Top-1 counts are provably non-increasing
-    * across rounds (a merge only removes occurrences of existing pairs;
-    * pairs it creates inherit a subset of a removed pair's occurrences) —
-    * BpeSpec asserts that invariant besides the mirror equality.
+    * selected merge — fewer than `rounds` when no document has two
+    * symbols left (an empty or all-single-token corpus trains none).
+    * One collect of ONE row per round; the rewritten corpus is
+    * localCheckpoint'd so round N+1's count doesn't replay round N's
+    * rewrite lineage. Top-1 counts are provably non-increasing across
+    * rounds (a merge only removes occurrences of existing pairs; pairs it
+    * creates inherit a subset of a removed pair's occurrences) — BpeSpec
+    * asserts that invariant besides the mirror equality.
     */
   def bpeTrain(spark: SparkSession, corpus: DataFrame,
                rounds: Int = 3): Seq[(Int, String, String, Long)] = {
-    var toks = tokensOf(corpus)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    for (round <- 1 to rounds) {
-      val top = pairCounts(toks)
+    @annotation.tailrec
+    def train(round: Int, toks: DataFrame,
+              out: Vector[(Int, String, String, Long)]): Seq[(Int, String, String, Long)] =
+      if (round > rounds) out
+      else pairCounts(toks)
         .orderBy(col("cnt").desc, col("tok_l"), col("tok_r"))
-        .limit(1).collect()(0)
-      val (l, r, c) = (top.getString(0), top.getString(1), top.getLong(2))
-      out += ((round, l, r, c))
-      toks = applyMerge(toks, l, r).localCheckpoint()
-    }
-    out.toSeq
+        .limit(1).collect().headOption match {
+        case None => out
+        case Some(top) =>
+          val (l, r, c) = (top.getString(0), top.getString(1), top.getLong(2))
+          train(round + 1, applyMerge(toks, l, r).localCheckpoint(), out :+ ((round, l, r, c)))
+      }
+    train(1, tokensOf(corpus), Vector.empty)
   }
 
   /** t24 — BPE tokenizer APPLICATION (the encode half of Sennrich
@@ -1317,8 +1329,7 @@ object TextOps {
     */
   def paragraphTable(spark: SparkSession, dir: String): DataFrame = {
     val base = docs(spark, dir).select("doc_id", "text")
-    val nat = base
-      .selectExpr("doc_id", "split(trim(text), '\\\\s+') AS w")
+    val nat = base.select(col("doc_id"), words.as("w"))
       .selectExpr("doc_id",
         "posexplode(transform(sequence(0, (size(w)-1) div 20), " +
           "i -> array_join(slice(w, i*20+1, 20), ' '))) AS (para_idx, para)")
@@ -1382,9 +1393,7 @@ object TextOps {
     */
   def dsirWeights(spark: SparkSession, dir: String,
                   nBuckets: Int = 64, scale: Long = 1000000L): DataFrame =
-    dsirWeightsOf(
-      spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "lang", "text"),
+    dsirWeightsOf(docs(spark, dir).select("doc_id", "lang", "text"),
       "en", nBuckets, scale)
 
   /** t21 kernel over any (doc_id, lang, text) corpus — the target slice
@@ -1392,10 +1401,8 @@ object TextOps {
     */
   def dsirWeightsOf(corpus: DataFrame, targetLang: String,
                     nBuckets: Int = 64, scale: Long = 1000000L): DataFrame = {
-    val nDocs = corpus.count()
     val toks = corpus
-      .select(col("doc_id"), col("lang"),
-        explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(col("doc_id"), col("lang"), explode(words).as("tok"))
       .withColumn("b", pmod(
         conv(substring(md5(col("tok").cast("binary")), 1, 8), 16, 10)
           .cast("long"), lit(nBuckets.toLong)))
@@ -1412,11 +1419,13 @@ object TextOps {
           s"((cnt_r + 1) * (total_t + $nBuckets))").as("score"))
     val weights = cntDb.join(broadcast(scores), Seq("b"))
       .groupBy("doc_id").agg(sum(col("cnt_db") * col("score")).as("weight"))
+    val nDocs = corpus.agg(count(lit(1)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("weight").desc, col("doc_id"))
-    weights
-      .withColumn("selected",
-        (row_number().over(w) <= lit(nDocs / 4)).cast("int"))
+    weights.crossJoin(broadcast(nDocs))
+      .select(col("doc_id"), col("weight"),
+        // rn <= n_docs div 4, kept non-nullable (div is nullable)
+        (lit(4L) * row_number().over(w) <= col("n_docs")).cast("int").as("selected"))
       .orderBy("doc_id")
   }
 
@@ -1476,15 +1485,21 @@ object TextOps {
   def tfidfTopTerms(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
     tfidfTopTermsOf(docs(spark, dir), k)
 
+  /** Per-(doc_id, term) counts `tf` of the lower-cased whitespace terms
+    * of a (doc_id, text) frame, empty terms dropped — the t23/t34 term
+    * table, map-side combined before its one doc-keyed exchange.
+    */
+  private def termFreqs(corpus: DataFrame): DataFrame =
+    corpus.select(col("doc_id"),
+        explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
+      .where(length(col("term")) > 0)
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+
   /** t23 kernel over any (doc_id, text) frame. */
   def tfidfTopTermsOf(corpus: DataFrame, k: Int = 3): DataFrame = {
-    val base = corpus.select(col("doc_id"), col("text"))
-    val toks = base.select(col("doc_id"),
-      explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-      .where(length(col("term")) > 0)
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(corpus)
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val n = base.agg(count(lit(1)).as("n_docs"))
+    val n = corpus.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(broadcast(dfT), "term").crossJoin(broadcast(n))
       .withColumn("score", expr("tf * ((n_docs * 1000000) div df)"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1522,11 +1537,7 @@ object TextOps {
 
   /** t34 kernel over any (doc_id, text) frame. */
   def bm25TopKOf(corpus: DataFrame, k: Int = 5): DataFrame = {
-    val base = corpus.select(col("doc_id"), col("text"))
-    val toks = base.select(col("doc_id"),
-      explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-      .where(length(col("term")) > 0)
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(corpus)
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
@@ -1559,11 +1570,7 @@ object TextOps {
     */
   def nearDupSimhash(spark: SparkSession, dir: String, maxHamming: Int = 6): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
-    val base = docs(spark, dir).select("doc_id", "text")
-    val planted = base.where(pmod(col("doc_id"), lit(20)) === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" appended revision marker tokens")).as("text"))
-    val sh = spreadNarrow(base.unionByName(planted))
+    val sh = spreadNarrow(plantedCorpus(spark, dir))
       .select(col("doc_id"), GraftFunctions.simhash64(col("text")).as("simhash"))
     // 4 rotated 16-bit blocks: docs within Hamming<=6 of a 64-bit hash agree
     // on at least one block w.h.p. (pigeonhole gives >=1 exact block for
@@ -1629,7 +1636,7 @@ object TextOps {
                     maxSymRatio: Double = 0.1, minAlphaFrac: Double = 0.8,
                     minStop: Int = 2): DataFrame = {
     val stopwords = Seq("the", "a", "data", "table", "join", "row", "scan", "merge")
-    val toks = filter(split(trim(col("text")), "\\s+"), t => t =!= "")
+    val toks = filter(words, t => t =!= "")
     val nWords = size(col("toks")).cast("long")
     val sumLen = aggregate(col("toks"), lit(0),
       (acc, t) => acc + length(t)).cast("double")
@@ -1684,7 +1691,7 @@ object TextOps {
     val src = docs(spark, dir).select(col("doc_id").as("base_id"), col("source"))
     corpus
       .withColumn("base_id", col("doc_id") % 1000000L)
-      .withColumn("n_tok", size(split(trim(col("text")), "\\s+")).cast("long"))
+      .withColumn("n_tok", size(words).cast("long"))
       .join(src, Seq("base_id"))
       .join(kept, Seq("doc_id"), "left")
       .groupBy("source")
@@ -1716,16 +1723,15 @@ object TextOps {
   def zipfSlope(spark: SparkSession, dir: String, topR: Int = 50): DataFrame = {
     val toks = docs(spark, dir)
       .select(col("source"),
-        explode(filter(split(lower(col("text")), "[^a-z0-9]+"),
-          t => t =!= "")).as("tok"))
+        explode(alnumWords).as("tok"))
     val hist = toks.groupBy("source", "tok").agg(count(lit(1)).as("freq"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy(col("freq").desc, col("tok").asc)
     val q = hist.withColumn("rank", row_number().over(w))
       .where(col("rank") <= topR)
       .select(col("source"),
-        round(log(2.0, col("rank")) * 1e6).cast("long").as("x"),
-        round(log(2.0, col("freq")) * 1e6).cast("long").as("y"))
+        log2q(col("rank")).as("x"),
+        log2q(col("freq")).as("y"))
     val m = q.groupBy("source")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"),
@@ -1755,8 +1761,7 @@ object TextOps {
   def lexicalDiversity(spark: SparkSession, dir: String): DataFrame = {
     val toks = docs(spark, dir)
       .select(col("doc_id"),
-        explode(filter(split(lower(col("text")), "[^a-z0-9]+"),
-          t => t =!= "")).as("tok"))
+        explode(alnumWords).as("tok"))
     toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
       .groupBy("doc_id")
       .agg(sum("cnt").as("n_tokens"), count(lit(1)).as("n_types"),
@@ -1790,23 +1795,21 @@ object TextOps {
     * (source, tok, two longs).
     */
   def sourceKlDivergence(spark: SparkSession, dir: String): DataFrame = {
-    def lq(c: Column): Column = round(log(2.0, c) * 1e6).cast("long")
     val sc = docs(spark, dir)
       .select(col("source"),
-        explode(filter(split(lower(col("text")), "[^a-z0-9]+"),
-          t => t =!= "")).as("tok"))
+        explode(alnumWords).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
     val cc = sc.withColumn("cntc",
       sum("cnt").over(org.apache.spark.sql.expressions.Window
         .partitionBy("tok")))
     val tot = sc.agg(sum("cnt").as("tc"))
     cc.groupBy("source")
-      .agg(sum(col("cnt") * (lq(col("cnt")) - lq(col("cntc")))).as("part"),
+      .agg(sum(col("cnt") * (log2q(col("cnt")) - log2q(col("cntc")))).as("part"),
         sum("cnt").as("t_tokens"), count(lit(1)).as("vocab"))
       .crossJoin(broadcast(tot))
       .select(col("source"), col("t_tokens"), col("vocab"),
         round((col("part")
-          + col("t_tokens") * (lq(col("tc")) - lq(col("t_tokens"))))
+          + col("t_tokens") * (log2q(col("tc")) - log2q(col("t_tokens"))))
           .cast("double") / (col("t_tokens").cast("double") * 1e6), 4)
           .as("kl_bits"))
       .orderBy("source")
@@ -1830,7 +1833,7 @@ object TextOps {
   def contextLengthCurve(spark: SparkSession, dir: String,
                          lens: Seq[Long] = Seq(16L, 32L, 64L, 128L)): DataFrame =
     docs(spark, dir)
-      .select(size(split(trim(col("text")), "\\s+")).cast("long").as("n"))
+      .select(size(words).cast("long").as("n"))
       .select(col("n"), explode(array(lens.map(lit): _*)).as("max_len"))
       .groupBy("max_len")
       .agg(count(lit(1)).as("n_docs"),
@@ -1905,8 +1908,7 @@ object TextOps {
   def vocabChurn(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir)
       .select(col("lang"), pmod(col("doc_id"), lit(2L)).as("epoch"),
-        explode(filter(split(lower(col("text")), "[^a-z0-9]+"),
-          t => t =!= "")).as("tok"))
+        explode(alnumWords).as("tok"))
       .groupBy("lang", "tok")
       .agg(sum(when(col("epoch") === 0L, 1L).otherwise(0L)).as("cnt_prev"),
         sum(when(col("epoch") === 1L, 1L).otherwise(0L)).as("cnt_cur"))
@@ -1947,12 +1949,8 @@ object TextOps {
     * final scoring plan.
     */
   def bigramPerplexity(spark: SparkSession, dir: String): DataFrame = {
-    def qlog2(x: Column): Column =
-      round(log(2.0, x) * 1e6).cast("long")
     val toks = docs(spark, dir)
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), "[^a-z0-9]+"),
-          t => t =!= "").as("l"))
+      .select(col("doc_id"), alnumWords.as("l"))
       .where(size(col("l")) >= 2)
     // The per-doc instance table feeds FOUR consumers (the scorer, c12,
     // c1, and both vocab branches). Declaratively AQE's ReuseExchange
@@ -1965,10 +1963,9 @@ object TextOps {
     // once at any scale, the same call KenLM-style count pipelines make
     // when they persist the count table before deriving the model.
     val inst = toks.select(col("doc_id"),
-        explode(expr(
-          "transform(sequence(0, size(l) - 2), " +
-            "i -> struct(element_at(l, i + 1) AS w1, element_at(l, i + 2) AS w2))"))
-          .as("bg"))
+        explode(transform(windowStarts(col("l"), 2), i => struct(
+          element_at(col("l"), i + 1).as("w1"),
+          element_at(col("l"), i + 2).as("w2")))).as("bg"))
       .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
       .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("m"))
       .localCheckpoint()
@@ -1992,7 +1989,7 @@ object TextOps {
       .join(c1, Seq("w1"))
       .crossJoin(broadcast(vocab))
       .select(col("doc_id"), col("m"),
-        (qlog2(col("c12") + 1L) - qlog2(col("c1") + col("v"))).as("qlp"))
+        (log2q(col("c12") + 1L) - log2q(col("c1") + col("v"))).as("qlp"))
       .groupBy("doc_id")
       .agg(sum("m").as("n_bigrams"), sum(col("m") * col("qlp")).as("sq"))
       .select(col("doc_id"), col("n_bigrams"),
@@ -2140,17 +2137,14 @@ object TextOps {
     */
   def tokenEntropy(spark: SparkSession, dir: String,
                    minBits: Long = 4L): DataFrame = {
-    def lq(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      round(log(2.0, c) * 1e6).cast("long")
     val counts = docs(spark, dir)
       .select(col("doc_id"),
-        explode(filter(split(lower(col("text")), "[^a-z0-9]+"),
-          t => t =!= "")).as("tok"))
+        explode(alnumWords).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
     counts.groupBy("doc_id")
       .agg(sum("c").as("n_tokens"), count(lit(1)).as("vocab"),
-        sum(col("c") * lq(col("c"))).as("term_q"))
-      .withColumn("hq", col("n_tokens") * lq(col("n_tokens")) - col("term_q"))
+        sum(col("c") * log2q(col("c"))).as("term_q"))
+      .withColumn("hq", col("n_tokens") * log2q(col("n_tokens")) - col("term_q"))
       .select(col("doc_id"), col("n_tokens"), col("vocab"),
         round(col("hq").cast("double")
           / (col("n_tokens").cast("double") * 1e6), 4).as("entropy_bits"),
@@ -2162,7 +2156,7 @@ object TextOps {
   /** t57 — SHINGLE-SIZE dedup calibration sweep: t41 sweeps the Jaccard
     * THRESHOLD at fixed 3-gram shingles; this sweeps the other design
     * axis — the shingle width w ∈ {2, 3, 5} — at the engine's fixed
-    * gate (J ≥ 1/3, t05's 2·inter ≥ |A|+|B|−inter form). Small w makes
+    * gate (J ≥ 1/2, t05's 2·inter ≥ |A|+|B|−inter form). Small w makes
     * common phrases shingle-collide (recall up, precision down); large
     * w makes any edit break shared shingles (precision up, recall
     * down); the sweep against the planted revision truth is the
@@ -2174,34 +2168,11 @@ object TextOps {
   def shingleSizeSweep(spark: SparkSession, dir: String,
                        widths: Seq[Int] = Seq(2, 3, 5)): DataFrame = {
     val corpus = spreadNarrow(plantedCorpus(spark, dir))
-    val truth = docs(spark, dir)
-      .where(pmod(col("doc_id"), lit(20)) === 0)
-      .select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1000000L).as("doc_b"))
+    val truth = plantTruth(spark, dir)
     widths.map { wdt =>
-      // four consumers per width (sizes, df-cap, both self-join sides) —
-      // materialize the width's shingle table once (the
-      // ngramJaccardScores r06 lesson: differently-pruned subtrees defeat
-      // exchange reuse and the corpus re-tokenizes per consumer)
-      val sh = wordNgrams(corpus, wdt)
-        .withColumnRenamed("ng", "sh")
-        .localCheckpoint()
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-        .where(col("df") > 64).select("sh")
-      val idx = sh.join(hot, Seq("sh"), "left_anti")
-      val pairs = idx.as("a").join(idx.as("b"), Seq("sh"))
-        .where(col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      val dup = pairs
-        .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sa")),
-          Seq("doc_a"))
-        .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sb")),
-          Seq("doc_b"))
-        .withColumn("is_dup",
-          (col("n_inter") * 2 >= col("sa") + col("sb") - col("n_inter"))
-            .cast("long"))
+      val dup = jaccardScored(
+          overlapIndex(wordNgrams(corpus, wdt).withColumnRenamed("ng", "sh"), 64))
+        .withColumn("is_dup", jaccardGate.cast("long"))
       val volumes = dup.agg(count(lit(1)).as("n_candidates"),
         sum("is_dup").as("n_predicted"))
       val joined = dup.where(col("is_dup") === 1L)
@@ -2281,7 +2252,7 @@ object TextOps {
       .withColumn("text",
         concat(col("text"), lit(" (rev "), col("doc_id"), lit(".7, it's v2!)")))
       .select(col("lang"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("words"),
+        size(words).cast("long").as("words"),
         expr("bpe_token_count(text)").cast("long").as("bpe"),
         octet_length(col("text")).cast("long").as("bytes"))
       .groupBy("lang")

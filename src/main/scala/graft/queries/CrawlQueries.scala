@@ -242,9 +242,7 @@ object CrawlQueries {
       val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
       val e0 = docs.where(pmod(col("doc_id"), lit(2)) === 0)
       val e1 = docs.where(pmod(col("doc_id"), lit(2)) === 1)
-        .unionByName(e0.where(pmod(col("doc_id"), lit(20)) === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat(col("text"), lit(" appended revision marker tokens")).as("text")))
+        .unionByName(TextOps.plantedRevisions(e0))
       operators.SimIndex.writeShingleIndex(e0, root, 0)
       operators.SimIndex.writeShingleIndex(e1, root, 1)
       operators.SimIndex.crossEpochNearDups(s, root, 1).orderBy("doc_a", "doc_b")
@@ -646,9 +644,7 @@ object CrawlQueries {
       val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
       val e0 = docs.where(pmod(col("doc_id"), lit(2)) === 0)
       val e1 = docs.where(pmod(col("doc_id"), lit(2)) === 1)
-        .unionByName(e0.where(pmod(col("doc_id"), lit(20)) === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            concat(col("text"), lit(" appended revision marker tokens")).as("text")))
+        .unionByName(TextOps.plantedRevisions(e0))
       operators.SimIndex.writeShingleIndex(e0, root, 0)
       operators.SimIndex.writeShingleIndex(e1, root, 1)
       // take down the %40==0 originals: every pair they anchored must go,

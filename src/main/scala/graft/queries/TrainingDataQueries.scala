@@ -8,6 +8,22 @@ import graft.operators._
   * carry DuckDB oracle SQL; the rest are gated by their scalatest specs.
   */
 object TrainingDataQueries {
+  /** The `bench` and `corpus` CTEs of TextOps.benchmarkDocs and
+    * TextOps.leakedCorpus: every 23rd document, and the documents plus a
+    * +2e6 doc quoting each benchmark doc's first 20 tokens.
+    */
+  private val leakedCorpusSql: String =
+    """bench AS (
+      |  SELECT doc_id, text FROM documents WHERE doc_id % 23 = 0
+      |), corpus AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 2000000 AS doc_id,
+      |    array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), 1, 20), ' ')
+      |      || ' then entirely novel commentary continues past the quotation' AS text
+      |  FROM documents WHERE doc_id % 23 = 0
+      |)""".stripMargin
+
   /** DuckDB mirror of TextOps.contaminationCurve: the t13 bench/corpus
     * fixture with one distinct-hit join block per n-gram length.
     */
@@ -31,18 +47,10 @@ object TrainingDataQueries {
          |      FROM (SELECT regexp_split_to_array(trim(text), '\\s+')
          |        AS t FROM bench))
          |  ) b USING (ng)""".stripMargin
-    """WITH bench AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 23 = 0
-      |), corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 2000000 AS doc_id,
-      |    array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), 1, 20), ' ')
-      |      || ' then entirely novel commentary continues past the quotation' AS text
-      |  FROM documents WHERE doc_id % 23 = 0
-      |), tot AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus_docs FROM corpus),
-      |hits AS (
-      |""".stripMargin +
+    "WITH " + leakedCorpusSql +
+      """, tot AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus_docs FROM corpus),
+        |hits AS (
+        |""".stripMargin +
       ns.map(block).mkString("\n  UNION ALL\n") +
       """
         |)
@@ -51,6 +59,74 @@ object TrainingDataQueries {
         |  (10000 * n_flagged_docs) // n_corpus_docs AS flagged_bp
         |FROM hits CROSS JOIN tot ORDER BY ngram_n""".stripMargin
   }
+
+  /** The t18 top-gram CTEs over the (doc_id, t) token table `src`: every
+    * doc's 2-gram and 3-gram occurrences (`g2`, `g3`) and the count of its
+    * most frequent one (`m2`.max2, `m3`.max3).
+    */
+  private def topGramSql(src: String): String =
+    s"""g2 AS (
+       |  SELECT doc_id, t[i] || ' ' || t[i+1] AS g
+       |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-1, 0))) AS i FROM $src)
+       |), m2 AS (
+       |  SELECT doc_id, max(cnt) AS max2
+       |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
+       |), g3 AS (
+       |  SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
+       |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM $src)
+       |), m3 AS (
+       |  SELECT doc_id, max(cnt) AS max3
+       |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g3 GROUP BY 1, 2) GROUP BY 1
+       |)""".stripMargin
+
+  /** The `corpus` CTE of TextOps.plantedCorpus: the documents plus the
+    * planted +1e6 revision of every 20th one.
+    */
+  private val plantedCorpusSql: String =
+    """corpus AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 1000000 AS doc_id, text || ' appended revision marker tokens' AS text
+      |  FROM documents WHERE doc_id % 20 = 0
+      |)""".stripMargin
+
+  /** The `truth` CTE of the planted revisions: one (doc_a, doc_b, is_true)
+    * row per plant.
+    */
+  private val plantTruthSql: String =
+    """truth AS (
+      |  SELECT doc_id AS doc_a, doc_id + 1000000 AS doc_b,
+      |    CAST(1 AS BIGINT) AS is_true
+      |  FROM documents WHERE doc_id % 20 = 0
+      |)""".stripMargin
+
+  /** The `toks` and `shingles` (distinct word 3-grams per doc) CTEs over
+    * the (doc_id, text) table `src`.
+    */
+  private def shinglesSql(src: String): String =
+    s"""toks AS (
+       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM $src
+       |), shingles AS (
+       |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
+       |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM toks)
+       |)""".stripMargin
+
+  /** The t05 shingle index over `corpus`, still open: [[shinglesSql]]
+    * plus `sizes`, the df-capped `idx` and `pairs` (doc_a < doc_b,
+    * n_inter).
+    */
+  private val shinglePairsSql: String =
+    shinglesSql("corpus") +
+      """, sizes AS (
+        |  SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
+        |), idx AS (
+        |  SELECT doc_id, sh FROM shingles
+        |  WHERE sh NOT IN (SELECT sh FROM shingles GROUP BY sh HAVING count(*) > 64)
+        |), pairs AS (
+        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+        |  FROM idx a JOIN idx b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2
+        |)""".stripMargin
 
   /** DuckDB mirror of TextOps.shingleSizeSweep: one inverted-index +
     * df-cap + gate + truth-compare block per shingle width.
@@ -77,7 +153,10 @@ object TrainingDataQueries {
          |    ) d
          |    FULL OUTER JOIN truth t
          |      ON t.doc_a = d.doc_a AND t.doc_b = d.doc_b)""".stripMargin
-    def shingleCte(w: Int): String =
+    def shingleCte(w: Int): String = {
+      val capped =
+        s"""(SELECT doc_id, sh FROM sh$w WHERE sh NOT IN
+           |      (SELECT sh FROM sh$w GROUP BY sh HAVING count(*) > 64))""".stripMargin
       s"""sh$w AS (
          |  SELECT DISTINCT doc_id,
          |    array_to_string(list_slice(t, i, i + ${w - 1}), ' ') AS sh
@@ -93,25 +172,15 @@ object TrainingDataQueries {
          |  FROM (
          |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |      CAST(count(*) AS BIGINT) AS n_inter
-         |    FROM (SELECT doc_id, sh FROM sh$w WHERE sh NOT IN
-         |      (SELECT sh FROM sh$w GROUP BY sh HAVING count(*) > 64)) a
-         |    JOIN (SELECT doc_id, sh FROM sh$w WHERE sh NOT IN
-         |      (SELECT sh FROM sh$w GROUP BY sh HAVING count(*) > 64)) b
+         |    FROM $capped a
+         |    JOIN $capped b
          |      ON a.sh = b.sh AND a.doc_id < b.doc_id
          |    GROUP BY 1, 2) p
          |  JOIN sz$w sa ON p.doc_a = sa.doc_id
          |  JOIN sz$w sb ON p.doc_b = sb.doc_id
          |)""".stripMargin
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, text || ' appended revision marker tokens' AS text
-      |  FROM documents WHERE doc_id % 20 = 0
-      |), truth AS (
-      |  SELECT doc_id AS doc_a, doc_id + 1000000 AS doc_b,
-      |    CAST(1 AS BIGINT) AS is_true
-      |  FROM documents WHERE doc_id % 20 = 0
-      |), """.stripMargin +
+    }
+    "WITH " + plantedCorpusSql + ", " + plantTruthSql + ", " +
       ws.map(shingleCte).mkString(",\n") +
       ",\nsweep AS (\n" + ws.map(block).mkString("\n  UNION ALL\n") +
       """
@@ -131,32 +200,14 @@ object TrainingDataQueries {
     * further CTEs. RECURSIVE is declared here because `reach` needs it.
     */
   private val ngramPairSql: String =
-    """WITH RECURSIVE corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, text || ' appended revision marker tokens' AS text
-      |  FROM documents WHERE doc_id % 20 = 0
-      |), toks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM corpus
-      |), shingles AS (
-      |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-      |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM toks)
-      |), sizes AS (
-      |  SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
-      |), idx AS (
-      |  SELECT doc_id, sh FROM shingles
-      |  WHERE sh NOT IN (SELECT sh FROM shingles GROUP BY sh HAVING count(*) > 64)
-      |), pairs AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-      |  FROM idx a JOIN idx b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), dup_pairs AS (
-      |  SELECT doc_a, doc_b
-      |  FROM pairs
-      |  JOIN sizes sa ON doc_a = sa.doc_id
-      |  JOIN sizes sb ON doc_b = sb.doc_id
-      |  WHERE n_inter * 2 >= sa.sz + sb.sz - n_inter
-      |)""".stripMargin
+    "WITH RECURSIVE " + plantedCorpusSql + ", " + shinglePairsSql +
+      """, dup_pairs AS (
+        |  SELECT doc_a, doc_b
+        |  FROM pairs
+        |  JOIN sizes sa ON doc_a = sa.doc_id
+        |  JOIN sizes sb ON doc_b = sb.doc_id
+        |  WHERE n_inter * 2 >= sa.sz + sb.sz - n_inter
+        |)""".stripMargin
 
   /** The t05 pair graph's connected components, still open: `ngramPairSql`
     * plus the symmetric `edges` of `dup_pairs` and their recursive `reach`
@@ -175,6 +226,16 @@ object TrainingDataQueries {
         |  SELECT r.id, e.dst AS node FROM reach r JOIN edges e ON r.node = e.src
         |)""".stripMargin
 
+  /** `dupReachSql` plus `drops`: every id that is not its component's
+    * min-id survivor (t08's drop list), still open.
+    */
+  private val dupDropsSql: String =
+    dupReachSql +
+      """, drops AS (
+        |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
+        |  WHERE id <> comp
+        |)""".stripMargin
+
   val all: Seq[Query] = Seq(
     Query("t01_text_quality", (s, d) => TextOps.qualityStats(s, d),
       Some("""SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars_act,
@@ -186,26 +247,7 @@ object TrainingDataQueries {
     Query("t03_neardup_minhash", (s, d) => TextOps.nearDupMinhash(s, d)),
     Query("t04_neardup_simhash", (s, d) => TextOps.nearDupSimhash(s, d)),
     Query("t05_neardup_ngram", (s, d) => TextOps.nearDupNgramJaccard(s, d),
-      Some("""WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text || ' appended revision marker tokens' AS text
-        |  FROM documents WHERE doc_id % 20 = 0
-        |), toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM corpus
-        |), shingles AS (
-        |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
-        |), idx AS (
-        |  SELECT doc_id, sh FROM shingles
-        |  WHERE sh NOT IN (SELECT sh FROM shingles GROUP BY sh HAVING count(*) > 64)
-        |), pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        |  FROM idx a JOIN idx b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
+      Some("WITH " + plantedCorpusSql + ", " + shinglePairsSql + """
         |SELECT doc_a, doc_b, n_inter, sa.sz + sb.sz - n_inter AS n_union
         |FROM pairs
         |JOIN sizes sa ON doc_a = sa.doc_id
@@ -223,19 +265,13 @@ object TrainingDataQueries {
           |  (id = min(node)) AS is_survivor
           |FROM reach GROUP BY id""".stripMargin)),
     Query("t08_dedup_corpus", (s, d) => operators.DedupResolve.dedupedCorpus(s, d),
-      Some(dupReachSql +
-        """, drops AS (
-          |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
-          |  WHERE id <> comp
-          |)
+      Some(dupDropsSql +
+        """
           |SELECT doc_id FROM corpus WHERE doc_id NOT IN (SELECT id FROM drops)"""
           .stripMargin)),
     Query("t09_corpus_curation", (s, d) => TextOps.curatedCorpus(s, d),
-      Some(dupReachSql +
-        """, drops AS (
-          |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
-          |  WHERE id <> comp
-          |)
+      Some(dupDropsSql +
+        """
           |SELECT doc_id,
           |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
           |  round(CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
@@ -287,16 +323,7 @@ object TrainingDataQueries {
       // the n-gram STRINGS where Spark joins xxhash64 of the same strings
       // (t05 precedent); the quote-doc construction (first 20 tokens +
       // novel suffix) is mirrored token-for-token.
-      Some("""WITH bench AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 23 = 0
-        |), corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 2000000 AS doc_id,
-        |    array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), 1, 20), ' ')
-        |      || ' then entirely novel commentary continues past the quotation' AS text
-        |  FROM documents WHERE doc_id % 23 = 0
-        |), bng AS (
+      Some("WITH " + leakedCorpusSql + """, bng AS (
         |  SELECT DISTINCT array_to_string(list_slice(t, i, i + 7), ' ') AS ng
         |  FROM (SELECT t, unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i
         |        FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS t FROM bench))
@@ -382,30 +409,11 @@ object TrainingDataQueries {
       // t16: t05's pair kernel + the content-hash split assignment —
       // construction, integer Jaccard gate, and the double-md5 split all
       // mirrored exactly.
-      Some("""WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text || ' appended revision marker tokens' AS text
-        |  FROM documents WHERE doc_id % 20 = 0
-        |), splits AS (
+      Some("WITH " + plantedCorpusSql + """, splits AS (
         |  SELECT doc_id,
         |    CASE WHEN md5('spl1:' || md5(text)) < '4' THEN 'eval' ELSE 'train' END AS split
         |  FROM corpus
-        |), toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM corpus
-        |), shingles AS (
-        |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
-        |), idx AS (
-        |  SELECT doc_id, sh FROM shingles
-        |  WHERE sh NOT IN (SELECT sh FROM shingles GROUP BY sh HAVING count(*) > 64)
-        |), pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        |  FROM idx a JOIN idx b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), nd AS (
+        |), """.stripMargin + shinglePairsSql + """, nd AS (
         |  SELECT doc_a, doc_b
         |  FROM pairs
         |  JOIN sizes sa ON doc_a = sa.doc_id
@@ -457,19 +465,7 @@ object TrainingDataQueries {
         |), base AS (
         |  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
         |         CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct FROM toks
-        |), g2 AS (
-        |  SELECT doc_id, t[i] || ' ' || t[i+1] AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-1, 0))) AS i FROM toks)
-        |), m2 AS (
-        |  SELECT doc_id, max(cnt) AS max2
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
-        |), g3 AS (
-        |  SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM toks)
-        |), m3 AS (
-        |  SELECT doc_id, max(cnt) AS max3
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g3 GROUP BY 1, 2) GROUP BY 1
-        |), stats AS (
+        |), """.stripMargin + topGramSql("toks") + """, stats AS (
         |  SELECT b.doc_id, b.n_tokens,
         |    round(1.0 - CAST(b.n_distinct AS DOUBLE) / greatest(b.n_tokens, 1), 4) AS dup_tok_frac,
         |    round(CAST(COALESCE(m2.max2, 0) AS DOUBLE) / greatest(b.n_tokens - 1, 1), 4) AS top2_frac,
@@ -526,11 +522,8 @@ object TrainingDataQueries {
       // components -> t08 keep-list (drops), then t01's quality gate and
       // t18's repetition gate over the kept docs, then t17's packing of
       // the survivors. The compare gates the composition end to end.
-      Some(dupReachSql +
-        """, drops AS (
-          |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
-          |  WHERE id <> comp
-          |), kept AS (
+      Some(dupDropsSql +
+        """, kept AS (
           |  SELECT c.doc_id, c.text FROM corpus c
           |  WHERE c.doc_id NOT IN (SELECT id FROM drops)
           |), kt AS (
@@ -543,19 +536,7 @@ object TrainingDataQueries {
           |), base18 AS (
           |  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
           |         CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct FROM kt
-          |), g2 AS (
-          |  SELECT doc_id, t[i] || ' ' || t[i+1] AS g
-          |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-1, 0))) AS i FROM kt)
-          |), m2 AS (
-          |  SELECT doc_id, max(cnt) AS max2
-          |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY 1, 2) GROUP BY 1
-          |), g3 AS (
-          |  SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-          |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM kt)
-          |), m3 AS (
-          |  SELECT doc_id, max(cnt) AS max3
-          |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g3 GROUP BY 1, 2) GROUP BY 1
-          |), rep AS (
+          |), """.stripMargin + topGramSql("kt") + """, rep AS (
           |  SELECT b.doc_id
           |  FROM base18 b LEFT JOIN m2 USING (doc_id) LEFT JOIN m3 USING (doc_id)
           |  WHERE round(1.0 - CAST(b.n_distinct AS DOUBLE) / greatest(b.n_tokens, 1), 4) <= 0.85
@@ -667,21 +648,7 @@ object TrainingDataQueries {
         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
         |        FROM documents)
         |  WHERE doc_id % 17 = 0
-        |), toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM corpus
-        |), shingles AS (
-        |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM toks)
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
-        |), idx AS (
-        |  SELECT doc_id, sh FROM shingles
-        |  WHERE sh NOT IN (SELECT sh FROM shingles GROUP BY sh HAVING count(*) > 64)
-        |), pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        |  FROM idx a JOIN idx b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
+        |), """.stripMargin + shinglePairsSql + """
         |SELECT doc_a, doc_b, n_inter, least(sa.sz, sb.sz) AS sz_min
         |FROM pairs
         |JOIN sizes sa ON doc_a = sa.doc_id
@@ -715,12 +682,7 @@ object TrainingDataQueries {
     Query("t28_novelty", (s, d) => TextOps.noveltyReport(s, d),
       // t28: the t05 shingle construction over the RAW documents (no
       // plants), df==1 novelty in integer basis points.
-      Some("""WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-        |), shingles AS (
-        |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 0))) AS i FROM toks)
-        |), dfs AS (
+      Some("WITH " + shinglesSql("documents") + """, dfs AS (
         |  SELECT sh, count(*) AS df FROM shingles GROUP BY sh
         |)
         |SELECT s.doc_id,
@@ -767,16 +729,7 @@ object TrainingDataQueries {
       operators.SuffixOps.exactContaminationReport(s, d),
       // t31: t13's leaked-corpus/benchmark fixtures, char-window exact
       // overlap — oracle brute-forces both sides' windows.
-      Some("""WITH bench AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 23 = 0
-        |), corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 2000000 AS doc_id,
-        |    array_to_string(list_slice(regexp_split_to_array(trim(text), '\s+'), 1, 20), ' ')
-        |      || ' then entirely novel commentary continues past the quotation' AS text
-        |  FROM documents WHERE doc_id % 23 = 0
-        |), bw AS (
+      Some("WITH " + leakedCorpusSql + """, bw AS (
         |  SELECT DISTINCT substr(b.text, g.pos + 1, 64) AS win
         |  FROM bench b, LATERAL (SELECT unnest(
         |    generate_series(0, length(b.text) - 64)) AS pos) g
@@ -1038,11 +991,8 @@ object TrainingDataQueries {
     Query("t40_token_yield", (s, d) => TextOps.tokenYield(s, d),
       // t40: t08's drops CTE + per-source token rollup (planted copies
       // inherit their base doc's source via doc_id % 1e6)
-      Some(dupReachSql +
-        """, drops AS (
-          |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
-          |  WHERE id <> comp
-          |), flagged AS (
+      Some(dupDropsSql +
+        """, flagged AS (
           |  SELECT c.doc_id, d.source,
           |    CAST(len(regexp_split_to_array(trim(c.text), '\s+')) AS BIGINT)
           |      AS n_tok,
@@ -1069,11 +1019,7 @@ object TrainingDataQueries {
           |  FROM pairs
           |  JOIN sizes sa ON doc_a = sa.doc_id
           |  JOIN sizes sb ON doc_b = sb.doc_id
-          |), truth AS (
-          |  SELECT doc_id AS doc_a, doc_id + 1000000 AS doc_b,
-          |    CAST(1 AS BIGINT) AS is_true
-          |  FROM documents WHERE doc_id % 20 = 0
-          |), joined AS (
+          |), """.stripMargin + plantTruthSql + """, joined AS (
           |  SELECT coalesce(s.n_inter, 0) AS n_inter,
           |    coalesce(s.n_union, 1) AS n_union,
           |    coalesce(t.is_true, 0) AS is_true
@@ -1380,11 +1326,8 @@ object TrainingDataQueries {
       operators.DedupResolve.distributionShift(s, d),
       // t51: the t08 CTE prefix supplies the keep-list; same byte mass (strlen/octet_length)
       // byte mass, integer bp shares, and quantized KL terms
-      Some(dupReachSql +
-        """, drops AS (
-          |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
-          |  WHERE id <> comp
-          |), lb AS (
+      Some(dupDropsSql +
+        """, lb AS (
           |  SELECT d.lang, CAST(count(*) AS BIGINT) AS docs_before,
           |    CAST(sum(strlen(c.text)) AS BIGINT) AS bytes_before
           |  FROM corpus c JOIN documents d ON d.doc_id = c.doc_id % 1000000
@@ -1493,11 +1436,8 @@ object TrainingDataQueries {
     Query("t55_dup_quality", (s, d) =>
       operators.DedupResolve.dupQualityCrosstab(s, d),
       // t55: t08's drops CTE; same 2x2 cells and Haldane association
-      Some(dupReachSql +
-        """, drops AS (
-          |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
-          |  WHERE id <> comp
-          |), q AS (
+      Some(dupDropsSql +
+        """, q AS (
           |  SELECT doc_id,
           |    CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) >= 30
           |      THEN 1 ELSE 0 END AS pass
@@ -1559,7 +1499,7 @@ object TrainingDataQueries {
     // t57: shingle-WIDTH dedup calibration sweep (the axis t41's
     // threshold sweep doesn't cover) vs planted truth — oracled
     Query("t57_shingle_sweep", (s, d) => TextOps.shingleSizeSweep(s, d),
-      // t57: per-width inverted-index blocks, same df-cap and J >= 1/3
+      // t57: per-width inverted-index blocks, same df-cap and J >= 1/2
       // gate, same truth compare
       Some(shingleSweepOracleSql(Seq(2, 3, 5)))),
     // t58: dedup idempotence — t05's pair kernel on t08's kept corpus;
@@ -1567,11 +1507,8 @@ object TrainingDataQueries {
     Query("t58_dedup_idempotence", (s, d) => TextOps.dedupIdempotence(s, d),
       // t58: t08's drops CTE, then the full t05 kernel re-run on the kept
       // corpus (df-cap recomputed on the smaller corpus, as in Spark)
-      Some(dupReachSql +
-        """, drops AS (
-          |  SELECT id FROM (SELECT id, min(node) AS comp FROM reach GROUP BY id)
-          |  WHERE id <> comp
-          |), kept AS (
+      Some(dupDropsSql +
+        """, kept AS (
           |  SELECT doc_id, text FROM corpus
           |  WHERE doc_id NOT IN (SELECT id FROM drops)
           |), ktoks AS (

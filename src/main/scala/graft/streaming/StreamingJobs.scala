@@ -731,9 +731,7 @@ object StreamingJobs {
       graft.operators.SimIndex.writeShingleIndex(e0, root, 0)
       val rest = docs.where(pmod(col("doc_id"), lit(2)) === 1)
         .as[(Long, String)].collect()
-      val planted = e0.where(pmod(col("doc_id"), lit(20)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" appended revision marker tokens")).as("text"))
+      val planted = graft.operators.TextOps.plantedRevisions(e0)
         .as[(Long, String)].collect()
       val in = new Waves[(Long, String)](spark)
       in.run(Seq(rest.toIndexedSeq, planted.toIndexedSeq))(

@@ -28,6 +28,13 @@ class EntrySmokeSpec extends AnyFunSuite {
     assert(graft.operators.TextOps.nearDupMinhash(spark, tmp).count() == 0)
     assert(graft.operators.TextOps.nearDupSimhash(spark, tmp).count() == 0)
     assert(graft.operators.TextOps.nearDupNgramJaccard(spark, tmp).count() == 0)
+    assert(graft.operators.TextOps.containmentNearDup(spark, tmp).count() == 0)
+    assert(graft.operators.TextOps.dedupOperatingPoints(spark, tmp).count() == 0)
+    // the sweep reports one row per width, each with zero candidates
+    assert(graft.operators.TextOps.shingleSizeSweep(spark, tmp).collect()
+      .map(_.getAs[Long]("n_candidates")).toSeq == Seq(0L, 0L, 0L))
+    // t24 trains no BPE merge when no document has two tokens
+    assert(graft.operators.TextOps.bpeEncodedCorpus(spark, tmp).count() == 0)
     assert(graft.operators.SimilarityOps.nearDupCosine(spark, tmp).count() == 0)
     assert(graft.operators.SimilarityOps.bruteCosineTopK(spark, tmp).count() == 0)
     assert(graft.operators.SimilarityOps.annLshTopK(spark, tmp).count() == 0)

@@ -59,6 +59,15 @@ class BpeSpec extends AnyFunSuite {
     assert(counts.head > 1L, "top pair occurs once — fixture vacuous")
   }
 
+  test("the trainer stops when no document has two symbols left") {
+    import spark.implicits._
+    val singles = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+    assert(TextOps.bpeTrain(spark, singles, rounds).isEmpty)
+    // one pair: round 1 merges it, round 2 finds nothing to count
+    val onePair = Seq((1L, "a b"), (2L, "c")).toDF("doc_id", "text")
+    assert(TextOps.bpeTrain(spark, onePair, rounds) == Seq((1, "a", "b", 1L)))
+  }
+
   test("t24 encode == sequential rank-order mirror (incl. merge-chains and overlap)") {
     import spark.implicits._
     // merge 2 consumes merge 1's output token — the chain case; doc 3 is
